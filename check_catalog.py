@@ -1,36 +1,27 @@
 #!/usr/bin/env python
-"""Driver-window rehearsal: re-run the exact check the round driver runs.
+"""Check the declared catalog against its DuckDB twins on a vanilla session.
 
-The per-round driver takes the FIRST ``DRIVER_WINDOW`` entries of
-``__spark_entry__.queries()``, runs each on a *vanilla* SparkSession
-(plain builder at host parallelism — ``SPARK_GRAFT_CPUS`` or
-``os.cpu_count()`` — none of the repo's tuned configs) at sf0.01, and
-compares against the DuckDB twin (row count + schema + order-insensitive
-value hash; since round 9 ``compare`` also runs the vendored
-driver-canonicalizer leg, so every rehearsal exercises the driver's
-exact pandas code path). Freezing a window without rehearsing it
-on a vanilla session risks shipping a query that only passes under the
-test suite's configs — this script makes the rehearsal reproducible
-(it was ad-hoc in rounds 6-7; VERDICT r06 item 7 asked for it before
-every freeze).
+Runs every query of ``__spark_entry__.queries()`` (or only the named
+ones) on a *vanilla* SparkSession (plain builder at host parallelism —
+``SPARK_GRAFT_CPUS`` or ``os.cpu_count()`` — none of the repo's tuned
+configs) and compares each against its DuckDB twin (row count + schema
++ order-insensitive value hash; ``compare`` also runs the
+driver-canonicalizer leg). Queries without a twin must return rows.
+A query that only passes under the test suite's configs fails here.
 
 Usage:
-    python rehearse_window.py            # first DRIVER_WINDOW entries
-    python rehearse_window.py --all      # all declared queries
-    python rehearse_window.py q_item_cf q_tpch_q2   # named subset
-    python rehearse_window.py --all --hostile       # hostile-config cert
+    python check_catalog.py                          # all declared queries
+    python check_catalog.py q_item_cf q_tpch_q2      # named subset
+    python check_catalog.py --hostile                # hostile-config check
 
-``--hostile`` swaps the vanilla driver session for the adversarial
-partition-invariance config the README's correctness claim is
-certified under (rounds 6/9/11 ran this ad-hoc; VERDICT r12 item 2
-asked for the full-catalog re-cert to be a standing reproducible
-artifact): local[5] (odd, undersubscribed), 7 shuffle partitions
-(prime, tiny — surfaces any per-partition nondeterminism a 32/200
-layout hides), ANSI mode off (the lenient coercion path), Arrow
-DISABLED for pandas UDF exchange (the slow serializer path — results
-must not depend on the Arrow batch boundary). Any query whose result
-depends on partition count, evaluation order, or the exchange format
-hash-mismatches here.
+``--hostile`` swaps the vanilla session for the adversarial
+partition-invariance config the README's correctness claim rests on:
+local[5] (odd, undersubscribed), 7 shuffle partitions (prime, tiny —
+surfaces any per-partition nondeterminism a 32/200 layout hides), ANSI
+mode off (the lenient coercion path), Arrow DISABLED for pandas UDF
+exchange (the slow serializer path — results must not depend on the
+Arrow batch boundary). Any query whose result depends on partition
+count, evaluation order, or the exchange format hash-mismatches here.
 
 Prints one line per query and a final JSON summary; exit code 1 on any
 mismatch/error.
@@ -47,12 +38,11 @@ import time
 
 def main() -> int:
     ap = argparse.ArgumentParser()
-    ap.add_argument("names", nargs="*", help="explicit query names")
-    ap.add_argument("--all", action="store_true", help="run all declared queries")
+    ap.add_argument("names", nargs="*", help="query names (default: all)")
     ap.add_argument(
         "--hostile",
         action="store_true",
-        help="certify under the adversarial config: local[5], 7 shuffle "
+        help="check under the adversarial config: local[5], 7 shuffle "
         "partitions, ANSI off, Arrow off (partition-invariance gate)",
     )
     ap.add_argument(
@@ -65,10 +55,9 @@ def main() -> int:
 
     import __spark_entry__ as entrymod
     from frauddetection_spark.oracle import compare, duckdb_connection
-    from frauddetection_spark.plans.registry import DRIVER_WINDOW
 
-    # Vanilla driver-style session: plain builder, no repo configs.
-    # Parallelism follows the host (ADVICE r08): a hardcoded local[32]
+    # Vanilla session: plain builder, no repo configs. Parallelism
+    # follows the host (ADVICE r08): a hardcoded local[32]
     # oversubscribes smaller hosts, and getOrCreate would silently
     # REUSE any tuned session already live in this process — which
     # defeats the vanilla-session purpose, so refuse instead.
@@ -76,7 +65,7 @@ def main() -> int:
     if SparkSession.getActiveSession() is not None:
         raise SystemExit(
             "a SparkSession is already active in this process — the "
-            "rehearsal must build its own vanilla session; run this "
+            "check must build its own vanilla session; run this "
             "script standalone"
         )
     try:
@@ -87,7 +76,7 @@ def main() -> int:
     if args.hostile:
         spark = (
             SparkSession.builder.master("local[5]")
-            .appName("rehearse-window-hostile")
+            .appName("check-catalog-hostile")
             .config("spark.sql.shuffle.partitions", "7")
             .config("spark.sql.ansi.enabled", "false")
             .config("spark.sql.execution.arrow.pyspark.enabled", "false")
@@ -96,17 +85,12 @@ def main() -> int:
     else:
         spark = (
             SparkSession.builder.master(f"local[{cpus}]")
-            .appName("rehearse-window")
+            .appName("check-catalog")
             .getOrCreate()
         )
     queries = entrymod.queries()
     oracles = entrymod.oracle_sql()
-    if args.names:
-        names = args.names
-    elif args.all:
-        names = list(queries)
-    else:
-        names = list(queries)[:DRIVER_WINDOW]
+    names = args.names or list(queries)
 
     from frauddetection_spark.operators.caching import release_caches
 
@@ -125,7 +109,7 @@ def main() -> int:
                 n = df.count()
                 ok, detail = n > 0, f"rows_only rows={n}"
                 release_caches()
-        except Exception as e:  # noqa: BLE001 — rehearsal must report, not die
+        except Exception as e:  # noqa: BLE001 — the check must report, not die
             ok, detail = False, f"{type(e).__name__}: {e}"
             release_caches()
         status = "ok" if ok else "FAIL"

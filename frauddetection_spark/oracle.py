@@ -76,8 +76,8 @@ def driver_canon_frame(pdf: pd.DataFrame) -> list[str]:
     The round driver canonicalizes with pandas ``sort_values`` over the
     RAW columns before hashing — a path that raises ``TypeError:
     unhashable type`` on list/ndarray cells (the r08
-    ``q_inverted_index`` failure: CORRECTNESS_r08.json shows the crash
-    inside ``lexsort_indexer → Categorical → factorize``). The repo's
+    ``q_inverted_index`` failure: the crash sits inside
+    ``lexsort_indexer → Categorical → factorize``). The repo's
     own ``_canon_frame`` stringifies containers first and is therefore
     MORE permissive — local green did not predict driver green. This
     replica restores the ordering: ``compare()`` runs BOTH legs, so any

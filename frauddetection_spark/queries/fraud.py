@@ -186,7 +186,7 @@ def q_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     # minimal-width, lets the three rank subtrees run as independent
     # stages of one job, and joins back |customers|-row (custkey,
     # score) pairs — plan at sf0.1: 34 -> 22 Exchanges, tasks/run
-    # 317 -> ~200 (plans/r13/q_rfm_{before,after}.txt). Results are
+    # 317 -> ~200. Results are
     # identical: each prefix_rank sees the same (order key, custkey)
     # total order it saw inside the chain.
     s = track_cache(s.persist())

@@ -152,23 +152,10 @@ def q_join_common_neighbor(spark: SparkSession, sf_dir: str) -> DataFrame:
         con.close()
         stats = (int(row[0]), int(row[1]), int(row[2] or 0), contact_vals)
         _CN_STATS[sf_dir] = stats
-    # Strategy override for the scale audit's cost-model-boundary
-    # adjudication (bench.py AUDIT_STRATEGY_BOUNDARY): the r13
-    # sf1->sf10 sweep flagged 45x growth here, but the decade crosses
-    # the CBO's bitmask->inverted boundary (1000 contacts fits the
-    # 4096-contact bitmask domain, 10000 does not), so the ratio
-    # compared two DIFFERENT physical plans. Pinning the strategy on
-    # both sides measures the plan itself; the two strategies are
-    # semantically identical (operator contract + oracle twin), so
-    # results never depend on this env var.
-    import os as _os
-
-    strategy = _os.environ.get("SPARK_GRAFT_CN_STRATEGY", "auto")
     return (
         common_neighbor_pairs(
             contacts,
             min_common=5,
-            strategy=strategy,
             n_contacts=stats[0],
             n_users=stats[1],
             sum_d2=stats[2],

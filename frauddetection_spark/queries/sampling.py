@@ -779,7 +779,7 @@ def q_cluster_griddensity(spark: SparkSession, sf_dir: str) -> DataFrame:
     as collecting an aggregate scalar). A distributed min-label
     fixpoint here costs diameter-many rounds on a graph whose
     diameter GROWS with grid occupancy — measured 14.6× growth across
-    the 10× data step (the --scale-audit flag that triggered this
+    the 10× data step (the scale-audit flag that triggered this
     rewrite) for a graph union-find resolves in microseconds.
     Everything data-sized stays distributed: two shuffles (cell
     count, adjacency join), then one broadcast mapping join."""

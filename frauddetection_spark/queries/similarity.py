@@ -634,7 +634,7 @@ QUERY_MOD = 20  # probe ids are multiples of 20
 # multiples of QUERY_MOD), NOT a fixed fraction of the corpus: the r13
 # sf1->sf10 audit caught the original "5% of vec_ids" probe rule as a
 # quadratic — probes x corpus = n²/20 work, measured 44.8x on a 10x
-# decade (SCALE_AUDIT_r13_sf10_full.json) — which contradicted the
+# decade — which contradicted the
 # query's own serving story ("a SMALL query batch against the full
 # corpus"). With the batch pinned, probe-side work is QUERY_CAP·n —
 # linear per decade. 512 is above every oracle-gate probe count
@@ -1199,7 +1199,6 @@ def q_hyperplane_est(spark: SparkSession, sf_dir: str) -> DataFrame:
     # decimal strings — byte-equal to the twin's md5 — and
     # projections/norms are order-free int64 sums, so the unchanged
     # DuckDB twin still hash-matches (checked at sf0.001/0.01/0.1).
-    # Plan diff: plans/r13/q_hyperplane_est_{before,after}.txt.
     import pandas as pd
 
     qv1m = F.transform(

@@ -21,7 +21,12 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# Local core count (and, through it, shuffle partitions and heap).
+# SPARK_GRAFT_CPUS overrides; otherwise the cores this process may run
+# on, so an unset variable never sizes the JVM for a bigger host.
+DEFAULT_CPUS = int(
+    os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+)
 
 
 def get_spark(
@@ -62,9 +67,9 @@ def get_spark(
         #     test SFs) should broadcast; AQE also converts at runtime.
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
         # --- heap: scaled with the core count (0.75 GiB per local
-        #     core, floor 8g), SPARK_GRAFT_DRIVER_MEM overrides (the
-        #     scale audit auto-sizes from data; clusters pass their
-        #     own). local[N] packs N executor cores into ONE driver
+        #     core, floor 8g), SPARK_GRAFT_DRIVER_MEM overrides
+        #     (clusters pass their own).
+        #     local[N] packs N executor cores into ONE driver
         #     JVM, so a flat heap starves concurrent tasks as N grows:
         #     the flat-8g default gave 32 tasks 0.25 GiB each — ~10x
         #     under any production executor sizing (guide §5) — and a
@@ -74,9 +79,7 @@ def get_spark(
         #     churn alone. r14 makes heap-per-core the default (24g at
         #     32 cores, 8g at ≤10 — the 8-core comparison run keeps
         #     its r13 heap). This is §5 memory sizing that transfers
-        #     to any executor shape, not a local-only tune; the
-        #     round-over-round comparability break is documented in
-        #     OPTIMIZATION_r14.md.
+        #     to any executor shape, not a local-only tune.
         .config(
             "spark.driver.memory",
             os.environ.get(

@@ -119,15 +119,13 @@ def test_round_of_sum_watchlist_matches_committed_file():
     # pin it to the committed NEGZERO_WATCHLIST.txt — any new
     # round-of-sum site must land there (and get eyeballed) in the
     # same commit that introduces it
-    from rotate_window import unwrap_query_fn
-
     from frauddetection_spark.plans.registry import load_all
 
     reg = load_all()
     computed = sorted(
         name
         for name, spec in reg.items()
-        if _round_of_sum_spark(unwrap_query_fn(spec.fn))
+        if _round_of_sum_spark(inspect.unwrap(spec.fn))
         or (spec.oracle and _round_of_sum_sql(spec.oracle))
     )
     with open(WATCHLIST) as fh:
@@ -375,8 +373,6 @@ def test_negzero_full_catalog_triage():
     explicit immunity argument, and any future sign-flip-capable
     rounded sum must be hand-reviewed into _EYES_REVIEWED_IMMUNE in
     the commit that introduces it."""
-    from rotate_window import unwrap_query_fn
-
     from frauddetection_spark.plans.registry import load_all
 
     reg = load_all()
@@ -387,7 +383,7 @@ def test_negzero_full_catalog_triage():
     unreviewed = []
     for n in names:
         spec = reg[n]
-        sites = _spark_sum_sites(unwrap_query_fn(spec.fn))
+        sites = _spark_sum_sites(inspect.unwrap(spec.fn))
         if spec.oracle:
             sites += [
                 _classify_sql_sum_arg(a) for a in _sql_sum_spans(spec.oracle)

@@ -131,80 +131,6 @@ def test_whole_stage_codegen_everywhere(spark, sf_dir):
     assert "*(" in plan
 
 
-def test_driver_window_completes_evidence():
-    """The round driver checks only the first DRIVER_WINDOW entries of
-    queries(). The round-3 invariant: cumulative driver evidence —
-    hash-green rows from past CORRECTNESS_r*.json PLUS this round's
-    window — must cover EVERY oracle-backed query, so no operator ships
-    on local-only evidence. (Round 2's invariant was per-family window
-    coverage; with 97 oracle queries and a 50-slot window, coverage is
-    now cumulative across rounds.)"""
-    import glob
-    import json
-    import os
-
-    import re
-
-    from frauddetection_spark.plans.registry import (
-        DRIVER_WINDOW,
-        QUEUE_AS_OF_ROUND,
-        QUEUED_NEXT_WINDOW,
-        _PRIORITY,
-    )
-
-    reg = load_all()
-    names = list(reg)
-    assert names[: len(_PRIORITY)] == list(_PRIORITY)
-    assert len(_PRIORITY) <= DRIVER_WINDOW
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    green: set[str] = set()
-    max_round = 0
-    for f in sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))):
-        with open(f) as fh:
-            rows = json.load(fh)
-        green |= {k for k, v in rows.items() if v.get("hash_match")}
-        m = re.search(r"CORRECTNESS_r(\d+)", f)
-        if m:
-            max_round = max(max_round, int(m.group(1)))
-    assert green, "no CORRECTNESS_r*.json evidence found"
-
-    # Queue staleness (ADVICE r3): a queue is created against the round
-    # whose window was already frozen. Once that round's CORRECTNESS
-    # file exists, the next rotation MUST have promoted the queue — a
-    # non-empty queue older than the newest evidence fails here, so a
-    # query can never sit queued forever on a comment's promise.
-    if QUEUED_NEXT_WINDOW:
-        assert max_round < QUEUE_AS_OF_ROUND, (
-            f"QUEUED_NEXT_WINDOW created for round {QUEUE_AS_OF_ROUND} "
-            f"but round {max_round} evidence exists — promote the queue "
-            f"into _PRIORITY: {QUEUED_NEXT_WINDOW}"
-        )
-
-    oracle = {n for n, s in reg.items() if s.oracle is not None}
-    window = set(names[:DRIVER_WINDOW])
-    # queries added after the window froze must be explicitly queued
-    # for the next rotation, never silently uncovered
-    uncovered = oracle - (green | window) - set(QUEUED_NEXT_WINDOW)
-    assert uncovered == set(), (
-        f"oracle queries with no driver evidence past or pending: {sorted(uncovered)}"
-    )
-    # the queue must not hide names that already have evidence or a slot
-    assert not (set(QUEUED_NEXT_WINDOW) & (green | window))
-    # No rows-only (oracle=None) query may hold a window slot — EVER
-    # (VERDICT r13 item 4/8, tightening the old ≥48-oracle floor): the
-    # driver records an oracle-less window slot as err="no_oracle",
-    # i.e. a PERMANENT correctness failure it can never adjudicate —
-    # q_dedup_minhash_ml burned an r12 slot exactly this way. All ten
-    # rows-only queries carry their rows>0 evidence from the r07 cycle
-    # and the r11 rows-only scale audit (SCALE_AUDIT_r11_rowsonly.json);
-    # re-evidencing a rows-only plan change belongs in those channels,
-    # never in a hash-checked window slot.
-    assert not (window - oracle), (
-        f"rows-only queries hold driver-window slots: {sorted(window - oracle)}"
-    )
-
-
 def test_cc_local_finish_matches_distributed(spark, sf_dir):
     """connected_components is two-phase (r07): a driver-side min-id
     union-find when the materialized edge set is under the
@@ -327,49 +253,6 @@ def test_cc_consumers_local_finish_parity(qname, spark, sf_dir, monkeypatch):
         tuple(r) for r in spec.fn(spark, sf_dir).collect()
     )
     assert forced_rows == default_rows
-
-
-def test_window_matches_rotation_tool():
-    """The shipped round-14 _PRIORITY must equal rotate_window.py's
-    deterministic proposal for this round's mandatory set: the five
-    queries whose plans the r14 optimization round rewrote after their
-    latest green rows (all local-green at sf0.001/0.01/0.1 on this
-    tree; re-evidenced per the standing rotation rule). Pins both the
-    tool and the staleness-first policy; future rounds update the
-    mandatory list here alongside the rotation commit. (The staleness
-    scan itself is not re-run here — it needs git history and its
-    answer changes as the round progresses; the frozen list is the
-    input being pinned.)"""
-    import os
-    import sys
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    if repo not in sys.path:
-        sys.path.insert(0, repo)
-    from rotate_window import propose
-
-    from frauddetection_spark.plans.registry import (
-        QUEUE_AS_OF_ROUND,
-        _PRIORITY,
-    )
-
-    mandatory = [
-        # r14 optimization-round rewrites, staleness-scan order:
-        # catalog-fed bitmask index + explicit pair-loop broadcast
-        "q_join_common_neighbor",
-        # assignment/encode moved into blocked numpy kernels
-        "q_ann_pq",
-        # kernel null/ragged-input guards (ADVICE r13)
-        "q_hyperplane_est",
-        # alternating per-peel window order (exchange reuse)
-        "q_kcore",
-        # persist filtered to the rows the readers consume
-        "q_item_cf",
-    ]
-    # derive from the evidence that existed when this window froze
-    # (rounds < QUEUE_AS_OF_ROUND), so the NEXT round's artifact
-    # landing doesn't retroactively redden the pin before rotation
-    assert propose(mandatory, upto=QUEUE_AS_OF_ROUND - 1) == list(_PRIORITY)
 
 
 def test_cc_consumers_never_pass_gate_explicitly():

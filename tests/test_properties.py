@@ -404,6 +404,9 @@ def test_pq_quantize_invariant_fixed_width_no_nulls(spark, sf_dir):
         | (F.exists("embedding", lambda x: x.isNull()))
     ).count()
     assert bad == 0
+
+
+def test_asof_carries_latest_row_atomically(spark):
     # code-review regression: a NULL in the latest right row must be
     # carried as NULL (not back-filled from an older row), and columns
     # must never mix across right rows

@@ -19,6 +19,7 @@ join-back).
 
 from __future__ import annotations
 
+import inspect
 import os
 import re
 import sys
@@ -41,6 +42,127 @@ def _final_plan(df) -> str:
     double every node count."""
     plan = df._jdf.queryExecution().executedPlan().toString()
     return plan.split("== Initial Plan ==")[0]
+
+
+def helpers_of(fn) -> tuple[tuple[str, str], ...]:
+    """(funcname, relpath) for every package-defined function the
+    query's defining function CALLS, one import-level deep — so a
+    persist inside a shared helper (``prefix_rank``, ``ivf_topk``)
+    counts for every query that calls it.
+
+    Static resolution: ast-walk the function source for ``Call`` nodes,
+    resolve plain names through the function's ``__globals__`` plus any
+    ``import``/``from-import`` statements INSIDE the body (the
+    dominant pattern here — most queries import operators locally),
+    and ``mod.attr`` calls through module objects. Only functions whose
+    source file lives under ``frauddetection_spark/`` count, minus
+    ``plans/registry.py`` (the registration path is no helper of the
+    built plan); one level only (helpers' own callees are out of scope
+    by design — the operators tree is shallow)."""
+    import ast
+    import importlib
+    import inspect
+    import textwrap
+    import types
+
+    pkg_root = os.path.join(_REPO, "frauddetection_spark")
+    try:
+        src = textwrap.dedent(inspect.getsource(fn))
+        tree = ast.parse(src)
+    except (OSError, TypeError, SyntaxError):
+        return ()
+
+    # Decorators are Call nodes in the function's source but are not
+    # part of the built plan (the registration decorator would
+    # otherwise resolve as a "helper" of all 309 queries). Strip them
+    # before the walk.
+    for node in ast.walk(tree):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            node.decorator_list = []
+
+    local: dict[str, object] = {}
+    called: set[str] = set()
+    modattr: set[tuple[str, str]] = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.ImportFrom) and node.module and node.level == 0:
+            try:
+                mod = importlib.import_module(node.module)
+            except ImportError:
+                continue
+            for alias in node.names:
+                local[alias.asname or alias.name] = getattr(
+                    mod, alias.name, None
+                )
+        elif isinstance(node, ast.Import):
+            for alias in node.names:
+                try:
+                    mod = importlib.import_module(alias.name)
+                except ImportError:
+                    continue
+                local[alias.asname or alias.name.split(".")[0]] = mod
+        elif isinstance(node, ast.Call):
+            f = node.func
+            if isinstance(f, ast.Name):
+                called.add(f.id)
+            elif isinstance(f, ast.Attribute) and isinstance(f.value, ast.Name):
+                modattr.add((f.value.id, f.attr))
+
+    g = getattr(fn, "__globals__", {})
+    out: set[tuple[str, str]] = set()
+
+    def consider(obj) -> None:
+        if not isinstance(obj, types.FunctionType) or obj is fn:
+            return
+        try:
+            srcfile = inspect.getsourcefile(obj)
+        except TypeError:
+            return
+        if not srcfile:
+            return
+        srcfile = os.path.abspath(srcfile)
+        if not srcfile.startswith(pkg_root + os.sep):
+            return
+        if srcfile.endswith(os.path.join("plans", "registry.py")):
+            return
+        out.add((obj.__name__, os.path.relpath(srcfile, _REPO)))
+
+    for nm in called:
+        consider(local.get(nm, g.get(nm)))
+    for modnm, attr in modattr:
+        holder = local.get(modnm, g.get(modnm))
+        if isinstance(holder, types.ModuleType):
+            consider(getattr(holder, attr, None))
+    return tuple(sorted(out))
+
+
+_CC_CONSUMERS = {
+    "q_connected_components",
+    "q_dedup_groups",
+    "q_dedup_semantic",
+    "q_entity_resolution",
+}
+
+
+def test_helpers_of_resolves_shared_operators():
+    # a rewrite inside a shared operator must reach its consumers: the
+    # CC consumers surface operators/graph.py::connected_components
+    for name in _CC_CONSUMERS:
+        fn = inspect.unwrap(REGISTRY[name].fn)
+        helpers = dict(helpers_of(fn))
+        assert helpers.get("connected_components") == os.path.join(
+            "frauddetection_spark", "operators", "graph.py"
+        ), f"{name} does not surface connected_components as a helper"
+
+
+def test_helpers_of_excludes_registration_decorator():
+    # @register(...) is a Call node in the source but not part of the
+    # built plan; it must not resolve as a helper of every query
+    for name in ("q_groupby_agg", "q_dedup_groups", "q_item_cf"):
+        fn = inspect.unwrap(REGISTRY[name].fn)
+        rels = {rel for _, rel in helpers_of(fn)}
+        assert not any(rel.endswith("registry.py") for rel in rels), (
+            f"{name} resolves plans/registry.py as a helper"
+        )
 
 
 # Every query whose defining function calls track_cache persists a
@@ -68,7 +190,7 @@ _CONSTRUCTION_CONSUMED = {
 
 def _persist_backed() -> list[str]:
     """Queries whose own source OR any called package helper (one
-    import level, same resolution as the staleness tool) contains a
+    import level, via ``helpers_of``) contains a
     ``track_cache`` site — a dropped persist in ``prefix_rank`` or
     ``ivf_topk`` must fail its consumers' lint rows, not just direct
     callers' (review r11: the hand-scan covered only the query body).
@@ -78,9 +200,6 @@ def _persist_backed() -> list[str]:
     per-frame attribution would need plan-node provenance the lint
     doesn't have."""
     import importlib
-    import inspect
-
-    from rotate_window import helpers_of, unwrap_query_fn
 
     def has_track_cache(fn) -> bool:
         try:
@@ -92,7 +211,7 @@ def _persist_backed() -> list[str]:
     for name, spec in sorted(REGISTRY.items()):
         if name in _CONSTRUCTION_CONSUMED:
             continue
-        fn = unwrap_query_fn(spec.fn)
+        fn = inspect.unwrap(spec.fn)
         hit = has_track_cache(fn)
         if not hit:
             for hname, hrel in helpers_of(fn):
@@ -118,9 +237,6 @@ def _track_cache_call_sites(fn) -> int:
     excluding the wrapper's definition in operators/caching.py) — the
     mechanical definition of "multi-persist" for the floor pin below."""
     import importlib
-    import inspect
-
-    from rotate_window import helpers_of
 
     seen: set[tuple[str, str]] = set()
     n = 0
@@ -217,12 +333,10 @@ def test_multi_persist_queries_have_pinned_floors():
     """Every persist-backed query with >= 2 reachable track_cache call
     sites must carry an explicit floor — a future multi-persist query
     cannot silently ride the >= 1 base assertion."""
-    from rotate_window import unwrap_query_fn
-
     multi = {
         name
         for name in _PERSIST_BACKED
-        if _track_cache_call_sites(unwrap_query_fn(REGISTRY[name].fn)) >= 2
+        if _track_cache_call_sites(inspect.unwrap(REGISTRY[name].fn)) >= 2
     }
     untriaged = multi - set(_MULTI_PERSIST_FLOOR)
     assert untriaged == set(), (
