@@ -22,13 +22,15 @@ Reference parity:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from typing import NamedTuple
+
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
 
-# Cache lifetime registry lives in operators.caching since round 6;
-# re-exported here (incl. the legacy private name) for back-compat.
+# Cache lifetime registry lives in operators.caching; re-exported here
+# (incl. the legacy private name) for back-compat.
 from frauddetection_spark.operators.caching import (  # noqa: F401
     release_caches,
     track_cache,
@@ -59,7 +61,7 @@ def mirror(edges: DataFrame) -> DataFrame:
     """Undirected view: (src,dst) ∪ (dst,src), deduplicated
     (reference: edge mirroring main.py:102-110).
 
-    Explode-scatter, not a self-union (r10): the union form planned
+    Explode-scatter, not a self-union: the union form planned
     its two branches as independent subtrees (no ReusedExchange), so
     an unpersisted upstream edge pipeline executed twice — the hazard
     the connected-components checkpoint-before-mirror comment profiled
@@ -133,12 +135,12 @@ def aggregate_messages(
 
 
 BITMASK_MAX_CONTACTS = 4096  # 64 int64 words
-# Cost model for the auto pick (replaces round-2's hard user cap —
-# measured: at 10× users over a dense 100-contact domain the inverted
-# index shuffles Σd² ≈ 5e9 rows while the bitmask nested loop does
-# u²/2 ≈ 1.1e8 in-codegen word-AND+popcounts, ~40× cheaper; a cap on
-# users alone picks the catastrophically wrong side exactly in the
-# dense regime the bitmask exists for):
+# Cost model for the auto pick (replaces a hard user cap — measured: at
+# 10× users over a dense 100-contact domain the inverted index shuffles
+# Σd² ≈ 5e9 rows while the bitmask nested loop does u²/2 ≈ 1.1e8
+# in-codegen word-AND+popcounts, ~40× cheaper; a cap on users alone
+# picks the catastrophically wrong side exactly in the dense regime the
+# bitmask exists for):
 #   inverted_cost ≈ Σ_c d(c)²          shuffled+aggregated rows
 #   bitmask_cost  ≈ (u²/2)·words       in-memory word operations
 # One shuffled row costs roughly BITMASK_WORD_DISCOUNT word-ops
@@ -147,31 +149,31 @@ BITMASK_MAX_CONTACTS = 4096  # 64 int64 words
 # an absolute nested-loop budget (beyond it, wall-clock is unbounded
 # even when bitmask is the cheaper side — at that point the OUTPUT of
 # min_common=1 over a dense domain is itself ~u²/2 and the caller
-# must prune: raise min_common, cap max_contact_degree, or top-k).
+# must prune: raise min_common or top-k).
 BITMASK_WORD_DISCOUNT = 64
 BITMASK_MAX_WORDOPS = int(2e10)
 
 
-def _pick_cn_strategy(
-    n_contacts: int,
-    n_users: int,
-    sum_d2: int | None = None,
-) -> str:
-    """Cost-based inverted-vs-bitmask pick; see the model above.
-    Without Σd² stats (caller injected only coarse counts) fall back
-    to the legacy coarse rule — bitmask iff the user count is ≤ 8192
-    (small enough that even the worst-case nested loop is cheap);
-    anything larger defaults to inverted, the strategy whose cost is
-    bounded by data statistics we actually have."""
+class ContactStats(NamedTuple):
+    """Statistics of a (user, contact) frame's distinct non-null pairs,
+    behind the common-neighbor strategy pick."""
+
+    n_contacts: int  # distinct contacts
+    n_users: int  # distinct users
+    sum_d2: int  # Σ over contacts of degree²: the inverted join's rows
+    # the sorted distinct contacts when there are at most
+    # BITMASK_MAX_CONTACTS of them, else None; bitmask needs them
+    values: list | None
+
+
+def _pick_cn_strategy(n_contacts: int, n_users: int, sum_d2: int) -> str:
+    """Cost-based inverted-vs-bitmask pick; see the model above."""
     if n_contacts > BITMASK_MAX_CONTACTS or n_contacts == 0:
         return "inverted"
     words = (n_contacts + 63) // 64
     pair_wordops = (n_users * n_users // 2) * words
     if pair_wordops > BITMASK_MAX_WORDOPS:
         return "inverted"
-    if sum_d2 is None:
-        # no Σd² available: legacy coarse rule (small frames only)
-        return "bitmask" if n_users <= 8192 else "inverted"
     return (
         "bitmask"
         if pair_wordops <= BITMASK_WORD_DISCOUNT * sum_d2
@@ -182,45 +184,33 @@ def _pick_cn_strategy(
 def common_neighbor_pairs(
     contacts: DataFrame,
     min_common: int = 1,
-    max_contact_degree: int | None = None,
-    strategy: str = "auto",
-    n_contacts: int | None = None,
-    n_users: int | None = None,
-    sum_d2: int | None = None,
-    contact_values: list | None = None,
+    stats: ContactStats | None = None,
 ) -> DataFrame:
     """Pairs of users sharing ≥ min_common contacts (buildLSN,
     data_process.py:20-48, live k=1 at :219-220). The reference's
-    O(n²·m) python loop, decorrelated. Two physical strategies:
+    O(n²·m) python loop, decorrelated. ``contacts`` has columns
+    ``user`` and ``contact``; null contacts are ignored. Two physical
+    strategies, picked by cost from ``stats`` (:func:`_pick_cn_strategy`):
 
     - ``inverted``: self-join on contact + pair-count — the sparse,
       scale-default path. Cost is Σ_c d(c)² intermediate rows, so it
-      explodes when contacts are hubs; `max_contact_degree` prunes hubs
-      (documented semantic deviation — configurable, off by default for
-      parity).
+      explodes when contacts are hubs.
     - ``bitmask``: when the distinct-contact domain is small (≤4096)
-      AND the user count is small (≤8192), encode each user's contact
-      set as packed int64 words (bit_or aggregate) and count pair
-      overlaps with `bit_count(a & b)` — no per-contact pair explosion
-      at all; the pair space is the user×user nested loop over tiny
-      mask rows. This is exactly the dense-domain regime where the
-      inverted index is quadratic-per-hub: 100 contacts shared by ~700
-      users each is 53M join rows inverted vs 1.1M masked pairs. The
-      user-count bound matters as much as the domain bound: the nested
-      loop is O(|users|²) no matter how dense the domain is.
-    - ``auto``: COST-BASED pick from (distinct contacts, distinct
-      users, Σd²) via :func:`_pick_cn_strategy` — an engine CBO
-      decision driven by data statistics. If the caller already knows
-      the stats (catalog / ANALYZE / prior round), pass
-      ``n_contacts``/``n_users`` (and ideally ``sum_d2``) and NO
-      probe job runs; otherwise a probe (contact-degree aggregate +
-      distinct-user count) runs at plan-construction time (documented
-      cost — the one query path that is not job-free at construction
-      unless stats are injected). ``contact_values`` (r14): the sorted
-      distinct contact domain from the same catalog probe; when given
-      and the bitmask strategy runs, the contact→bit index becomes a
-      driver literal (no distinct+window pass over the frame) and the
-      persist moves from the input to the reused masks frame.
+      and the user×user pair space fits the word-op budget, encode each
+      user's contact set as packed int64 words (bit_or aggregate) and
+      count pair overlaps with `bit_count(a & b)` — no per-contact pair
+      explosion at all; the pair space is the user×user nested loop
+      over tiny mask rows. This is exactly the dense-domain regime
+      where the inverted index is quadratic-per-hub: 100 contacts
+      shared by ~700 users each is 53M join rows inverted vs 1.1M
+      masked pairs. Its contact→bit index is a driver literal built
+      from ``stats.values``.
+
+    Pass ``stats`` when the caller already knows them (catalog /
+    ANALYZE), and NO Spark job runs at construction. Without them a
+    probe over the persisted distinct pairs computes the same four
+    fields at plan-construction time (a documented cost: the only path
+    of this operator that is not job-free at construction).
 
     Both strategies are semantically identical for min_common ≥ 1 (the
     join-based inverted path cannot observe zero-overlap pairs, so
@@ -229,39 +219,39 @@ def common_neighbor_pairs(
     """
     if min_common < 1:
         raise ValueError("min_common must be >= 1 (0 would be strategy-dependent)")
-    c = contacts.select(F.col("user").alias("u"), F.col("contact").alias("ct")).distinct()
-    if max_contact_degree is not None:
-        keep = (
-            c.groupBy("ct")
-            .agg(F.count("*").alias("d"))
-            .filter(F.col("d") <= max_contact_degree)
-            .select("ct")
+    c = (
+        contacts.select(F.col("user").alias("u"), F.col("contact").alias("ct"))
+        .filter(F.col("ct").isNotNull())
+        .distinct()
+    )
+    if stats is None:
+        # persist FIRST so the probe's scan — typically a JSON extract
+        # over events, the expensive part — fills the cache the chosen
+        # plan then reuses. The degree aggregate gives nc AND exact Σd²
+        # in one pass.
+        c = track_cache(c.persist())
+        degs = c.groupBy("ct").agg(F.count("*").alias("d"))
+        row = degs.agg(
+            F.count("*").alias("nc"),
+            F.sum(F.col("d") * F.col("d")).alias("sd2"),
+        ).first()
+        n_contacts = int(row["nc"])
+        values = None
+        if n_contacts <= BITMASK_MAX_CONTACTS:
+            values = sorted(r["ct"] for r in degs.select("ct").collect())
+        stats = ContactStats(
+            n_contacts,
+            c.select("u").distinct().count(),
+            int(row["sd2"] or 0),
+            values,
         )
-        c = c.join(F.broadcast(keep), "ct")
 
-    if strategy == "auto":
-        if n_contacts is None or n_users is None:
-            # probe jobs over the persisted c (persist FIRST so the
-            # probe's scan — typically a JSON extract over events, the
-            # expensive part — fills the cache the chosen plan then
-            # reuses; both strategies read c at least twice). The
-            # degree aggregate gives nc AND exact Σd² in one pass.
-            c = track_cache(c.persist())
-            degs = c.groupBy("ct").agg(F.count("*").alias("d"))
-            row = degs.agg(
-                F.count("*").alias("nc"),
-                F.sum(F.col("d") * F.col("d")).alias("sd2"),
-            ).first()
-            n_contacts = int(row["nc"]) if n_contacts is None else n_contacts
-            sum_d2 = int(row["sd2"] or 0) if sum_d2 is None else sum_d2
-            if n_users is None:
-                n_users = c.select("u").distinct().count()
-        strategy = _pick_cn_strategy(n_contacts, n_users, sum_d2)
-
-    if strategy == "bitmask":
-        return _common_neighbors_bitmask(
-            c, min_common, n_contacts, contact_values
-        )
+    if (
+        stats.values is not None
+        and _pick_cn_strategy(stats.n_contacts, stats.n_users, stats.sum_d2)
+        == "bitmask"
+    ):
+        return _common_neighbors_bitmask(c, min_common, stats.values)
 
     a = c.select(F.col("u").alias("user_a"), "ct")
     b = c.select(F.col("u").alias("user_b"), "ct")
@@ -274,128 +264,68 @@ def common_neighbor_pairs(
     )
 
 
-def _dense_index(values: DataFrame, col: str) -> DataFrame:
-    """(value → contiguous 0-based index) without a global-window sort.
-
-    Two-phase zipWithIndex in DataFrame form: range-partition by value,
-    rank locally, then add per-partition offsets (prefix sum over the
-    tiny per-partition size table). The only single-partition window
-    runs over #partitions rows — bounded by cluster shape, not data —
-    unlike a bare ``row_number().over(Window.orderBy(...))`` which
-    funnels every row through one task. Because range partitions are
-    ordered and disjoint, local rank + offset equals the global rank,
-    independent of where the sampled partition bounds land.
-    """
-    parts = values.repartitionByRange(8, col).withColumn(
-        "_pid", F.spark_partition_id()
-    )
-    local = parts.withColumn(
-        "_r", F.row_number().over(Window.partitionBy("_pid").orderBy(col))
-    )
-    sizes = local.groupBy("_pid").agg(F.max("_r").alias("_n"))
-    offs = sizes.withColumn(
-        "_off",
-        F.coalesce(
-            F.sum("_n").over(
-                Window.orderBy("_pid").rowsBetween(
-                    Window.unboundedPreceding, -1
-                )
-            ),
-            F.lit(0),
-        ),
-    ).select("_pid", "_off")
-    return local.join(F.broadcast(offs), "_pid").select(
-        F.col(col), (F.col("_r") - 1 + F.col("_off")).cast("bigint").alias("idx")
-    )
-
-
 def _common_neighbors_bitmask(
-    c: DataFrame,
-    min_common: int,
-    n_contacts: int | None = None,
-    contact_values: list | None = None,
+    c: DataFrame, min_common: int, values: list
 ) -> DataFrame:
     """Dense-domain strategy: contact sets as packed bit words.
 
-    One small broadcast (contact → dense bit index), one groupBy(user)
-    bit_or to build masks, then a self nested-loop join over mask rows
-    with pure codegen popcounts. No Σd² blowup: work is
+    The contact → bit index is a LITERAL local relation built from
+    ``values``, so no distinct+window pass runs over ``c``, which is
+    consumed exactly once (the mask build); the persist sits on the
+    frame that IS read twice, the masks (both sides of the pair loop).
+    Bit order cannot affect results — any bijective contact→bit mapping
+    yields identical AND/popcount overlaps. A contact missing from
+    ``values`` (stale stats) raises instead of silently losing its
+    overlaps. One groupBy(user) bit_or builds the masks, then a self
+    nested-loop join over mask rows counts with pure codegen popcounts:
     O(|users|²·words), independent of hub degrees — which is why the
     caller budgets the pair space (_pick_cn_strategy's word-op budget)
     before picking this path.
     """
-    from pyspark import StorageLevel
-
-    if contact_values:
-        # r14 (guide §2.3 fewer passes, VERDICT r13 #5): the caller's
-        # driver-side catalog probe already enumerated the (≤ 4096)
-        # distinct contacts, so the contact→bit index is a LITERAL
-        # local relation — the per-run distinct + window index pass
-        # over c is gone, and c is consumed exactly once (the mask
-        # build), so the persist moves to the frame that IS read
-        # twice: masks (n_users × n_words rows, both sides of the
-        # pair loop). Bit order cannot affect results — any bijective
-        # contact→bit mapping yields identical AND/popcount overlaps.
-        spark = c.sparkSession
-        idx = spark.createDataFrame(
-            [(v, i) for i, v in enumerate(contact_values)], ["ct", "idx"]
-        )
-        n_words = max(1, (len(contact_values) + 63) // 64)
-        persist_masks = True
-    elif n_contacts is not None:
-        # the distinct contact set feeds both the index build and the
-        # mask build — persist the (≤ MAX_USERS × MAX_CONTACTS
-        # distinct) frame so the upstream scan (typically a JSON
-        # extract over events) runs once
-        if c.storageLevel == StorageLevel.NONE:
-            c = track_cache(c.persist())
-        # domain known ≤ BITMASK_MAX_CONTACTS: a single window over
-        # ≤4096 rows is bounded by construction and cheaper than the
-        # two-phase range-partitioned index (no sampling pass/shuffle)
-        idx = (
-            c.select("ct")
-            .distinct()
-            .withColumn("idx", F.row_number().over(Window.orderBy("ct")) - 1)
-        )
-        n_words = max(1, (n_contacts + 63) // 64)
-        persist_masks = False
-    else:
-        # domain size unknown (direct strategy="bitmask" call): use the
-        # scalable two-phase index — no single-partition funnel
-        if c.storageLevel == StorageLevel.NONE:
-            c = track_cache(c.persist())
-        idx = _dense_index(c.select("ct").distinct(), "ct")
-        n_words = (
-            idx.agg((F.floor(F.max("idx") / 64) + 1).alias("w")).first()[0] or 1
-        )
-        persist_masks = False
-    masked = c.join(F.broadcast(idx), "ct").select(
+    idx = c.sparkSession.createDataFrame(
+        [(v, i) for i, v in enumerate(values)], ["ct", "idx"]
+    )
+    n_words = max(1, (len(values) + 63) // 64)
+    checked = c.join(F.broadcast(idx), "ct", "left").select(
+        "u",
+        F.coalesce(
+            F.col("idx"),
+            F.raise_error(
+                F.concat(
+                    F.lit("common_neighbor_pairs: contact "),
+                    F.col("ct").cast("string"),
+                    F.lit(" is missing from stats.values (stale stats)"),
+                )
+            ),
+        ).alias("idx"),
+    )
+    masked = checked.select(
         "u", (F.col("idx") / 64).cast("int").alias("w"),
         F.expr("shiftleft(CAST(1 AS BIGINT), CAST(idx % 64 AS INT))").alias("bit"),
     )
     masks = masked.groupBy("u").agg(
         *[
             F.bit_or(F.when(F.col("w") == w, F.col("bit")).otherwise(0)).alias(f"m{w}")
-            for w in range(int(n_words))
+            for w in range(n_words)
         ]
     )
-    if persist_masks:
-        masks = track_cache(masks.persist())
+    masks = track_cache(masks.persist())
     a = masks.select(
-        F.col("u").alias("user_a"), *[F.col(f"m{w}").alias(f"a{w}") for w in range(int(n_words))]
+        F.col("u").alias("user_a"), *[F.col(f"m{w}").alias(f"a{w}") for w in range(n_words)]
     )
     b = masks.select(
-        F.col("u").alias("user_b"), *[F.col(f"m{w}").alias(f"b{w}") for w in range(int(n_words))]
+        F.col("u").alias("user_b"), *[F.col(f"m{w}").alias(f"b{w}") for w in range(n_words)]
     )
     overlap = None
-    for w in range(int(n_words)):
+    for w in range(n_words):
         term = F.bit_count(F.col(f"a{w}").bitwiseAND(F.col(f"b{w}")))
         overlap = term if overlap is None else overlap + term
     # explicit broadcast: the pair loop is a non-equi join, and the
     # planner must never fall back to CartesianProduct when the cached
-    # masks frame loses its size estimate (r14). Always safe here: the
-    # strategy's word-op budget (BITMASK_MAX_WORDOPS) bounds the mask
-    # table at ~79k users × ≤65 int64 columns ≈ 41 MB worst case.
+    # masks frame loses its size estimate. Safe because this path is
+    # reached only through the cost pick, whose word-op budget
+    # (BITMASK_MAX_WORDOPS) bounds the mask table at ~79k users × ≤65
+    # int64 columns ≈ 41 MB worst case.
     return (
         a.join(F.broadcast(b), F.col("user_a") < F.col("user_b"))
         .withColumn("n_common", overlap.cast("bigint"))
@@ -432,9 +362,9 @@ def node_triangles(und: DataFrame) -> DataFrame:
     e2 = und.select(F.col("a").alias("y"), F.col("b").alias("z"))
     e3 = und.select(F.col("a").alias("x"), F.col("b").alias("z"))
     # tri feeds all three corner projections — persist it or the wedge
-    # join replays 3× (r07 sweep)
+    # join replays 3×
     tri = track_cache(e1.join(e2, "y").join(e3, ["x", "z"]).persist())
-    # one reference, three corners (r10): the 3-branch union read the
+    # one reference, three corners: the 3-branch union read the
     # cached tri table three times; the explode credits all corners in
     # a single map pass
     corners = tri.select(F.explode(F.array("x", "y", "z")).alias("node"))
@@ -449,8 +379,8 @@ def clustering_coefficients(edges: DataFrame) -> DataFrame:
     from frauddetection_spark.operators.caching import track_cache
 
     # und feeds both degree branches AND the three wedge-join sides —
-    # persist it or the canonical edge derivation replays 5× (r07
-    # sweep: 11 parquet scans in q_clustering_coeff's executed plan)
+    # persist it or the canonical edge derivation replays 5× (11
+    # parquet scans in q_clustering_coeff's executed plan without it)
     und = track_cache(undirected_canonical(edges).persist())
     deg = (
         und.select(F.explode(F.array("a", "b")).alias("node"))
@@ -479,7 +409,7 @@ def clustering_coefficients(edges: DataFrame) -> DataFrame:
 # Size gate for connected_components' driver-side local finish. A
 # MODULE-LEVEL constant (not only a parameter default) so forcing the
 # distributed path in tests is one monkeypatch that covers every call
-# site no matter how it passes the threshold (ADVICE r08: patching
+# site no matter how it passes the threshold (patching
 # __defaults__ goes vacuous the day a consumer passes the gate
 # explicitly — tests/test_plans.py also lints that none does).
 CC_LOCAL_FINISH_EDGES = 200_000
@@ -517,7 +447,7 @@ def connected_components(
     propagation). Deterministic fixpoint ⇒ oracle-verifiable even
     though the algorithm is iterative driver-side control flow.
     """
-    # Lineage discipline (the round-3 7s→2s fix, profiled): persist
+    # Lineage discipline (profiled 7s→2s): persist
     # alone does NOT truncate the LOGICAL plan — each round's frame
     # references the previous round twice, so by round k the analyzer
     # walks an O(2^k)-node tree that embeds the (large) upstream edge
@@ -568,7 +498,7 @@ def connected_components(
 
         nodes = set()
         # Resolve src/dst by NAME and derive the output schema from the
-        # input's field types (ADVICE r07): the distributed path below
+        # input's field types: the distributed path below
         # is name-resolved and type-preserving, so the local finish
         # must be too — positional row[0]/row[1] plus a hardcoded
         # bigint schema would silently diverge for non-long node ids

@@ -5,8 +5,7 @@ funnels every row through ONE task ("No Partition Defined for Window
 operation" = single-reducer sort), which caps the operator at one
 executor's memory no matter how large the cluster is.
 
-The two-phase form (same discipline as operators/graph.py::_dense_index
-and classic zipWithIndex):
+The two-phase form (the discipline of classic zipWithIndex):
 
 1. ``repartitionByRange`` on the order key — partitions are ordered and
    disjoint, so a row's global rank = its LOCAL rank within the

@@ -94,7 +94,7 @@ def _block_pairs_cogrouped(emb: DataFrame, vec_col: str, n_blocks: int):
     cogroup — the distributed block nested loop. Every (a, b) vector
     pair meets in EXACTLY ONE kernel call: (block(a), block(b)).
 
-    This is the scale-out replacement for the round-1 driver-collect +
+    This is the scale-out replacement for a driver-collect +
     sc.broadcast kernel: nothing touches the driver, the plan is fully
     lazy (zero jobs at construction), and each kernel sees two bounded
     pandas frames. Replication cost is n_blocks× each side — the
@@ -285,14 +285,14 @@ def adaptive_centroids(n: int, floor: int = 16, max_k: int = 1 << 16) -> int:
     centroid-count rule that keeps IVF buckets at ~√n vectors — CAPPED
     at ``max_k`` (default 2¹⁶, the same cap as the twin's CASE
     ladder). With FIXED K the probed candidate space is ~n²·nprobe/K,
-    a hidden quadratic: the r12 sf0.1→sf1 audit measured
+    a hidden quadratic: the sf0.1→sf1 audit measured
     q_ann_ivf_sampled at 72× for 10× data (20k vectors / 16 centroids
     = 1250-vector buckets). With K ~ √n and fixed nprobe the candidate
     space is ~n^1.5·nprobe — the standard IVF scaling. Integer-only on
     purpose: the DuckDB twin computes the SAME K via a CASE ladder
     over count(*) (sql_ivf), and float log2 could disagree in the last
     ulp at power-of-4 boundaries. The cap exists because the ladder is
-    finite (ADVICE r12): an uncapped Python side would pick K=131072
+    finite: an uncapped Python side would pick K=131072
     at n=2³²+1 while the SQL ELSE arm stops at 65536, and the engines
     would diverge — both sides now share one bound; past it, bucket
     size grows linearly again (at n=2³² that is ~65k-vector buckets —
@@ -319,9 +319,9 @@ def _sql_adaptive_centroids(floor: int = 16, max_k: int = 1 << 16) -> str:
 # scan is a single partition (a 30 MB embeddings file at sf10 is ONE
 # 128 MB-rule split holding 200k vectors). ASSIGN_BLOCKS is the FLOOR;
 # assign_blocks(n) scales the count with the corpus so the per-task
-# pandas frame stays bounded (ADVICE r12: a fixed 32 meant ~n/32 rows
-# per task — ≈16 GB/task at 10⁹ vectors, the same hidden-linear-
-# footprint class the scale audit exists to catch).
+# pandas frame stays bounded (a fixed 32 meant ~n/32 rows per task —
+# ≈16 GB/task at 10⁹ vectors, the same hidden-linear-footprint class
+# the scale audit exists to catch).
 ASSIGN_BLOCKS = 32
 
 # ~rows per kernel task: 64-dim int64 qv ≈ 0.5 KB/row ⇒ ~32 MB/task.
@@ -342,6 +342,23 @@ def assign_blocks(n_rows: int | None) -> int:
     while B * ASSIGN_TARGET_ROWS < n_rows:
         B *= 2
     return B
+
+
+def _block_cogroup(
+    corpus: DataFrame, cent: DataFrame, n_rows: int | None, kern, schema
+) -> DataFrame:
+    """Run the pandas ``kern`` over ``corpus`` hash-split by vec_id into
+    :func:`assign_blocks` ``(n_rows)`` blocks, each cogrouped with a
+    full replica of the small codebook frame ``cent`` — the layout of
+    every centroid-scoring kernel below."""
+    B = assign_blocks(n_rows)
+    left = corpus.withColumn("b", F.pmod(F.col("vec_id"), F.lit(B)).cast("int"))
+    right = cent.withColumn(
+        "b", F.explode(F.sequence(F.lit(0), F.lit(B - 1)))
+    ).withColumn("b", F.col("b").cast("int"))
+    return left.groupBy("b").cogroup(right.groupBy("b")).applyInPandas(
+        kern, schema
+    )
 
 
 def _cos_sort_key(qv, n2, r):
@@ -388,12 +405,12 @@ def _centroid_topn(
     """(vec_id, cid, crank) — each vector's ``n_top`` centroids by
     (ccos DESC, cid ASC), as a cogrouped numpy int64 matmul.
 
-    This replaces the Catalyst transform/aggregate scoring expression
-    (r12): higher-order functions never enter whole-stage codegen, so
-    the n·K·d assignment ran as interpreted per-element expression
-    eval — invisible at K=16, but the sf1→sf10 audit caught the
-    adaptive codebook at n=200k/K=512 spending ~6.5e9 interpreted
-    evals in one scan task (>20 min). The same arithmetic as a
+    This replaces the Catalyst transform/aggregate scoring expression:
+    higher-order functions never enter whole-stage codegen, so the n·K·d
+    assignment ran as interpreted per-element expression eval — invisible
+    at K=16, but the sf1→sf10 audit caught the adaptive codebook at
+    n=200k/K=512 spending ~6.5e9 interpreted evals in one scan task
+    (>20 min). The same arithmetic as a
     per-block matmul is seconds, and the block split parallelizes a
     single-partition scan. Semantics are bit-identical to the old
     sort_array(struct(ccos, -cid, cid)) expression AND the DuckDB
@@ -415,15 +432,6 @@ def _centroid_topn(
         StructType,
     )
 
-    B = assign_blocks(n_rows)
-    left = frame.select("vec_id", "qv", "n2").withColumn(
-        "b", F.pmod(F.col("vec_id"), F.lit(B)).cast("int")
-    )
-    right = (
-        cent.select("cid", "cqv", "cn2")
-        .withColumn("b", F.explode(F.sequence(F.lit(0), F.lit(B - 1))))
-        .withColumn("b", F.col("b").cast("int"))
-    )
     schema = StructType(
         [
             StructField("vec_id", LongType()),
@@ -456,10 +464,10 @@ def _centroid_topn(
             }
         )
 
-    return (
-        left.groupBy("b")
-        .cogroup(right.groupBy("b"))
-        .applyInPandas(kern, schema)
+    return _block_cogroup(
+        frame.select("vec_id", "qv", "n2"),
+        cent.select("cid", "cqv", "cn2"),
+        n_rows, kern, schema,
     )
 
 
@@ -495,15 +503,6 @@ def _lloyd_partials(
         StructType,
     )
 
-    B = assign_blocks(n_rows)
-    left = frame.select("vec_id", "qv", "n2").withColumn(
-        "b", F.pmod(F.col("vec_id"), F.lit(B)).cast("int")
-    )
-    right = (
-        cent.select("cid", "cqv", "cn2")
-        .withColumn("b", F.explode(F.sequence(F.lit(0), F.lit(B - 1))))
-        .withColumn("b", F.col("b").cast("int"))
-    )
     schema = StructType(
         [
             StructField("cid", LongType()),
@@ -538,10 +537,10 @@ def _lloyd_partials(
             }
         )
 
-    return (
-        left.groupBy("b")
-        .cogroup(right.groupBy("b"))
-        .applyInPandas(kern, schema)
+    return _block_cogroup(
+        frame.select("vec_id", "qv", "n2"),
+        cent.select("cid", "cqv", "cn2"),
+        n_rows, kern, schema,
     )
 
 
@@ -614,7 +613,7 @@ def ivf_topk(
         raise ValueError(f"unknown seeding {seeding!r}")
 
     # Scoring + ranking against the codebook runs in the cogrouped
-    # numpy kernel (_centroid_topn, r12): the r07 broadcast-argmin
+    # numpy kernel (_centroid_topn): the earlier broadcast-argmin
     # Catalyst expression (transform + aggregate over the codebook
     # array) kept the shuffle away but never entered whole-stage
     # codegen — interpreted per-element eval made the n·K·d
@@ -645,7 +644,7 @@ def ivf_topk(
         )
     for _ in range(iters):
         # Update via per-block PARTIAL sums from the assignment kernel
-        # (_lloyd_partials): the r12 shape joined the n-row assignment
+        # (_lloyd_partials): the earlier shape joined the n-row assignment
         # back onto train (a train-sized shuffle) and posexploded n·d
         # (vector, dim) rows per iteration; partials shuffle ≤ B·K
         # rows, independent of n, and the explode below runs over
@@ -736,7 +735,7 @@ def ivf_topk(
         # Zero-norm (all-zero quantized) vectors would produce NaN
         # cosines, which np.lexsort on -cos ranks LAST while SQL's
         # ORDER BY cos DESC ranks them FIRST — keep the tile's ordering
-        # domain NaN-free so both engines provably agree (ADVICE r3).
+        # domain NaN-free so both engines provably agree.
         left = left[left["n2"].to_numpy() > 0]
         right = right[right["r_n2"].to_numpy() > 0]
         if left.empty or right.empty:
@@ -1012,7 +1011,7 @@ def _pq_assign_np(QV, cent_pdf, subdim: int):
     """Per-subspace argmin-L2 assignment for one kernel block: exact
     int64 matmul per subspace present in ``cent_pdf``. Candidates are
     cid-ascending-sorted so ``np.argmin``'s first-minimum IS the
-    (d2 ASC, cid ASC) tie rule of the r07-r13 Catalyst expression; the
+    (d2 ASC, cid ASC) tie rule of the earlier Catalyst expression; the
     key drops the row-constant |s|² term (a uniform shift per row that
     cannot change the argmin or its ties). Returns
     ``[(mm, cids, pos, SUB)]`` — subspace id, its sorted candidate
@@ -1038,12 +1037,11 @@ def _pq_partials(
     """(m, cid, psum: array<bigint>, pcnt: bigint) — per-block PARTIAL
     sums for one PQ Lloyd update, the `_lloyd_partials` pattern applied
     per subspace (guide §2.3 aggregate-before-you-shuffle + §4.2 numpy
-    kernel at the Python boundary). The r07-r13 shape broadcast-joined
+    kernel at the Python boundary). The earlier shape broadcast-joined
     the codebooks onto the n·m subvector rows and ran the argmin as an
     interpreted array_min(transform(...aggregate(zip_with(...))))
     Catalyst expression — n·m·ksub interpreted lambda evals per pass
-    (HOFs never enter whole-stage codegen; the r13 builder's #1
-    deferred item, VERDICT r13 #3; an r14 attempt to unroll it into
+    (HOFs never enter whole-stage codegen; an attempt to unroll it into
     ksub positional codegen'd struct keys measured 3.1s → 10.2s at
     ksub=32 — the 32-branch conditional defeats subexpression sharing).
     Here each cogroup block scores its vectors against the full
@@ -1062,15 +1060,6 @@ def _pq_partials(
         StructType,
     )
 
-    B = assign_blocks(n_rows)
-    left = q.select("vec_id", "qv").withColumn(
-        "b", F.pmod(F.col("vec_id"), F.lit(B)).cast("int")
-    )
-    right = (
-        cent.select("m", "cid", "csub")
-        .withColumn("b", F.explode(F.sequence(F.lit(0), F.lit(B - 1))))
-        .withColumn("b", F.col("b").cast("int"))
-    )
     schema = StructType(
         [
             StructField("m", IntegerType()),
@@ -1109,17 +1098,19 @@ def _pq_partials(
             {"m": out_m, "cid": out_cid, "psum": out_psum, "pcnt": out_pcnt}
         )
 
-    return left.groupBy("b").cogroup(right.groupBy("b")).applyInPandas(
-        kern, schema
+    return _block_cogroup(
+        q.select("vec_id", "qv"),
+        cent.select("m", "cid", "csub"),
+        n_rows, kern, schema,
     )
 
 
 def _pq_encode(
-    q: DataFrame, cent: DataFrame, subdim: int, n_blocks: int
+    q: DataFrame, cent: DataFrame, subdim: int, n_rows: int | None = None
 ) -> DataFrame:
     """(vec_id, code: array<bigint>, n2) — the corpus encode pass as
     one blocked cogroup kernel sharing `_pq_assign_np` with the
-    training update (the two can never drift). Replaces three r13
+    training update (the two can never drift). Replaces three earlier
     operators at once: the broadcast-join + interpreted-HOF argmin
     over n·m subvector rows, the groupBy(vec_id)
     sort_array(collect_list) re-assembly of the m codes (an n·m-row
@@ -1136,16 +1127,6 @@ def _pq_encode(
         StructType,
     )
 
-    left = q.select("vec_id", "qv", "n2").withColumn(
-        "b", F.pmod(F.col("vec_id"), F.lit(n_blocks)).cast("int")
-    )
-    right = (
-        cent.select("m", "cid", "csub")
-        .withColumn(
-            "b", F.explode(F.sequence(F.lit(0), F.lit(n_blocks - 1)))
-        )
-        .withColumn("b", F.col("b").cast("int"))
-    )
     schema = StructType(
         [
             StructField("vec_id", LongType()),
@@ -1176,8 +1157,10 @@ def _pq_encode(
             }
         )
 
-    return left.groupBy("b").cogroup(right.groupBy("b")).applyInPandas(
-        kern, schema
+    return _block_cogroup(
+        q.select("vec_id", "qv", "n2"),
+        cent.select("m", "cid", "csub"),
+        n_rows, kern, schema,
     )
 
 
@@ -1192,6 +1175,7 @@ def pq_topk(
     qmod: int = 20,
     qcap: int = 512,
     vec_col: str = "embedding",
+    n_rows: int | None = None,
 ) -> DataFrame:
     """Product-quantization ANN for a query batch, fully deterministic
     and oracle-expressible (:func:`sql_pq` is the same algorithm in
@@ -1218,7 +1202,11 @@ def pq_topk(
     All similarity arithmetic is exact int64 up to the final IEEE
     divisions, so even the APPROXIMATE scores hash-match the SQL twin.
     Scale: codes + codebooks broadcast-size; the ADC join fans each
-    corpus code row out only to the (small) query batch."""
+    corpus code row out only to the (small) query batch. ``n_rows`` is
+    the caller-known corpus size: the training, encode and ADC kernels
+    split the corpus into :func:`assign_blocks` ``(n_rows)`` blocks, so
+    per-task memory stays bounded as the corpus grows (``None`` keeps
+    the floor of 32)."""
     from pyspark.sql import Window
 
     from frauddetection_spark.operators.caching import track_cache
@@ -1233,15 +1221,15 @@ def pq_topk(
             for mm in range(m)
         ]
     )
-    # r14: `subs` is no longer persisted — only the two CONSTANT-SIZE
+    # `subs` is not persisted — only the two CONSTANT-SIZE
     # slices below (codebook seeds, probe subvectors for the LUT) read
     # it, and their vec_id filters push below the Generate to the
-    # persisted q's cache scan. The full n·m subvector frame — r13's
+    # persisted q's cache scan. The full n·m subvector frame — the old
     # hot path, carrying a broadcast-joined interpreted-HOF argmin
     # over n·m·ksub candidate evals per training/encode pass — is
     # never materialized: assignment now runs inside the blocked
     # numpy kernels (_pq_partials / _pq_encode, guide §4.2; the IVF
-    # _lloyd_partials precedent, VERDICT r13 #3). An intermediate r14
+    # _lloyd_partials precedent). An intermediate
     # attempt to keep the Catalyst expression and unroll it into ksub
     # positional codegen'd struct keys measured 3.1s → 10.2s at
     # ksub=32 (the 32-branch conditional defeats codegen
@@ -1263,7 +1251,7 @@ def pq_topk(
         # bit-equal to the global Σ and the one IEEE division + round
         # sees identical inputs — sql_pq (unchanged) still
         # hash-matches.
-        part = _pq_partials(q, cent, subdim)
+        part = _pq_partials(q, cent, subdim, n_rows=n_rows)
         comp = part.groupBy("m", "cid").agg(
             F.sum("pcnt").alias("_n"),
             *[
@@ -1291,7 +1279,7 @@ def pq_topk(
     # Probe set = the first `qcap` multiples of `qmod` — a FIXED
     # serving batch; corpus = everything else. The original unbounded
     # "every multiple of qmod" rule made probes 5% OF THE CORPUS, and
-    # ADC work probes*corpus*m = quadratic — the r13 sf1->sf10 audit
+    # ADC work probes*corpus*m = quadratic — the sf1->sf10 audit
     # measured it at 18.9x on a 10x decade. With the batch pinned,
     # ADC is qcap*n*m LUT gathers: linear per decade.
     probe = (F.col("vec_id") % qmod == 0) & (F.col("vec_id") < qmod * qcap)
@@ -1329,13 +1317,13 @@ def pq_topk(
         StructType,
     )
 
-    n_blocks = 32
-    # r14: the encode pass is the _pq_encode kernel — it emits the
+    n_blocks = assign_blocks(n_rows)
+    # the encode pass is the _pq_encode kernel — it emits the
     # assembled m-ascending code array with n2 carried through, so the
-    # r13 groupBy(vec_id) sort_array(collect_list) re-assembly (an
+    # old groupBy(vec_id) sort_array(collect_list) re-assembly (an
     # n·m-row shuffle) and the n2 join back onto the corpus are gone.
     codes_wide = _pq_encode(
-        q.filter(~probe), cent, subdim, n_blocks
+        q.filter(~probe), cent, subdim, n_rows=n_rows
     ).withColumn("b", F.pmod(F.col("vec_id"), F.lit(n_blocks)).cast("int"))
     lut_rep = (
         lut.join(

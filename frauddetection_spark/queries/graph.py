@@ -4,11 +4,14 @@ aggregates) over the canonical events-derived edge list
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from frauddetection_spark.operators.graph import (
     BITMASK_MAX_CONTACTS,
+    ContactStats,
     pagerank_integer,
     aggregate_messages,
     clustering_coefficients,
@@ -20,13 +23,7 @@ from frauddetection_spark.operators.graph import (
 )
 from frauddetection_spark.plans.registry import register
 from frauddetection_spark.queries._util import r6, t
-
-# per-sf_dir memo of (n_contacts, n_users, sum_d2, contact_values) for
-# the common-neighbor strategy pick: probe once, reuse like catalog
-# stats. contact_values is the sorted distinct contact domain when it
-# fits the bitmask strategy (≤ BITMASK_MAX_CONTACTS), else None — it
-# feeds the bitmask contact→bit index as a driver literal (r14).
-_CN_STATS: dict[str, tuple[int, int, int, list[int] | None]] = {}
+from frauddetection_spark.sources import catalog
 
 # DuckDB twin of edges_from_events
 _SQL_EDGES = """
@@ -87,82 +84,55 @@ def q_graph_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_join_common_neighbor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """User pairs sharing ≥5 counterparties — buildLSN's similarity
     graph (data_process.py:20-48). The reference's O(n²·set-intersect)
-    loop is one inverted-index self-join + aggregate: one shuffle on
-    contact, one on the pair key. Hub-contact pruning available via
-    operators.graph.common_neighbor_pairs(max_contact_degree=...).
+    loop becomes operators.graph.common_neighbor_pairs: a cost-based
+    pick between an inverted-index self-join and packed contact
+    bitmasks.
 
-    Strategy stats (distinct contacts / users / Σd²) come from a
-    DRIVER-SIDE catalog probe (DuckDB over the parquet footer+data,
-    memoized per sf_dir) — the ANALYZE-from-catalog pattern: at 100 TB
-    these numbers live in the table catalog (ANALYZE / ingest-time
-    stats) and the cost-based strategy pick must not launch Spark jobs
-    at plan-construction time (round-2 did: persist + two actions in
-    the auto path; pinned gone by
-    tests/test_scale_lint.py::test_zero_jobs_at_construction)."""
+    The strategy stats come from a DRIVER-SIDE probe (DuckDB over the
+    events parquet), held by the table catalog under the file's
+    fingerprint — the ANALYZE-from-catalog pattern: at 100 TB these
+    numbers live in the table catalog (ANALYZE / ingest-time stats),
+    and the cost-based pick must not launch Spark jobs at
+    plan-construction time (pinned by
+    tests/test_scale_lint.py::test_zero_jobs_at_construction). A
+    rewrite of events.parquet re-runs the probe."""
+    path = os.path.join(sf_dir, "events.parquet")
     e = edges_from_events(t(spark, sf_dir, "events"))
     contacts = e.select(F.col("src").alias("user"), F.col("dst").alias("contact"))
-    stats = _CN_STATS.get(sf_dir)
-    if stats is None:
-        import os
+    stats = catalog.stats(path, "contact_stats", lambda: _contact_stats(path))
+    return common_neighbor_pairs(contacts, min_common=5, stats=stats).orderBy(
+        "user_a", "user_b"
+    )
 
-        import duckdb
 
-        con = duckdb.connect()
-        row = con.execute(
+def _contact_stats(events_path: str) -> ContactStats:
+    """Common-neighbor statistics of the events edge list. The contact
+    domain is the one Spark's edges_from_events sees: TRY_CAST of
+    ``props.k`` to BIGINT, nulls dropped, for the counts and the values
+    alike (the values feed the bitmask index, and a contact missing
+    from them fails the query)."""
+    import duckdb
+
+    with duckdb.connect() as con:
+        nc, nu, sd2, values = con.execute(
             f"""
             WITH c AS (
                 SELECT DISTINCT user_id AS u,
-                       json_extract_string(props, '$.k') AS ct
-                FROM read_parquet(
-                    '{os.path.join(sf_dir, "events.parquet")}')
-                WHERE json_extract_string(props, '$.k') IS NOT NULL
+                       TRY_CAST(json_extract_string(props, '$.k') AS BIGINT)
+                           AS ct
+                FROM read_parquet('{events_path}')
+                WHERE ct IS NOT NULL
             ),
             d AS (SELECT ct, count(*) AS deg FROM c GROUP BY ct)
-            SELECT (SELECT count(*) FROM d) AS nc,
-                   (SELECT count(DISTINCT u) FROM c) AS nu,
-                   (SELECT sum(deg * deg) FROM d) AS sd2
+            SELECT count(*),
+                   (SELECT count(DISTINCT u) FROM c),
+                   sum(deg * deg),
+                   CASE WHEN count(*) <= {BITMASK_MAX_CONTACTS}
+                        THEN list(ct ORDER BY ct) END
+            FROM d
             """
         ).fetchone()
-        # r14 (guide §2.3 fewer passes — VERDICT r13 #5): when the
-        # domain fits the bitmask strategy, the SAME catalog probe
-        # also serves the contact VALUES (≤ 4096 strings), so the
-        # bitmask path builds its contact→bit index from a driver
-        # literal instead of a distinct+window pass over the Spark
-        # frame — two fewer stages per run and the c frame is consumed
-        # once. The index order doesn't affect results (any bijective
-        # contact→bit mapping yields the same popcounts); DuckDB's
-        # DISTINCT here returns exactly the values Spark's distinct
-        # would (same JSON extraction both engines, oracle-pinned).
-        contact_vals = None
-        if int(row[0]) <= BITMASK_MAX_CONTACTS:
-            contact_vals = [
-                int(r[0])
-                for r in con.execute(
-                    f"""
-                    SELECT DISTINCT
-                        CAST(json_extract_string(props, '$.k') AS BIGINT)
-                        AS ct
-                    FROM read_parquet(
-                        '{os.path.join(sf_dir, "events.parquet")}')
-                    WHERE json_extract_string(props, '$.k') IS NOT NULL
-                    ORDER BY ct
-                    """
-                ).fetchall()
-            ]
-        con.close()
-        stats = (int(row[0]), int(row[1]), int(row[2] or 0), contact_vals)
-        _CN_STATS[sf_dir] = stats
-    return (
-        common_neighbor_pairs(
-            contacts,
-            min_common=5,
-            n_contacts=stats[0],
-            n_users=stats[1],
-            sum_d2=stats[2],
-            contact_values=stats[3],
-        )
-        .orderBy("user_a", "user_b")
-    )
+    return ContactStats(int(nc), int(nu), int(sd2 or 0), values)
 
 
 # ---------------------------------------------------------------------------
@@ -655,10 +625,10 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # und feeds the degree table + the orientation join, deg is probed
     # 3× and ori 3× (both wedge sides + the closing edge) — persist
-    # them or the edge derivation replays per reference (r07 sweep: 20
-    # parquet scans / 48 exchanges in the executed plan without them;
-    # the replay, not the wedge join, drove the r06 audit's 3.2×
-    # sf-growth ratio).
+    # them or the edge derivation replays per reference (20 parquet
+    # scans / 48 exchanges in the executed plan without them; the
+    # replay, not the wedge join, drove a measured 3.2× sf-growth
+    # ratio).
     und = track_cache(mirror(e).persist())
     deg = track_cache(
         und.groupBy("src")
@@ -773,8 +743,8 @@ def q_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = edges_from_events(t(spark, sf_dir, "events"))
     # und is probed once per hop plus the seed filter, and each
     # level's lineage chains every earlier hop — without persists the
-    # final union re-derives hop k for every level ≥ k (r07 sweep: 20
-    # parquet scans / 43 exchanges in the executed plan). Persist the
+    # final union re-derives hop k for every level ≥ k (20 parquet
+    # scans / 43 exchanges in the executed plan). Persist the
     # edge set once and each (node-id-only) frontier.
     und = track_cache(mirror(e).persist())
     l0 = (
@@ -851,7 +821,7 @@ def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     plain degree features, data_process.py:131-144; the peel is the
     natural next step). Fixed peel count keeps the oracle an unrolled
     CTE; the full fixpoint would use the same loop with a convergence
-    check like connected_components. Scale (r11 shape): on the
+    check like connected_components. Scale: on the
     MIRRORED edge set, deg(node) is count(*) over (partition by src),
     and "both endpoints survive" is exactly deg(src) >= k AND
     deg(dst) >= k — so each round is Exchange(dst) -> Window ->
@@ -860,7 +830,7 @@ def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     the old double-reference (degree aggregate + two semi-joins on a
     keep set) at the source: no per-round persist, no aux keep frame,
     no broadcast materializations — the old shape ran 26 AQE jobs per
-    execution at sf0.01 (5.4s in the r11 scale audit, flat 1.1x to
+    execution at sf0.01 (5.4s in a scale audit, flat 1.1x to
     sf0.1, i.e. pure scheduler overhead); windows-in-rounds runs 10
     (measured 3.0s -> 1.3s warm at sf0.01, 5.8s -> 3.0s at sf0.1).
     Round order (dst then src) ends each round partitioned by src, so
@@ -869,7 +839,7 @@ def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     cannot split a window partition the way it splits a skewed
     sort-merge join), mitigated by the count-only frame spilling via
     the unsafe-row buffer; if hub skew ever dominated a deployment,
-    the pre-r11 degree-aggregate + AQE-skew-splittable semi-join shape
+    the earlier degree-aggregate + AQE-skew-splittable semi-join shape
     is the drop-in fallback — same oracle, one persist per round."""
     e = edges_from_events(t(spark, sf_dir, "events"))
     no_self = e.filter(F.col("src") != F.col("dst"))
@@ -878,7 +848,7 @@ def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     w_src = Window.partitionBy("src")
     w_dst = Window.partitionBy("dst")
-    # r14 (guide §2.4 "two operations keyed the same way share one
+    # (guide §2.4 "two operations keyed the same way share one
     # exchange"): the two per-round windows are order-independent —
     # both count over the SAME pre-filter edge set — but each round
     # used to run (dst-window, src-window) unconditionally, so every
@@ -1073,10 +1043,10 @@ def q_graph_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     no_self = e.filter(F.col("src") != F.col("dst"))
     # und feeds deg + the orientation join, deg is probed 4× and ori
     # 3× (both wedge sides + the closing edge) — without persists the
-    # whole edge derivation replays per reference (r07 audit of the
-    # executed plan: 22 parquet scans, 53 exchanges, zero reuse; with
-    # the three persists, sf0.1 steady 3.3s → 2.0s and cold
-    # 13.1s → 5.2s, same-session calib).
+    # whole edge derivation replays per reference (executed plan: 22
+    # parquet scans, 53 exchanges, zero reuse; with the three persists,
+    # sf0.1 steady 3.3s → 2.0s and cold 13.1s → 5.2s, same-session
+    # calib).
     und = track_cache(
         mirror(no_self)
         .persist()
@@ -1216,7 +1186,7 @@ def q_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     no_self = e.filter(F.col("src") != F.col("dst"))
     # und is probed 3× (degrees, capped-edge join, final anti join)
     # and cedge 2× (both wedge sides) — persist both or the edge
-    # derivation replays per reference (r07 executed-plan audit: 10
+    # derivation replays per reference (executed plan: 10
     # parquet scans, 23 exchanges, zero reuse without the persists).
     und = track_cache(
         mirror(no_self)
@@ -1298,7 +1268,7 @@ def q_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     the scale lever: closure from a small suspect set, never the full
     node set.
 
-    Plan note (r6): Spark's recursive execution re-evaluates every
+    Plan note: Spark's recursive execution re-evaluates every
     non-recursive CTE it references PER ITERATION — with `edges` as a
     CTE the DISTINCT json-extract scan ran once per hop (measured
     4.2s at sf0.1). The edge list is therefore pre-materialized
@@ -1409,7 +1379,7 @@ def q_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
     # e is read 4× (both node-set branches + both sides of the outdeg
     # join), and nodes/eo are probed once per unrolled iteration —
     # persist all three or the edge derivation replays per reference
-    # (r07 sweep: 10 parquet scans / 24 exchanges in the executed plan)
+    # (10 parquet scans / 24 exchanges in the executed plan)
     e = track_cache(edges_from_events(t(spark, sf_dir, "events")).persist())
     nodes = track_cache(
         e.select(F.explode(F.array("src", "dst")).alias("node"))
@@ -1510,8 +1480,8 @@ def q_money_loops(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # e is read 3× (both union branches of the degree count + the
     # capped edge list) and ce 3× (the three cycle hops) — persist
-    # both or the edge derivation replays per reference (r07 sweep:
-    # 15 parquet scans / 31 exchanges without them).
+    # both or the edge derivation replays per reference (15 parquet
+    # scans / 31 exchanges without them).
     e = track_cache(
         edges_from_events(t(spark, sf_dir, "events"))
         .filter(F.col("src") != F.col("dst"))
@@ -1624,8 +1594,8 @@ def q_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ranked is probed once per walk step and each step's lineage
     # chains all earlier steps into the final union — persist the
     # ranked adjacency and each (seeds×walks)-sized frontier or step k
-    # re-derives for every level ≥ k (r07 sweep: 10 parquet scans /
-    # 27 exchanges in the executed plan)
+    # re-derives for every level ≥ k (10 parquet scans / 27
+    # exchanges in the executed plan)
     ranked = track_cache(
         e.select(
             "src",
@@ -1764,7 +1734,7 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # e is probed once per round plus the label init — persist it or
     # the json-extract + support-threshold derivation replays per
-    # reference (r07 sweep: 8 parquet scans in the executed plan)
+    # reference (8 parquet scans in the executed plan)
     e = track_cache(mirror(repeat).persist())
     labels = e.select(F.col("src").alias("node")).distinct().select(
         "node", F.col("node").alias("label")

@@ -43,6 +43,7 @@ from frauddetection_spark.operators.vectors import (
 from frauddetection_spark.operators.caching import track_cache
 from frauddetection_spark.plans.registry import register
 from frauddetection_spark.queries._util import r6, t
+from frauddetection_spark.sources.catalog import footer
 
 JACCARD_MIN = 0.2
 NEARDUP_COS = 0.4
@@ -418,41 +419,23 @@ def q_dedup_minhash_ml(spark: SparkSession, sf_dir: str) -> DataFrame:
 # E3 scale path — deterministic IVF (learned codebook + multi-probe)
 # ---------------------------------------------------------------------------
 
-# Memoized driver-side corpus counts (DuckDB parquet-footer probe) for
-# the adaptive IVF centroid count — the ANALYZE-from-catalog pattern
-# (queries/graph.py): at 100 TB the row count lives in the table
-# catalog, and the K pick must not launch Spark jobs at
-# plan-construction time (tests/test_scale_lint.py).
-_EMB_COUNT: dict[str, int] = {}
-
 
 def _embeddings_count(sf_dir: str) -> int:
-    n = _EMB_COUNT.get(sf_dir)
-    if n is None:
-        import os
+    """Corpus size from the catalog's footer read: the K pick (IVF) and
+    the block count (PQ) must not launch Spark jobs at plan-construction
+    time (tests/test_scale_lint.py)."""
+    import os
 
-        import duckdb
-
-        con = duckdb.connect()
-        n = con.execute(
-            "SELECT count(*) FROM read_parquet("
-            f"'{os.path.join(sf_dir, 'embeddings.parquet')}')"
-        ).fetchone()[0]
-        con.close()
-        _EMB_COUNT[sf_dir] = int(n)
-    return _EMB_COUNT[sf_dir]
+    return footer(os.path.join(sf_dir, "embeddings.parquet")).num_rows
 
 
-# Centroid count is ADAPTIVE (r12): K = adaptive_centroids(n) ~ √n,
-# computed from the memoized catalog probe above — a FIXED K made the
-# probed candidate space ~n²·nprobe/K, a hidden quadratic the
-# sf0.1→sf1 audit measured at 72× for 10× data. At the oracle-gate
-# scale factors (sf0.001/0.01) embeddings has n=500, so K=32 — the
-# adaptive rule DID change driver-visible IVF output in r12 (the twin
-# computes the same K from its CASE ladder, so the hashes still
-# match); both queries were re-evidenced via mandatory r12 window
-# slots (ADVICE r12 corrected an earlier claim here that K stayed at
-# its floor of 16 at the gates).
+# Centroid count is ADAPTIVE: K = adaptive_centroids(n) ~ √n, computed
+# from the catalog's row count above — a FIXED K made the probed
+# candidate space ~n²·nprobe/K, a hidden quadratic the sf0.1→sf1 audit
+# measured at 72× for 10× data. At the oracle-gate scale factors
+# (sf0.001/0.01) embeddings has n=500, so K=32, not the floor of 16;
+# the twin computes the same K from its CASE ladder, so the hashes
+# match.
 # nprobe=8 fixed: at the floor K=16 that probes half the buckets at
 # rank-1 recall 0.81 on the synthetic embeddings (sf0.1). The testdata
 # vectors are near-uniform on the sphere — the adversarial case for
@@ -472,7 +455,7 @@ IVF_ITERS = 2
 def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF approximate kNN, fully deterministic AND learned: a Lloyd-
     iterated codebook (seeded with the K lowest vec_ids, 2 exact-int
-    refinement rounds) replaces round 1's fixed centroids, and search
+    refinement rounds) replaces the earlier fixed centroids, and search
     probes each vector's 8 nearest centroids (nprobe=8) instead of 1 —
     the two levers that lifted rank-1 recall from ~22% to ~0.81. K is
     adaptive (~√n, see adaptive_centroids), so the candidate space is
@@ -493,10 +476,10 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return knn.orderBy("vec_id", "rank")
 
 
-# Sampled-seeding IVF: the 100-TB codebook-training shape (VERDICT r2
-# item 7). Lloyd runs on a ~35% hash sample; seeds are a deterministic
-# hash scatter (k-means‖'s spread without its RNG); the full table is
-# touched only by the final assignment+search pass.
+# Sampled-seeding IVF: the 100-TB codebook-training shape. Lloyd runs
+# on a ~35% hash sample; seeds are a deterministic hash scatter
+# (k-means‖'s spread without its RNG); the full table is touched only
+# by the final assignment+search pass.
 IVF_SAMPLE_PCT = 35
 IVF_SEED = 9001
 
@@ -523,7 +506,7 @@ def q_ann_ivf_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment + probe + rerank stage. The centroid count is adaptive
     (~√n) like q_ann_ivf's — fixed-K buckets grow linearly and the
     bucket rerank goes quadratic (measured 72× for 10× data in the
-    r12 sf1 audit before this change). Seeds are the sample's
+    sf1 audit before this change). Seeds are the sample's
     n_centroids smallest portable-hash values — id-order-independent
     spread, the deterministic stand-in for k-means‖ oversampling —
     making the whole path, sampling included, oracle-checkable.
@@ -631,7 +614,7 @@ def q_minhash_est(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 QUERY_MOD = 20  # probe ids are multiples of 20
 # The serving batch is FIXED at this many probes (the first QUERY_CAP
-# multiples of QUERY_MOD), NOT a fixed fraction of the corpus: the r13
+# multiples of QUERY_MOD), NOT a fixed fraction of the corpus: the
 # sf1->sf10 audit caught the original "5% of vec_ids" probe rule as a
 # quadratic — probes x corpus = n²/20 work, measured 44.8x on a 10x
 # decade — which contradicted the
@@ -678,7 +661,7 @@ def q_ann_query_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     Catalyst zip_with/aggregate dot products (the IVF-rerank lesson),
     with the identical int64-dot + one-IEEE-division arithmetic the
     DuckDB twin runs — still hash-equal. Scale: QUERY_CAP·n dots —
-    linear per decade by construction (the r13 audit measured the old
+    linear per decade by construction (the scale audit measured the old
     probes-as-5%-of-corpus rule at 44.8x/decade, a quadratic hiding
     inside the serving query; a growing probe WORKLOAD is sharded
     into fixed batches by the caller, it never rides one query). At
@@ -752,6 +735,7 @@ def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         cand=PQ_CAND,
         qmod=QUERY_MOD,
         qcap=QUERY_CAP,
+        n_rows=_embeddings_count(sf_dir),
     ).orderBy("query_id", "rank")
 
 
@@ -828,14 +812,14 @@ def q_sparse_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     # tf feeds BOTH the df counts and the kept join — persist it or
-    # the shingle explode + TF shuffle replays (r07 sweep)
+    # the shingle explode + TF shuffle replays
     tf = track_cache(
         sh.groupBy("doc_id", "shingle").agg(F.count("*").alias("tf")).persist()
     )
     df = tf.groupBy("shingle").agg(F.count("*").alias("df"))
     # Every join below is between DATA-SCALED relations (postings,
     # pair aggregates, per-doc norms): pin them to shuffle joins. The
-    # r12 sf1→sf10 audit caught AQE broadcast-converting the posting
+    # sf1→sf10 audit caught AQE broadcast-converting the posting
     # self-join — repeated shingle strings compress the shuffled side
     # under the 64 MB threshold while decompressing to 3.7 GiB in the
     # broadcast build, which is equally wrong on a 1000-executor
@@ -950,7 +934,7 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sig feeds BOTH sides of the band bucket join — persist the tiny
     # (doc_id, simhash) table or the whole 32-column signature build
     # (token hashes → per-bit contributions → pack) replays twice
-    # (r07 sweep; sf0.1 min-of-2: 5.5s → ~2.7s, steady ~1.5s)
+    # (sf0.1 min-of-2: 5.5s → ~2.7s, steady ~1.5s)
     sig = track_cache(simhash(t(spark, sf_dir, "documents")).persist())
     bands_idx = spark.range(_SH_BANDS).select(F.col("id").alias("band"))
     mask = (1 << _SH_BAND_BITS) - 1
@@ -1174,15 +1158,15 @@ def q_hyperplane_est(spark: SparkSession, sf_dir: str) -> DataFrame:
     sums, the cos(π·h/64) table is 65 precomputed 1e-9 integers
     inlined into both twins, and the one sqrt is IEEE-exact. Scale:
     signature build is ONE map-only Arrow kernel pass — a d×64 int64
-    matmul per vector batch (r13; previously an explode(d)×planes
+    matmul per vector batch (previously an explode(d)×planes
     join generating |vecs|·d·64 rows plus three shuffling
     aggregates); at serving time the signature table replaces the
     full-vector table in any pairwise stage — 8 bytes vs 4·d, and
     hamming screens pairs before the exact rerank touches vectors
     (the LSH banding of q_simhash_pairs applies unchanged)."""
     emb = t(spark, sf_dir, "embeddings")
-    # r13 kernel rewrite (guide §2.3/§4.2; the r12 IVF-scoring
-    # precedent): the old plan exploded every embedding into |vecs|·d
+    # Kernel rewrite (guide §2.3/§4.2; the IVF-scoring precedent):
+    # the old plan exploded every embedding into |vecs|·d
     # component rows, fanned them ×64 through a broadcast-joined sign
     # grid (|vecs|·d·64 generated rows — 819M at sf10, ~4e12 at 10⁹
     # vectors), rebuilt signatures and norms with two more shuffling
@@ -1218,7 +1202,7 @@ def q_hyperplane_est(spark: SparkSession, sf_dir: str) -> DataFrame:
         for pdf in batches:
             if pdf.empty:
                 continue
-            # ADVICE r13 guards: the old posexplode+SUM plan silently
+            # Guards: the old posexplode+SUM plan silently
             # treated null elements as 0 and tolerated ragged widths
             # row-by-row; a bare np.stack().astype(int64) would either
             # crash opaquely (ragged/None) or — worse — coerce NaN to

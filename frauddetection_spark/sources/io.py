@@ -168,42 +168,49 @@ def duckdb_fixture(
     ``{sf_dir}/{src_name}.parquet`` via DuckDB (pure-Python prep —
     constructing a query that calls this runs ZERO Spark jobs).
 
-    Staleness contract: the round driver REGENERATES the testdata
-    parquet between rounds, so the done-marker records the source
-    parquet's ``(mtime_ns, size)`` fingerprint; a mismatch (or a
-    missing marker) wipes and rebuilds the fixture. Without this,
-    Spark would aggregate a stale tmp copy while the DuckDB oracle
-    reads the fresh parquet — a spurious (or, worse, masked) oracle
-    mismatch. The marker is written atomically (tmp + rename) so a
-    concurrent reader never observes a half-built fixture as done.
+    The fixture directory is content-addressed: its name carries a hash
+    of the source's real path and the source's catalog fingerprint
+    ``(mtime_ns, size)``. A rewritten source therefore gets a fresh
+    fixture — without this, Spark would aggregate a stale copy while the
+    DuckDB oracle reads the fresh parquet, a spurious (or, worse,
+    masked) oracle mismatch — and two data directories that share a
+    basename never share a fixture. The build runs in a temporary
+    directory that is renamed into place, so a concurrent reader never
+    observes a half-built fixture; fixtures of the source's older
+    fingerprints are removed.
 
     ``build(src_parquet_path, out_dir)`` performs the actual COPY.
     Returns the fixture directory.
     """
+    import glob
+    import hashlib
+    import shutil
     import tempfile
 
-    src = os.path.join(sf_dir, f"{src_name}.parquet")
-    st = os.stat(src)
-    fingerprint = f"{st.st_mtime_ns}:{st.st_size}"
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    path = os.path.join(
-        tempfile.gettempdir(), f"fd_spark_{kind}_{tag}", src_name
-    )
-    marker = os.path.join(path, "_FD_DONE")
-    if os.path.exists(marker):
-        with open(marker) as fh:
-            if fh.read().strip() == fingerprint:
-                return path
-    import shutil
+    from frauddetection_spark.sources.catalog import fingerprint
 
-    shutil.rmtree(path, ignore_errors=True)
-    os.makedirs(path, exist_ok=True)
-    build(src, path)
-    tmp_marker = f"{marker}.{os.getpid()}.tmp"
-    with open(tmp_marker, "w") as fh:
-        fh.write(fingerprint)
-    os.replace(tmp_marker, marker)
+    src = os.path.realpath(os.path.join(sf_dir, f"{src_name}.parquet"))
+    mtime_ns, size = fingerprint(src)
+    source = hashlib.sha1(src.encode()).hexdigest()[:16]
+    prefix = os.path.join(
+        tempfile.gettempdir(), f"fd_spark_{kind}_{src_name}_{source}_"
+    )
+    path = f"{prefix}{mtime_ns}_{size}"
+    if not os.path.isdir(path):
+        tmp = tempfile.mkdtemp(prefix="fd_spark_build_")
+        try:
+            build(src, tmp)
+            os.rename(tmp, path)
+        except OSError:
+            if not os.path.isdir(path):  # not a concurrent builder's win
+                raise
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
+        for old in glob.glob(f"{glob.escape(prefix)}*"):
+            if old != path:
+                shutil.rmtree(old, ignore_errors=True)
     return path
+
 
 def overwrite_partitions_dynamic(
     df: DataFrame, path: str, partition_by: list[str]

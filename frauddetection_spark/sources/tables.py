@@ -28,6 +28,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from frauddetection_spark.sources.catalog import footer
+
 
 def _s(*fields: tuple[str, object]) -> StructType:
     return StructType([StructField(n, t, True) for n, t in fields])
@@ -115,7 +117,7 @@ TABLE_NAMES: tuple[str, ...] = tuple(SCHEMAS)
 # these defensively — both are runtime-settable on a live session:
 #  - nanosAsLong: events.parquet carries INT64 TIMESTAMP(NANOS); without
 #    this flag a vanilla session dies with PARQUET_TYPE_ILLEGAL before
-#    any query runs (round-1 driver failure mode).
+#    any query runs.
 #  - UTC session timezone: keeps timestamp rendering/extraction identical
 #    across Spark and the DuckDB oracle regardless of host timezone.
 _REQUIRED_CONFS: tuple[tuple[str, str], ...] = (
@@ -135,79 +137,27 @@ def ensure_read_confs(spark: SparkSession) -> None:
             pass
 
 
-# footer-schema memo: path → raw Spark schema. Testdata is immutable;
-# re-reading footers on every plan construction costs a Spark job each
-# time (ParquetFileFormat.inferSchema), which this eliminates entirely.
-_RAW_SCHEMA_CACHE: dict[str, StructType] = {}
-
-
-def _arrow_to_spark(arrow_type) -> object:
-    """Map the physical arrow types our tables use to Spark types.
-    timestamp[ns] maps to LongType — the nanosAsLong representation the
-    rest of the loader converts with `div 1000`."""
-    import pyarrow as pa
-
-    if pa.types.is_int32(arrow_type):
-        return IntegerType()
-    if pa.types.is_int64(arrow_type):
-        return LongType()
-    if pa.types.is_float64(arrow_type):
-        return DoubleType()
-    if pa.types.is_float32(arrow_type):
-        return FloatType()
-    if pa.types.is_string(arrow_type) or pa.types.is_large_string(arrow_type):
-        return StringType()
-    if pa.types.is_timestamp(arrow_type):
-        if arrow_type.unit == "ns":
-            return LongType()
-        return TimestampType()
-    if pa.types.is_list(arrow_type) or pa.types.is_large_list(arrow_type):
-        return ArrayType(_arrow_to_spark(arrow_type.value_type))
-    raise TypeError(f"unmapped arrow type {arrow_type}")
-
-
-def _raw_schema(path: str) -> StructType:
-    """Physical schema from the parquet footer — a driver-side pyarrow
-    metadata read (NO Spark job), memoized per path. Handing Spark an
-    explicit schema skips its schema-inference job at plan time; at
-    100 TB that job is a full footer sweep across every file."""
-    cached = _RAW_SCHEMA_CACHE.get(path)
-    if cached is not None:
-        return cached
-    import pyarrow.parquet as pq
-
-    arrow = pq.read_schema(path)
-    raw = StructType(
-        [StructField(f.name, _arrow_to_spark(f.type), True) for f in arrow]
-    )
-    _RAW_SCHEMA_CACHE[path] = raw
-    return raw
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one parquet table with its pinned schema.
 
-    The physical schema comes from a driver-side footer read (memoized;
-    no Spark job) and is verified against the pinned one — a mismatch
-    fails loudly at plan time rather than silently coercing.
+    The physical schema comes from the catalog's footer read (no Spark
+    job) and is verified against the pinned one — a mismatch fails
+    loudly at plan time rather than silently coercing.
     """
     if name not in SCHEMAS:
         raise KeyError(f"unknown table {name!r}; known: {TABLE_NAMES}")
     ensure_read_confs(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
-    raw = _raw_schema(path)
-    df = spark.read.schema(raw).parquet(path)
-    expected = {f.name: f.dataType for f in SCHEMAS[name].fields}
-    got = {f.name: f.dataType for f in df.schema.fields}
-    if set(expected) - set(got):
-        raise ValueError(
-            f"table {name}: missing columns {sorted(set(expected) - set(got))}"
-        )
-    return pinned_projection(df, name)
+    raw = footer(path).schema
+    missing = set(SCHEMAS[name].fieldNames()) - set(raw.fieldNames())
+    if missing:
+        raise ValueError(f"table {name}: missing columns {sorted(missing)}")
+    return pinned_projection(spark.read.schema(raw).parquet(path), name, raw)
 
 
-def pinned_projection(df: DataFrame, name: str) -> DataFrame:
-    """Project a raw-schema frame onto the pinned schema for ``name``.
+def pinned_projection(df: DataFrame, name: str, raw: StructType) -> DataFrame:
+    """Project a frame read with the raw footer schema ``raw`` onto the
+    pinned schema for ``name``.
 
     Casts only where the physical type drifted (e.g. int32 where int64
     is pinned). Timestamps written as INT64 TIMESTAMP(NANOS) arrive as
@@ -215,21 +165,21 @@ def pinned_projection(df: DataFrame, name: str) -> DataFrame:
     division — the same truncation DuckDB applies; timestamps already
     in micros pass through untouched. Shared by the batch loader and
     the streaming source so both adapt to whichever physical encoding
-    the files carry.
+    the files carry. ``raw`` is the schema the caller already holds,
+    so projecting costs no schema round trip to the JVM.
     """
     from pyspark.sql import functions as F
-    from pyspark.sql.types import LongType as _Long
 
-    expected = {f.name: f.dataType for f in SCHEMAS[name].fields}
-    got = {f.name: f.dataType for f in df.schema.fields}
+    got = {f.name: f.dataType for f in raw.fields}
     cols = []
-    for c in expected:
-        if isinstance(expected[c], TimestampType) and got[c] == _Long():
+    for f in SCHEMAS[name].fields:
+        c, want = f.name, f.dataType
+        if isinstance(want, TimestampType) and got[c] == LongType():
             cols.append(F.timestamp_micros(F.expr(f"`{c}` div 1000")).alias(c))
-        elif got[c] != expected[c]:
-            cols.append(df[c].cast(expected[c]).alias(c))
+        elif got[c] != want:
+            cols.append(F.col(c).cast(want).alias(c))
         else:
-            cols.append(df[c])
+            cols.append(F.col(c))
     return df.select(*cols)
 
 

@@ -44,20 +44,21 @@ def stream_events(
     """events as an unbounded stream from the parquet file source.
 
     Streaming sources cannot infer schemas, so the raw schema comes
-    from the same driver-side footer read the batch loader uses
+    from the same catalog footer read the batch loader uses
     (no Spark job), and the same pinned projection handles the
     timestamp encoding — nanos-as-long or native micros."""
-    from ..sources.tables import _raw_schema, ensure_read_confs, pinned_projection
+    from ..sources.catalog import footer
+    from ..sources.tables import ensure_read_confs, pinned_projection
 
     ensure_read_confs(spark)  # plain driver sessions lack nanosAsLong/UTC
-    raw_schema = _raw_schema(os.path.join(sf_dir, "events.parquet"))
+    raw = footer(os.path.join(sf_dir, "events.parquet")).schema
     reader = (
-        spark.readStream.schema(raw_schema)
+        spark.readStream.schema(raw)
         .option("pathGlobFilter", "events.parquet")
     )
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return pinned_projection(reader.parquet(sf_dir), "events")
+    return pinned_projection(reader.parquet(sf_dir), "events", raw)
 
 
 def tumbling_counts(events: DataFrame, size: str = "1 hour") -> DataFrame:

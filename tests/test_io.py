@@ -90,63 +90,67 @@ def test_range_sorted_write_files_are_disjoint(spark, sf_dir, tmp_path):
         assert hi1 < lo2, f"overlapping file ranges {(lo1, hi1)} {(lo2, hi2)}"
 
 
-def test_fixture_regenerates_on_fingerprint_mismatch(sf_dir):
-    """duckdb_fixture's staleness contract (VERDICT r4 item): when the
-    source parquet's fingerprint changes (driver regenerates testdata
-    between rounds), the fixture MUST rebuild; when it matches, the
-    build must NOT re-run."""
+def test_fixture_regenerates_on_fingerprint_mismatch(sf_dir, tmp_path):
+    """duckdb_fixture is content-addressed by the source's real path and
+    fingerprint: touching the source MUST rebuild, an unchanged source
+    must NOT, and two data directories with the same basename get
+    separate fixtures."""
     import shutil
-    import tempfile
 
-    # start clean: the fixture dir persists in tmp across test runs
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    shutil.rmtree(
-        os.path.join(tempfile.gettempdir(), f"fd_spark_fxtest_{tag}"),
-        ignore_errors=True,
-    )
+    a, b = tmp_path / "a" / "sf", tmp_path / "b" / "sf"
+    for d in (a, b):
+        d.mkdir(parents=True)
+        shutil.copy(os.path.join(sf_dir, "part.parquet"), d / "part.parquet")
     calls = []
 
     def build(src, out):
         calls.append(src)
         with open(os.path.join(out, "data.txt"), "w") as fh:
-            fh.write("x")
+            fh.write(src)
 
-    p1 = duckdb_fixture(sf_dir, "fxtest", "part", build)
+    pa1 = duckdb_fixture(str(a), "fxtest", "part", build)
     assert len(calls) == 1
-    # warm marker → no rebuild
-    duckdb_fixture(sf_dir, "fxtest", "part", build)
+    # unchanged source → no rebuild, same fixture
+    assert duckdb_fixture(str(a), "fxtest", "part", build) == pa1
     assert len(calls) == 1
-    # corrupt the fingerprint → rebuild
-    with open(os.path.join(p1, "_FD_DONE"), "w") as fh:
-        fh.write("stale:0")
-    duckdb_fixture(sf_dir, "fxtest", "part", build)
-    assert len(calls) == 2
-    # marker restored → steady state again
-    duckdb_fixture(sf_dir, "fxtest", "part", build)
-    assert len(calls) == 2
+    # same basename, other directory → its own fixture
+    pb = duckdb_fixture(str(b), "fxtest", "part", build)
+    assert len(calls) == 2 and pb != pa1
+    with open(os.path.join(pb, "data.txt")) as fh:
+        assert fh.read() == str(b / "part.parquet")
+    # touched source → rebuild into a new fixture; the stale one is gone
+    st = os.stat(a / "part.parquet")
+    os.utime(a / "part.parquet", ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+    pa2 = duckdb_fixture(str(a), "fxtest", "part", build)
+    assert len(calls) == 3 and pa2 != pa1
+    assert not os.path.exists(pa1) and os.path.isdir(pb)
+    assert duckdb_fixture(str(a), "fxtest", "part", build) == pa2
+    assert len(calls) == 3
 
 
-def test_orc_fixture_survives_marker_corruption(spark, sf_dir):
-    """q_scan_orc's fixture is fingerprint-keyed; a corrupted marker
-    (the stale-testdata failure mode) must trigger a rebuild and the
-    query must still produce the full result."""
-    import tempfile
+def test_orc_fixture_rebuilds_on_source_rewrite(spark, sf_dir, tmp_path):
+    """q_scan_orc reads a DuckDB-built ORC copy of part.parquet; after
+    the source is rewritten in place, the query must read a rebuilt
+    copy, not the stale one."""
+    import shutil
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
 
     from frauddetection_spark.plans.registry import load_all
 
+    d = tmp_path / "sf"
+    shutil.copytree(sf_dir, d, copy_function=shutil.copyfile)
     reg = load_all()
-    want = reg["q_scan_orc"].fn(spark, sf_dir).count()
-    tag = os.path.basename(os.path.normpath(sf_dir))
-    marker = os.path.join(
-        tempfile.gettempdir(), f"fd_spark_orc_{tag}", "part", "_FD_DONE"
+    want = reg["q_scan_orc"].fn(spark, str(d)).count()
+    part = pq.read_table(d / "part.parquet")
+    brands = pc.unique(part["p_brand"])
+    # keep one brand only: the aggregate must shrink to one group
+    pq.write_table(
+        part.filter(pc.equal(part["p_brand"], brands[0])), d / "part.parquet"
     )
-    assert os.path.exists(marker)
-    with open(marker, "w") as fh:
-        fh.write("stale:0")
-    got = reg["q_scan_orc"].fn(spark, sf_dir).count()
-    assert got == want
-    with open(marker) as fh:
-        assert fh.read().strip() != "stale:0"
+    assert want > 1
+    assert reg["q_scan_orc"].fn(spark, str(d)).count() == 1
 
 
 def test_csv_roundtrip_exact(spark, sf_dir, tmp_path):
@@ -188,10 +192,10 @@ def test_load_table_rejects_unknown(spark, sf_dir):
 
 
 def test_loader_adapts_both_ts_encodings(spark, sf_dir, tmp_path):
-    """The driver regenerated testdata once already (round 1: INT64
-    TIMESTAMP(NANOS); round 2: timestamp[us]). The loader must yield
-    IDENTICAL timestamps for the same instants under either physical
-    encoding — batch and streaming both route through _raw_schema +
+    """Testdata has shipped events.ts both as INT64 TIMESTAMP(NANOS)
+    and as timestamp[us]. The loader must yield IDENTICAL timestamps
+    for the same instants under either physical encoding — batch and
+    streaming both route through the catalog footer schema +
     pinned_projection, so one synthetic fixture pins both."""
     import pyarrow as pa
     import pyarrow.parquet as pq

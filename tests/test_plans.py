@@ -65,6 +65,27 @@ def test_common_neighbor_bitmask_has_no_pair_shuffle(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" in plan
 
 
+def test_ann_pq_blocks_grow_with_corpus(spark, sf_dir, monkeypatch):
+    """q_ann_pq hands the catalog's embeddings row count to pq_topk, so
+    the training, encode and ADC kernels split the corpus into
+    assign_blocks(n) blocks: 32 at the testdata's n=500, more once the
+    corpus passes 32 blocks of ASSIGN_TARGET_ROWS — per-task memory
+    stays bounded as the corpus grows."""
+    from frauddetection_spark.operators.vectors import ASSIGN_TARGET_ROWS
+    from frauddetection_spark.queries import similarity
+
+    def blocks(df) -> set[str]:
+        import re
+
+        plan = df._jdf.queryExecution().analyzed().toString()
+        return set(re.findall(r"sequence\(0, (\d+)", plan))
+
+    assert blocks(REGISTRY["q_ann_pq"].fn(spark, sf_dir)) == {"31"}
+    big = 64 * ASSIGN_TARGET_ROWS
+    monkeypatch.setattr(similarity, "_embeddings_count", lambda _d: big)
+    assert blocks(REGISTRY["q_ann_pq"].fn(spark, sf_dir)) == {"63"}
+
+
 def test_scan_partitioned_prunes_partitions(spark, sf_dir):
     # the IN-list filter must land in PartitionFilters (planning-time
     # directory pruning), NOT as a data filter over all partitions
@@ -132,7 +153,7 @@ def test_whole_stage_codegen_everywhere(spark, sf_dir):
 
 
 def test_cc_local_finish_matches_distributed(spark, sf_dir):
-    """connected_components is two-phase (r07): a driver-side min-id
+    """connected_components is two-phase: a driver-side min-id
     union-find when the materialized edge set is under the
     local_finish_edges gate, the iterative min-label fixpoint above
     it. Both must produce the IDENTICAL (node, component) labeling —
@@ -165,7 +186,7 @@ def test_cc_local_finish_matches_distributed(spark, sf_dir):
 
 
 def test_q2_window_min_keeps_all_ties(spark):
-    """q_tpch_q2's r08 decorrelation (partitioned window MIN + filter,
+    """q_tpch_q2's decorrelation (partitioned window MIN + filter,
     replacing the aggregate-join-back) must keep ALL min-cost suppliers
     on ties, per the original correlated-subquery semantics. The
     testdata has ZERO (partkey, min-cost) ties at every sf, so the
@@ -227,7 +248,7 @@ def test_cc_mixed_type_edges_route_distributed(spark):
     ],
 )
 def test_cc_consumers_local_finish_parity(qname, spark, sf_dir, monkeypatch):
-    """VERDICT r07 item 5: the operator-level parity test above pins
+    """The operator-level parity test above pins
     connected_components itself, but the four DECLARED queries that
     ride on it must also be gate-invariant — a future gate change must
     not silently diverge the results the driver hash-checks. Force the
@@ -243,7 +264,7 @@ def test_cc_consumers_local_finish_parity(qname, spark, sf_dir, monkeypatch):
         tuple(r) for r in spec.fn(spark, sf_dir).collect()
     )
     assert default_rows, f"{qname}: empty result makes parity vacuous"
-    # Patch the MODULE-LEVEL gate constant (ADVICE r08): the function
+    # Patch the MODULE-LEVEL gate constant: the function
     # resolves local_finish_edges=None to this at call time, so the
     # forced-distributed behavior applies to every consumer regardless
     # of signature drift — and the lint below pins that no consumer
@@ -261,7 +282,7 @@ def test_cc_consumers_never_pass_gate_explicitly():
     that leave local_finish_edges at its None default. Pin that no
     production call site passes it — only operators/graph.py (the
     definition) and tests may mention the parameter. The positional
-    leg is AST-based (ADVICE r09): the old regex tolerated only one
+    leg is AST-based: a regex tolerated only one
     level of nested parentheses, so a consumer like
     ``connected_components(edges.filter(f(x)), 50, 0)`` truncated the
     match and the positional 3rd arg could evade the comma count.
@@ -305,7 +326,7 @@ def test_cc_consumers_never_pass_gate_explicitly():
 
 
 def test_common_neighbor_auto_cost_model(spark):
-    """The auto pick is COST-BASED (round-2 ×10 stress finding: a hard
+    """The auto pick is COST-BASED (a ×10 stress finding: a hard
     user cap routed the dense 100-contact/15k-user regime to the
     inverted index, whose Σd² ≈ 5e9 shuffled rows OOMed a default
     heap, while the bitmask nested loop was ~40× cheaper):
@@ -345,21 +366,33 @@ def test_common_neighbor_auto_cost_model(spark):
 
 
 def test_common_neighbor_injected_stats_skip_probe(spark):
-    """Passing n_contacts/n_users means NO probe job at construction."""
-    from frauddetection_spark.operators.graph import common_neighbor_pairs
+    """Passing ContactStats means NO probe job at construction, and the
+    bitmask index comes from stats.values."""
+    from frauddetection_spark.operators.graph import (
+        ContactStats,
+        common_neighbor_pairs,
+    )
 
     contacts = spark.range(50).select(
         F.col("id").alias("user"), (F.col("id") % 5).alias("contact")
     )
+    stats = ContactStats(
+        n_contacts=5, n_users=50, sum_d2=5 * 10 * 10, values=list(range(5))
+    )
     tracker = spark.sparkContext.statusTracker()
     before = tracker.getJobIdsForGroup(None)
-    df = common_neighbor_pairs(contacts, min_common=1, n_contacts=5, n_users=50)
+    df = common_neighbor_pairs(contacts, min_common=1, stats=stats)
     after = tracker.getJobIdsForGroup(None)
     assert len(after) == len(before), "stat injection must not run a Spark job"
     assert df.count() > 0
+    # stats older than the data: a contact missing from values must fail
+    # the query, not silently drop that contact's overlaps
+    stale = stats._replace(n_contacts=4, values=list(range(4)))
+    with pytest.raises(Exception, match="missing from stats.values"):
+        common_neighbor_pairs(contacts, min_common=1, stats=stale).collect()
 
 
-# NOTE (r10): the construction-is-pure-plan-building lint lives ONLY in
+# NOTE: the construction-is-pure-plan-building lint lives ONLY in
 # tests/test_scale_lint.py::test_zero_jobs_at_construction. This file
 # used to carry a near-duplicate (test_query_construction_runs_no_jobs)
 # that re-constructed all ~300 query DataFrames a second time — the two

@@ -124,11 +124,11 @@ def _rank1_recall(exact, approx) -> float:
 
 
 def test_ivf_rank1_recall(spark, sf_dir):
-    """ANN soundness, two pins since K went adaptive (r12):
+    """ANN soundness, two pins since K went adaptive:
 
     1. FLOOR-K configuration (corpus ≤ 256 vectors ⇒ K=16, nprobe=8 =
-       half the buckets probed): recall ≥ 0.8 — the original VERDICT
-       r1 item 6 property at the configuration it was measured at
+       half the buckets probed): recall ≥ 0.8 — the original recall
+       property at the configuration it was measured at
        (was ~22% with fixed centroids at nprobe=1; measured 0.82).
     2. ADAPTIVE configuration (the shipped query at the suite sf,
        n=500 ⇒ K=32, a quarter of the buckets probed): recall ≥ 0.6
@@ -138,7 +138,7 @@ def test_ivf_rank1_recall(spark, sf_dir):
        is information-theoretically impossible on uniform data, and
        the adaptive-K trade (probed fraction ~nprobe/√n for
        ~n^1.5·nprobe candidates instead of the fixed-K hidden
-       quadratic the r12 sf1 audit caught at 72×) is the documented
+       quadratic the sf1 audit caught at 72×) is the documented
        design. Clustered real-world embeddings sit far above this
        floor."""
     from frauddetection_spark.operators.vectors import (
@@ -166,7 +166,7 @@ def test_ivf_rank1_recall(spark, sf_dir):
 
 
 def test_lloyd_partials_update_matches_rowwise_shape(spark):
-    """The r13 optimization replaced ivf_topk's Lloyd update (assign →
+    """An optimization replaced ivf_topk's Lloyd update (assign →
     join back onto train → posexplode n·d rows → mean) with per-block
     partial sums from the assignment kernel (_lloyd_partials). Pin the
     two shapes to the bit: on a frame that spans several blocks and
@@ -225,7 +225,7 @@ def test_lloyd_partials_update_matches_rowwise_shape(spark):
 
 
 def _pq_old_hof_assignment(spark, q, subdim, n_m, cent):
-    """The r07-r13 PQ assignment, reconstructed for pinning: explode
+    """The earlier PQ assignment, reconstructed for pinning: explode
     the corpus into (vec_id, m, sub) subvector rows, broadcast-join
     the per-subspace candidate lists, and take the interpreted
     array_min(transform(...aggregate(zip_with(...)))) argmin over
@@ -299,7 +299,7 @@ _PQ_PIN_CENT = [
 
 
 def test_pq_partials_update_matches_hof_shape(spark):
-    """r14: pq_topk's training update moved from the broadcast-join +
+    """pq_topk's training update moved from the broadcast-join +
     interpreted-HOF argmin + columnar-sum aggregate over n·m subvector
     rows into the blocked numpy kernel _pq_partials. Pin the updated
     means to the bit against the old shape: int64 partials are
@@ -356,7 +356,7 @@ def test_pq_partials_update_matches_hof_shape(spark):
 
 
 def test_pq_encode_matches_hof_shape(spark):
-    """r14: pq_topk's corpus encode moved into the _pq_encode kernel,
+    """pq_topk's corpus encode moved into the _pq_encode kernel,
     which also assembles the m-ascending code array and carries n2 —
     replacing the old argmin + groupBy(vec_id)
     sort_array(collect_list) + n2 join. Pin codes AND assembly order
@@ -370,9 +370,7 @@ def test_pq_encode_matches_hof_shape(spark):
     cent = spark.createDataFrame(
         _PQ_PIN_CENT, "m: int, cid: bigint, csub: array<bigint>"
     )
-    new = _pq_encode(q, cent, subdim, n_blocks=3).select(
-        "vec_id", "code", "n2"
-    )
+    new = _pq_encode(q, cent, subdim).select("vec_id", "code", "n2")
     old = (
         _pq_old_hof_assignment(spark, q, subdim, n_m, cent)
         .groupBy("vec_id")
@@ -390,8 +388,8 @@ def test_pq_encode_matches_hof_shape(spark):
 
 
 def test_pq_quantize_invariant_fixed_width_no_nulls(spark, sf_dir):
-    """ADVICE r13: pq_topk's columnar-mean update divides every
-    per-dimension sum by one shared count(*), and the r14 positional
+    """pq_topk's columnar-mean update divides every
+    per-dimension sum by one shared count(*), and the positional
     argmin indexes sub[j] with literal ordinals — both assume every
     embedding is exactly EMB_DIM wide with no null elements. Pin that
     quantize invariant on the test data (the scale ladder replicates
@@ -598,10 +596,10 @@ def test_profile_matches_direct_counts(spark, sf_dir):
 
 def test_ivf_sampled_recall_and_sample_shape(spark, sf_dir):
     """The 100-TB IVF path (codebook trained on a ~35% hash sample,
-    VERDICT r2 item 7) must not give up recall vs full-table training
+    the 100-TB training shape) must not give up recall vs full-table training
     — the codebook needs cluster geometry, not every point. Same
-    two-pin structure as test_ivf_rank1_recall since K went adaptive
-    (r12): floor-K configuration ≥ 0.75 (measured 0.86), shipped
+    two-pin structure as test_ivf_rank1_recall since K went adaptive:
+    floor-K configuration ≥ 0.75 (measured 0.86), shipped
     adaptive configuration ≥ 0.55 (measured 0.68 at suite sf; the
     uniform-synthetic recall-vs-probed-fraction note there applies).
     Also pins the sample really being ~35%: if the train filter ever
@@ -691,7 +689,7 @@ def test_interval_join_matches_naive_range_join(spark, sf_dir):
     assert naive.exceptAll(bucketed).count() == 0
 
 
-# --- round-4 operator invariants -------------------------------------------
+# --- operator invariants ---------------------------------------------------
 
 
 def test_entropy_bounds(spark, sf_dir):
@@ -832,7 +830,7 @@ def test_trend_slope_two_point_exact(spark):
     assert abs(intercept + slope * 3 - 500) < 1e-9
 
 
-# --- round-4d scorecard / survival / similarity invariants ---
+# --- scorecard / survival / similarity invariants ---
 
 
 def test_ks_bounds_and_consistency(spark, sf_dir):
@@ -917,7 +915,7 @@ def test_hits_norms_in_unit_interval(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# round-4e invariants
+# more operator invariants
 # ---------------------------------------------------------------------------
 
 
@@ -1061,7 +1059,7 @@ def test_table_diff_classes_partition_keyspace(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# round-4e final-batch invariants
+# final-batch invariants
 # ---------------------------------------------------------------------------
 
 
@@ -1417,7 +1415,7 @@ def test_label_propagation_refines_components(spark, sf_dir):
     assert labels <= nodes
 
 
-# --- round-5b additions -----------------------------------------------------
+# --- later additions -------------------------------------------------------
 
 
 def test_date_spread_conserves_cents(spark, sf_dir):
@@ -1500,7 +1498,7 @@ def test_watermark_lateness_monotone_thresholds(spark, sf_dir):
 def test_inverted_index_head_lengths(spark, sf_dir):
     # postings head carries min(df, 8) docs; df sums to |distinct
     # (token, doc) pairs| of the tokenization. The head is a
-    # comma-joined STRING since r09 (raw ArrayType outputs crash the
+    # comma-joined STRING (raw ArrayType outputs crash the
     # driver canonicalizer — tests/test_registry_lint.py), so measure
     # length by re-splitting.
     out = REGISTRY["q_inverted_index"].fn(spark, sf_dir)

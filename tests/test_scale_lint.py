@@ -1,19 +1,19 @@
 """Scale lints over EVERY registered query, pinned as tests:
 
 1. **Zero Spark jobs at plan construction** — calling any
-   ``queries()[name](spark, sf_dir)`` must only BUILD a plan. Round 2's
-   common-neighbor auto path ran persist() + two probe actions at
-   construction time; stats now come from a driver-side DuckDB catalog
-   probe (queries/graph.py). Driver-side (non-Spark) prep like the
-   DuckDB fixture COPYs is allowed — the lint counts Spark jobs only.
+   ``queries()[name](spark, sf_dir)`` must only BUILD a plan. An
+   earlier common-neighbor auto path ran persist() + two probe actions
+   at construction time; stats now come from a driver-side DuckDB
+   probe held by the table catalog (queries/graph.py). Driver-side
+   (non-Spark) prep like the DuckDB fixture COPYs is allowed — the lint
+   counts Spark jobs only.
 
 2. **No unpartitioned row-level windows** — a
    ``Window.orderBy(...)`` without ``partitionBy`` funnels every row
    through ONE task (the "No Partition Defined for Window operation"
-   WindowExec). The only allowed unpartitioned windows are the
-   bounded-by-construction ones: prefix offsets over per-range-partition
-   totals (≤ RANK_PARTITIONS rows, order col ``_pid``) and the bitmask
-   contact-domain index (≤ BITMASK_MAX_CONTACTS rows, order col ``ct``).
+   WindowExec). The only allowed unpartitioned window is the
+   bounded-by-construction one: prefix offsets over per-range-partition
+   totals (≤ RANK_PARTITIONS rows, order col ``_pid``).
 """
 
 from __future__ import annotations
@@ -27,10 +27,8 @@ REGISTRY = load_all()
 # Unpartitioned windows whose input is bounded by construction, keyed
 # by the name of their first order column. Keep in sync with
 # operators/rank.py (offsets over ≤ RANK_PARTITIONS per-partition
-# totals), operators/graph.py::_dense_index (same shape), and
-# operators/graph.py::_common_neighbors_bitmask (contact-domain index,
-# ≤ BITMASK_MAX_CONTACTS rows).
-BOUNDED_ORDER_COLS = {"_pid", "ct"}
+# totals).
+BOUNDED_ORDER_COLS = {"_pid"}
 
 
 def _unpartitioned_windows(df) -> list[str]:
@@ -60,7 +58,7 @@ def _live_scan_count(df) -> int:
     descending into InMemoryTableScan (a cached subtree's build plan
     prints its scans but never re-executes) or ReusedExchange/
     ReusedSubquery (executed once, replayed from shuffle files /
-    the first result — descending would double-count, ADVICE r07)."""
+    the first result — descending would double-count)."""
     live = 0
     stack = [df._jdf.queryExecution().executedPlan()]
     while stack:
@@ -76,7 +74,7 @@ def _live_scan_count(df) -> int:
         for i in range(kids.size()):
             stack.append(kids.apply(i))
         # Scans hidden in scalar/IN subquery expressions are live cost
-        # too (ADVICE r07): QueryPlan.subqueries yields each plan
+        # too: QueryPlan.subqueries yields each plan
         # referenced from this node's expressions.
         subs = node.subqueries()
         for i in range(subs.size()):
@@ -89,8 +87,8 @@ def _live_scan_count(df) -> int:
 @pytest.fixture(scope="module")
 def plan_inspections(spark, sf_dir):
     """ONE construction-and-inspection pass over the whole catalog,
-    shared by every plan lint in this module (suite wall-time, VERDICT
-    r10 item 5: the window/cartesian/live-scan params and the
+    shared by every plan lint in this module (suite wall-time: the
+    window/cartesian/live-scan params and the
     zero-jobs lint each re-built all ~300 plans — ~60s of duplicated
     GIL-bound Py4J chatter per pass; a thread pool was measured NOT to
     help). Each plan is inspected IMMEDIATELY after its own
@@ -156,15 +154,15 @@ def test_no_unpartitioned_windows(name, plan_inspections):
     # — the catalog's 1-row totals / tiny literal frames); the
     # Cartesian fallback means BOTH sides were data-sized, which is
     # never an acceptable 100-TB shape. Verified 0 occurrences across
-    # all 309 queries when this lint landed (round 6).
+    # all 309 queries when this lint landed.
     assert not found["cartesian"], (
         f"{name}: CartesianProduct in the physical plan — add an equi "
         "key, broadcast a bounded side, or bucket the pair space"
     )
-    # Piggyback #3 (r07): LIVE file-scan budget — replayed-subtree
+    # Piggyback #3: LIVE file-scan budget — replayed-subtree
     # detector (_live_scan_count above). A DataFrame referenced twice
     # without a persist replays its whole derivation per reference
-    # (q_bfs_levels planned 20 live scans before the r07 sweep; at
+    # (q_bfs_levels once planned 20 live scans; at
     # 100 TB each replay is another full fact-table scan). Every query
     # in the catalog plans ≤ 9 live scans after the sweep (worst:
     # TPC-H Q2 and the 6-aggregate q_ref_integrity, both legitimately
@@ -204,13 +202,13 @@ ML_FIT = {"q_ann_lsh_ml", "q_dedup_minhash_ml", "q_model_score",
 
 
 def test_every_persist_is_tracked_or_local():
-    """Cache-lifetime lint (VERDICT r3 item 8): every ``.persist(`` call
+    """Cache-lifetime lint: every ``.persist(`` call
     site in frauddetection_spark/ must either be wrapped in
     ``track_cache(`` (released by operators.caching.release_caches()
     between bench/driver
     queries) or be followed by a local ``.unpersist()`` in the same
-    function. Untracked persists accumulated across the r3 bench's
-    19-query headline and inflated later queries 1.5-3x."""
+    function. Untracked persists accumulated across a 19-query
+    benchmark run and inflated later queries 1.5-3x."""
     import ast
     import os
 
@@ -277,9 +275,9 @@ def test_every_persist_is_tracked_or_local():
 
 def test_zero_jobs_at_construction(spark, sf_dir, plan_inspections):
     """Constructing any non-exempt query must launch ZERO Spark jobs —
-    constructors are pure plan builders (round 2's common-neighbor
+    constructors are pure plan builders (an earlier common-neighbor
     auto path ran persist() + two probe actions at construction; stats
-    probes belong in the driver-side DuckDB catalog, actions in the
+    probes belong in the driver-side table catalog, actions in the
     caller). The construction pass and its two job-id snapshots live
     in the shared ``plan_inspections`` fixture (see its docstring for
     the cost story); only a failure pays for the serial per-query
@@ -290,7 +288,7 @@ def test_zero_jobs_at_construction(spark, sf_dir, plan_inspections):
     # A job fired somewhere in the batch: re-run serially to name it.
     # The re-run repeats the SAME work the fixture bracketed —
     # construct AND inspect (physical planning included) — so a job
-    # launched by either step attributes to its query (review r11).
+    # launched by either step attributes to its query.
     tracker = spark.sparkContext.statusTracker()
     names = [n for n in REGISTRY if n not in ITERATIVE_FIXPOINT | ML_FIT]
     before = set(tracker.getJobIdsForGroup(None) or [])
