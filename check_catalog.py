@@ -3,8 +3,8 @@
 
 Runs every query of ``__spark_entry__.queries()`` (or only the named
 ones) on a *vanilla* SparkSession (plain builder at host parallelism —
-``SPARK_GRAFT_CPUS`` or ``os.cpu_count()`` — none of the repo's tuned
-configs) and compares each against its DuckDB twin (row count + schema
+``SPARK_GRAFT_CPUS`` or else the process's CPU affinity — none of the
+repo's tuned configs) and compares each against its DuckDB twin (row count + schema
 + order-insensitive value hash; ``compare`` also runs the
 driver-canonicalizer leg). Queries without a twin must return rows.
 A query that only passes under the test suite's configs fails here.
@@ -55,24 +55,21 @@ def main() -> int:
 
     import __spark_entry__ as entrymod
     from frauddetection_spark.oracle import compare, duckdb_connection
+    from frauddetection_spark.session import DEFAULT_CPUS
 
     # Vanilla session: plain builder, no repo configs. Parallelism
-    # follows the host (ADVICE r08): a hardcoded local[32]
-    # oversubscribes smaller hosts, and getOrCreate would silently
-    # REUSE any tuned session already live in this process — which
-    # defeats the vanilla-session purpose, so refuse instead.
-    # explicit raise, not assert: must survive python -O (review r09)
+    # follows the host's cores (session.DEFAULT_CPUS, read from CPU
+    # affinity): a hardcoded local[32] oversubscribes smaller hosts.
+    # getOrCreate would silently REUSE any tuned session already live
+    # in this process — which defeats the vanilla-session purpose, so
+    # refuse instead (an explicit raise, not assert: must survive
+    # python -O).
     if SparkSession.getActiveSession() is not None:
         raise SystemExit(
             "a SparkSession is already active in this process — the "
             "check must build its own vanilla session; run this "
             "script standalone"
         )
-    try:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", ""))
-    except ValueError:
-        cpus = os.cpu_count() or 4
-    cpus = max(1, cpus)
     if args.hostile:
         spark = (
             SparkSession.builder.master("local[5]")
@@ -84,7 +81,7 @@ def main() -> int:
         )
     else:
         spark = (
-            SparkSession.builder.master(f"local[{cpus}]")
+            SparkSession.builder.master(f"local[{DEFAULT_CPUS}]")
             .appName("check-catalog")
             .getOrCreate()
         )

@@ -23,23 +23,20 @@ def asof_last_before(
     key: str,
     ts: str,
     right_cols: list[str],
-    strict: bool = False,
-    tiebreak: str | None = "event_id",
 ) -> DataFrame:
     """Enrich `left` with `asof_<col>` for each of `right_cols`: the
-    values of the latest `right` row whose `ts` is ≤ (or < when
-    strict) the left row's `ts`, per `key`.
+    values of the latest `right` row whose `ts` is ≤ the left row's
+    `ts`, per `key`.
 
     Semantics guarantees:
     - The carried values come from ONE right row, atomically: the
       window carries a struct of all right_cols, so a NULL in the
       latest right row is carried as NULL (never back-filled from an
       older row) and columns are never mixed across rows.
-    - `tiebreak` (a right-side column, default event_id when present)
-      totalizes the order under equal timestamps — the max
-      (ts, tiebreak) right row wins, deterministically. Without a
-      tiebreak column the choice under ts ties is explicitly
-      unspecified.
+    - When `right` has an `event_id` column, it totalizes the order
+      under equal timestamps — the max (ts, event_id) right row wins,
+      deterministically. Without it the choice under ts ties is
+      explicitly unspecified.
     - right_cols must not collide with left's columns (raises).
     """
     clash = set(right_cols) & set(left.columns)
@@ -56,12 +53,11 @@ def asof_last_before(
             rt = rt.withColumn(c, F.lit(None))
     ordered_cols = sorted(all_cols)
     u = lt.select(*ordered_cols).union(rt.select(*ordered_cols))
-    # strict: left rows sort BEFORE right rows at equal ts, so an
-    # equal-ts right row is not visible to them
-    side_order = F.col("_side").asc() if not strict else F.col("_side").desc()
-    order = [F.col(ts).asc(), side_order]
-    if tiebreak is not None and tiebreak in right.columns:
-        order.append(F.col(tiebreak).asc())
+    # right rows (_side 0) sort before left rows at equal ts, so an
+    # equal-ts right row is visible to them
+    order = [F.col(ts).asc(), F.col("_side").asc()]
+    if "event_id" in right.columns:
+        order.append(F.col("event_id").asc())
     w = (
         Window.partitionBy(key)
         .orderBy(*order)

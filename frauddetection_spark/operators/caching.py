@@ -8,11 +8,9 @@ result (long-lived driver sessions accumulate cached frames otherwise).
 The plan registry's per-query guard calls it automatically between
 queries.
 
-This lived as a private ``_track`` inside ``operators.graph`` until
-round 6; query modules importing another module's underscore-private
-registry was fragile coupling (ADVICE r05), so the registry is now a
-first-class utility. ``operators.graph`` re-exports both names for
-backward compatibility.
+The registry is its own module, not a private helper of one operator
+module, so that every operator and query module imports it from one
+place.
 """
 
 from __future__ import annotations

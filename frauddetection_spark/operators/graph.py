@@ -28,14 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
-
-# Cache lifetime registry lives in operators.caching; re-exported here
-# (incl. the legacy private name) for back-compat.
-from frauddetection_spark.operators.caching import (  # noqa: F401
-    release_caches,
-    track_cache,
-    track_cache as _track,
-)
+from frauddetection_spark.operators.caching import track_cache
 
 
 def edges_from_events(events: DataFrame) -> DataFrame:
@@ -106,15 +99,11 @@ def degrees(edges: DataFrame) -> DataFrame:
     )
 
 
-def aggregate_messages(
-    edges: DataFrame,
-    node_values: DataFrame,
-    id_col: str = "id",
-    value_col: str = "value",
-) -> DataFrame:
-    """Gather-scatter: for each dst, aggregate the src nodes' values
-    (DGL ``update_all(copy_u, sum)``; gated variant in
-    new_model_1.py:24-36). Returns (node, msg_sum, msg_avg, n_msgs).
+def aggregate_messages(edges: DataFrame, node_values: DataFrame) -> DataFrame:
+    """Gather-scatter: for each dst, aggregate the src nodes' ``value``
+    over ``node_values`` (id, value) (DGL ``update_all(copy_u, sum)``;
+    gated variant in new_model_1.py:24-36). Returns (node, msg_sum,
+    msg_avg, n_msgs).
 
     Scale: one shuffle to join node values onto edge sources (or a
     broadcast when the node table is small), one to aggregate by dst.
@@ -122,9 +111,7 @@ def aggregate_messages(
     cut lineage (SURVEY §7 watch-list #4).
     """
     msgs = edges.join(
-        node_values.select(
-            F.col(id_col).alias("src"), F.col(value_col).alias("_msg")
-        ),
+        node_values.select(F.col("id").alias("src"), F.col("value").alias("_msg")),
         "src",
     )
     return msgs.groupBy(F.col("dst").alias("node")).agg(
@@ -406,27 +393,22 @@ def clustering_coefficients(edges: DataFrame) -> DataFrame:
     )
 
 
-# Size gate for connected_components' driver-side local finish. A
-# MODULE-LEVEL constant (not only a parameter default) so forcing the
-# distributed path in tests is one monkeypatch that covers every call
-# site no matter how it passes the threshold (patching
-# __defaults__ goes vacuous the day a consumer passes the gate
-# explicitly — tests/test_plans.py also lints that none does).
+# Size gate for connected_components' driver-side local finish, read
+# at call time so tests force the distributed path with one
+# monkeypatch that covers every consumer.
 CC_LOCAL_FINISH_EDGES = 200_000
+# Round budget of the distributed path (rounds needed = graph diameter).
+CC_MAX_ITERATIONS = 50
 
 
-def connected_components(
-    edges: DataFrame,
-    max_iterations: int = 50,
-    local_finish_edges: int | None = None,
-) -> DataFrame:
+def connected_components(edges: DataFrame) -> DataFrame:
     """Connected components by iterative min-label propagation:
     component(v) = min node id reachable from v. Returns
     (node, component).
 
     Two-phase, size-gated (the GraphX/GraphFrames "local finish"
     pattern): once the edge set is materialized (the localCheckpoint
-    below — a job either way), if it holds ≤ ``local_finish_edges``
+    below — a job either way), if it holds ≤ ``CC_LOCAL_FINISH_EDGES``
     directed edges (≤ ~200k × 16 bytes ≈ 3 MB — constant-bounded
     driver memory, same discipline as the whitelisted grid union-find
     in operators/sampling.py) the components come from one driver-side
@@ -473,12 +455,7 @@ def connected_components(
     # output schema (a mixed-type edge frame would otherwise diverge
     # only below the size gate).
     same_type = ck.schema["src"].dataType == ck.schema["dst"].dataType
-    gate = (
-        CC_LOCAL_FINISH_EDGES
-        if local_finish_edges is None
-        else local_finish_edges
-    )
-    if same_type and ck.count() <= gate:
+    if same_type and ck.count() <= CC_LOCAL_FINISH_EDGES:
         spark = ck.sparkSession
         # Min-id union-find over the (constant-bounded) collected edge
         # list: union by smaller root, so every root IS the set's
@@ -535,7 +512,7 @@ def connected_components(
         .withColumn("component", F.col("node"))
         .localCheckpoint()
     )
-    for _ in range(max_iterations):
+    for _ in range(CC_MAX_ITERATIONS):
         nbr_min = (
             und.join(
                 labels.select(
@@ -565,36 +542,38 @@ def connected_components(
         if changed == 0:
             break
     else:
-        # exhausted max_iterations while labels were still moving: the
+        # exhausted CC_MAX_ITERATIONS while labels were still moving: the
         # graph diameter exceeds the round budget (e.g. a long path
         # component) and the labels are NOT a fixpoint. Silent return
         # here would hand wrong components downstream.
         raise RuntimeError(
-            f"connected_components did not converge in {max_iterations} "
+            f"connected_components did not converge in {CC_MAX_ITERATIONS} "
             f"iterations ({changed} labels still changing); raise "
-            "max_iterations (rounds needed = graph diameter)"
+            "CC_MAX_ITERATIONS (rounds needed = graph diameter)"
         )
     # checkpointed blocks are released by the ContextCleaner when the
     # frames go out of scope — no persist bookkeeping to track here
     return labels
 
 
-def pagerank_integer(
-    edges: DataFrame,
-    iterations: int = 3,
-    damping_pct: int = 85,
-    scale: int = 1_000_000,
-) -> DataFrame:
+# pagerank_integer's recurrence, shared with q_pagerank's DuckDB twin.
+PR_ITERATIONS = 3
+PR_DAMPING_PCT = 85
+PR_SCALE = 1_000_000  # micro-units: one unit of rank
+PR_BASE = (PR_SCALE * (100 - PR_DAMPING_PCT)) // 100  # teleport floor
+
+
+def pagerank_integer(edges: DataFrame) -> DataFrame:
     """Fixed-iteration PageRank in exact int64 arithmetic:
     rank_k(v) = (1-d)·S + d · Σ_{(u,v)∈E} rank_{k-1}(u) div outdeg(u),
-    every term an integer (ranks carried as micro-units, ``scale`` =
+    every term an integer (ranks carried as micro-units, ``PR_SCALE`` =
     one unit of rank). Returns (node, rank_micro).
 
     Why integer: float PageRank sums in shuffle order — different
     engines (or two runs of the same plan) produce last-ulp-different
     doubles, which breaks exact oracle comparison. With div/sum over
     int64 every operation is associative and engine-independent, so a
-    DuckDB twin unrolled to the same ``iterations`` hash-matches
+    DuckDB twin unrolled to the same ``PR_ITERATIONS`` hash-matches
     bit-for-bit. Dangling-node mass is dropped (no out-edges ⇒ no
     contribution), the same simplification both twins apply.
 
@@ -607,8 +586,6 @@ def pagerank_integer(
     spreading over the call graph), reshaped from per-node python to
     joins.
     """
-    if not 0 <= damping_pct <= 100:
-        raise ValueError(f"damping_pct must be in [0,100], got {damping_pct}")
     nodes = track_cache(
         edges.select(F.explode(F.array("src", "dst")).alias("node"))
         .distinct()
@@ -624,9 +601,8 @@ def pagerank_integer(
         .select("src", "dst", "outdeg")
         .persist()
     )
-    base = (scale * (100 - damping_pct)) // 100
-    ranks = nodes.withColumn("rank_micro", F.lit(int(scale)).cast("bigint"))
-    for _ in range(iterations):
+    ranks = nodes.withColumn("rank_micro", F.lit(PR_SCALE).cast("bigint"))
+    for _ in range(PR_ITERATIONS):
         inbound = (
             edges_out.join(
                 ranks.select(
@@ -645,8 +621,8 @@ def pagerank_integer(
         ranks = nodes.join(inbound, "node", "left").select(
             "node",
             (
-                F.lit(base)
-                + F.expr(f"({damping_pct} * coalesce(s, CAST(0 AS BIGINT))) div 100")
+                F.lit(PR_BASE)
+                + F.expr(f"({PR_DAMPING_PCT} * coalesce(s, CAST(0 AS BIGINT))) div 100")
             )
             .cast("bigint")
             .alias("rank_micro"),

@@ -45,7 +45,6 @@ def prefix_rank(
     df: DataFrame,
     order_by: list[Column],
     sums: dict[str, Column] | None = None,
-    n_parts: int = RANK_PARTITIONS,
     total_count: str | None = None,
 ) -> DataFrame:
     """Global row_number ``rn`` (1-based) and inclusive prefix sums
@@ -71,7 +70,7 @@ def prefix_rank(
     # 288 missing ranks over a 15k-row aggregate input at sf0.1).
     # ReusedExchange usually hides this; it is not guaranteed.
     parts = track_cache(
-        df.repartitionByRange(n_parts, *order_by)
+        df.repartitionByRange(RANK_PARTITIONS, *order_by)
         .withColumn("_pid", F.spark_partition_id())
         .persist()
     )
@@ -84,8 +83,8 @@ def prefix_rank(
         F.count("*").alias("_t_rn"),
         *[F.sum(col).alias(f"_t_{name}") for name, col in sums.items()],
     )
-    # prefix offsets over one row per partition: bounded (≤ n_parts
-    # rows) by construction — the whitelisted unpartitioned window
+    # prefix offsets over one row per partition: bounded (≤
+    # RANK_PARTITIONS rows) by construction — the whitelisted unpartitioned window
     w_off = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
     offs = totals.select(
         "_pid",
@@ -116,7 +115,6 @@ def prefix_max(
     order_by: list[Column],
     value: Column,
     out: str = "prefix_max",
-    n_parts: int = RANK_PARTITIONS,
 ) -> DataFrame:
     """EXCLUSIVE running max of ``value`` over a global order — for each
     row, the max of ``value`` over all STRICTLY EARLIER rows (NULL for
@@ -124,8 +122,8 @@ def prefix_max(
 
     Same two-phase shape as :func:`prefix_rank`: range-partition on the
     order key, local exclusive cummax within each partition, then fold
-    in the max of all earlier partitions (offsets table is ≤ n_parts
-    rows). ``order_by`` must be a TOTAL order (unique per row): rows
+    in the max of all earlier partitions (offsets table is ≤
+    RANK_PARTITIONS rows). ``order_by`` must be a TOTAL order (unique per row): rows
     that tie in the order key would otherwise see each other's values
     nondeterministically. Pre-aggregate to the key grain first when
     "earlier" must mean "strictly smaller key" (q_skyline does).
@@ -133,7 +131,7 @@ def prefix_max(
     # persisted for the same two-evaluation bound-consistency reason
     # as prefix_rank (see comment there)
     parts = track_cache(
-        df.repartitionByRange(n_parts, *order_by)
+        df.repartitionByRange(RANK_PARTITIONS, *order_by)
         .withColumn("_pid", F.spark_partition_id())
         .persist()
     )
@@ -144,7 +142,7 @@ def prefix_max(
     )
     local = parts.withColumn("_lmax", F.max(value).over(w_loc))
     totals = parts.groupBy("_pid").agg(F.max(value).alias("_tmax"))
-    # exclusive prefix over ≤ n_parts per-partition rows — the
+    # exclusive prefix over ≤ RANK_PARTITIONS per-partition rows — the
     # whitelisted bounded unpartitioned window (order col _pid)
     w_off = Window.orderBy("_pid").rowsBetween(Window.unboundedPreceding, -1)
     offs = totals.select("_pid", F.max("_tmax").over(w_off).alias("_omax"))

@@ -58,19 +58,22 @@ def sql_portable_hash_u32(key: str, seed: int) -> str:
     return f"((({lo}) * {HASH_A1} + ({hi}) * {HASH_A2} + {seed}) % {HASH_MOD})"
 
 
-def portable_split(key: Column, train_pct: int = 80, seed: int = 12_345) -> Column:
+# The train/test split: TRAIN_PCT% train, hashed with SPLIT_SEED.
+TRAIN_PCT = 80
+SPLIT_SEED = 12_345
+_TRAIN_THRESH = (HASH_MOD * TRAIN_PCT) // 100
+
+
+def portable_split(key: Column) -> Column:
     """'train'/'test' by multiplicative hash — reproducible anywhere."""
-    h = portable_hash_u32(key, seed)
-    return F.when(h < (HASH_MOD * train_pct) // 100, F.lit("train")).otherwise(
-        F.lit("test")
-    )
+    h = portable_hash_u32(key, SPLIT_SEED)
+    return F.when(h < _TRAIN_THRESH, F.lit("train")).otherwise(F.lit("test"))
 
 
-def sql_portable_split(key: str, train_pct: int = 80, seed: int = 12_345) -> str:
+def sql_portable_split(key: str) -> str:
     """DuckDB twin of :func:`portable_split`."""
-    thresh = (HASH_MOD * train_pct) // 100
     return (
-        f"CASE WHEN {sql_portable_hash_u32(key, seed)} < {thresh}"
+        f"CASE WHEN {sql_portable_hash_u32(key, SPLIT_SEED)} < {_TRAIN_THRESH}"
         f" THEN 'train' ELSE 'test' END"
     )
 
@@ -89,15 +92,20 @@ def sql_portable_uniform_keep(key: str, keep_pct: int = 10, seed: int = 777) -> 
     return f"{sql_portable_hash_u32(key, seed)} < {thresh}"
 
 
-def xxhash_split(key: Column, train_pct: int = 80, seed: int = 42) -> Column:
+XXHASH_SEED = 42
+
+
+def xxhash_split(key: Column) -> Column:
     """Production split: xxhash64 — not oracle-portable (DuckDB has no
     xxhash64), declared rows-only."""
     return F.when(
-        F.pmod(F.xxhash64(key, F.lit(seed)), 100) < train_pct, F.lit("train")
+        F.pmod(F.xxhash64(key, F.lit(XXHASH_SEED)), 100) < TRAIN_PCT,
+        F.lit("train"),
     ).otherwise(F.lit("test"))
 
 
 FIXED = 1_000_000  # fixed-point scale for weight factors
+N_SALTS = 8  # salted_sum_count's reducers per hot key
 
 
 def normalized_probability(df: DataFrame, raw_col: str) -> DataFrame:
@@ -110,7 +118,7 @@ def normalized_probability(df: DataFrame, raw_col: str) -> DataFrame:
     through one partition at scale). ``df`` is read twice (the total
     and the probability projection), so it is persisted here — without
     it the caller's whole upstream plan replays for the 1-row
-    aggregate (r07 sweep)."""
+    aggregate."""
     from frauddetection_spark.operators.caching import track_cache
 
     df = track_cache(df.persist())
@@ -125,11 +133,10 @@ def salted_sum_count(
     keys: list[str],
     cents_col: str,
     salt_col: Column,
-    n_salts: int = 8,
 ):
     """Skew-safe two-phase aggregation: groupBy(keys ⊕ salt) partial
     sums, then groupBy(keys) recombine. A hot key's rows land on
-    n_salts reducers instead of one — the manual form of AQE's skew
+    N_SALTS reducers instead of one — the manual form of AQE's skew
     split, usable when a single group exceeds one executor's memory
     (e.g. one user with 10⁹ events at 100 TB).
 
@@ -138,7 +145,7 @@ def salted_sum_count(
     policy. Returns (keys..., cents_sum, n)."""
     from pyspark.sql import functions as F
 
-    salted = df.withColumn("_salt", F.pmod(salt_col, F.lit(n_salts)))
+    salted = df.withColumn("_salt", F.pmod(salt_col, F.lit(N_SALTS)))
     partial = salted.groupBy(*keys, "_salt").agg(
         F.sum(cents_col).alias("_s"), F.count("*").alias("_c")
     )

@@ -10,8 +10,8 @@ Design constraints:
   min-hashing is explode + groupBy-min; banding is a weighted sum.
 - Scale: the candidate-pair stage is the whole point of LSH — the join
   is on (band, key), never all-pairs. Hub buckets (a degenerate key
-  shared by many docs) would quadratically explode exactly like J4's
-  hub contacts; `max_bucket_size` prunes them.
+  shared by many docs) still explode quadratically, exactly like J4's
+  hub contacts.
 """
 
 from __future__ import annotations
@@ -29,11 +29,11 @@ N_HASHES = 16
 BAND_ROWS = 4  # 4 bands x 4 rows
 
 
-def _lcg_params(n: int = N_HASHES) -> list[tuple[int, int, int]]:
+def _lcg_params() -> list[tuple[int, int, int]]:
     """Deterministic (i, a, b) hash-permutation params via a fixed LCG
     (seeded constants — identical literals are embedded in oracle SQL)."""
     out, x = [], 88172645463325252
-    for i in range(n):
+    for i in range(N_HASHES):
         x = (6364136223846793005 * x + 1442695040888963407) % (1 << 63)
         a = (x % (P_MH - 2)) + 1
         x = (6364136223846793005 * x + 1442695040888963407) % (1 << 63)
@@ -83,8 +83,8 @@ def token_hashes(docs: DataFrame) -> DataFrame:
     return tok.join(F.broadcast(th), "token").select("doc_id", "pos", "h")
 
 
-def word_shingles(docs: DataFrame, k: int = 3) -> DataFrame:
-    """Distinct hashed word k-shingles per document:
+def word_shingles(docs: DataFrame) -> DataFrame:
+    """Distinct hashed word 3-shingles per document:
     (doc_id, shingle: bigint).
 
     shingle = ((h₁·31 + h₂)·31 + h₃) mod p over consecutive token
@@ -93,7 +93,6 @@ def word_shingles(docs: DataFrame, k: int = 3) -> DataFrame:
     ints instead of ~20-char strings. Hash collisions (p ≈ 2³⁰,
     birthday ≈ 3 pairs per 2.5M shingles) are deterministic and
     identical in the oracle twin."""
-    assert k == 3, "shingle combine is specialized to k=3"
     w = Window.partitionBy("doc_id").orderBy("pos")
     sh = token_hashes(docs).select(
         "doc_id",
@@ -183,34 +182,22 @@ def lsh_bands(sigs: DataFrame) -> DataFrame:
     ).select("doc_id", "e.band", "e.key")
 
 
-def lsh_candidates(
-    bands: DataFrame, max_bucket_size: int | None = None
-) -> DataFrame:
+def lsh_candidates(bands: DataFrame) -> DataFrame:
     """Distinct candidate pairs sharing ≥1 band bucket: (doc_a, doc_b).
 
-    The self-join is on (band, key) — never all-pairs. Degenerate
-    buckets explode quadratically; `max_bucket_size` prunes them
-    (recall loss only for docs whose every band is degenerate).
+    The self-join is on (band, key) — never all-pairs.
 
-    The band table is persisted here: both self-join sides (and the
-    bucket-size pruner when enabled) reference it, and Spark plans
-    them as independent subtrees — unpersisted, the upstream MinHash
-    aggregation (the dominant stage of the dedup pipeline, see
-    minhash_signatures) runs once PER SIDE (measured r10: executed
-    plan shows zero ReusedExchange across the aggregate boundary).
+    The band table is persisted here: both self-join sides reference
+    it, and Spark plans them as independent subtrees — unpersisted, the
+    upstream MinHash aggregation (the dominant stage of the dedup
+    pipeline, see minhash_signatures) runs once PER SIDE (measured: the
+    executed plan shows zero ReusedExchange across the aggregate
+    boundary).
     The frame is |docs|·BANDS rows of three int64s — index-sized,
     never corpus-sized."""
     from frauddetection_spark.operators.caching import track_cache
 
     bands = track_cache(bands.persist())
-    if max_bucket_size is not None:
-        keep = (
-            bands.groupBy("band", "key")
-            .agg(F.count("*").alias("n"))
-            .filter(F.col("n") <= max_bucket_size)
-            .select("band", "key")
-        )
-        bands = bands.join(F.broadcast(keep), ["band", "key"])
     a = bands.select(F.col("doc_id").alias("doc_a"), "band", "key")
     b = bands.select(F.col("doc_id").alias("doc_b"), "band", "key")
     return (
@@ -261,7 +248,7 @@ def exact_jaccard(
 
 # 30 informative bits: token hashes are mod P31 < 2^30, so bits 30+
 # of h are always zero — a wider signature would carry dead bits
-# (code-review finding; the oracle twin shares the constant).
+# (the oracle twin shares the constant).
 SIMHASH_BITS = 30
 
 

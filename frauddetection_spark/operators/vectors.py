@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 QUANT = 10_000
+KNN_K = 3  # neighbors kept per vector / probe by every search below
 
 
 def round_half_away_np(arr, scale: int = 1):
@@ -37,11 +38,12 @@ def _quant_np(m):
     return round_half_away_np(m, QUANT)
 
 
-def quantize(emb: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    """Add int64 fixed-point vector `qv` and its exact squared norm
-    `n2` (map-only; |x|·QUANT ≤ ~10⁸ keeps x² sums far inside int64)."""
+def quantize(emb: DataFrame) -> DataFrame:
+    """Add int64 fixed-point vector `qv` of the `embedding` column and
+    its exact squared norm `n2` (map-only; |x|·QUANT ≤ ~10⁸ keeps x²
+    sums far inside int64)."""
     qv = F.transform(
-        F.col(vec_col),
+        F.col("embedding"),
         lambda x: F.round(x.cast("double") * QUANT).cast("bigint"),
     )
     return emb.withColumn("qv", qv).withColumn(
@@ -81,6 +83,35 @@ def cosine_pairs(a: DataFrame, b: DataFrame) -> DataFrame:
     )
 
 
+def _cos_tile(qa, na, qb, nb):
+    """Quantized-cosine tile of two int64 matrices given their squared
+    norms: exact int64 dot, one IEEE double division — the arithmetic
+    of the DuckDB twins, so every kernel below stays bit-equal to
+    them."""
+    import numpy as np
+
+    return (qa @ qb.T) / np.sqrt(
+        na[:, None].astype(np.float64) * nb[None, :].astype(np.float64)
+    )
+
+
+def _topk_not_self(aids, bids, cos, k: int):
+    """Each row's ``k`` best columns of the tile ``cos`` by (cos DESC,
+    id ASC), skipping the column whose id equals the row's own: three
+    flat lists (row id, neighbor id, cos)."""
+    import numpy as np
+
+    out_id, out_nb, out_cos = [], [], []
+    for i, vid in enumerate(aids):
+        row = cos[i]
+        mask = bids != vid
+        order = np.lexsort((bids[mask], -row[mask]))[:k]
+        out_id.extend([vid] * len(order))
+        out_nb.extend(bids[mask][order].tolist())
+        out_cos.extend(row[mask][order].tolist())
+    return out_id, out_nb, out_cos
+
+
 # Block count for the block-nested-loop kNN. Pair compute is O(n²·d)
 # regardless (exact all-pairs); blocks only control distribution:
 # 2·B·n rows are shuffled and each of the B² kernel calls handles an
@@ -89,7 +120,7 @@ def cosine_pairs(a: DataFrame, b: DataFrame) -> DataFrame:
 KNN_BLOCKS = 4
 
 
-def _block_pairs_cogrouped(emb: DataFrame, vec_col: str, n_blocks: int):
+def _block_pairs_cogrouped(emb: DataFrame):
     """Replicate both sides over (left_block, right_block) keys and
     cogroup — the distributed block nested loop. Every (a, b) vector
     pair meets in EXACTLY ONE kernel call: (block(a), block(b)).
@@ -97,12 +128,12 @@ def _block_pairs_cogrouped(emb: DataFrame, vec_col: str, n_blocks: int):
     This is the scale-out replacement for a driver-collect +
     sc.broadcast kernel: nothing touches the driver, the plan is fully
     lazy (zero jobs at construction), and each kernel sees two bounded
-    pandas frames. Replication cost is n_blocks× each side — the
+    pandas frames. Replication cost is KNN_BLOCKS× each side — the
     standard block-nested-loop trade for exact all-pairs work.
     """
-    base = emb.select("vec_id", vec_col)
-    blk = F.pmod(F.col("vec_id"), F.lit(n_blocks)).cast("int")
-    all_blocks = F.sequence(F.lit(0), F.lit(n_blocks - 1))
+    base = emb.select("vec_id", "embedding")
+    blk = F.pmod(F.col("vec_id"), F.lit(KNN_BLOCKS)).cast("int")
+    all_blocks = F.sequence(F.lit(0), F.lit(KNN_BLOCKS - 1))
     # left side: rows of block lb, replicated once per right block rb
     left = base.withColumn("lb", blk).withColumn(
         "rb", F.explode(all_blocks)
@@ -116,18 +147,16 @@ def _block_pairs_cogrouped(emb: DataFrame, vec_col: str, n_blocks: int):
     # attributes.
     right = (
         emb.select(
-            F.col("vec_id").alias("r_vec_id"), F.col(vec_col).alias("r_vec")
+            F.col("vec_id").alias("r_vec_id"), F.col("embedding").alias("r_vec")
         )
-        .withColumn("rb", F.pmod(F.col("r_vec_id"), F.lit(n_blocks)).cast("int"))
+        .withColumn("rb", F.pmod(F.col("r_vec_id"), F.lit(KNN_BLOCKS)).cast("int"))
         .withColumn("lb", F.explode(all_blocks))
     )
     return left.groupBy("lb", "rb").cogroup(right.groupBy("lb", "rb"))
 
 
-def knn_topk_bruteforce(
-    spark, emb: DataFrame, k: int = 3, vec_col: str = "embedding"
-) -> DataFrame:
-    """Exact top-k cosine neighbors via a distributed numpy int64
+def knn_topk_bruteforce(spark, emb: DataFrame) -> DataFrame:
+    """Exact top-KNN_K cosine neighbors via a distributed numpy int64
     kernel (block nested loop, `_block_pairs_cogrouped`).
 
     Each kernel call does one BLAS-free exact integer matmul for its
@@ -148,7 +177,6 @@ def knn_topk_bruteforce(
     import pandas as pd
     from pyspark.sql.types import (
         DoubleType,
-        IntegerType,
         LongType,
         StructField,
         StructType,
@@ -169,28 +197,18 @@ def knn_topk_bruteforce(
             return pd.DataFrame(
                 {"vec_id": [], "neighbor": [], "cos": []}
             ).astype({"vec_id": "int64", "neighbor": "int64", "cos": "float64"})
-        qa = _quant(np.stack(left[vec_col].to_numpy()))
+        qa = _quant(np.stack(left["embedding"].to_numpy()))
         qb = _quant(np.stack(right["r_vec"].to_numpy()))
-        na = (qa * qa).sum(axis=1)
-        nb = (qb * qb).sum(axis=1)
-        aids = left["vec_id"].to_numpy()
         bids = right["r_vec_id"].to_numpy()
-        cos = (qa @ qb.T) / np.sqrt(
-            na[:, None].astype(np.float64) * nb[None, :].astype(np.float64)
+        cos = _cos_tile(qa, (qa * qa).sum(axis=1), qb, (qb * qb).sum(axis=1))
+        out_id, out_nb, out_cos = _topk_not_self(
+            left["vec_id"].to_numpy(), bids, cos, KNN_K
         )
-        out_id, out_nb, out_cos = [], [], []
-        for i, vid in enumerate(aids):
-            row = cos[i]
-            mask = bids != vid  # exclude self
-            order = np.lexsort((bids[mask], -row[mask]))[:k]
-            out_id.extend([vid] * len(order))
-            out_nb.extend(bids[mask][order].tolist())
-            out_cos.extend(row[mask][order].tolist())
         return pd.DataFrame(
             {"vec_id": out_id, "neighbor": out_nb, "cos": out_cos}
         )
 
-    tiles = _block_pairs_cogrouped(emb, vec_col, KNN_BLOCKS).applyInPandas(
+    tiles = _block_pairs_cogrouped(emb).applyInPandas(
         kernel, schema=tile_schema
     )
     from pyspark.sql import Window
@@ -198,13 +216,13 @@ def knn_topk_bruteforce(
     w = Window.partitionBy("vec_id").orderBy(F.col("cos").desc(), "neighbor")
     return (
         tiles.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= KNN_K)
         .select("vec_id", "rank", "neighbor", "cos")
     )
 
 
 def neardup_pairs_bruteforce(
-    spark, emb: DataFrame, threshold: float, vec_col: str = "embedding"
+    spark, emb: DataFrame, threshold: float
 ) -> DataFrame:
     """Unordered pairs with cosine ≥ threshold — same distributed
     block-nested-loop kernel as `knn_topk_bruteforce`; qualifying pairs
@@ -235,24 +253,18 @@ def neardup_pairs_bruteforce(
             return pd.DataFrame({"id_a": [], "id_b": [], "cos": []}).astype(
                 {"id_a": "int64", "id_b": "int64", "cos": "float64"}
             )
-        qa = _quant(np.stack(left[vec_col].to_numpy()))
+        qa = _quant(np.stack(left["embedding"].to_numpy()))
         qb = _quant(np.stack(right["r_vec"].to_numpy()))
-        na = (qa * qa).sum(axis=1)
-        nb = (qb * qb).sum(axis=1)
         aids = left["vec_id"].to_numpy()
         bids = right["r_vec_id"].to_numpy()
-        cos = (qa @ qb.T) / np.sqrt(
-            na[:, None].astype(np.float64) * nb[None, :].astype(np.float64)
-        )
+        cos = _cos_tile(qa, (qa * qa).sum(axis=1), qb, (qb * qb).sum(axis=1))
         keep = (cos >= threshold) & (aids[:, None] < bids[None, :])
         ai, bi = np.nonzero(keep)
         return pd.DataFrame(
             {"id_a": aids[ai], "id_b": bids[bi], "cos": cos[ai, bi]}
         )
 
-    return _block_pairs_cogrouped(emb, vec_col, KNN_BLOCKS).applyInPandas(
-        kernel, schema=schema
-    )
+    return _block_pairs_cogrouped(emb).applyInPandas(kernel, schema=schema)
 
 
 # DuckDB twin of quantize(): (vec_id, qv, n2)
@@ -279,12 +291,24 @@ SQL_COS = (
 
 EMB_DIM = 64  # embeddings table dimension (asserted in quantize callers)
 
+# IVF centroid count bounds for adaptive_centroids and its SQL ladder.
+IVF_K_FLOOR = 16
+IVF_K_MAX = 1 << 16
 
-def adaptive_centroids(n: int, floor: int = 16, max_k: int = 1 << 16) -> int:
-    """Smallest power of two K >= ``floor`` with K² >= n — the √n
+# nprobe=8: at the floor K=16 that probes half the buckets at rank-1
+# recall 0.81 on the synthetic embeddings (sf0.1). The testdata
+# vectors are near-uniform on the sphere — the adversarial case for
+# IVF, where recall ≈ probed fraction (drops as K grows past nprobe);
+# clustered real-world embeddings sit far above this floor.
+NPROBE = 8
+IVF_ITERS = 2  # Lloyd refinement rounds of the IVF codebook
+
+
+def adaptive_centroids(n: int) -> int:
+    """Smallest power of two K >= ``IVF_K_FLOOR`` with K² >= n — the √n
     centroid-count rule that keeps IVF buckets at ~√n vectors — CAPPED
-    at ``max_k`` (default 2¹⁶, the same cap as the twin's CASE
-    ladder). With FIXED K the probed candidate space is ~n²·nprobe/K,
+    at ``IVF_K_MAX`` (2¹⁶, the same cap as the twin's CASE ladder).
+    With FIXED K the probed candidate space is ~n²·nprobe/K,
     a hidden quadratic: the sf0.1→sf1 audit measured
     q_ann_ivf_sampled at 72× for 10× data (20k vectors / 16 centroids
     = 1250-vector buckets). With K ~ √n and fixed nprobe the candidate
@@ -297,21 +321,22 @@ def adaptive_centroids(n: int, floor: int = 16, max_k: int = 1 << 16) -> int:
     would diverge — both sides now share one bound; past it, bucket
     size grows linearly again (at n=2³² that is ~65k-vector buckets —
     shard the corpus before that point)."""
-    K = floor
-    while K * K < n and K < max_k:
+    K = IVF_K_FLOOR
+    while K * K < n and K < IVF_K_MAX:
         K *= 2
     return K
 
 
-def _sql_adaptive_centroids(floor: int = 16, max_k: int = 1 << 16) -> str:
+def _sql_adaptive_centroids() -> str:
     """CASE ladder mirroring :func:`adaptive_centroids` for the twin:
-    K = floor while n <= floor², doubling at each power-of-4 step."""
+    K = IVF_K_FLOOR while n <= IVF_K_FLOOR², doubling at each
+    power-of-4 step."""
     arms = []
-    K = floor
-    while K < max_k:
+    K = IVF_K_FLOOR
+    while K < IVF_K_MAX:
         arms.append(f"WHEN cnt <= {K * K} THEN {K}")
         K *= 2
-    return ("CASE " + " ".join(arms) + f" ELSE {max_k} END")
+    return ("CASE " + " ".join(arms) + f" ELSE {IVF_K_MAX} END")
 
 
 # Block count for the cogrouped centroid-scoring kernel: the corpus
@@ -546,11 +571,7 @@ def _lloyd_partials(
 
 def ivf_topk(
     emb: DataFrame,
-    k: int = 3,
     n_centroids: int = 16,
-    nprobe: int = 4,
-    iters: int = 2,
-    vec_col: str = "embedding",
     seeding: str = "low_id",
     sample_pct: int = 25,
     seed: int = 9001,
@@ -576,9 +597,10 @@ def ivf_topk(
     pass. Codebook-training cost becomes O(sample), not O(table) — the
     difference between feasible and not at 10⁹ vectors.
 
-    Search (both modes): every vector's top-``nprobe`` centroids are
-    probed; the candidate set is vectors HOMED (rank-1) in a probed
-    bucket, then exact quantized-cosine rerank picks top-k. A candidate
+    Both modes run ``IVF_ITERS`` Lloyd iterations. Search (both modes):
+    every vector's top-``NPROBE`` centroids are probed; the candidate
+    set is vectors HOMED (rank-1) in a probed bucket, then exact
+    quantized-cosine rerank picks the top ``KNN_K``. A candidate
     pair meets through exactly one bucket (home is unique), so no dedup
     shuffle.
 
@@ -601,10 +623,8 @@ def ivf_topk(
     # persist the parquet scan + quantization re-executes once per
     # reference — measured 9.9s → 1.8s at sf0.1 for the sampled path.
     # Lazy persist only (zero jobs at construction, lint-pinned);
-    # caller releases via operators.graph.release_caches().
-    q = track_cache(
-        quantize(emb, vec_col).select("vec_id", "qv", "n2").persist()
-    )
+    # released by operators.caching.release_caches().
+    q = track_cache(quantize(emb).select("vec_id", "qv", "n2").persist())
     if seeding == "sampled":
         train = q.filter(portable_uniform_keep(F.col("vec_id"), sample_pct, seed))
     elif seeding == "low_id":
@@ -642,7 +662,7 @@ def ivf_topk(
             F.col("qv").alias("cqv"),
             F.col("n2").alias("cn2"),
         )
-    for _ in range(iters):
+    for _ in range(IVF_ITERS):
         # Update via per-block PARTIAL sums from the assignment kernel
         # (_lloyd_partials): the earlier shape joined the n-row assignment
         # back onto train (a train-sized shuffle) and posexploded n·d
@@ -687,7 +707,7 @@ def ivf_topk(
     # referenced twice (home + probes): persist the n·nprobe probe
     # list — the standard materialized IVF index.
     ranked = track_cache(
-        _centroid_topn(q, cent, nprobe, n_rows=n_rows).persist()
+        _centroid_topn(q, cent, NPROBE, n_rows=n_rows).persist()
     )
     home = ranked.filter(F.col("crank") == 1).select(
         F.col("vec_id").alias("r_vec_id"), F.col("cid").alias("bucket")
@@ -742,23 +762,15 @@ def ivf_topk(
             return pd.DataFrame({"vec_id": [], "neighbor": [], "cos": []}).astype(
                 {"vec_id": "int64", "neighbor": "int64", "cos": "float64"}
             )
-        qa_m = np.stack(left["qv"].to_numpy()).astype(np.int64)
-        qb_m = np.stack(right["r_qv"].to_numpy()).astype(np.int64)
-        na = left["n2"].to_numpy()
-        nb = right["r_n2"].to_numpy()
-        aids = left["vec_id"].to_numpy()
-        bids = right["r_vec_id"].to_numpy()
-        cos = (qa_m @ qb_m.T) / np.sqrt(
-            na[:, None].astype(np.float64) * nb[None, :].astype(np.float64)
+        cos = _cos_tile(
+            np.stack(left["qv"].to_numpy()).astype(np.int64),
+            left["n2"].to_numpy(),
+            np.stack(right["r_qv"].to_numpy()).astype(np.int64),
+            right["r_n2"].to_numpy(),
         )
-        out_id, out_nb, out_cos = [], [], []
-        for i, vid in enumerate(aids):
-            row = cos[i]
-            mask = bids != vid  # exclude self
-            order = np.lexsort((bids[mask], -row[mask]))[:k]
-            out_id.extend([vid] * len(order))
-            out_nb.extend(bids[mask][order].tolist())
-            out_cos.extend(row[mask][order].tolist())
+        out_id, out_nb, out_cos = _topk_not_self(
+            left["vec_id"].to_numpy(), right["r_vec_id"].to_numpy(), cos, KNN_K
+        )
         return pd.DataFrame({"vec_id": out_id, "neighbor": out_nb, "cos": out_cos})
 
     tiles = qa.groupBy("bucket").cogroup(qb.groupBy("bucket")).applyInPandas(
@@ -767,17 +779,12 @@ def ivf_topk(
     w_rank = Window.partitionBy("vec_id").orderBy(F.col("cos").desc(), "neighbor")
     return (
         tiles.withColumn("rank", F.row_number().over(w_rank))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= KNN_K)
         .select("vec_id", "rank", "neighbor", "cos")
     )
 
 
 def sql_ivf(
-    k: int = 3,
-    n_centroids: int | None = 16,
-    nprobe: int = 4,
-    iters: int = 2,
-    dim: int = EMB_DIM,
     seeding: str = "low_id",
     sample_pct: int = 25,
     seed: int = 9001,
@@ -789,11 +796,11 @@ def sql_ivf(
     ``seeding="sampled"`` the Lloyd CTEs range over the hash-sampled
     ``train`` relation and only the final search scans ``q``.
 
-    ``n_centroids=None`` = ADAPTIVE K: a ``params`` CTE computes
-    :func:`adaptive_centroids`' K from count(*) via the integer CASE
-    ladder, and the seeding reads ``(SELECT kc FROM params)`` — the
-    oracle string stays static (registered at import) while K follows
-    the data, matching the Spark side's driver-probe K exactly."""
+    K is ADAPTIVE: a ``params`` CTE computes :func:`adaptive_centroids`'
+    K from count(*) via the integer CASE ladder, and the seeding reads
+    ``(SELECT kc FROM params)`` — the oracle string stays static
+    (registered at import) while K follows the data, matching the
+    Spark side's catalog-row-count K exactly."""
     from frauddetection_spark.operators.sampling import (
         sql_portable_hash_u32,
         sql_portable_uniform_keep,
@@ -806,18 +813,15 @@ def sql_ivf(
     )
     mean_terms = ", ".join(
         f"CAST(round(CAST(sum(qv[{j}]) AS DOUBLE) / count(*)) AS BIGINT)"
-        for j in range(1, dim + 1)
+        for j in range(1, EMB_DIM + 1)
     )
-    n2_terms = " + ".join(f"cqv[{j}] * cqv[{j}]" for j in range(1, dim + 1))
-    ctes = [f"q AS ({SQL_QUANTIZED})"]
-    if n_centroids is None:
-        ctes.append(
-            f"params AS (SELECT {_sql_adaptive_centroids()} AS kc"
-            " FROM (SELECT count(*) AS cnt FROM q))"
-        )
-        kc = "(SELECT kc FROM params)"
-    else:
-        kc = str(n_centroids)
+    n2_terms = " + ".join(f"cqv[{j}] * cqv[{j}]" for j in range(1, EMB_DIM + 1))
+    ctes = [
+        f"q AS ({SQL_QUANTIZED})",
+        f"params AS (SELECT {_sql_adaptive_centroids()} AS kc"
+        " FROM (SELECT count(*) AS cnt FROM q))",
+    ]
+    kc = "(SELECT kc FROM params)"
     if seeding == "sampled":
         ctes.append(
             f"train AS (SELECT * FROM q WHERE "
@@ -836,7 +840,7 @@ def sql_ivf(
             f"cent0 AS (SELECT vec_id AS cid, qv AS cqv, n2 AS cn2 FROM q"
             f" WHERE vec_id < {kc})"
         )
-    for i in range(iters):
+    for i in range(IVF_ITERS):
         ctes.append(
             f"""score{i} AS (
     SELECT q.vec_id, c.cid, {cos_expr} AS ccos
@@ -861,7 +865,7 @@ def sql_ivf(
             f"cent{i + 1} AS (SELECT cid, cqv,"
             f" CAST({n2_terms} AS BIGINT) AS cn2 FROM csum{i})"
         )
-    final = f"cent{iters}"
+    final = f"cent{IVF_ITERS}"
     ctes.append(
         f"""scoref AS (
     SELECT q.vec_id, c.cid, {cos_expr} AS ccos
@@ -881,7 +885,7 @@ def sql_ivf(
     )
     ctes.append(
         f"probes AS (SELECT vec_id, cid AS bucket FROM rankedf"
-        f" WHERE crank <= {nprobe})"
+        f" WHERE crank <= {NPROBE})"
     )
     pair_cos = (
         "CAST(list_sum(list_transform(list_zip(a.qv, b.qv),"
@@ -904,18 +908,25 @@ def sql_ivf(
         SELECT *, row_number() OVER (
             PARTITION BY vec_id ORDER BY cos DESC, neighbor) AS rank
         FROM cands
-    ) WHERE rank <= {k}
+    ) WHERE rank <= {KNN_K}
     ORDER BY vec_id, rank
     """
 
 
-def query_batch_topk(
-    corpus: DataFrame,
-    probes: DataFrame,
-    k: int = 3,
-    n_blocks: int = 32,
-) -> DataFrame:
-    """Asymmetric (serving-shape) exact top-k: a SMALL probe set
+# The query batch: the probes are the first QUERY_CAP multiples of
+# QUERY_MOD (q_ann_query_batch and q_ann_pq). The batch is FIXED, NOT a
+# fixed fraction of the corpus: a "5% of vec_ids" probe rule made
+# probes x corpus = n²/20 work (measured 44.8x on a 10x decade). With
+# the batch pinned, probe-side work is QUERY_CAP·n — linear per decade.
+# 512 is above every oracle-gate probe count (sf0.001/0.01: 25, sf0.1:
+# 100); it binds only at sf1+.
+QUERY_MOD = 20
+QUERY_CAP = 512
+QUERY_BLOCKS = 32  # corpus blocks of query_batch_topk
+
+
+def query_batch_topk(corpus: DataFrame, probes: DataFrame) -> DataFrame:
+    """Asymmetric (serving-shape) exact top-KNN_K: a SMALL probe set
     against the full corpus, as a cogrouped numpy int64 matmul — the
     query-batch sibling of :func:`knn_topk_bruteforce`.
 
@@ -945,14 +956,13 @@ def query_batch_topk(
         StructType,
     )
 
-    blk = F.pmod(F.col("vec_id"), F.lit(n_blocks)).cast("int")
     c = corpus.select(
         F.col("vec_id").alias("r_vec_id"),
         F.col("qv").alias("r_qv"),
         F.col("n2").alias("r_n2"),
-    ).withColumn("b", F.pmod(F.col("r_vec_id"), F.lit(n_blocks)).cast("int"))
+    ).withColumn("b", F.pmod(F.col("r_vec_id"), F.lit(QUERY_BLOCKS)).cast("int"))
     p = probes.withColumn(
-        "b", F.explode(F.sequence(F.lit(0), F.lit(n_blocks - 1)))
+        "b", F.explode(F.sequence(F.lit(0), F.lit(QUERY_BLOCKS - 1)))
     )
 
     tile_schema = StructType(
@@ -972,21 +982,16 @@ def query_batch_topk(
             ).astype(
                 {"query_id": "int64", "neighbor": "int64", "cos": "float64"}
             )
-        qm = np.stack(left["qv"].to_numpy()).astype(np.int64)
-        qn2 = left["n2"].to_numpy().astype(np.float64)
-        qids = left["vec_id"].to_numpy()
-        cm = np.stack(right["r_qv"].to_numpy()).astype(np.int64)
-        cn2 = right["r_n2"].to_numpy().astype(np.float64)
-        cids = right["r_vec_id"].to_numpy()
-        cos = (qm @ cm.T) / np.sqrt(qn2[:, None] * cn2[None, :])
-        out_q, out_n, out_c = [], [], []
-        for i, qid in enumerate(qids):
-            row = cos[i]
-            mask = cids != qid  # exclude self when the probe is in-corpus
-            order = np.lexsort((cids[mask], -row[mask]))[:k]
-            out_q.extend([qid] * len(order))
-            out_n.extend(cids[mask][order].tolist())
-            out_c.extend(row[mask][order].tolist())
+        cos = _cos_tile(
+            np.stack(left["qv"].to_numpy()).astype(np.int64),
+            left["n2"].to_numpy(),
+            np.stack(right["r_qv"].to_numpy()).astype(np.int64),
+            right["r_n2"].to_numpy(),
+        )
+        # a probe is in the corpus too: skip its self-match
+        out_q, out_n, out_c = _topk_not_self(
+            left["vec_id"].to_numpy(), right["r_vec_id"].to_numpy(), cos, KNN_K
+        )
         return pd.DataFrame(
             {"query_id": out_q, "neighbor": out_n, "cos": out_c}
         )
@@ -997,7 +1002,7 @@ def query_batch_topk(
     w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), "neighbor")
     return (
         tiles.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= KNN_K)
         .select("query_id", "rank", "neighbor", "cos")
     )
 
@@ -1164,40 +1169,42 @@ def _pq_encode(
     )
 
 
-def pq_topk(
-    emb: DataFrame,
-    k: int = 3,
-    m: int = 4,
-    subdim: int = 16,
-    ksub: int = 8,
-    iters: int = 1,
-    cand: int = 12,
-    qmod: int = 20,
-    qcap: int = 512,
-    vec_col: str = "embedding",
-    n_rows: int | None = None,
-) -> DataFrame:
+PQ_M = 8        # subspaces (64-dim → 8 × 8)
+PQ_SUBDIM = 8   # dims per subspace
+PQ_KSUB = 32    # centroids per subspace codebook
+PQ_ITERS = 1    # Lloyd refinement rounds per subspace
+# ADC candidates per query before exact rerank. Tuned on the synthetic
+# near-uniform embeddings (the adversarial case for PQ): (m=8, ksub=32,
+# cand=64) → recall@3 = 0.84 vs the exact batch kNN at sf0.01; coarser
+# (m=4, ksub=8, cand=12) scored 0.13. Real-world clustered embeddings
+# sit far above this floor.
+PQ_CAND = 64
+
+
+def pq_topk(emb: DataFrame, n_rows: int | None = None) -> DataFrame:
     """Product-quantization ANN for a query batch, fully deterministic
     and oracle-expressible (:func:`sql_pq` is the same algorithm in
     DuckDB).
 
-    The 100-TB story PQ adds over IVF: the corpus index is m small
-    CODES per vector (here 4 bytes) instead of the d-dim vector —
-    memory drops ~128×, which is what lets a billion-vector index live
-    in executor RAM. Pipeline:
+    The 100-TB story PQ adds over IVF: the corpus index is PQ_M small
+    CODES per vector (here 8 one-byte codes) instead of the 64-dim
+    int64 vector — memory drops ~64×, which is what lets a billion-vector index live
+    in executor RAM. The probe batch is the first ``QUERY_CAP``
+    multiples of ``QUERY_MOD``; the corpus is every other vector.
+    Pipeline:
 
-    1. split each quantized vector into ``m`` contiguous ``subdim``-dim
-       subvectors;
-    2. train one ``ksub``-centroid codebook per subspace (Lloyd on
+    1. split each quantized vector into ``PQ_M`` contiguous
+       ``PQ_SUBDIM``-dim subvectors;
+    2. train one ``PQ_KSUB``-centroid codebook per subspace (Lloyd on
        exact-int L2: d² = |s|² + |c|² − 2⟨s,c⟩, ties → lower cid;
        means requantized exactly like ivf_topk);
     3. encode the corpus: per (vector, subspace) the argmin-d² cid;
     4. ADC search: each query precomputes an m×ksub dot-product LUT
        against the codebooks; the approximate dot of query·vector is
-       the sum of m LUT lookups — a join on (m, cid) + sum, never
+       the sum of PQ_M LUT lookups — a join on (m, cid) + sum, never
        touching corpus vectors;
-    5. exact quantized-cosine rerank of the top-``cand`` ADC
-       candidates per query.
+    5. exact quantized-cosine rerank of the top-``PQ_CAND`` ADC
+       candidates per query, keeping the top ``KNN_K``.
 
     All similarity arithmetic is exact int64 up to the final IEEE
     divisions, so even the APPROXIMATE scores hash-match the SQL twin.
@@ -1211,14 +1218,14 @@ def pq_topk(
 
     from frauddetection_spark.operators.caching import track_cache
 
-    q = track_cache(quantize(emb, vec_col).select("vec_id", "qv", "n2").persist())
+    q = track_cache(quantize(emb).select("vec_id", "qv", "n2").persist())
     sub_structs = F.array(
         *[
             F.struct(
                 F.lit(mm).alias("m"),
-                F.slice("qv", mm * subdim + 1, subdim).alias("sub"),
+                F.slice("qv", mm * PQ_SUBDIM + 1, PQ_SUBDIM).alias("sub"),
             )
-            for mm in range(m)
+            for mm in range(PQ_M)
         ]
     )
     # `subs` is not persisted — only the two CONSTANT-SIZE
@@ -1238,12 +1245,12 @@ def pq_topk(
     subs = q.select("vec_id", F.explode(sub_structs).alias("s")).select(
         "vec_id", "s.m", "s.sub"
     )
-    cent = subs.filter(F.col("vec_id") < ksub).select(
+    cent = subs.filter(F.col("vec_id") < PQ_KSUB).select(
         "m",
         F.col("vec_id").alias("cid"),
         F.col("sub").alias("csub"),
     )
-    for _ in range(iters):
+    for _ in range(PQ_ITERS):
         # Lloyd update from per-block partial sums (the IVF
         # _lloyd_partials shape): the kernel assigns AND pre-aggregates
         # map-side, so the update shuffles ≤ B·m·ksub tiny rows
@@ -1251,12 +1258,12 @@ def pq_topk(
         # bit-equal to the global Σ and the one IEEE division + round
         # sees identical inputs — sql_pq (unchanged) still
         # hash-matches.
-        part = _pq_partials(q, cent, subdim, n_rows=n_rows)
+        part = _pq_partials(q, cent, PQ_SUBDIM, n_rows=n_rows)
         comp = part.groupBy("m", "cid").agg(
             F.sum("pcnt").alias("_n"),
             *[
                 F.sum(F.col("psum")[j]).alias(f"_s{j}")
-                for j in range(subdim)
+                for j in range(PQ_SUBDIM)
             ],
         )
         cent = track_cache(
@@ -1268,7 +1275,7 @@ def pq_topk(
                         F.round(
                             F.col(f"_s{j}").cast("double") / F.col("_n")
                         ).cast("bigint")
-                        for j in range(subdim)
+                        for j in range(PQ_SUBDIM)
                     ]
                 ).alias("csub"),
             )
@@ -1276,13 +1283,14 @@ def pq_topk(
             .persist()
         )
 
-    # Probe set = the first `qcap` multiples of `qmod` — a FIXED
-    # serving batch; corpus = everything else. The original unbounded
-    # "every multiple of qmod" rule made probes 5% OF THE CORPUS, and
-    # ADC work probes*corpus*m = quadratic — the sf1->sf10 audit
-    # measured it at 18.9x on a 10x decade. With the batch pinned,
-    # ADC is qcap*n*m LUT gathers: linear per decade.
-    probe = (F.col("vec_id") % qmod == 0) & (F.col("vec_id") < qmod * qcap)
+    # Probe set = the fixed serving batch (see QUERY_CAP); corpus =
+    # everything else. An unbounded "every multiple of QUERY_MOD" rule
+    # made ADC work probes*corpus*m quadratic (measured 18.9x on a 10x
+    # decade); with the batch pinned, ADC is QUERY_CAP*n*m LUT
+    # gathers: linear per decade.
+    probe = (F.col("vec_id") % QUERY_MOD == 0) & (
+        F.col("vec_id") < QUERY_MOD * QUERY_CAP
+    )
     lut = (
         subs.filter(probe)
         .select(F.col("vec_id").alias("query_id"), "m", "sub")
@@ -1306,7 +1314,7 @@ def pq_topk(
     # stay in their hash block, every query's LUT is replicated onto
     # each block, the kernel gathers adot[q, x] = Σ_m LUT[q, m, code]
     # as m int64 numpy gathers (exact in any order → still hash-equal
-    # to the SQL twin). Per-block top-`cand` tiles merge under the same
+    # to the SQL twin). Per-block top-PQ_CAND tiles merge under the same
     # (acos DESC, neighbor) order globally.
     import numpy as np
     import pandas as pd
@@ -1323,7 +1331,7 @@ def pq_topk(
     # old groupBy(vec_id) sort_array(collect_list) re-assembly (an
     # n·m-row shuffle) and the n2 join back onto the corpus are gone.
     codes_wide = _pq_encode(
-        q.filter(~probe), cent, subdim, n_rows=n_rows
+        q.filter(~probe), cent, PQ_SUBDIM, n_rows=n_rows
     ).withColumn("b", F.pmod(F.col("vec_id"), F.lit(n_blocks)).cast("int"))
     lut_rep = (
         lut.join(
@@ -1341,8 +1349,6 @@ def pq_topk(
             StructField("acos", DoubleType()),
         ]
     )
-    n_m, n_ksub = m, ksub
-
     def adc_kernel(_key, lt: pd.DataFrame, ct: pd.DataFrame) -> pd.DataFrame:
         empty = pd.DataFrame(
             {"query_id": [], "neighbor": [], "acos": []}
@@ -1356,9 +1362,9 @@ def pq_topk(
         qids = np.sort(lt["query_id"].unique())
         qpos = {int(qq): i for i, qq in enumerate(qids)}
         # dense LUT tensor [nq, m*ksub] (int64, exact)
-        T = np.zeros((len(qids), n_m * n_ksub), dtype=np.int64)
+        T = np.zeros((len(qids), PQ_M * PQ_KSUB), dtype=np.int64)
         li = lt["query_id"].map(qpos).to_numpy()
-        T[li, lt["m"].to_numpy() * n_ksub + lt["cid"].to_numpy()] = lt[
+        T[li, lt["m"].to_numpy() * PQ_KSUB + lt["cid"].to_numpy()] = lt[
             "ldot"
         ].to_numpy()
         qn2 = np.zeros(len(qids), dtype=np.float64)
@@ -1367,17 +1373,10 @@ def pq_topk(
         xids = ct["vec_id"].to_numpy()
         xn2 = ct["n2"].to_numpy().astype(np.float64)
         adot = np.zeros((len(qids), len(xids)), dtype=np.int64)
-        for mm in range(n_m):
-            adot += T[:, mm * n_ksub + C[:, mm]]
+        for mm in range(PQ_M):
+            adot += T[:, mm * PQ_KSUB + C[:, mm]]
         acos = adot / np.sqrt(qn2[:, None] * xn2[None, :])
-        out_q, out_n, out_a = [], [], []
-        for i, qid in enumerate(qids):
-            row = acos[i]
-            mask = xids != qid  # queries never match themselves
-            order = np.lexsort((xids[mask], -row[mask]))[:cand]
-            out_q.extend([int(qid)] * len(order))
-            out_n.extend(xids[mask][order].tolist())
-            out_a.extend(row[mask][order].tolist())
+        out_q, out_n, out_a = _topk_not_self(qids, xids, acos, PQ_CAND)
         return pd.DataFrame(
             {"query_id": out_q, "neighbor": out_n, "acos": out_a}
         )
@@ -1392,7 +1391,7 @@ def pq_topk(
     )
     cands = (
         tiles.withColumn("crn", F.row_number().over(w_cand))
-        .filter(F.col("crn") <= cand)
+        .filter(F.col("crn") <= PQ_CAND)
         .select("query_id", "neighbor")
     )
     pair_dot = F.aggregate(
@@ -1428,29 +1427,20 @@ def pq_topk(
     )
     return (
         rr.withColumn("rank", F.row_number().over(w_k).cast("bigint"))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= KNN_K)
         .select("query_id", "rank", "neighbor", "cos")
     )
 
 
-def sql_pq(
-    k: int = 3,
-    m: int = 4,
-    subdim: int = 16,
-    ksub: int = 8,
-    iters: int = 1,
-    cand: int = 12,
-    qmod: int = 20,
-    qcap: int = 512,
-) -> str:
+def sql_pq() -> str:
     """DuckDB twin of :func:`pq_topk` — subspace split as unrolled
     UNION ALL slices, Lloyd as chained CTEs (sql_ivf's discipline),
-    ADC as the same (m, cid) join + sum. `qcap` mirrors the Spark
-    side's fixed probe batch (first qcap multiples of qmod)."""
+    ADC as the same (m, cid) join + sum, over the same fixed probe
+    batch."""
     slices = "\n        UNION ALL ".join(
         f"SELECT vec_id, {mm} AS m,"
-        f" qv[{mm * subdim + 1}:{(mm + 1) * subdim}] AS sub FROM q"
-        for mm in range(m)
+        f" qv[{mm * PQ_SUBDIM + 1}:{(mm + 1) * PQ_SUBDIM}] AS sub FROM q"
+        for mm in range(PQ_M)
     )
     sub_dot = (
         "CAST(list_sum(list_transform(list_zip(s.sub, c.csub),"
@@ -1458,9 +1448,11 @@ def sql_pq(
     )
     mean_terms = ", ".join(
         f"CAST(round(CAST(sum(s.sub[{j}]) AS DOUBLE) / count(*)) AS BIGINT)"
-        for j in range(1, subdim + 1)
+        for j in range(1, PQ_SUBDIM + 1)
     )
-    n2_terms = " + ".join(f"csub[{j}] * csub[{j}]" for j in range(1, subdim + 1))
+    n2_terms = " + ".join(
+        f"csub[{j}] * csub[{j}]" for j in range(1, PQ_SUBDIM + 1)
+    )
     ctes = [
         f"q AS ({SQL_QUANTIZED})",
         f"""subs0 AS (
@@ -1473,9 +1465,9 @@ def sql_pq(
         FROM subs0
     )""",
         f"cent0 AS (SELECT m, vec_id AS cid, sub AS csub, sub_n2 AS cn2"
-        f" FROM subs WHERE vec_id < {ksub})",
+        f" FROM subs WHERE vec_id < {PQ_KSUB})",
     ]
-    for i in range(iters):
+    for i in range(PQ_ITERS):
         ctes.append(
             f"""score{i} AS (
         SELECT s.vec_id, s.m, c.cid,
@@ -1503,7 +1495,7 @@ def sql_pq(
             f"cent{i + 1} AS (SELECT m, cid, csub,"
             f" CAST({n2_terms} AS BIGINT) AS cn2 FROM comp{i})"
         )
-    final = f"cent{iters}"
+    final = f"cent{PQ_ITERS}"
     ctes.append(
         f"""fscore AS (
         SELECT s.vec_id, s.m, c.cid,
@@ -1521,13 +1513,14 @@ def sql_pq(
     )
     ctes.append(
         f"codes AS (SELECT vec_id, m, cid FROM fassign"
-        f" WHERE NOT (vec_id % {qmod} = 0 AND vec_id < {qmod * qcap}))"
+        f" WHERE NOT (vec_id % {QUERY_MOD} = 0"
+        f" AND vec_id < {QUERY_MOD * QUERY_CAP}))"
     )
     ctes.append(
         f"""lut AS (
         SELECT s.vec_id AS query_id, s.m, c.cid, {sub_dot} AS ldot
         FROM subs s JOIN {final} c ON s.m = c.m
-        WHERE s.vec_id % {qmod} = 0 AND s.vec_id < {qmod * qcap}
+        WHERE s.vec_id % {QUERY_MOD} = 0 AND s.vec_id < {QUERY_MOD * QUERY_CAP}
     )"""
     )
     ctes.append(
@@ -1554,7 +1547,7 @@ def sql_pq(
         SELECT query_id, neighbor FROM (
             SELECT *, row_number() OVER (
                 PARTITION BY query_id ORDER BY acos DESC, neighbor) AS crn
-            FROM scored) WHERE crn <= {cand}
+            FROM scored) WHERE crn <= {PQ_CAND}
     )"""
     )
     ctes.append(
@@ -1575,6 +1568,6 @@ def sql_pq(
         SELECT *, row_number() OVER (
             PARTITION BY query_id ORDER BY cos DESC, neighbor) AS rank
         FROM rr
-    ) WHERE rank <= {k}
+    ) WHERE rank <= {KNN_K}
     ORDER BY query_id, rank
     """

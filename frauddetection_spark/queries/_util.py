@@ -28,14 +28,14 @@ def r6(c: Column | str) -> Column:
     return F.round(F.col(c) if isinstance(c, str) else c, 6)
 
 
-def week_str(ts_col: str = "ts") -> Column:
-    """Monday-anchored week bucket as a plain string.
+def week_str() -> Column:
+    """Monday-anchored week bucket of ``ts`` as a plain string.
 
     Both Spark and DuckDB ``date_trunc('week', ts)`` truncate to Monday;
     emitting a *string* avoids date-vs-timestamp dtype drift between the
     two engines' pandas conversions.
     """
-    return F.date_format(F.date_trunc("week", F.col(ts_col)), "yyyy-MM-dd")
+    return F.date_format(F.date_trunc("week", F.col("ts")), "yyyy-MM-dd")
 
 
 # DuckDB twin of week_str

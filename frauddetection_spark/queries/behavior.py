@@ -261,7 +261,7 @@ def q_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     no_self = e.filter(F.col("src") != F.col("dst"))
     # und feeds the degree table AND the endpoint join, deg both
     # endpoint probes — persist or the edge derivation replays per
-    # reference (r07 sweep: 6 parquet scans without the persists)
+    # reference (measured: 6 parquet scans without the persists)
     und = track_cache(
         mirror(no_self)
         .persist()
@@ -1194,7 +1194,7 @@ def q_growth_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     from frauddetection_spark.operators.caching import track_cache
 
     # feeds the window-marked frame AND the churn anti-join probe —
-    # persisted (r10) so the scan+distinct runs once
+    # persisted so the scan+distinct runs once
     ud = track_cache(
         t(spark, sf_dir, "events")
         .select(
@@ -1208,7 +1208,7 @@ def q_growth_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     w_first = Window.partitionBy("user_id")
     w_lag = Window.partitionBy("user_id").orderBy("day")
-    # classed AND the churn leg both read it — persisted (r10) so the
+    # classed AND the churn leg both read it — persisted so the
     # two user-partitioned windows run once
     marked = track_cache(
         ud.select(
@@ -1288,7 +1288,7 @@ def q_rolling_dau(spark: SparkSession, sf_dir: str) -> DataFrame:
     from frauddetection_spark.operators.caching import track_cache
 
     # ud feeds the DAU aggregate AND the 7-day fan-out, days feeds the
-    # anchor semi join AND the final join — persisted (r10), or the
+    # anchor semi join AND the final join — persisted, or the
     # scan+distinct replays per reference (executed plan: 3 full
     # evaluations, zero ReusedExchange)
     ud = track_cache(
@@ -1374,7 +1374,7 @@ def q_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     collapses before any ordered window runs."""
     uw = t(spark, sf_dir, "events").select(
         "user_id",
-        week_str("ts").alias("week"),
+        week_str().alias("week"),
         F.when(F.col("event_type") == "purchase", cents("value"))
         .otherwise(0)
         .alias("c"),
@@ -1697,8 +1697,6 @@ _MK_MASS = 10 ** 12       # integer mass units at START
 def markov_removal_effects(
     mat: list[tuple[str, str, int]],
     scenarios: dict[str, str | None],
-    mass0: int = _MK_MASS,
-    steps: int = _MK_L,
 ) -> dict[str, tuple[int, int]]:
     """Exact-integer removal-effect evaluation over a collected
     transition matrix — the constant-size driver tail of
@@ -1707,7 +1705,7 @@ def markov_removal_effects(
     crossJoin/ptab formulation (tests/test_hypothesis.py). Per
     scenario: drop transitions OUT of the removed channel, redirect
     transitions INTO it onto NULL, add the two absorbing self-loops,
-    then iterate the START mass ``steps`` times with per-term
+    then iterate the START mass (``_MK_MASS``) ``_MK_L`` times with per-term
     floor((mass·c) div row_total) — floors only lose mass, never
     create it. Returns {scenario: (conv_mass, null_mass)}."""
     result: dict[str, tuple[int, int]] = {}
@@ -1723,8 +1721,8 @@ def markov_removal_effects(
         r_tot: dict[str, int] = {}
         for (s, _t3), c in agg.items():
             r_tot[s] = r_tot.get(s, 0) + c
-        mass = {"START": mass0}
-        for _ in range(steps):
+        mass = {"START": _MK_MASS}
+        for _ in range(_MK_L):
             nxt: dict[str, int] = {}
             for state, m in mass.items():
                 for (s, t3), c in agg.items():
@@ -1898,7 +1896,7 @@ def q_attribution_markov(spark: SparkSession, sf_dir: str) -> DataFrame:
     join — the heavy lifting is ONE pass over events to build
     transitions.
 
-    Plan shape (r6 rewrite): the journey build is a SINGLE
+    Plan shape: the journey build is a SINGLE
     user-partitioned window pass — conv_key (min purchase key), the
     per-user touch count, and row_number all ride one
     hash-partition-by-user exchange, and the per-row transition pairs
@@ -2213,7 +2211,7 @@ def q_attribution_shapley(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     f0 = e.groupBy("user_id").agg(F.min("us").alias("t0"))
     # ew feeds the first-purchase probe AND the mask aggregate —
-    # persist or the window-filter join replays (r07 sweep: 12 scans
+    # persist or the window-filter join replays (measured: 12 scans
     # in the executed plan)
     ew = track_cache(
         e.join(f0, "user_id")

@@ -27,7 +27,7 @@ _WEEK = SQL_WEEK.format(ts="ts")
 
 
 def _events_with_week(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return t(spark, sf_dir, "events").withColumn("week", week_str("ts"))
+    return t(spark, sf_dir, "events").withColumn("week", week_str())
 
 
 def _counterparty(df: DataFrame) -> DataFrame:
@@ -335,8 +335,8 @@ def q_jaccard_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     122-129, src/utils.py:109-128). collect_set per (user, week) —
     bounded by distinct contacts, not events — then a lag over weeks.
     The reference's O(users × weeks) python loop is one shuffle here
-    (r10: collect_set dedups inside the aggregation buffer with
-    map-side partial merge, replacing the previous distinct() +
+    (collect_set dedups inside the aggregation buffer with
+    map-side partial merge, replacing a distinct() +
     collect_list two-shuffle form — same sorted sets, one fewer
     event-scale exchange)."""
     e = _counterparty(_events_with_week(spark, sf_dir))
@@ -438,7 +438,7 @@ def q_class_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
     from frauddetection_spark.operators.caching import track_cache
 
     e = t(spark, sf_dir, "events")
-    # type-sized; feeds the total AND the output — persisted (r10) so
+    # type-sized; feeds the total AND the output — persisted so
     # the events aggregate runs once (zero ReusedExchange before)
     c = track_cache(
         e.groupBy("event_type")
@@ -497,9 +497,8 @@ def q_dense_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``distinct user_id`` / ``distinct week`` over the aggregate's keys
     equal the distincts over events, since groupBy drops no key. The
     original three-scan form (two dimension distincts + the counts agg,
-    each reading events from parquet) was r13's confirmed bench drift:
-    identical plan, but 3 fact scans + 5 exchanges of per-stage latency
-    the CPU calib can't see. At 100 TB the win is structural — one
+    each reading events from parquet) measured slower: 3 fact scans +
+    5 exchanges of per-stage latency. At 100 TB the win is structural — one
     pass over the fact, dims from the ~|users|·|weeks|-sized aggregate.
     The spine is tiny relative to the fact, so the cross join
     broadcasts."""
@@ -727,7 +726,7 @@ def q_behavioral_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     generic mode-via-window plan can't assume); peak_hour is the
     histogram's first argmax (ties → lowest hour, exactly the old
     row_number(c DESC, hour) order) and n_active_hours its non-zero
-    bucket count, both post-agg projections. r10 rewrite vs the
+    bucket count, both post-agg projections. Compared with the
     mode-ranking branch (groupBy(user, week, hour) → row_number window
     → join back): executed plan drops 7 → 2 exchanges, 2 → 1 events
     scans, 4 → 2 sorts, and the two-countDistinct Expand (3× rows
@@ -947,7 +946,7 @@ def q_user_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     rank-transform feature family (deterministic because ties are
     broken by key, and the rank inputs are exact int64 cents).
 
-    Scale: round 2 used ``ntile/percent_rank/cume_dist`` over a global
+    Scale: an earlier form used ``ntile/percent_rank/cume_dist`` over a global
     ``Window.orderBy`` — a single-reducer sort even after the groupBy
     reduction (at 100× users, one task holds every user). Now the
     global rank comes from the two-phase range-partitioned prefix
@@ -1152,7 +1151,7 @@ def q_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("hi"),
         F.max("n").alias("n"),
     )
-    # clip from the RAW projection, not from `ranked` (r10): the clip
+    # clip from the RAW projection, not from `ranked`: the clip
     # side needs no rank columns, and referencing `ranked` here re-ran
     # the two windows a second time (zero ReusedExchange)
     clipped = (
@@ -1509,7 +1508,7 @@ def q_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id", "session_id")
         .agg(F.min("us").alias("start_us"), (F.max("us") + 1).alias("end_us"))
     )
-    # both sweep boundaries from ONE reference to sess (r10): the
+    # both sweep boundaries from ONE reference to sess: the
     # two-branch union replayed the whole sessionize window + groupBy
     # pipeline per branch
     b = sess.select(

@@ -11,6 +11,10 @@ from pyspark.sql import functions as F
 
 from frauddetection_spark.operators.graph import (
     BITMASK_MAX_CONTACTS,
+    PR_BASE,
+    PR_DAMPING_PCT,
+    PR_ITERATIONS,
+    PR_SCALE,
     ContactStats,
     pagerank_integer,
     aggregate_messages,
@@ -180,10 +184,10 @@ def q_graph_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
                 * 1_000_000
             )
             .cast("bigint")
-            .alias("val_q")
+            .alias("value")
         )
     )
-    agg = aggregate_messages(e, node_vals, id_col="id", value_col="val_q")
+    agg = aggregate_messages(e, node_vals)
     return agg.select(
         "node",
         (F.col("msg_sum").cast("double") / 1_000_000).alias("msg_sum"),
@@ -514,13 +518,11 @@ def q_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 # J5/M2 — fixed-iteration PageRank (integer-exact, oracle-unrolled)
 # ---------------------------------------------------------------------------
 
-_PR_ITER, _PR_SCALE, _PR_DAMP = 3, 1_000_000, 85
-_PR_BASE = (_PR_SCALE * (100 - _PR_DAMP)) // 100
 
 
 def _pagerank_oracle() -> str:
     """DuckDB twin of pagerank_integer: the SAME integer recurrence
-    unrolled to _PR_ITER rounds as chained CTEs (DuckDB // == Spark
+    unrolled to PR_ITERATIONS rounds as chained CTEs (DuckDB // == Spark
     div on non-negative int64)."""
     sql = f"""
     WITH edges AS ({_SQL_EDGES}),
@@ -531,8 +533,8 @@ def _pagerank_oracle() -> str:
         )
     ),
     outdeg AS (SELECT src, count(*) AS outdeg FROM edges GROUP BY src),
-    r0 AS (SELECT node, CAST({_PR_SCALE} AS BIGINT) AS rank_micro FROM nodes)"""
-    for k in range(1, _PR_ITER + 1):
+    r0 AS (SELECT node, CAST({PR_SCALE} AS BIGINT) AS rank_micro FROM nodes)"""
+    for k in range(1, PR_ITERATIONS + 1):
         sql += f""",
     s{k} AS (
         SELECT e.dst AS node, sum(r.rank_micro // o.outdeg) AS s
@@ -543,12 +545,12 @@ def _pagerank_oracle() -> str:
     ),
     r{k} AS (
         SELECT n.node,
-               CAST({_PR_BASE} + ({_PR_DAMP} * COALESCE(s.s, 0)) // 100
+               CAST({PR_BASE} + ({PR_DAMPING_PCT} * COALESCE(s.s, 0)) // 100
                     AS BIGINT) AS rank_micro
         FROM nodes n LEFT JOIN s{k} s ON n.node = s.node
     )"""
     sql += f"""
-    SELECT node, rank_micro FROM r{_PR_ITER} ORDER BY node
+    SELECT node, rank_micro FROM r{PR_ITERATIONS} ORDER BY node
     """
     return sql
 
@@ -566,9 +568,7 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     unrolled DuckDB twin hash-matches; see
     operators/graph.py::pagerank_integer for the scale shape."""
     e = edges_from_events(t(spark, sf_dir, "events"))
-    return pagerank_integer(
-        e, iterations=_PR_ITER, damping_pct=_PR_DAMP, scale=_PR_SCALE
-    ).orderBy("node")
+    return pagerank_integer(e).orderBy("node")
 
 
 # ---------------------------------------------------------------------------

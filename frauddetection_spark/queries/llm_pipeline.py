@@ -386,7 +386,7 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = t(spark, sf_dir, "documents")
     # shared frontier: both the benchmark and train branches scan sh
-    # (tracked — released via operators.graph.release_caches())
+    # (tracked — released via operators.caching.release_caches())
     sh = track_cache(word_shingles(docs).persist())
     bench = (
         sh.filter(F.col("doc_id") % BENCH_MOD == 0)
@@ -1451,7 +1451,7 @@ def q_corpus_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
         .persist()
     )
-    # Filter BEFORE shingling (r08): both branches' predicates are
+    # Filter BEFORE shingling: both branches' predicates are
     # per-doc, so they commute with the shingle explode — the benchmark
     # side shingles only the ~1/BENCH_MOD held-out slice and the
     # training side only the dedup survivors, instead of replaying the

@@ -2217,7 +2217,7 @@ def q_semi_additive(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale."""
     e = t(spark, sf_dir, "events").select(
         "user_id",
-        week_str("ts").alias("week"),
+        week_str().alias("week"),
         cents("value").alias("c"),
         "ts",
         "event_id",
@@ -3676,7 +3676,7 @@ def q_tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
     MIN subquery (cost = min cost over the same region-restricted
     supply), decorrelated to a PARTITIONED WINDOW MIN over the same
     frame (one shuffle on ps_partkey, no aggregate-join-back — the
-    join form planned the supply pipeline twice; r08) — ties keep ALL
+    join form planned the supply pipeline twice) — ties keep ALL
     min-cost suppliers, per the original semantics. The
     region→nation→supplier
     chain collapses to a ~1/5-of-suppliers broadcast before the
@@ -3705,7 +3705,7 @@ def q_tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
     # supply pipeline (lineitem groupBy + supplier broadcast) TWICE —
     # 9 live scans; the window min is one shuffle on ps_partkey over a
     # single pipeline (4 scans), and keeps all tied min-cost suppliers
-    # exactly like the join form (r08 replayed-subtree follow-up).
+    # exactly like the join form.
     w_mn = Window.partitionBy("ps_partkey")
     p = t(spark, sf_dir, "part").filter(F.col("p_size") == 15).select(
         "p_partkey", "p_type"
@@ -3769,8 +3769,8 @@ def q_tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("s_suppkey")
     # Persist v: it feeds BOTH the 1-row (Σ, n) total and the filtered
     # output — unpersisted, the lineitem groupBy + supplier join replay
-    # once per reference (the r07 sweep's base-relation-probed-by-own-
-    # aggregate shape; this query was the audit's last >3× grower).
+    # once per reference (the base-relation-probed-by-own-aggregate
+    # shape; this query was the scale audit's last >3× grower).
     # Per-part aggregate rows, far smaller than the fact input.
     v = track_cache(
         sup.join(F.broadcast(s), F.col("s_suppkey") == F.col("ps_suppkey"))
@@ -3972,7 +3972,7 @@ def q_cascade_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # the seed and the order frontier are each probed twice (the next
     # level's semi join + their own count) — persist the tiny key sets
-    # or each level's derivation replays (r07 sweep)
+    # or each level's derivation replays
     seed = track_cache(
         t(spark, sf_dir, "customer")
         .filter(F.col("c_acctbal") < 0)

@@ -154,7 +154,7 @@ def q_sampling_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # nodes feeds the class-rate groupBy, the grand-total aggregate
     # and the weight join — persist or the label+degree build replays
-    # 3× (r07 sweep: 8 parquet scans in the executed plan)
+    # 3× (measured: 8 parquet scans in the executed plan)
     nodes = track_cache(
         labels.join(deg, "user_id", "left").na.fill({"degree": 0}).persist()
     )
@@ -249,7 +249,7 @@ def q_edge_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     from frauddetection_spark.operators.caching import track_cache
 
     # classed feeds the class counts, the grand total and the weight
-    # join — persist or the edge+label build replays 3× (r07 sweep:
+    # join — persist or the edge+label build replays 3× (measured:
     # 18 parquet scans / 41 exchanges in the executed plan)
     classed = track_cache(
         le.withColumn(
@@ -370,7 +370,7 @@ def q_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cents", F.round(F.col("value") * 100).cast("bigint")
     )
     out = salted_sum_count(
-        e, ["event_type"], "cents", salt_col=F.col("event_id"), n_salts=8
+        e, ["event_type"], "cents", salt_col=F.col("event_id")
     )
     return out.select(
         "event_type", F.col("cents_sum").cast("bigint"), F.col("n")

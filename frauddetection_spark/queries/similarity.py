@@ -29,9 +29,12 @@ from frauddetection_spark.operators.textsim import (
     word_shingles,
 )
 from frauddetection_spark.operators.vectors import (
-    adaptive_centroids,
+    KNN_K,
+    QUERY_CAP,
+    QUERY_MOD,
     SQL_COS,
     SQL_QUANTIZED,
+    adaptive_centroids,
     cosine_pairs,
     ivf_topk,
     knn_topk_bruteforce,
@@ -47,7 +50,6 @@ from frauddetection_spark.sources.catalog import footer
 
 JACCARD_MIN = 0.2
 NEARDUP_COS = 0.4
-KNN_K = 3
 
 
 # ---------------------------------------------------------------------------
@@ -110,7 +112,7 @@ def q_shingle_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     never all-pairs). Exact-int count arithmetic; one final division.
     The shingle relation feeds the self-join twice plus the size
     table — persist the shared frontier once (tracked: released by
-    operators.graph.release_caches() between bench/driver queries)."""
+    operators.caching.release_caches() between queries)."""
     sh = track_cache(word_shingles(t(spark, sf_dir, "documents")).persist())
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
     common = (
@@ -305,7 +307,7 @@ def q_knn_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines. O(n²·d): correct up to ~10⁵ vectors; beyond that use the
     LSH-bucketed variant (q_ann_lsh_ml) with this as the in-bucket
     rerank."""
-    knn = knn_topk_bruteforce(spark, t(spark, sf_dir, "embeddings"), k=KNN_K)
+    knn = knn_topk_bruteforce(spark, t(spark, sf_dir, "embeddings"))
     return knn.select("vec_id", "rank", "neighbor", "cos").orderBy(
         "vec_id", "rank"
     )
@@ -435,23 +437,11 @@ def _embeddings_count(sf_dir: str) -> int:
 # measured at 72× for 10× data. At the oracle-gate scale factors
 # (sf0.001/0.01) embeddings has n=500, so K=32, not the floor of 16;
 # the twin computes the same K from its CASE ladder, so the hashes
-# match.
-# nprobe=8 fixed: at the floor K=16 that probes half the buckets at
-# rank-1 recall 0.81 on the synthetic embeddings (sf0.1). The testdata
-# vectors are near-uniform on the sphere — the adversarial case for
-# IVF, where recall ≈ probed fraction (drops as K grows past nprobe);
-# clustered real-world embeddings sit far above this floor.
-NPROBE = 8
-IVF_ITERS = 2
+# match. NPROBE and IVF_ITERS live with the operator
+# (operators/vectors.py), which both twins read.
 
 
-@register(
-    "q_ann_ivf",
-    oracle=sql_ivf(
-        k=KNN_K, n_centroids=None, nprobe=NPROBE, iters=IVF_ITERS
-    ),
-    survey="E3",
-)
+@register("q_ann_ivf", oracle=sql_ivf(), survey="E3")
 def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF approximate kNN, fully deterministic AND learned: a Lloyd-
     iterated codebook (seeded with the K lowest vec_ids, 2 exact-int
@@ -467,10 +457,7 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = _embeddings_count(sf_dir)
     knn = ivf_topk(
         t(spark, sf_dir, "embeddings"),
-        k=KNN_K,
         n_centroids=adaptive_centroids(n),
-        nprobe=NPROBE,
-        iters=IVF_ITERS,
         n_rows=n,
     )
     return knn.orderBy("vec_id", "rank")
@@ -487,10 +474,6 @@ IVF_SEED = 9001
 @register(
     "q_ann_ivf_sampled",
     oracle=sql_ivf(
-        k=KNN_K,
-        n_centroids=None,
-        nprobe=NPROBE,
-        iters=IVF_ITERS,
         seeding="sampled",
         sample_pct=IVF_SAMPLE_PCT,
         seed=IVF_SEED,
@@ -514,10 +497,7 @@ def q_ann_ivf_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = _embeddings_count(sf_dir)
     knn = ivf_topk(
         t(spark, sf_dir, "embeddings"),
-        k=KNN_K,
         n_centroids=adaptive_centroids(n),
-        nprobe=NPROBE,
-        iters=IVF_ITERS,
         seeding="sampled",
         sample_pct=IVF_SAMPLE_PCT,
         seed=IVF_SEED,
@@ -612,20 +592,6 @@ def q_minhash_est(spark: SparkSession, sf_dir: str) -> DataFrame:
 # E3+ — asymmetric query-batch kNN (broadcast the small probe set)
 # ---------------------------------------------------------------------------
 
-QUERY_MOD = 20  # probe ids are multiples of 20
-# The serving batch is FIXED at this many probes (the first QUERY_CAP
-# multiples of QUERY_MOD), NOT a fixed fraction of the corpus: the
-# sf1->sf10 audit caught the original "5% of vec_ids" probe rule as a
-# quadratic — probes x corpus = n²/20 work, measured 44.8x on a 10x
-# decade — which contradicted the
-# query's own serving story ("a SMALL query batch against the full
-# corpus"). With the batch pinned, probe-side work is QUERY_CAP·n —
-# linear per decade. 512 is above every oracle-gate probe count
-# (sf0.001/0.01: 25, sf0.1: 100), so driver-hashed results are
-# unchanged; it binds only at sf1+ where only growth is measured.
-QUERY_CAP = 512
-
-
 @register(
     "q_ann_query_batch",
     oracle=f"""
@@ -676,7 +642,7 @@ def q_ann_query_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("vec_id") % QUERY_MOD == 0)
         & (F.col("vec_id") < QUERY_MOD * QUERY_CAP)
     )
-    return query_batch_topk(q_all, probes, k=KNN_K).orderBy(
+    return query_batch_topk(q_all, probes).orderBy(
         "query_id", "rank"
     )
 
@@ -685,36 +651,12 @@ def q_ann_query_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 # E3++ — product-quantization ANN (compressed-domain search)
 # ---------------------------------------------------------------------------
 
-PQ_M = 8        # subspaces (64-dim → 8 × 8)
-PQ_SUBDIM = 8   # dims per subspace
-PQ_KSUB = 32    # centroids per subspace codebook
-PQ_ITERS = 1    # Lloyd refinement rounds per subspace
-# ADC candidates per query before exact rerank. Tuned on the synthetic
-# near-uniform embeddings (the adversarial case for PQ): (m=8, ksub=32,
-# cand=64) → recall@3 = 0.84 vs the exact batch kNN at sf0.01; coarser
-# (m=4, ksub=8, cand=12) scored 0.13. Real-world clustered embeddings
-# sit far above this floor.
-PQ_CAND = 64
 
-
-@register(
-    "q_ann_pq",
-    oracle=sql_pq(
-        k=KNN_K,
-        m=PQ_M,
-        subdim=PQ_SUBDIM,
-        ksub=PQ_KSUB,
-        iters=PQ_ITERS,
-        cand=PQ_CAND,
-        qmod=QUERY_MOD,
-        qcap=QUERY_CAP,
-    ),
-    survey="E3",
-)
+@register("q_ann_pq", oracle=sql_pq(), survey="E3")
 def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ANN for the q_ann_query_batch probe set —
-    the MEMORY-compressed scale path: the corpus index is 4 codebook
-    codes per vector (vs 64 dims), ~128× smaller, which is what lets a
+    the MEMORY-compressed scale path: the corpus index is 8 codebook
+    codes per vector (vs 64 dims), ~64× smaller, which is what lets a
     10⁹-vector index stay resident at 100 TB. Per-subspace codebooks
     are Lloyd-trained on exact-int L2; search is asymmetric-distance
     (each query's m×ksub LUT joined to the codes — corpus vectors are
@@ -726,16 +668,7 @@ def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     from frauddetection_spark.operators.vectors import pq_topk
 
     return pq_topk(
-        t(spark, sf_dir, "embeddings"),
-        k=KNN_K,
-        m=PQ_M,
-        subdim=PQ_SUBDIM,
-        ksub=PQ_KSUB,
-        iters=PQ_ITERS,
-        cand=PQ_CAND,
-        qmod=QUERY_MOD,
-        qcap=QUERY_CAP,
-        n_rows=_embeddings_count(sf_dir),
+        t(spark, sf_dir, "embeddings"), n_rows=_embeddings_count(sf_dir)
     ).orderBy("query_id", "rank")
 
 

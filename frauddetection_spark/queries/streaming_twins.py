@@ -1,9 +1,11 @@
 """Batch twins of the streaming window operators (SURVEY.md §2.8 E7).
 
-Each query here is the oracle-checked *definition* of a window
-semantics; frauddetection_spark/streaming/windows.py runs the same
-expressions over an unbounded source. Window starts are emitted as
-epoch seconds (bigint) — tz-free, dtype-drift-free.
+Each query here is the oracle-checked batch run of a window
+semantics; the tumbling and sliding queries call the stream
+definitions in frauddetection_spark/streaming/windows.py directly (a
+batch plan drops the watermark), so the two cannot drift. Window
+starts are emitted as epoch seconds (bigint) — tz-free,
+dtype-drift-free.
 """
 
 from __future__ import annotations
@@ -14,6 +16,7 @@ from pyspark.sql import functions as F
 from frauddetection_spark.operators.rank import prefix_max
 from frauddetection_spark.plans.registry import register
 from frauddetection_spark.queries._util import r6, t
+from frauddetection_spark.streaming.windows import sliding_counts, tumbling_counts
 
 SESSION_GAP_S = 30 * 60
 
@@ -39,24 +42,9 @@ SESSION_GAP_S = 30 * 60
 def q_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hourly tumbling counts + exact-cents sums per event_type —
     window() is epoch-aligned, so batch and stream bucket identically.
-    This is the batch form of streaming.windows.tumbling_counts."""
-    e = t(spark, sf_dir, "events")
-    return (
-        e.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count("*").alias("n"),
-            (
-                F.sum(F.round(F.col("value") * 100).cast("bigint")).cast("double")
-                / 100
-            ).alias("value_sum"),
-        )
-        .select(
-            F.unix_timestamp("w.start").alias("window_start"),
-            "event_type",
-            "n",
-            "value_sum",
-        )
-        .orderBy("window_start", "event_type")
+    This is streaming.windows.tumbling_counts run as a batch."""
+    return tumbling_counts(t(spark, sf_dir, "events")).orderBy(
+        "window_start", "event_type"
     )
 
 
@@ -82,17 +70,10 @@ def q_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1-hour windows sliding every 30 min: each event belongs to two
     windows (the oracle derives both starts arithmetically — the
-    definition window() implements)."""
-    e = t(spark, sf_dir, "events")
-    return (
-        e.groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"), "event_type")
-        .agg(F.count("*").alias("n"))
-        .select(
-            F.unix_timestamp("w.start").alias("window_start"),
-            "event_type",
-            "n",
-        )
-        .orderBy("window_start", "event_type")
+    definition window() implements). This is
+    streaming.windows.sliding_counts run as a batch."""
+    return sliding_counts(t(spark, sf_dir, "events")).orderBy(
+        "window_start", "event_type"
     )
 
 

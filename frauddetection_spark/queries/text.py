@@ -30,8 +30,8 @@ _SQL_STOPWORDS = "(" + ", ".join(f"'{w}'" for w in _STOPWORDS) + ")"
 _BPE_PATTERN = r"[a-z]+|[0-9]+|[^a-z0-9\s]"
 
 
-def _tokens(col: str = "text") -> F.Column:
-    return F.split(F.col(col), _TOKENS_SPARK)
+def _tokens() -> F.Column:
+    return F.split(F.col("text"), _TOKENS_SPARK)
 
 
 # ---------------------------------------------------------------------------
@@ -646,7 +646,7 @@ def q_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines, and per-doc sums add exact ints in any order). Scale:
     dl AND the per-term tfs come out of ONE doc-keyed groupBy (the
     query-term set is fixed and tiny, so each term is a conditional
-    sum column — r10; the previous two-groupBy form re-ran the
+    sum column; a two-groupBy form re-ran the
     tokenize explode once per aggregate, 5 corpus passes in the
     executed plan, zero ReusedExchange); the persisted per-doc table
     feeds tf, dl and the 1-row corpus stats, idf (≤|terms| rows)
@@ -1175,7 +1175,7 @@ def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     (token, doc_id) tf rollup, then token. The head is emitted as a
     comma-joined STRING (the q_collect_series convention): raw
     ArrayType top-level columns crash pandas-based canonicalizers
-    (unhashable list cells) — the r08 driver failure mode, now banned
+    (unhashable list cells) — a comparator failure once seen, now banned
     registry-wide by tests/test_registry_lint.py."""
     tf = (
         t(spark, sf_dir, "documents")

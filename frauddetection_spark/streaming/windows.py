@@ -6,9 +6,9 @@ table: watermarked tumbling / sliding / session windows plus an
 ``applyInPandasWithState`` custom stateful operator.
 
 Design:
-- The SAME window expressions serve batch and streaming — batch twins
-  in queries/streaming_twins.py are the oracle-checked definitions;
-  the streaming functions here reuse their grouping semantics, so a
+- The SAME window expressions serve batch and streaming — the batch
+  twins in queries/streaming_twins.py run `tumbling_counts` and
+  `sliding_counts` over the batch table and are oracle-checked, so a
   backfill (batch) and the live path (stream) cannot disagree.
 - Watermark = late-event tolerance. State for a tumbling window is
   dropped once `max(event time) - watermark` passes the window end —

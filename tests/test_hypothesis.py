@@ -19,6 +19,8 @@ from frauddetection_spark.operators.sampling import (
     HASH_A2,
     HASH_HALF,
     HASH_MOD,
+    SPLIT_SEED,
+    TRAIN_PCT,
     portable_split,
 )
 from frauddetection_spark.operators.textsim import P31, rolling_hash_sql
@@ -33,11 +35,11 @@ def _py_rolling_hash(s: str) -> int:
     return h
 
 
-def _py_split(key: int, train_pct: int = 80, seed: int = 12_345) -> str:
+def _py_split(key: int) -> str:
     lo = key % HASH_HALF
     hi = (key // HASH_HALF) % HASH_HALF
-    h = (lo * HASH_A1 + hi * HASH_A2 + seed) % HASH_MOD
-    return "train" if h < (HASH_MOD * train_pct) // 100 else "test"
+    h = (lo * HASH_A1 + hi * HASH_A2 + SPLIT_SEED) % HASH_MOD
+    return "train" if h < (HASH_MOD * TRAIN_PCT) // 100 else "test"
 
 
 @settings(
@@ -216,7 +218,7 @@ def _ref_markov(mat, scenarios, mass0, steps):
     per-scenario ptab (redirected rows + absorbing self-loops, each row
     carrying its row-total r like the SQL window), then iterate the
     mass vector with the same floor((mass*c) div r) haircut — the
-    structure of the pre-r6 Spark-side tail, kept here as the
+    structure of an earlier Spark-side tail, kept here as the
     cross-check."""
     ptab = []  # (scenario, s, t, c)
     for sc, removed in scenarios.items():

@@ -152,13 +152,14 @@ def test_whole_stage_codegen_everywhere(spark, sf_dir):
     assert "*(" in plan
 
 
-def test_cc_local_finish_matches_distributed(spark, sf_dir):
+def test_cc_local_finish_matches_distributed(spark, sf_dir, monkeypatch):
     """connected_components is two-phase: a driver-side min-id
     union-find when the materialized edge set is under the
-    local_finish_edges gate, the iterative min-label fixpoint above
+    CC_LOCAL_FINISH_EDGES gate, the iterative min-label fixpoint above
     it. Both must produce the IDENTICAL (node, component) labeling —
     pinned here by running the same real edge feed through both paths
     (gate forced to 0 → distributed; default → local at test sf)."""
+    from frauddetection_spark.operators import graph as graph_ops
     from frauddetection_spark.operators.graph import (
         connected_components,
         edges_from_events,
@@ -172,9 +173,10 @@ def test_cc_local_finish_matches_distributed(spark, sf_dir):
         (r["node"], r["component"])
         for r in connected_components(e).collect()
     }
+    monkeypatch.setattr(graph_ops, "CC_LOCAL_FINISH_EDGES", 0)
     dist = {
         (r["node"], r["component"])
-        for r in connected_components(e, local_finish_edges=0).collect()
+        for r in connected_components(e).collect()
     }
     assert local == dist
     assert local, "empty edge feed would make this test vacuous"
@@ -252,9 +254,8 @@ def test_cc_consumers_local_finish_parity(qname, spark, sf_dir, monkeypatch):
     connected_components itself, but the four DECLARED queries that
     ride on it must also be gate-invariant — a future gate change must
     not silently diverge the results the driver hash-checks. Force the
-    distributed path by zeroing the shared function object's
-    local_finish_edges default (every consumer module imports the same
-    function object, so one patch covers all call sites) and compare
+    distributed path by zeroing the module's CC_LOCAL_FINISH_EDGES gate
+    (read at call time, so one patch covers all call sites) and compare
     full row sets against the default (local-finish at test sf) run."""
     from frauddetection_spark.operators import graph as graph_ops
     from frauddetection_spark.plans.registry import REGISTRY
@@ -264,65 +265,11 @@ def test_cc_consumers_local_finish_parity(qname, spark, sf_dir, monkeypatch):
         tuple(r) for r in spec.fn(spark, sf_dir).collect()
     )
     assert default_rows, f"{qname}: empty result makes parity vacuous"
-    # Patch the MODULE-LEVEL gate constant: the function
-    # resolves local_finish_edges=None to this at call time, so the
-    # forced-distributed behavior applies to every consumer regardless
-    # of signature drift — and the lint below pins that no consumer
-    # bypasses the constant by passing the gate explicitly.
     monkeypatch.setattr(graph_ops, "CC_LOCAL_FINISH_EDGES", 0)
     forced_rows = sorted(
         tuple(r) for r in spec.fn(spark, sf_dir).collect()
     )
     assert forced_rows == default_rows
-
-
-def test_cc_consumers_never_pass_gate_explicitly():
-    """Companion lint for the parity test above: forcing the
-    distributed path via CC_LOCAL_FINISH_EDGES only covers consumers
-    that leave local_finish_edges at its None default. Pin that no
-    production call site passes it — only operators/graph.py (the
-    definition) and tests may mention the parameter. The positional
-    leg is AST-based: a regex tolerated only one
-    level of nested parentheses, so a consumer like
-    ``connected_components(edges.filter(f(x)), 50, 0)`` truncated the
-    match and the positional 3rd arg could evade the comma count.
-    ``ast.Call`` nodes are exact and nesting-proof."""
-    import ast
-    import glob
-    import os
-
-    pkg = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "frauddetection_spark",
-    )
-    offenders = []
-    for path in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
-        if path.endswith(os.path.join("operators", "graph.py")):
-            continue
-        rel = os.path.relpath(path, pkg)
-        with open(path) as fh:
-            text = fh.read()
-        # raw-text leg: catches keyword args AND any other mention
-        # (partial(), kwargs dicts, monkeypatching) in one sweep
-        if "local_finish_edges" in text:
-            offenders.append(rel + " (mentions local_finish_edges)")
-        for node in ast.walk(ast.parse(text)):
-            if not isinstance(node, ast.Call):
-                continue
-            f = node.func
-            callee = (
-                f.id
-                if isinstance(f, ast.Name)
-                else f.attr if isinstance(f, ast.Attribute) else None
-            )
-            if callee == "connected_components" and len(node.args) >= 3:
-                offenders.append(
-                    f"{rel}:{node.lineno} (positional 3rd arg)"
-                )
-    assert not offenders, (
-        f"consumers pass local_finish_edges explicitly: {offenders} — "
-        "use the CC_LOCAL_FINISH_EDGES module constant instead"
-    )
 
 
 def test_common_neighbor_auto_cost_model(spark):

@@ -150,9 +150,8 @@ def test_ivf_rank1_recall(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     sub = emb.filter("vec_id < 256")
     floor_recall = _rank1_recall(
-        knn_topk_bruteforce(spark, sub, k=3),
-        ivf_topk(sub, k=3, n_centroids=adaptive_centroids(256), nprobe=8,
-                 iters=2),
+        knn_topk_bruteforce(spark, sub),
+        ivf_topk(sub, n_centroids=adaptive_centroids(256)),
     )
     assert floor_recall >= 0.8, f"floor-K rank-1 recall {floor_recall:.3f}"
 
@@ -405,7 +404,7 @@ def test_pq_quantize_invariant_fixed_width_no_nulls(spark, sf_dir):
 
 
 def test_asof_carries_latest_row_atomically(spark):
-    # code-review regression: a NULL in the latest right row must be
+    # regression: a NULL in the latest right row must be
     # carried as NULL (not back-filled from an older row), and columns
     # must never mix across right rows
     from frauddetection_spark.operators.asof import asof_last_before
@@ -623,10 +622,9 @@ def test_ivf_sampled_recall_and_sample_shape(spark, sf_dir):
     )
 
     floor_recall = _rank1_recall(
-        knn_topk_bruteforce(spark, sub, k=3),
-        ivf_topk(sub, k=3, n_centroids=adaptive_centroids(256), nprobe=8,
-                 iters=2, seeding="sampled", sample_pct=IVF_SAMPLE_PCT,
-                 seed=IVF_SEED),
+        knn_topk_bruteforce(spark, sub),
+        ivf_topk(sub, n_centroids=adaptive_centroids(256),
+                 seeding="sampled", sample_pct=IVF_SAMPLE_PCT, seed=IVF_SEED),
     )
     assert floor_recall >= 0.75, (
         f"sampled floor-K rank-1 recall {floor_recall:.3f}"

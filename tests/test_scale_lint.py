@@ -245,7 +245,7 @@ def test_every_persist_is_tracked_or_local():
                     if (
                         isinstance(anc, ast.Call)
                         and isinstance(anc.func, ast.Name)
-                        and anc.func.id in ("track_cache", "_track")
+                        and anc.func.id == "track_cache"
                     ):
                         tracked = True
                         break
@@ -270,6 +270,80 @@ def test_every_persist_is_tracked_or_local():
         "untracked persist() call sites (wrap in operators.caching."
         "track_cache "
         "or unpersist in the same function):\n" + "\n".join(offenders)
+    )
+
+
+def test_operator_defaults_are_set():
+    """Every defaulted parameter of a function under operators/ or
+    queries/ must be passed — by keyword or by position — at one or
+    more call sites in the package, ``__spark_entry__.py`` or
+    ``check_catalog.py``. A default that no caller overrides is a
+    constant in disguise: it multiplies the configurations tests must
+    cover while only one is ever run (and its never-taken branches go
+    untested). Make it a module constant instead. Call sites are
+    matched by callee name; a ``*args`` / ``**kwargs`` call sets
+    every parameter."""
+    import ast
+    import os
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pkg = os.path.join(root, "frauddetection_spark")
+    paths = [os.path.join(root, "__spark_entry__.py"),
+             os.path.join(root, "check_catalog.py")]
+    for dirpath, _dirs, files in os.walk(pkg):
+        paths += [os.path.join(dirpath, f) for f in files if f.endswith(".py")]
+    trees = {}
+    for path in paths:
+        with open(path) as fh:
+            trees[os.path.relpath(path, root)] = ast.parse(fh.read())
+
+    # callee name -> (keywords passed, most positional args passed)
+    passed: dict[str, tuple[set, float]] = {}
+    for tree in trees.values():
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+            if name is None:
+                continue
+            kws, npos = passed.get(name, (set(), 0))
+            splat = any(isinstance(a, ast.Starred) for a in node.args) or any(
+                k.arg is None for k in node.keywords
+            )
+            passed[name] = (
+                kws | {k.arg for k in node.keywords},
+                max(npos, float("inf") if splat else len(node.args)),
+            )
+
+    unset = []
+    for rel, tree in trees.items():
+        if not rel.startswith(
+            (os.path.join("frauddetection_spark", "operators"),
+             os.path.join("frauddetection_spark", "queries"))
+        ):
+            continue
+        for fn in ast.walk(tree):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            kws, npos = passed.get(fn.name, (set(), 0))
+            params = fn.args.posonlyargs + fn.args.args
+            first = len(params) - len(fn.args.defaults)
+            defaulted = [
+                (p.arg, i) for i, p in enumerate(params) if i >= first
+            ] + [
+                (p.arg, float("inf"))
+                for p, d in zip(fn.args.kwonlyargs, fn.args.kw_defaults)
+                if d is not None
+            ]
+            unset += [
+                f"{rel}:{fn.lineno} {fn.name}({arg})"
+                for arg, pos in defaulted
+                if arg not in kws and npos <= pos
+            ]
+    assert unset == [], (
+        "defaulted parameters no caller sets — make each a module "
+        "constant:\n" + "\n".join(unset)
     )
 
 
