@@ -73,10 +73,10 @@ def _canon_frame(pdf: pd.DataFrame) -> list[str]:
 def driver_canon_frame(pdf: pd.DataFrame) -> list[str]:
     """Vendored replica of the DRIVER's canonicalizer code path.
 
-    The round driver canonicalizes with pandas ``sort_values`` over the
+    The driver canonicalizes with pandas ``sort_values`` over the
     RAW columns before hashing — a path that raises ``TypeError:
-    unhashable type`` on list/ndarray cells (the r08
-    ``q_inverted_index`` failure: the crash sits inside
+    unhashable type`` on list/ndarray cells (as ``q_inverted_index``
+    once did: the crash sits inside
     ``lexsort_indexer → Categorical → factorize``). The repo's
     own ``_canon_frame`` stringifies containers first and is therefore
     MORE permissive — local green did not predict driver green. This
@@ -99,8 +99,8 @@ def driver_canon_frame(pdf: pd.DataFrame) -> list[str]:
 
 
 def driver_leg_mismatch_kind(da: list[str], db: list[str]) -> str:
-    """Classify a driver-leg mismatch before anyone adjudicates it
-    (ADVICE r09): the driver leg sorts RAW float columns while
+    """Classify a driver-leg mismatch before anyone adjudicates it:
+    the driver leg sorts RAW float columns while
     ``_canon_cell`` renders at 6dp, so sub-tolerance float drift on
     near-tied rows can order the two frames differently even though
     every rendered row matches. That is an ORDER-ONLY tie — a
@@ -118,7 +118,7 @@ def compare(name: str, spark_df, con: duckdb.DuckDBPyConnection, sql: str) -> Co
     sp = spark_df.toPandas()
     # cache hygiene: a full-catalog comparison session runs 100+
     # queries back-to-back; tracked per-query persists (shingle/IVF/
-    # rank frontiers) must not accumulate across them (ADVICE r3)
+    # rank frontiers) must not accumulate across them
     from frauddetection_spark.operators.caching import release_caches
 
     release_caches()
@@ -131,8 +131,8 @@ def compare(name: str, spark_df, con: duckdb.DuckDBPyConnection, sql: str) -> Co
     if a != b:
         diffs = [(x, y) for x, y in zip(a, b) if x != y][:3]
         return CompareResult(name, False, f"values differ; first diffs: {diffs}")
-    # Second leg: the vendored DRIVER canonicalizer (r08 lesson — the
-    # local harness must be at least as strict as the driver's). A
+    # Second leg: the vendored DRIVER canonicalizer (the local
+    # harness must be at least as strict as the driver's). A
     # TypeError here means the driver's pandas sort_values would crash
     # on this output shape even though values match.
     try:

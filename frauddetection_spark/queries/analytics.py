@@ -1,4 +1,4 @@
-"""Round-4 analytics operators: regression/robust-stats aggregates,
+"""Analytics operators: regression/robust-stats aggregates,
 cohort retention, cumulative distinct, multi-grain rollup reuse,
 ordinal explode, and the stream-stream-join batch twin.
 
@@ -216,8 +216,8 @@ def q_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     int counts; the single double (retention) is one division of ints,
     bit-equal across engines. Scale: the fact table reduces to
     distinct (user, week) pairs FIRST (tiny vs raw events); the cohort
-    week attaches as a window min over the user partition (r10 — the
-    previous groupBy + join-back + separate size aggregate referenced
+    week attaches as a window min over the user partition (a
+    groupBy + join-back + separate size aggregate would reference
     the distinct pass three times with zero ReusedExchange), and the
     cohort size needs no extra pass at all: every user is active in
     their own cohort week (cw = min w), so cohort_size IS n_active at
@@ -1306,10 +1306,8 @@ def q_fuzzy_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     names only, row-pair counts recovered as weight products
     (cnt_a·cnt_b across name groups, C(cnt,2) at dist 0 within one).
     Blocking keys are categorical (25 brands × 50 sizes), so block
-    size grows LINEARLY with the table and the row-pair join is a
-    hidden quadratic — the r12 sf0.1→sf1 audit measured it 59× for
-    10× data before this rewrite, ~1× after: the name domain is
-    vocabulary-bounded (64 distinct at sf0.1 AND sf1), so the pair
+    size grows LINEARLY with the table and a row-pair join is a
+    hidden quadratic. The name domain is vocabulary-bounded (64 distinct at sf0.1 AND sf1), so the pair
     stage is constant-size while the scan stays one linear pass.
     Both engines implement standard unit-cost Levenshtein, so the
     histogram hash-matches."""
@@ -1439,7 +1437,7 @@ def q_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
     ignore_errors SKIPS the whole row — the engines meet on "good =
     every column parsed non-null", which is exactly the set a
     production loader would land. Fixture is fingerprint-keyed
-    (sources/io.py::duckdb_fixture — zero Spark jobs at construction)."""
+    (sources/io.py::derived_fixture — zero Spark jobs at construction)."""
     import os
 
     from pyspark.sql.types import (
@@ -1450,16 +1448,15 @@ def q_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
         StructType,
     )
 
-    from frauddetection_spark.sources.io import duckdb_fixture
+    from frauddetection_spark.sources.io import derived_fixture
 
     def _build(src: str, out: str) -> None:
-        import duckdb
+        import pyarrow.parquet
 
-        con = duckdb.connect()
-        rows = con.execute(
-            "SELECT event_id, user_id, round(value, 2) AS value "
-            f"FROM read_parquet('{src}') ORDER BY event_id"
-        ).fetchall()
+        tbl = pyarrow.parquet.read_table(
+            src, columns=["event_id", "user_id", "value"]
+        ).sort_by("event_id")
+        rows = zip(*(col.to_pylist() for col in tbl.columns))
         bad_forms = (
             "garbage line without commas",
             "{eid},not_a_number,9.99",
@@ -1473,7 +1470,7 @@ def q_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
                     form = bad_forms[(i // _BAD_EVERY) % len(bad_forms)]
                     fh.write(form.format(eid=10_000_000 + i) + "\n")
 
-    path = duckdb_fixture(sf_dir, "badcsv", "events", _build)
+    path = derived_fixture(sf_dir, "badcsv", "events", _build)
     schema = StructType(
         [
             StructField("event_id", LongType()),
@@ -1493,7 +1490,7 @@ def q_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
         "value"
     ).isNotNull()
     agg = df.agg(
-        F.sum(F.when(good, 1).otherwise(0)).cast("bigint").alias("n_good"),
+        F.count(F.when(good, 1)).alias("n_good"),
         F.sum(F.when(good, cents("value"))).alias("cents_sum"),
         F.countDistinct(F.when(good, F.col("user_id"))).alias("n_users"),
     )
@@ -2158,8 +2155,8 @@ def q_theilsen(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # Persist the daily rollup: it feeds both pair sides AND the
     # n_days count — unpersisted, the events scan + rollup shuffle
-    # replayed 3× per execution (r08 sweep). Per-(user, calendar-day)
-    # rows: bounded at users × window days, tiny next to the fact.
+    # replay 3× per execution. Per-(user, calendar-day) rows: bounded
+    # at users × window days, tiny next to the fact.
     daily = track_cache(
         t(spark, sf_dir, "events")
         .groupBy(
@@ -2263,13 +2260,12 @@ def q_date_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix_rank — at 100 TB this is ~50× less intermediate volume
     than the explode with bit-identical output.
 
-    r10 shape fix: the three deltas leave each line as ONE
-    explode(array(struct×3)) — the previous unionAll-of-three-selects
-    referenced the scan+join lineage three times (plus a fourth for
-    the spine bounds), leaving dedup to optimizer ReusedExchange,
-    which is not guaranteed (see operators/rank.py on sampled range
-    bounds). Now the lineage is evaluated exactly once by
-    construction; the spine bounds come from the aggregated delta
+    The three deltas leave each line as ONE explode(array(struct×3)):
+    a unionAll-of-three-selects would reference the scan+join lineage
+    three times (plus a fourth for the spine bounds), leaving dedup to
+    optimizer ReusedExchange, which is not guaranteed (see
+    operators/rank.py on sampled range bounds). So the lineage is
+    evaluated exactly once by construction; the spine bounds come from the aggregated delta
     table itself (its min day IS min(d0) — branch-1 rows sit at d0
     and the other branches at ≥ d0; its max day IS max(d0+nd) —
     branch-3 rows dominate both others), which is calendar-bounded,

@@ -313,7 +313,8 @@ def q_lag_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(json_extract_string(props,'$.k') AS BIGINT) AS k
         FROM events
     ), sets AS (
-        SELECT user_id, week, list(k ORDER BY k) AS cur
+        SELECT user_id, week,
+               list_filter(list(k ORDER BY k), x -> x IS NOT NULL) AS cur
         FROM pairs GROUP BY user_id, week
     ), lagged AS (
         SELECT user_id, week, cur,
@@ -321,8 +322,9 @@ def q_lag_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM sets
     )
     SELECT user_id, week,
-           CAST(len(list_intersect(cur, prev)) AS DOUBLE)
-               / len(list_distinct(cur || prev)) AS jaccard,
+           CASE WHEN len(list_distinct(cur || prev)) > 0
+                THEN CAST(len(list_intersect(cur, prev)) AS DOUBLE)
+                     / len(list_distinct(cur || prev)) END AS jaccard,
            CAST(len(cur) AS BIGINT) AS n_contacts
     FROM lagged WHERE prev IS NOT NULL
     ORDER BY user_id, week
@@ -338,7 +340,10 @@ def q_jaccard_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     (collect_set dedups inside the aggregation buffer with
     map-side partial merge, replacing a distinct() +
     collect_list two-shuffle form — same sorted sets, one fewer
-    event-scale exchange)."""
+    event-scale exchange). A null contact is not in a set (collect_set
+    skips it; the twin filters it), so a week of null ``props`` has
+    ``n_contacts`` 0, and ``jaccard`` is NULL when the union is
+    empty."""
     e = _counterparty(_events_with_week(spark, sf_dir))
     sets = (
         e.select("user_id", "week", "k")
@@ -349,12 +354,13 @@ def q_jaccard_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     lagged = sets.withColumn("prev", F.lag("cur", 1).over(w)).filter(
         F.col("prev").isNotNull()
     )
+    union = F.size(F.array_union("cur", "prev"))
     return lagged.select(
         "user_id",
         "week",
-        (
-            F.size(F.array_intersect("cur", "prev")).cast("double")
-            / F.size(F.array_union("cur", "prev"))
+        F.when(
+            union > 0,
+            F.size(F.array_intersect("cur", "prev")).cast("double") / union,
         ).alias("jaccard"),
         F.size("cur").cast("bigint").alias("n_contacts"),
     ).orderBy("user_id", "week")
@@ -433,8 +439,8 @@ def q_class_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
     new_utlis_1.py:56-57; XOR-cased edge-class rates new_utlis_2.py:
     87-101). The global denominator is a broadcast single-row
     aggregate off the same grouped frame (Exchange reuse — no second
-    scan, no unpartitioned window: the round-2 empty-partitionBy
-    window form was bounded only by the group-key cardinality)."""
+    scan, no unpartitioned window: an empty-partitionBy window would
+    be bounded only by the group-key cardinality)."""
     from frauddetection_spark.operators.caching import track_cache
 
     e = t(spark, sf_dir, "events")

@@ -1,4 +1,4 @@
-"""Round-4 fraud/behavioral analytics operators: Benford's-law digit
+"""Fraud/behavioral analytics operators: Benford's-law digit
 profiling, RFM segmentation, duplicate-transaction (double-swipe)
 detection, Pareto-frontier (skyline) extraction, SCD1 merge/upsert,
 deterministic per-group reservoirs, chi-square independence cells,
@@ -158,7 +158,7 @@ def q_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     o = t(spark, sf_dir, "orders")
     # po feeds the global-max ref AND the scored relation — persist it
-    # or the orders scan + per-customer agg runs twice (r07 sweep)
+    # or the orders scan + per-customer agg runs twice
     po = track_cache(
         o.groupBy(F.col("o_custkey").alias("custkey"))
         .agg(
@@ -175,20 +175,19 @@ def q_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
         "f",
         "m_cents",
     )
-    # Three INDEPENDENT narrow rank passes joined back on custkey
-    # (r13): the previous shape chained the passes — pass 2 range-
-    # shuffled pass 1's full-width output, and each pass's persisted
-    # range frame nested the previous pass's whole lineage, so the
-    # final plan re-printed ~267 Exchange nodes and every task closure
-    # carried the triple-nested tree (planning + per-task deserialize
-    # cost, guide §2.3/§5). Ranking each score over a 2-column
-    # projection of the SAME persisted base keeps every range shuffle
-    # minimal-width, lets the three rank subtrees run as independent
-    # stages of one job, and joins back |customers|-row (custkey,
-    # score) pairs — plan at sf0.1: 34 -> 22 Exchanges, tasks/run
-    # 317 -> ~200. Results are
-    # identical: each prefix_rank sees the same (order key, custkey)
-    # total order it saw inside the chain.
+    # Three INDEPENDENT narrow rank passes joined back on custkey.
+    # Chained passes would range-shuffle pass 1's full-width output in
+    # pass 2, and each pass's persisted range frame would nest the
+    # previous pass's whole lineage, so the final plan would re-print
+    # ~267 Exchange nodes and every task closure would carry the
+    # triple-nested tree (planning + per-task deserialize cost, guide
+    # §2.3/§5). Ranking each score over a 2-column projection of the
+    # SAME persisted base keeps every range shuffle minimal-width, lets
+    # the three rank subtrees run as independent stages of one job, and
+    # joins back |customers|-row (custkey, score) pairs — 22 Exchanges
+    # at sf0.1 where the chain had 34. Results are identical: each
+    # prefix_rank sees the same (order key, custkey) total order it
+    # would see inside the chain.
     s = track_cache(s.persist())
     out = s
     for score, key, order in [
@@ -703,7 +702,7 @@ def q_linear_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = t(spark, sf_dir, "events")
     # (user x hour)-sized; feeds the bounds AND the spine join —
-    # persisted (r10) so the events aggregate runs once
+    # persisted so the events aggregate runs once
     obs = track_cache(
         e.groupBy(
             "user_id",
@@ -1458,7 +1457,7 @@ def q_peer_outlier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # m feeds the median probe AND the deviation frame, dev the MAD
     # probe AND the final filter — persist both or the spend/dominant
-    # build replays per reference (r07 sweep: 8 parquet scans)
+    # build replays per reference (8 parquet scans)
     m = track_cache(
         spend.join(dominant, "user_id")
         .select(
@@ -1560,8 +1559,8 @@ def q_reciprocal_flows(spark: SparkSession, sf_dir: str) -> DataFrame:
     flag is the cross-multiplied integer predicate |ab−ba|·100 ≤
     p·(ab+ba) — the reported net_ratio double is display-only. One
     pair-keyed self-join on the aggregated flow table, which is
-    persisted (r10): the self-join's two sides plan as independent
-    subtrees, so an unpersisted flow table replayed the events scan +
+    persisted: the self-join's two sides plan as independent
+    subtrees, so an unpersisted flow table replays the events scan +
     JSON parse + aggregate per side (zero ReusedExchange in the
     executed plan)."""
     from frauddetection_spark.operators.caching import track_cache
@@ -1678,8 +1677,8 @@ def q_mule_passthrough(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         cents("value").alias("c"),
     ).filter(F.col("k").isNotNull())
-    # scatter to both endpoints' ledgers from ONE pass (r10): the
-    # two-branch union re-ran the events scan + JSON parse per branch
+    # scatter to both endpoints' ledgers from ONE pass: a two-branch
+    # union re-runs the events scan + JSON parse per branch
     directed = base.select(
         F.explode(
             F.array(
@@ -1806,7 +1805,7 @@ def q_taint_tracing(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fo is probed once per hop, and each level's lineage chains every
     # earlier hop — without persists the final union re-derives hop k
     # for EVERY level ≥ k (triangular re-evaluation: the json-extract
-    # scan ran 9× in the r07 executed-plan sweep). Persist fo once and
+    # scan runs 9× in the executed plan). Persist fo once and
     # each hop frontier (frontiers are seed-neighborhood-sized).
     fo = track_cache(flows.join(outs, "src").persist())
     cur = (
@@ -2086,8 +2085,8 @@ def q_edge_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("dst").isNotNull())
         .distinct()
     )
-    # first_week as a window min over the edge key (r10): the previous
-    # groupBy + join-back referenced ew twice, replaying the events
+    # first_week as a window min over the edge key: a groupBy +
+    # join-back would reference ew twice, replaying the events
     # scan + JSON parse + distinct per reference (zero ReusedExchange);
     # the window is one shuffle on the same key the join used
     first_seen = F.min("week").over(Window.partitionBy("src", "dst"))
@@ -2330,7 +2329,7 @@ def q_fraud_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # explode-scatter, not a two-branch union: both endpoints come out
     # of ONE reference to rep, so the scan+JSON+weight-agg lineage is
-    # evaluated once (r10 — the union form replayed it per branch)
+    # evaluated once (a union form replays it per branch)
     nodes = (
         rep.select(F.explode(F.array("src", "dst")).alias("u"))
         .distinct()

@@ -4,6 +4,7 @@ aggregates) over the canonical events-derived edge list
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -92,7 +93,7 @@ def q_join_common_neighbor(spark: SparkSession, sf_dir: str) -> DataFrame:
     pick between an inverted-index self-join and packed contact
     bitmasks.
 
-    The strategy stats come from a DRIVER-SIDE probe (DuckDB over the
+    The strategy stats come from a DRIVER-SIDE probe (pyarrow over the
     events parquet), held by the table catalog under the file's
     fingerprint — the ANALYZE-from-catalog pattern: at 100 TB these
     numbers live in the table catalog (ANALYZE / ingest-time stats),
@@ -109,34 +110,45 @@ def q_join_common_neighbor(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _contact(props: str | None) -> int | None:
+    """The contact of one ``props`` string, by Spark's rule in
+    edges_from_events: ``int(k)``; a null, missing or unparseable
+    entry is no contact."""
+    try:
+        return int(json.loads(props)["k"])
+    except (TypeError, ValueError, KeyError, OverflowError):
+        return None
+
+
 def _contact_stats(events_path: str) -> ContactStats:
     """Common-neighbor statistics of the events edge list. The contact
-    domain is the one Spark's edges_from_events sees: TRY_CAST of
-    ``props.k`` to BIGINT, nulls dropped, for the counts and the values
-    alike (the values feed the bitmask index, and a contact missing
-    from them fails the query)."""
-    import duckdb
+    domain is the one Spark's edges_from_events sees (``_contact``),
+    for the counts and the values alike (the values feed the bitmask
+    index, and a contact missing from them fails the query). Each
+    distinct ``props`` string is parsed once."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
 
-    with duckdb.connect() as con:
-        nc, nu, sd2, values = con.execute(
-            f"""
-            WITH c AS (
-                SELECT DISTINCT user_id AS u,
-                       TRY_CAST(json_extract_string(props, '$.k') AS BIGINT)
-                           AS ct
-                FROM read_parquet('{events_path}')
-                WHERE ct IS NOT NULL
-            ),
-            d AS (SELECT ct, count(*) AS deg FROM c GROUP BY ct)
-            SELECT count(*),
-                   (SELECT count(DISTINCT u) FROM c),
-                   sum(deg * deg),
-                   CASE WHEN count(*) <= {BITMASK_MAX_CONTACTS}
-                        THEN list(ct ORDER BY ct) END
-            FROM d
-            """
-        ).fetchone()
-    return ContactStats(int(nc), int(nu), int(sd2 or 0), values)
+    tbl = pq.read_table(events_path, columns=["user_id", "props"])
+    props = tbl["props"].combine_chunks().dictionary_encode()
+    contacts = [_contact(p) for p in props.dictionary.to_pylist()]
+    ct = pa.array(contacts, pa.int64()).take(props.indices)
+    pairs = (
+        pa.table({"u": tbl["user_id"], "ct": ct})
+        .filter(ct.is_valid())
+        .group_by(["u", "ct"])
+        .aggregate([])
+    )
+    deg = pairs.group_by("ct").aggregate([([], "count_all")])
+    d = deg["count_all"]
+    n = deg.num_rows
+    return ContactStats(
+        n,
+        pc.count_distinct(pairs["u"]).as_py(),
+        pc.sum(pc.multiply_checked(d, d)).as_py() or 0,
+        sorted(deg["ct"].to_pylist()) if n <= BITMASK_MAX_CONTACTS else None,
+    )
 
 
 # ---------------------------------------------------------------------------

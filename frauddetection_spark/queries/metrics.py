@@ -173,9 +173,9 @@ def q_metric_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Fully distributed (operators/rank.py::auc_stats): ties collapse to
     score grain in one shuffle, midranks come from a range-partitioned
-    prefix count — no unpartitioned row-level window, so the query no
-    longer funnels every scored row through one task the way the round-2
-    ``rank().over(Window.orderBy(score))`` form did. The oracle twin
+    prefix count — no unpartitioned row-level window, so the query does
+    not funnel every scored row through one task the way a
+    ``rank().over(Window.orderBy(score))`` form would. The oracle twin
     keeps the row-level rank formulation — equal by the midrank
     identity."""
     s = _scored(t(spark, sf_dir, "events"))
@@ -217,10 +217,9 @@ def q_metric_ap(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sum → exact-int accumulation, one final division.
 
     The rank and running positive count come from the two-phase
-    range-partitioned prefix (operators/rank.py::prefix_rank) — the
-    round-2 global ``Window.orderBy(score DESC, user_id)`` was a
-    single-reducer sort; now both are partition-local plus broadcast
-    offsets, exact because range partitions are ordered and disjoint."""
+    range-partitioned prefix (operators/rank.py::prefix_rank) — a
+    global ``Window.orderBy(score DESC, user_id)`` is a single-reducer
+    sort; here both are partition-local plus broadcast offsets, exact because range partitions are ordered and disjoint."""
     s = _scored(t(spark, sf_dir, "events"))
     ranked = prefix_rank(
         s,

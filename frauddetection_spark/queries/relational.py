@@ -779,35 +779,26 @@ def q_scan_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CSV source with a REQUIRED explicit schema (reference:
     pd.read_csv with inference, data_process.py:53-55 — engine policy
     §1.2: never infer). The CSV copy of events is materialized once per
-    sf by DuckDB on the driver (pure-Python prep — constructing this
+    sf by pyarrow on the driver (pure-Python prep — constructing this
     query runs ZERO Spark jobs); Spark reads it back through
     sources/io.py::read_csv and aggregates, while the oracle runs on
     the original parquet — matching hashes prove the interchange is
     lossless. (The Spark CSV *sink* is exercised in tests/test_io.py.)"""
     import os
 
-    from frauddetection_spark.sources.io import duckdb_fixture, read_csv
+    from frauddetection_spark.sources.io import derived_fixture, read_csv
     from frauddetection_spark.sources.tables import SCHEMAS
 
     def _build(src: str, out: str) -> None:
-        import duckdb
+        import pyarrow.csv
+        import pyarrow.parquet
 
-        con = duckdb.connect()
-        # CAST ts to micros — DuckDB would print TIMESTAMP_NS with nine
-        # fraction digits, which Spark's CSV parser rejects; micros is
-        # the same truncation the parquet loader applies.
-        con.execute(
-            f"""
-            COPY (SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id,
-                         event_type, value, props
-                  FROM read_parquet('{src}'))
-            TO '{os.path.join(out, "part-0.csv")}' (FORMAT CSV, HEADER)
-            """
+        pyarrow.csv.write_csv(
+            pyarrow.parquet.read_table(src), os.path.join(out, "part-0.csv")
         )
-        con.close()
 
-    path = duckdb_fixture(sf_dir, "csv", "events", _build)
-    # escape='"': DuckDB writes RFC-4180 doubled quotes; Spark's
+    path = derived_fixture(sf_dir, "csv", "events", _build)
+    # escape='"': pyarrow writes RFC-4180 doubled quotes; Spark's
     # backslash default would leave embedded quotes in string fields
     csv = read_csv(spark, path, SCHEMAS["events"], escape='"')
     return (
@@ -850,34 +841,23 @@ def q_scan_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_plans.py). This is THE layout decision that makes
     100 TB scans affordable: a partition-pruned query reads
     |matching partitions| ∝ selectivity, not the table. The layout is
-    materialized once per sf by DuckDB on the driver (PARTITION_BY
-    COPY — constructing this query runs zero Spark jobs); the oracle
-    runs on the original parquet, so matching hashes also prove the
-    partitioned round-trip is lossless."""
+    materialized once per sf by pyarrow on the driver
+    (write_to_dataset — constructing this query runs zero Spark jobs);
+    the oracle runs on the original parquet, so matching hashes also
+    prove the partitioned round-trip is lossless."""
     import os
 
-    from frauddetection_spark.sources.io import duckdb_fixture, read_partitioned
+    from frauddetection_spark.sources.io import derived_fixture, read_partitioned
     from frauddetection_spark.sources.tables import SCHEMAS, ensure_read_confs
 
     def _build(src: str, out: str) -> None:
-        import duckdb
+        import pyarrow.parquet
 
-        con = duckdb.connect()
-        # micros ts (same truncation as the parquet loader) — the
-        # partitioned copy must not reintroduce the NANOS landmine
-        con.execute(
-            f"""
-            COPY (SELECT event_id, CAST(ts AS TIMESTAMP) AS ts, user_id,
-                         value, props, event_type
-                  FROM read_parquet('{src}'))
-            TO '{out}'
-            (FORMAT PARQUET, PARTITION_BY (event_type),
-             OVERWRITE_OR_IGNORE)
-            """
+        pyarrow.parquet.write_to_dataset(
+            pyarrow.parquet.read_table(src), out, partition_cols=["event_type"]
         )
-        con.close()
 
-    path = duckdb_fixture(sf_dir, "part", "events", _build)
+    path = derived_fixture(sf_dir, "part", "events", _build)
     ensure_read_confs(spark)
     from pyspark.sql.types import StructType
 
@@ -1131,6 +1111,15 @@ def q_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
+def _write_jsonl(tbl, path: str) -> None:
+    """One JSON object per row; json.dumps floats round-trip exactly."""
+    import json
+
+    with open(path, "w") as fh:
+        for row in tbl.to_pylist():
+            fh.write(json.dumps(row) + "\n")
+
+
 @register(
     "q_scan_jsonl",
     oracle="""
@@ -1145,30 +1134,25 @@ def q_scan_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON-lines source with a REQUIRED explicit schema — the
     interchange format LLM corpora actually ship in (one document
     object per line). The JSONL copy of ``documents`` is materialized
-    once per sf by DuckDB on the driver (pure-Python prep; ZERO Spark
-    jobs at query construction); Spark reads it back through
-    sources/io.py::read_jsonl and aggregates, the oracle runs on the
-    original parquet — matching hashes prove the interchange is
+    once per sf by a json.dumps line loop on the driver (pure-Python
+    prep; ZERO Spark jobs at query construction); Spark reads it back
+    through sources/io.py::read_jsonl and aggregates, the oracle runs
+    on the original parquet — matching hashes prove the interchange is
     lossless. Reference reads everything via inferring pandas
     (data_process.py:53-55); policy §1.2 pins schemas instead."""
     import os
 
-    from frauddetection_spark.sources.io import duckdb_fixture, read_jsonl
+    from frauddetection_spark.sources.io import derived_fixture, read_jsonl
     from frauddetection_spark.sources.tables import SCHEMAS
 
     def _build(src: str, out: str) -> None:
-        import duckdb
+        import pyarrow.parquet
 
-        con = duckdb.connect()
-        con.execute(
-            f"""
-            COPY (SELECT * FROM read_parquet('{src}'))
-            TO '{os.path.join(out, "part-0.jsonl")}' (FORMAT JSON)
-            """
+        _write_jsonl(
+            pyarrow.parquet.read_table(src), os.path.join(out, "part-0.jsonl")
         )
-        con.close()
 
-    path = duckdb_fixture(sf_dir, "jsonl", "documents", _build)
+    path = derived_fixture(sf_dir, "jsonl", "documents", _build)
     docs = read_jsonl(spark, path, SCHEMAS["documents"])
     return (
         docs.groupBy("lang", "source")
@@ -1265,7 +1249,7 @@ def q_scan_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents keep the money sum engine-identical."""
     import os
 
-    from frauddetection_spark.sources.io import duckdb_fixture, read_orc
+    from frauddetection_spark.sources.io import derived_fixture, read_orc
     from frauddetection_spark.sources.tables import SCHEMAS
 
     def _build(src: str, out: str) -> None:
@@ -1277,7 +1261,7 @@ def q_scan_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.path.join(out, "part-0.orc"),
         )
 
-    path = duckdb_fixture(sf_dir, "orc", "part", _build)
+    path = derived_fixture(sf_dir, "orc", "part", _build)
     parts = read_orc(spark, path, SCHEMAS["part"])
     return (
         parts.groupBy("p_brand")
@@ -1326,7 +1310,7 @@ def q_scan_xml(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     from xml.sax.saxutils import escape
 
-    from frauddetection_spark.sources.io import duckdb_fixture, read_xml
+    from frauddetection_spark.sources.io import derived_fixture, read_xml
     from frauddetection_spark.sources.tables import SCHEMAS
 
     def _build(src: str, out: str) -> None:
@@ -1349,7 +1333,7 @@ def q_scan_xml(spark: SparkSession, sf_dir: str) -> DataFrame:
                 fh.write("</row>\n")
             fh.write("</rows>\n")
 
-    path = duckdb_fixture(sf_dir, "xml", "customer", _build)
+    path = derived_fixture(sf_dir, "xml", "customer", _build)
     cust = read_xml(spark, os.path.join(path, "part-0.xml"), SCHEMAS["customer"])
     return (
         cust.groupBy("c_mktsegment")
@@ -3274,7 +3258,7 @@ def q_scan_federated(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from frauddetection_spark.sources.io import (
-        duckdb_fixture,
+        derived_fixture,
         read_csv,
         read_jsonl,
         read_orc,
@@ -3283,38 +3267,27 @@ def q_scan_federated(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _mk_builder(shard: int, fmt: str):
         def _build(src: str, out: str) -> None:
-            import duckdb
+            import pyarrow.csv
+            import pyarrow.orc
+            import pyarrow.parquet
 
-            con = duckdb.connect()
-            sel = f"SELECT * FROM read_parquet('{src}') WHERE p_partkey % 4 = {shard}"
-            if fmt == "csv":
-                con.execute(
-                    f"COPY ({sel}) TO '{os.path.join(out, 'part-0.csv')}'"
-                    " (FORMAT CSV, HEADER)"
-                )
-            elif fmt == "jsonl":
-                con.execute(
-                    f"COPY ({sel}) TO '{os.path.join(out, 'part-0.jsonl')}'"
-                    " (FORMAT JSON)"
-                )
-            elif fmt == "parquet":
-                con.execute(
-                    f"COPY ({sel}) TO '{os.path.join(out, 'part-0.parquet')}'"
-                    " (FORMAT PARQUET)"
-                )
+            tbl = pyarrow.parquet.read_table(src)
+            tbl = tbl.filter(tbl["p_partkey"].to_numpy() % 4 == shard)
+            dest = os.path.join(out, f"part-0.{fmt}")
+            if fmt == "jsonl":
+                _write_jsonl(tbl, dest)
             else:
-                import pyarrow.orc
-
-                tbl = con.execute(sel).fetch_arrow_table()
-                pyarrow.orc.write_table(tbl, os.path.join(out, "part-0.orc"))
-            con.close()
+                writer = {"csv": pyarrow.csv.write_csv,
+                          "parquet": pyarrow.parquet.write_table,
+                          "orc": pyarrow.orc.write_table}[fmt]
+                writer(tbl, dest)
 
         return _build
 
     schema = SCHEMAS["part"]
     shards = []
     for shard, fmt in enumerate(("parquet", "csv", "jsonl", "orc")):
-        path = duckdb_fixture(sf_dir, f"fed_{fmt}", "part", _mk_builder(shard, fmt))
+        path = derived_fixture(sf_dir, f"fed_{fmt}", "part", _mk_builder(shard, fmt))
         if fmt == "parquet":
             shards.append(spark.read.schema(schema).parquet(path))
         elif fmt == "csv":

@@ -588,16 +588,15 @@ def q_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact ints; support/lift are single double expressions identical
     in both twins.
 
-    Plan shape (r10 — the q_item_cf diagonal trick at order grain):
+    Plan shape (the q_item_cf diagonal trick at order grain):
     ONE groupBy(order) collect_set builds each basket (dedup in the
     same shuffle); posexplode + explode(slice at i+1) emits every
     within-basket pair INCLUDING the diagonal (p, p), so a single
     (p1, p2) count shuffle yields pair counts (off-diagonal) AND the
     per-part marginals n_part (diagonal), while the order total is a
-    count of the persisted basket table. The r07 form self-joined the
-    distinct incidence on the basket id — two probe-side shuffles of
-    it plus separate marginal/total aggregations. Measured at sf0.1
-    (interleaved, clean caches): steady 2.7s → 2.1s, same rows."""
+    count of the persisted basket table. A self-join of the distinct
+    incidence on the basket id would pay two probe-side shuffles of
+    it plus separate marginal/total aggregations."""
     from frauddetection_spark.operators.caching import track_cache
 
     baskets = track_cache(
@@ -1357,7 +1356,7 @@ def q_qte(spark: SparkSession, sf_dir: str) -> DataFrame:
     order statistics from variant-partitioned ranks), then ONE
     conditional aggregation over the ≤2·|pcts|-row quantile frame
     aligns control vs treated (a filtered self-join would re-derive
-    the pipeline per side; r08). All windows variant-bounded; the pct
+    the pipeline per side). All windows variant-bounded; the pct
     grid broadcasts; the ranked frame is persisted (it feeds both the
     target grid and the bracketing filter)."""
     per_user = (
@@ -1369,7 +1368,7 @@ def q_qte(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # Persist the ranked frame: it feeds both the per-variant target
     # grid and the bracketing filter — unpersisted, the events scan +
-    # rollup + variant windows replayed per reference (r08 sweep).
+    # rollup + variant windows replay per reference.
     r = track_cache(
         per_user.select(
             "variant",
@@ -1419,8 +1418,8 @@ def q_qte(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Align variants with ONE conditional aggregation over the ≤
     # 2·|pcts|-row quantile frame instead of a filtered self-join,
-    # which re-derived the whole pipeline per side (r08 sweep).
-    # PRESENCE-based filtering, not value-based (ADVICE r08): the
+    # which would re-derive the whole pipeline per side.
+    # PRESENCE-based filtering, not value-based: the
     # oracle's inner self-join drops a pct only when a variant has NO
     # row there, but would EMIT a row whose qv is NULL — an isNotNull
     # filter on the pivoted values conflates the two and would mask a
@@ -1650,7 +1649,7 @@ def q_backtest_snaive(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     e = t(spark, sf_dir, "events")
     # (type x day)-sized; both sides of the day-shift self-join read it
-    # — persisted (r10) so the events aggregate runs once
+    # — persisted so the events aggregate runs once
     daily = track_cache(
         e.groupBy(
             "event_type",
@@ -1769,7 +1768,7 @@ def q_eb_shrinkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     from frauddetection_spark.operators.caching import track_cache
 
     # user-sized; feeds the moment aggregate AND the output — persisted
-    # (r10) so the events aggregate runs once (zero ReusedExchange)
+    # so the events aggregate runs once (zero ReusedExchange)
     rq = track_cache(
         g.withColumn("r_q9", F.expr("(k * 1000000000) div n")).persist()
     )
@@ -2017,12 +2016,11 @@ def q_item_cf(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruning — at 100 TB a single crawler account otherwise contributes
     millions of pairs; the cap bounds per-user work by a constant).
 
-    Plan shape (r06 rewrite per VERDICT r05 item 5, tightened in r07 —
-    the r05 version self-joined the incidence on the user, which
-    shuffled it twice and rebuilt the join DAG on both branches; the
-    r06 version still paid a basket persist plus a SECOND explode +
-    shuffle just for the item marginals, and its HOF pair-expansion
-    lambda nest cost ~7s of first-run codegen compile): ONE
+    Plan shape (a self-join of the incidence on the user would shuffle
+    it twice and rebuild the join DAG on both branches; a basket
+    persist plus a SECOND explode + shuffle for the item marginals
+    would pay twice for the baskets, and a HOF pair-expansion lambda
+    nest costs seconds of first-run codegen compile): ONE
     groupBy(user) collect_set builds each user's ≤100-item sorted
     basket (dedup and whale-cap in the same shuffle — no separate
     distinct + degree pass); posexplode + explode(slice from i+1) then
@@ -2042,10 +2040,7 @@ def q_item_cf(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort SPILLS, while collect_list materializes every candidate
     neighbor of a hub item in one aggregation buffer — unbounded per
     key at 100 TB. Cosine is a single IEEE-identical expression
-    rounded to 6dp, ranks totally ordered by (cosine, n_uv, neighbor).
-    Measured at sf0.1 (calib≈0.5s hosts): 5.5s (r05 self-join) →
-    ~4.7s steady / 11.4s cold (r06) → ~3.6s steady / <8s cold (r07
-    diagonal single-shuffle)."""
+    rounded to 6dp, ranks totally ordered by (cosine, n_uv, neighbor)."""
     from frauddetection_spark.operators.caching import track_cache
 
     ui = (
@@ -2070,18 +2065,16 @@ def q_item_cf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # self-join: element i pairs with itself AND every later element of
     # its own basket — two stacked Generate operators (posexplode →
     # explode of the 1-based slice at i+1). Including the DIAGONAL is
-    # the r07 trick: (x, x) occurs exactly once per basket containing
+    # the trick: (x, x) occurs exactly once per basket containing
     # x, so ONE groupBy(p1, p2) shuffle yields both the co-occurrence
-    # counts (off-diagonal) and the item marginals n_users (diagonal) —
-    # the r06 plan paid a second explode+shuffle over a persisted
-    # basket table just for the marginals. Baskets are now consumed
-    # once (no persist); the small pair-count table (≈ catalog-sized +
-    # surviving pairs) is what's cached and probed twice by the
-    # marginal joins. Extra shuffle volume for the diagonal is Σ deg
-    # rows — noise next to Σ C(deg,2). Measured at sf0.1: steady
-    # 6.1-7.5s → 3.6-4.1s, cold 17.4s → 7.9s (same-session A/B,
-    # hash-identical output).
-    # r14 (guide §5 caching): persist only the rows the two downstream
+    # counts (off-diagonal) and the item marginals n_users (diagonal),
+    # with no second explode+shuffle over a persisted basket table
+    # just for the marginals. Baskets are consumed once (no persist);
+    # the small pair-count table (≈ catalog-sized + surviving pairs)
+    # is what's cached and probed twice by the marginal joins. Extra
+    # shuffle volume for the diagonal is Σ deg rows — noise next to
+    # Σ C(deg,2).
+    # Guide §5 caching: persist only the rows the two downstream
     # readers actually touch — the diagonal (marginals) and the
     # off-diagonal survivors of the HAVING n_uv >= 2 cut. At sf0.1 the
     # unfiltered aggregate is 12.7M pairs of which 11.8M are

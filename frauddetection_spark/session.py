@@ -1,7 +1,8 @@
 """SparkSession factory with scale-oriented defaults.
 
-Every knob here is chosen for the 1000-executor / 100 TB target, not for
-the local[32] test box:
+Every knob here is chosen for the 1000-executor / 100 TB target; a
+local session sizes its cores, shuffle partitions and heap from the
+cores this process may run on (``DEFAULT_CPUS``):
 
 - AQE on (runtime shuffle-partition coalescing, skew-join splitting,
   dynamic broadcast conversion) — the single highest-leverage setting
@@ -71,15 +72,13 @@ def get_spark(
         #     (clusters pass their own).
         #     local[N] packs N executor cores into ONE driver
         #     JVM, so a flat heap starves concurrent tasks as N grows:
-        #     the flat-8g default gave 32 tasks 0.25 GiB each — ~10x
-        #     under any production executor sizing (guide §5) — and a
-        #     controlled r13 profile measured jvmGcTime 119s→40s when
-        #     raising it to 24g, with three r13 sweep queries running
-        #     2-8x over their own same-JVM standalone rechecks from GC
-        #     churn alone. r14 makes heap-per-core the default (24g at
-        #     32 cores, 8g at ≤10 — the 8-core comparison run keeps
-        #     its r13 heap). This is §5 memory sizing that transfers
-        #     to any executor shape, not a local-only tune.
+        #     a flat 8g gives 32 tasks 0.25 GiB each — ~10x under any
+        #     production executor sizing (guide §5) — and GC churn
+        #     then dominates (a 32-core profile spent 3x the GC time
+        #     at 8g as at 24g). Heap per core keeps the per-task share
+        #     fixed (24g at 32 cores, 8g at ≤10). This is §5 memory
+        #     sizing that transfers to any executor shape, not a
+        #     local-only tune.
         .config(
             "spark.driver.memory",
             os.environ.get(

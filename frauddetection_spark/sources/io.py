@@ -158,32 +158,38 @@ def read_jsonl(
     return spark.read.schema(schema).json(path)
 
 
-def duckdb_fixture(
+def derived_fixture(
     sf_dir: str,
     kind: str,
     src_name: str,
     build: Callable[[str, str], None],
 ) -> str:
     """Materialize-once driver-side fixture derived from
-    ``{sf_dir}/{src_name}.parquet`` via DuckDB (pure-Python prep —
-    constructing a query that calls this runs ZERO Spark jobs).
+    ``{sf_dir}/{src_name}.parquet`` by a pure-Python ``build`` (pyarrow
+    on the driver — constructing a query that calls this runs ZERO
+    Spark jobs).
 
     The fixture directory is content-addressed: its name carries a hash
-    of the source's real path and the source's catalog fingerprint
-    ``(mtime_ns, size)``. A rewritten source therefore gets a fresh
-    fixture — without this, Spark would aggregate a stale copy while the
-    DuckDB oracle reads the fresh parquet, a spurious (or, worse,
-    masked) oracle mismatch — and two data directories that share a
-    basename never share a fixture. The build runs in a temporary
-    directory that is renamed into place, so a concurrent reader never
-    observes a half-built fixture; fixtures of the source's older
-    fingerprints are removed.
+    of the source's real path, a hash of the builder's source text, and
+    the source's catalog fingerprint ``(mtime_ns, size)``. A rewritten
+    source therefore gets a fresh fixture — without this, Spark would
+    aggregate a stale copy while the DuckDB oracle reads the fresh
+    parquet, a spurious (or, worse, masked) oracle mismatch — and so
+    does a changed builder, whose old output would otherwise be served
+    at an unchanged fingerprint. (Source text, unlike compiled code,
+    carries no file path or line numbers, so two checkouts of one
+    builder share its fixture instead of evicting each other's.) Two
+    data directories that share a basename never share a fixture. The
+    build runs in a temporary directory that is renamed into place, so
+    a concurrent reader never observes a half-built fixture; fixtures
+    of the source's older fingerprints or builders are removed.
 
-    ``build(src_parquet_path, out_dir)`` performs the actual COPY.
+    ``build(src_parquet_path, out_dir)`` writes the fixture files.
     Returns the fixture directory.
     """
     import glob
     import hashlib
+    import inspect
     import shutil
     import tempfile
 
@@ -192,10 +198,11 @@ def duckdb_fixture(
     src = os.path.realpath(os.path.join(sf_dir, f"{src_name}.parquet"))
     mtime_ns, size = fingerprint(src)
     source = hashlib.sha1(src.encode()).hexdigest()[:16]
+    builder = hashlib.sha1(inspect.getsource(build).encode()).hexdigest()[:8]
     prefix = os.path.join(
         tempfile.gettempdir(), f"fd_spark_{kind}_{src_name}_{source}_"
     )
-    path = f"{prefix}{mtime_ns}_{size}"
+    path = f"{prefix}{builder}_{mtime_ns}_{size}"
     if not os.path.isdir(path):
         tmp = tempfile.mkdtemp(prefix="fd_spark_build_")
         try:

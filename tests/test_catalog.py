@@ -57,3 +57,35 @@ def test_queries_follow_in_place_rewrites(spark, sf_dir, tmp_path):
     finally:
         duck.close()
 
+
+
+def test_contact_probe_matches_spark_domain(spark, tmp_path):
+    """The driver-side common-neighbor probe sees exactly the contacts
+    Spark's edges_from_events sees: an integer or integer-string ``k``
+    is a contact; a missing ``k``, a null ``k``, a null ``props`` and
+    unparseable JSON are not. (Non-integral and boolean ``k`` are left
+    out: Spark's ANSI cast raises on them.)"""
+    from collections import Counter
+
+    from frauddetection_spark.operators.graph import ContactStats, edges_from_events
+    from frauddetection_spark.queries.graph import _contact_stats
+
+    props = ['{"k": 5}', '{"k": "7"}', '{"k": -3}', "{}", '{"k": null}',
+             None, "not json", '{"k": 5}', '{"k": 5}']
+    users = [1, 2, 3, 1, 2, 3, 1, 2, 1]
+    path = str(tmp_path / "events.parquet")
+    pq.write_table(
+        pa.table({"user_id": pa.array(users, pa.int64()),
+                  "props": pa.array(props, pa.string())}),
+        path,
+    )
+    edges = edges_from_events(spark.read.parquet(path)).collect()
+    deg = Counter(r.dst for r in edges)
+    want = ContactStats(
+        len(deg),
+        len({r.src for r in edges}),
+        sum(d * d for d in deg.values()),
+        sorted(deg),
+    )
+    assert want == ContactStats(3, 3, 6, [-3, 5, 7])
+    assert _contact_stats(path) == want

@@ -1,0 +1,62 @@
+"""Queries on edge-shaped copies of the testdata: an empty events table
+and events whose ``props`` are all null must still match their DuckDB
+twins, not return a wrong answer or raise."""
+
+from __future__ import annotations
+
+import os
+
+import pyarrow as pa
+import pyarrow.parquet as pq
+
+from frauddetection_spark.oracle import compare, duckdb_connection
+from frauddetection_spark.plans.registry import load_all
+from frauddetection_spark.sources.tables import TABLE_NAMES
+
+REGISTRY = load_all()
+
+
+def _copy_with_events(sf_dir: str, tmp_path, reshape) -> str:
+    """A data directory linking every table of ``sf_dir`` except
+    events, which is written back as ``reshape(events)``."""
+    d = tmp_path / "sf"
+    d.mkdir()
+    for name in TABLE_NAMES:
+        if name != "events":
+            os.symlink(os.path.join(sf_dir, f"{name}.parquet"), d / f"{name}.parquet")
+    events = pq.read_table(os.path.join(sf_dir, "events.parquet"))
+    pq.write_table(reshape(events), d / "events.parquet")
+    return str(d)
+
+
+def _check(spark, d: str, name: str):
+    spec = REGISTRY[name]
+    duck = duckdb_connection(d)
+    try:
+        res = compare(name, spec.fn(spark, d), duck, spec.oracle)
+        assert res.ok, f"{name}: {res.detail}"
+        return duck.execute(spec.oracle).fetchdf()
+    finally:
+        duck.close()
+
+
+def test_csv_malformed_on_empty_events(spark, sf_dir, tmp_path):
+    """A global sum over no rows is NULL; the good-row count must be
+    a count, 0 on empty input like the twin's count(*)."""
+    d = _copy_with_events(sf_dir, tmp_path, lambda e: e.slice(0, 0))
+    got = _check(spark, d, "q_csv_malformed")
+    assert (got["n_good"].tolist(), got["n_dropped"].tolist()) == ([0], [0])
+
+
+def test_jaccard_lag_on_null_props(spark, sf_dir, tmp_path):
+    """With every contact null, each week's set is empty: n_contacts
+    is 0 and jaccard (an empty union) is NULL in both engines."""
+
+    def null_props(e):
+        i = e.schema.get_field_index("props")
+        return e.set_column(i, "props", pa.nulls(e.num_rows, pa.string()))
+
+    d = _copy_with_events(sf_dir, tmp_path, null_props)
+    got = _check(spark, d, "q_jaccard_lag")
+    assert len(got) > 0
+    assert (got["n_contacts"] == 0).all() and got["jaccard"].isna().all()

@@ -12,7 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from frauddetection_spark.sources.io import (
-    duckdb_fixture,
+    derived_fixture,
     export_csv,
     read_csv,
     read_partitioned,
@@ -91,7 +91,7 @@ def test_range_sorted_write_files_are_disjoint(spark, sf_dir, tmp_path):
 
 
 def test_fixture_regenerates_on_fingerprint_mismatch(sf_dir, tmp_path):
-    """duckdb_fixture is content-addressed by the source's real path and
+    """derived_fixture is content-addressed by the source's real path and
     fingerprint: touching the source MUST rebuild, an unchanged source
     must NOT, and two data directories with the same basename get
     separate fixtures."""
@@ -108,28 +108,68 @@ def test_fixture_regenerates_on_fingerprint_mismatch(sf_dir, tmp_path):
         with open(os.path.join(out, "data.txt"), "w") as fh:
             fh.write(src)
 
-    pa1 = duckdb_fixture(str(a), "fxtest", "part", build)
+    pa1 = derived_fixture(str(a), "fxtest", "part", build)
     assert len(calls) == 1
     # unchanged source → no rebuild, same fixture
-    assert duckdb_fixture(str(a), "fxtest", "part", build) == pa1
+    assert derived_fixture(str(a), "fxtest", "part", build) == pa1
     assert len(calls) == 1
     # same basename, other directory → its own fixture
-    pb = duckdb_fixture(str(b), "fxtest", "part", build)
+    pb = derived_fixture(str(b), "fxtest", "part", build)
     assert len(calls) == 2 and pb != pa1
     with open(os.path.join(pb, "data.txt")) as fh:
         assert fh.read() == str(b / "part.parquet")
     # touched source → rebuild into a new fixture; the stale one is gone
     st = os.stat(a / "part.parquet")
     os.utime(a / "part.parquet", ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
-    pa2 = duckdb_fixture(str(a), "fxtest", "part", build)
+    pa2 = derived_fixture(str(a), "fxtest", "part", build)
     assert len(calls) == 3 and pa2 != pa1
     assert not os.path.exists(pa1) and os.path.isdir(pb)
-    assert duckdb_fixture(str(a), "fxtest", "part", build) == pa2
+    assert derived_fixture(str(a), "fxtest", "part", build) == pa2
     assert len(calls) == 3
 
 
+def test_fixture_rebuilds_when_builder_changes(sf_dir, tmp_path):
+    """derived_fixture is keyed by its builder's source as well: a new
+    builder over an unchanged source gets its own fixture, and the
+    previous builder's fixture is removed. The same builder text in
+    another checkout (another file path) shares the fixture."""
+    import importlib.util
+    import shutil
+
+    d = tmp_path / "sf"
+    d.mkdir()
+    shutil.copy(os.path.join(sf_dir, "part.parquet"), d / "part.parquet")
+
+    builds = []
+    for checkout in ("one", "two"):
+        mod = tmp_path / checkout / "builder.py"
+        mod.parent.mkdir()
+        mod.write_text("def build(src, out):\n    open(out + '/x', 'w').close()\n")
+        spec = importlib.util.spec_from_file_location(f"builder_{checkout}", mod)
+        m = importlib.util.module_from_spec(spec)
+        spec.loader.exec_module(m)
+        builds.append(m.build)
+    p_one = derived_fixture(str(d), "fxbuilder", "part", builds[0])
+    assert derived_fixture(str(d), "fxbuilder", "part", builds[1]) == p_one
+
+    def build_old(src, out):
+        with open(os.path.join(out, "data.txt"), "w") as fh:
+            fh.write("old")
+
+    def build_new(src, out):
+        with open(os.path.join(out, "data.txt"), "w") as fh:
+            fh.write("new")
+
+    p_old = derived_fixture(str(d), "fxbuilder", "part", build_old)
+    p_new = derived_fixture(str(d), "fxbuilder", "part", build_new)
+    assert p_new != p_old
+    assert not os.path.exists(p_old)
+    with open(os.path.join(p_new, "data.txt")) as fh:
+        assert fh.read() == "new"
+
+
 def test_orc_fixture_rebuilds_on_source_rewrite(spark, sf_dir, tmp_path):
-    """q_scan_orc reads a DuckDB-built ORC copy of part.parquet; after
+    """q_scan_orc reads a pyarrow-built ORC copy of part.parquet; after
     the source is rewritten in place, the query must read a rebuilt
     copy, not the stale one."""
     import shutil

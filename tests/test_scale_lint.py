@@ -3,10 +3,10 @@
 1. **Zero Spark jobs at plan construction** — calling any
    ``queries()[name](spark, sf_dir)`` must only BUILD a plan. An
    earlier common-neighbor auto path ran persist() + two probe actions
-   at construction time; stats now come from a driver-side DuckDB
+   at construction time; stats now come from a driver-side pyarrow
    probe held by the table catalog (queries/graph.py). Driver-side
-   (non-Spark) prep like the DuckDB fixture COPYs is allowed — the lint
-   counts Spark jobs only.
+   (non-Spark) prep like the pyarrow fixture builders is allowed — the
+   lint counts Spark jobs only.
 
 2. **No unpartitioned row-level windows** — a
    ``Window.orderBy(...)`` without ``partitionBy`` funnels every row
@@ -345,6 +345,36 @@ def test_operator_defaults_are_set():
         "defaulted parameters no caller sets — make each a module "
         "constant:\n" + "\n".join(unset)
     )
+
+
+def test_engine_never_imports_duckdb():
+    """DuckDB is the oracle: only ``oracle.py`` may import it. An
+    engine that builds its fixtures or plan-time statistics with the
+    oracle's engine checks itself with the tool it is checked by."""
+    import ast
+    import os
+
+    pkg = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "frauddetection_spark",
+    )
+    sites = []
+    for dirpath, _dirs, files in os.walk(pkg):
+        for fname in files:
+            path = os.path.join(dirpath, fname)
+            if not fname.endswith(".py") or path == os.path.join(pkg, "oracle.py"):
+                continue
+            with open(path) as fh:
+                tree = ast.parse(fh.read(), filename=path)
+            for node in ast.walk(tree):
+                names = (
+                    [a.name for a in node.names] if isinstance(node, ast.Import)
+                    else [node.module or ""] if isinstance(node, ast.ImportFrom)
+                    else []
+                )
+                if any(n.split(".")[0] == "duckdb" for n in names):
+                    sites.append(f"{os.path.relpath(path, pkg)}:{node.lineno}")
+    assert sites == [], "engine modules import duckdb:\n" + "\n".join(sites)
 
 
 def test_zero_jobs_at_construction(spark, sf_dir, plan_inspections):
