@@ -36,14 +36,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-MEDIA_META = StructType(
-    [
-        StructField("kind", StringType()),
-        StructField("n_bytes", LongType()),
-        StructField("sha", StringType()),
-    ]
-)
-
 DECODED_SCHEMA = StructType(
     [
         StructField("doc_id", LongType()),

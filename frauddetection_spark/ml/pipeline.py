@@ -179,16 +179,6 @@ def save_load_roundtrip(model, spark: SparkSession, path: str | None = None):
     return PipelineModel.load(path), path
 
 
-def train_and_evaluate(
-    spark: SparkSession, sf_dir: str, classifier: str = "lr"
-) -> dict[str, float]:
-    """End-to-end: dataset → fit → oracle-formula metrics."""
-    dataset, cols = build_dataset(spark, sf_dir)
-    track_cache(dataset.persist())
-    model = train(dataset, cols, classifier=classifier)
-    return evaluate(model, dataset)
-
-
 def train_weighted(
     dataset: DataFrame,
     feature_cols: list[str],

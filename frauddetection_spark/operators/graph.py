@@ -194,10 +194,9 @@ def common_neighbor_pairs(
       from ``stats.values``.
 
     Pass ``stats`` when the caller already knows them (catalog /
-    ANALYZE), and NO Spark job runs at construction. Without them a
-    probe over the persisted distinct pairs computes the same four
-    fields at plan-construction time (a documented cost: the only path
-    of this operator that is not job-free at construction).
+    ANALYZE) to get the cost-based pick. Without them the operator
+    plans the inverted join. Either way NO Spark job runs at
+    construction.
 
     Both strategies are semantically identical for min_common ≥ 1 (the
     join-based inverted path cannot observe zero-overlap pairs, so
@@ -211,30 +210,9 @@ def common_neighbor_pairs(
         .filter(F.col("ct").isNotNull())
         .distinct()
     )
-    if stats is None:
-        # persist FIRST so the probe's scan — typically a JSON extract
-        # over events, the expensive part — fills the cache the chosen
-        # plan then reuses. The degree aggregate gives nc AND exact Σd²
-        # in one pass.
-        c = track_cache(c.persist())
-        degs = c.groupBy("ct").agg(F.count("*").alias("d"))
-        row = degs.agg(
-            F.count("*").alias("nc"),
-            F.sum(F.col("d") * F.col("d")).alias("sd2"),
-        ).first()
-        n_contacts = int(row["nc"])
-        values = None
-        if n_contacts <= BITMASK_MAX_CONTACTS:
-            values = sorted(r["ct"] for r in degs.select("ct").collect())
-        stats = ContactStats(
-            n_contacts,
-            c.select("u").distinct().count(),
-            int(row["sd2"] or 0),
-            values,
-        )
-
     if (
-        stats.values is not None
+        stats is not None
+        and stats.values is not None
         and _pick_cn_strategy(stats.n_contacts, stats.n_users, stats.sum_d2)
         == "bitmask"
     ):

@@ -155,7 +155,7 @@ def _block_pairs_cogrouped(emb: DataFrame):
     return left.groupBy("lb", "rb").cogroup(right.groupBy("lb", "rb"))
 
 
-def knn_topk_bruteforce(spark, emb: DataFrame) -> DataFrame:
+def knn_topk_bruteforce(emb: DataFrame) -> DataFrame:
     """Exact top-KNN_K cosine neighbors via a distributed numpy int64
     kernel (block nested loop, `_block_pairs_cogrouped`).
 
@@ -221,9 +221,7 @@ def knn_topk_bruteforce(spark, emb: DataFrame) -> DataFrame:
     )
 
 
-def neardup_pairs_bruteforce(
-    spark, emb: DataFrame, threshold: float
-) -> DataFrame:
+def neardup_pairs_bruteforce(emb: DataFrame, threshold: float) -> DataFrame:
     """Unordered pairs with cosine ≥ threshold — same distributed
     block-nested-loop kernel as `knn_topk_bruteforce`; qualifying pairs
     are emitted inside the kernel (id_a < id_b appears in exactly one

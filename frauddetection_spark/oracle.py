@@ -17,8 +17,6 @@ import pandas as pd
 
 from frauddetection_spark.sources.tables import TABLE_NAMES
 
-FLOAT_TOL = 1e-9
-
 
 @dataclass
 class CompareResult:

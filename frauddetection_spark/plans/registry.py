@@ -5,8 +5,9 @@ contract column) to
 
 - ``fn(spark, sf_dir) -> DataFrame`` — the Spark-first implementation,
 - ``oracle`` — the DuckDB-SQL twin (None → driver's weaker rows-only
-  check, for genuinely non-SQL-expressible ops),
-- ``survey`` — the §2 row id(s) this query covers, for judge parity.
+  check, for genuinely non-SQL-expressible ops).
+
+SURVEY.md §2 and §2.9 map every query name to the row it covers.
 
 Authoring rules (SURVEY.md §5):
 - alias every computed column identically in both twins;
@@ -32,8 +33,6 @@ class QuerySpec:
     name: str
     fn: QueryFn
     oracle: str | None
-    survey: str = ""
-    doc: str = ""
 
 
 REGISTRY: dict[str, QuerySpec] = {}
@@ -63,7 +62,7 @@ _QUERY_MODULES = (
 )
 
 
-def register(name: str, oracle: str | None, survey: str = "", doc: str = ""):
+def register(name: str, oracle: str | None):
     """Decorator: add a (spark, sf_dir) -> DataFrame callable to the catalog.
 
     The registered callable releases every TRACKED cache left by prior
@@ -95,13 +94,7 @@ def register(name: str, oracle: str | None, survey: str = "", doc: str = ""):
             _LAST_CONSTRUCTED = name
             return fn(spark, sf_dir)
 
-        REGISTRY[name] = QuerySpec(
-            name=name,
-            fn=guarded,
-            oracle=oracle,
-            survey=survey,
-            doc=doc or (fn.__doc__ or ""),
-        )
+        REGISTRY[name] = QuerySpec(name=name, fn=guarded, oracle=oracle)
         return fn
 
     return wrap

@@ -55,7 +55,3 @@ def cents(c: Column | str, scale: int = 100) -> Column:
     """
     col = F.col(c) if isinstance(c, str) else c
     return F.round(col * scale).cast("bigint")
-
-
-# DuckDB twin of cents()
-SQL_CENTS = "CAST(round({col} * {scale}) AS BIGINT)"

@@ -62,7 +62,6 @@ ANCHOR = "2024-01-01"
     FROM s WHERE n_days >= 2
     ORDER BY user_id
     """,
-    survey="A2,A10",
 )
 def q_trend_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user spend trend: OLS slope/intercept of daily cents vs day
@@ -136,7 +135,6 @@ def q_trend_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
                AS gini
     FROM u ORDER BY user_id
     """,
-    survey="A6,A11",
 )
 def q_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Behavioral diversity: Shannon entropy and Gini impurity of each
@@ -206,7 +204,6 @@ def q_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM act a JOIN sized s ON a.cw = s.cw
     ORDER BY cohort_week, week_offset
     """,
-    survey="A12",
 )
 def q_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cohort retention triangle: users cohorted by first active week,
@@ -291,7 +288,6 @@ def q_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
       ON a.user_id = n.user_id AND a.week = n.week
     ORDER BY a.user_id, a.week
     """,
-    survey="A3,A8",
 )
 def q_running_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cumulative distinct contacts per user by week. A naive running
@@ -366,7 +362,6 @@ def q_running_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
                        2) - 3, 6) AS kurtosis
     FROM s ORDER BY event_type
     """,
-    survey="A2,A10",
 )
 def q_skew_kurtosis(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Population skewness and excess kurtosis per event_type, computed
@@ -452,7 +447,6 @@ def q_skew_kurtosis(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM weekly
     ORDER BY grain, bucket
     """,
-    survey="A15",
 )
 def q_multi_grain_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hypertable-style multi-resolution rollup: hourly aggregates
@@ -537,7 +531,6 @@ def q_multi_grain_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY d.user_id
     ORDER BY d.user_id
     """,
-    survey="A4,A10",
 )
 def q_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Robust per-user outlier detection: lower-median of cents, MAD
@@ -600,7 +593,6 @@ def q_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE p.event_type = 'purchase' AND c.event_type = 'click'
     ORDER BY purchase_id, click_id
     """,
-    survey="E7,J3",
 )
 def q_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch twin of the stream-stream interval join
@@ -660,7 +652,6 @@ def q_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE s.tok <> ''
     ORDER BY doc_id, pos
     """,
-    survey="E4",
 )
 def q_posexplode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordinal tokenization: explode each document's tokens WITH their
@@ -713,7 +704,6 @@ _SQL_QUANT_VALUES = ", ".join(
       ON r.grn = (q.num * r.nn + q.den - 1) // q.den
     ORDER BY event_type, q_label
     """,
-    survey="A4,A14",
 )
 def q_quantile_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact p25/p50/p75/p90/p99 per event_type as ACTUAL data values
@@ -800,7 +790,6 @@ def q_quantile_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM c WHERE 2 * cum >= tot
     GROUP BY user_id ORDER BY user_id
     """,
-    survey="A4,A7",
 )
 def q_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Value-weighted median activity hour per user: the smallest hour
@@ -855,7 +844,6 @@ def q_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(max(widx) AS BIGINT) AS last_week
     FROM wk GROUP BY user_id ORDER BY user_id
     """,
-    survey="A13,P10",
 )
 def q_bitmap_weeks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user weekly-activity bitmap: bit_or(1 << week_index) packs a
@@ -912,7 +900,6 @@ def q_bitmap_weeks(spark: SparkSession, sf_dir: str) -> DataFrame:
                AS pct_change
     FROM wk ORDER BY user_id, week
     """,
-    survey="A8",
 )
 def q_pct_change(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Week-over-week relative spend change per user (lag + one int
@@ -957,7 +944,6 @@ def q_pct_change(spark: SparkSession, sf_dir: str) -> DataFrame:
                                    x -> abs(CAST(x AS DOUBLE)))) AS max_abs
     FROM embeddings ORDER BY vec_id
     """,
-    survey="E3,P10",
 )
 def q_array_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-embedding L2 norm, mean and max-abs computed entirely with
@@ -1017,7 +1003,6 @@ def q_array_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(n_types AS BIGINT) AS n_types
     FROM r WHERE rn = 1 ORDER BY user_id
     """,
-    survey="A2,A14",
 )
 def q_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic per-user modal event type (ties broken
@@ -1064,7 +1049,6 @@ def q_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
                 AS BIGINT) AS k_sum
     FROM events GROUP BY event_type ORDER BY event_type
     """,
-    survey="E6",
 )
 def q_json_flatten(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Typed JSON parsing: `from_json(props, 'k BIGINT')` materializes
@@ -1114,7 +1098,6 @@ def q_json_flatten(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT purchase_id, user_id, click_id, gap_us
     FROM pairs WHERE rn = 1 ORDER BY purchase_id
     """,
-    survey="J3,A14",
 )
 def q_first_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-touch attribution: each purchase credited to the EARLIEST
@@ -1178,7 +1161,6 @@ def q_first_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM rich r FULL OUTER JOIN big b ON r.c_custkey = b.o_custkey
     ORDER BY custkey
     """,
-    survey="J1,J6",
 )
 def q_join_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FULL OUTER equi-join with both null sides populated (rich
@@ -1236,7 +1218,6 @@ def q_join_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
                  ROWS BETWEEN 2 PRECEDING AND CURRENT ROW)
     ORDER BY user_id, day
     """,
-    survey="A8,A1",
 )
 def q_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """3-row trailing moving average of daily spend per user — the
@@ -1292,7 +1273,6 @@ FUZZY_MAX_DIST = 4
     FROM pairs WHERE dist <= {FUZZY_MAX_DIST}
     GROUP BY 1, 2 ORDER BY p_brand, dist
     """,
-    survey="E2,J4",
 )
 def q_fuzzy_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Blocked fuzzy matching: the (brand, dist) histogram of
@@ -1371,7 +1351,6 @@ def q_fuzzy_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM p WHERE event_id - prev_id > 1
     ORDER BY gap_start
     """,
-    survey="A8,P7",
 )
 def q_sequence_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Missing-id range detection over the purchase event stream (the
@@ -1423,7 +1402,6 @@ _BAD_EVERY = 100  # one injected bad line per _BAD_EVERY source rows
            count(DISTINCT user_id) AS n_users
     FROM events
     """,
-    survey="S1,P5",
 )
 def q_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Robust CSV ingestion: a fixture seeded from events.parquet with
@@ -1529,7 +1507,6 @@ def q_csv_malformed(spark: SparkSession, sf_dir: str) -> DataFrame:
            coalesce(order_year, -1) AS order_year
     FROM u ORDER BY o_orderkey
     """,
-    survey="U1,P6",
 )
 def q_union_by_name(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Schema-evolution union: an old extract (3 columns) unioned with
@@ -1574,7 +1551,6 @@ def q_union_by_name(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events GROUP BY 1, 2
     ORDER BY user_id, event_type
     """,
-    survey="E6,A2",
 )
 def q_map_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MapType surface: per-user event-type counts packed into a
@@ -1603,7 +1579,8 @@ def q_map_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register("q_hll_rollup", oracle=None, survey="A3", doc="rows-only: sketch bytes are engine-internal")
+# Rows-only: sketch bytes are engine-internal.
+@register("q_hll_rollup", oracle=None)
 def q_hll_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Datasketches-HLL rollup: per-(type, week) user sketches merged
     into per-type distinct-user estimates — the MERGEABLE-sketch
@@ -1670,7 +1647,6 @@ ER_MAX_DIST = 3
            string_agg(p_partkey, ',' ORDER BY p_partkey) AS members
     FROM g GROUP BY entity_id ORDER BY entity_id
     """,
-    survey="E2,J4,M2",
 )
 def q_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end entity resolution: blocked Levenshtein pairs
@@ -1769,7 +1745,6 @@ def q_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM best WHERE pick = 1
     ORDER BY user_id
     """,
-    survey="A8,A10",
 )
 def q_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Single-changepoint detection per user (the first split of binary
@@ -1894,7 +1869,6 @@ def q_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY j.feature, t.n
     ORDER BY j.feature
     """,
-    survey="A10,M5",
 )
 def q_mutual_info(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mutual-information feature ranking: MI(feature; purchase) in
@@ -2020,7 +1994,6 @@ def q_mutual_info(spark: SparkSession, sf_dir: str) -> DataFrame:
                AS f_stat
     FROM cells
     """,
-    survey="A10,A11",
 )
 def q_anova_f(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-way ANOVA: does mean spend differ across the five event
@@ -2133,7 +2106,6 @@ def q_anova_f(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE r.rn = (r.n_pairs + 1) // 2
     ORDER BY user_id
     """,
-    survey="A2,A4,J1",
 )
 def q_theilsen(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Theil–Sen estimator of each user's daily-spend trend: the
@@ -2237,7 +2209,6 @@ def q_theilsen(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(count(*) AS BIGINT) AS n_allocs
     FROM spread GROUP BY 1 ORDER BY 1
     """,
-    survey="P4,A2,J1",
 )
 def q_date_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pro-rata allocation over a date interval — the revenue-

@@ -48,7 +48,6 @@ PATH_STEPS = 3
     SELECT path, count(*) AS n_users
     FROM p GROUP BY 1 ORDER BY path
     """,
-    survey="A8,A13",
 )
 def q_funnel_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distribution of each user's FIRST {K} event types as an ordered
@@ -108,7 +107,6 @@ def q_funnel_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
              / sum(n) OVER (PARTITION BY from_type) AS prob
     FROM c ORDER BY from_type, to_type
     """,
-    survey="A8,A11",
 )
 def q_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-order Markov transition matrix of event types within each
@@ -166,7 +164,6 @@ def q_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
              - CAST(count(*) + 1 AS DOUBLE) / count(*) AS gini
     FROM r
     """,
-    survey="A10,A14",
 )
 def q_lorenz_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gini coefficient of spend concentration across users — "do 1%
@@ -239,7 +236,6 @@ def q_lorenz_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
                AS assortativity
     FROM s
     """,
-    survey="J5,A10",
 )
 def q_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Degree assortativity of the contact graph — do hubs connect to
@@ -324,7 +320,6 @@ def q_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) s
     ORDER BY u.user_id, s.event_id
     """,
-    survey="A14,P2",
 )
 def q_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated LATERAL subquery surface: per-user top-2 amounts
@@ -380,7 +375,6 @@ def q_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
            count(*) AS n_runs
     FROM runs GROUP BY 1, 2 ORDER BY event_type, run_len
     """,
-    survey="A8,A13",
 )
 def q_rle_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distribution of consecutive same-event-type streak lengths per
@@ -417,9 +411,9 @@ def q_rle_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 # anchor: 2024-02-01T00:00:00Z in epoch microseconds (just past the
-# testdata's final event) and a 7-day decay time-constant in micros
+# testdata's final event); the 7-day decay time-constant is the
+# 168-hour divisor in both twins
 _DECAY_ANCHOR_US = 1_706_745_600_000_000
-_DECAY_TAU_US = 604_800_000_000.0
 _DECAY_Q = 1_000_000  # 1e-6 fixed point for order-independent sums
 
 
@@ -443,7 +437,6 @@ _DECAY_Q = 1_000_000  # 1e-6 fixed point for order-independent sums
            CAST(sum(term_q) AS DOUBLE) / {_DECAY_Q} / 100 AS decay_score
     FROM terms GROUP BY 1 ORDER BY user_id
     """,
-    survey="A1,A10",
 )
 def q_decay_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user exponentially time-decayed spend Σ xᵢ·e^(−ageᵢ/τ)
@@ -518,7 +511,6 @@ def q_decay_score(spark: SparkSession, sf_dir: str) -> DataFrame:
                AS cusum
     FROM f ORDER BY day
     """,
-    survey="A1,A8",
 )
 def q_cusum_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUSUM control chart over daily spend: running Σ(xₐ − x̄) whose
@@ -590,7 +582,6 @@ def q_cusum_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
            (sd_us - mean_us) / (sd_us + mean_us) AS burstiness
     FROM v ORDER BY user_id
     """,
-    survey="A8,A10",
 )
 def q_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Goh-Barabási burstiness B = (σ−μ)/(σ+μ) of each user's
@@ -697,7 +688,6 @@ _KM_Q = 1_000_000_000
            END AS survival
     FROM terms ORDER BY t
     """,
-    survey="A8,A11,M5",
 )
 def q_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kaplan-Meier survival curve for time-to-first-purchase with
@@ -803,7 +793,6 @@ _CEP_WINDOW_US = 3_600_000_000  # pattern must complete within 1 hour
       AND us - us2 <= {_CEP_WINDOW_US}
     GROUP BY 1 ORDER BY user_id
     """,
-    survey="A8,P2",
 )
 def q_cep_3step(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Complex-event-processing pattern: CONSECUTIVE view → click →
@@ -867,7 +856,6 @@ def q_cep_3step(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(sum(c) AS BIGINT) AS volume_cents
     FROM e GROUP BY hour ORDER BY hour
     """,
-    survey="A1,A8,S5",
 )
 def q_ohlc_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hourly OHLC candles over event amounts — the market-data /
@@ -937,7 +925,6 @@ def q_ohlc_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(wsum AS DOUBLE) / dur_us AS twap_cents
     FROM w ORDER BY user_id
     """,
-    survey="A1,A8",
 )
 def q_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-weighted average value per user — each event's amount
@@ -999,7 +986,6 @@ def q_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(dwell_us AS DOUBLE) / sum(dwell_us) OVER () AS share
     FROM g ORDER BY event_type
     """,
-    survey="A8,A11",
 )
 def q_dwell_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Where does user time actually GO: each event's dwell is the gap
@@ -1069,7 +1055,6 @@ _RC_WIN = 7  # trailing days in the correlation window
            END AS corr_7d
     FROM w ORDER BY day
     """,
-    survey="A1,A10",
 )
 def q_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trailing {N}-day rolling Pearson correlation between the daily
@@ -1178,7 +1163,6 @@ def q_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT day, status, count(*) AS n_users
     FROM allrows GROUP BY 1, 2 ORDER BY day, status
     """,
-    survey="A8,A11,A12",
 )
 def q_growth_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily growth accounting — every active user classified as new
@@ -1270,7 +1254,6 @@ def q_growth_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(d.dau AS DOUBLE) / w.wau AS stickiness
     FROM days d JOIN wau w USING (day) ORDER BY day
     """,
-    survey="A3,A8,A12",
 )
 def q_rolling_dau(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling 7-day distinct actives: per calendar day, DAU, trailing
@@ -1360,7 +1343,6 @@ def q_rolling_dau(spark: SparkSession, sf_dir: str) -> DataFrame:
                AS cum_rev_cents
     FROM g ORDER BY cohort, week_index
     """,
-    survey="A1,A5,A8",
 )
 def q_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cohort LTV curve: users grouped by first-seen week, purchase
@@ -1426,7 +1408,6 @@ def q_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
            ) AS filled_cents
     FROM o ORDER BY user_id, event_id
     """,
-    survey="A8,P5",
 )
 def q_fill_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Forward-fill / LOCF: a sparse observation (purchase amounts;
@@ -1486,7 +1467,6 @@ def q_fill_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
              / (CAST(n_events AS HUGEINT) * tot_c) AS dow_index
     FROM g, tot ORDER BY dow
     """,
-    survey="A2,A11",
 )
 def q_seasonality_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Day-of-week seasonality index: mean spend per weekday divided
@@ -1532,9 +1512,6 @@ def q_seasonality_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
 # next-event training examples (sequence-model dataset builder)
 # ---------------------------------------------------------------------------
 
-_SEQ_CTX = 3  # context length (events)
-
-
 @register(
     "q_sequence_examples",
     oracle=f"""
@@ -1556,7 +1533,6 @@ _SEQ_CTX = 3  # context length (events)
     JOIN o d ON d.user_id = a.user_id AND d.rn = a.rn + 3
     ORDER BY a.user_id, example_id
     """,
-    survey="A8,A13,M1",
 )
 def q_sequence_examples(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding-window next-event training examples: every length-{K}
@@ -1630,7 +1606,6 @@ def q_sequence_examples(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(sum(bp) AS BIGINT) AS credit_bp
     FROM credit GROUP BY 1 ORDER BY channel
     """,
-    survey="A8,A11,J3",
 )
 def q_attribution_ushape(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Position-based (U-shaped) attribution: each converting user's
@@ -1731,7 +1706,6 @@ def markov_removal_effects(
             mass = nxt
         result[sc] = (mass.get("CONV", 0), mass.get("NULL", 0))
     return result
-_MK_TOUCHES = ("view", "click", "signup")
 
 
 @register(
@@ -1870,7 +1844,6 @@ _MK_TOUCHES = ("view", "click", "signup")
     LEFT JOIN v6 b ON b.scenario = 'full' AND b.state = 'CONV'
     ORDER BY f.scenario
     """,
-    survey="A8,J5",
 )
 def q_attribution_markov(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Markov-chain removal-effect attribution — the data-driven
@@ -2049,7 +2022,6 @@ def q_attribution_markov(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(s_next AS DOUBLE) / s_cur AS dev_factor
     FROM pairs ORDER BY from_age
     """,
-    survey="A8,A5",
 )
 def q_chain_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Chain-ladder development factors from the cohort run-off
@@ -2182,7 +2154,6 @@ _SHAP_WINDOW_US = 172800000000  # first-48h journey window per user
            CAST(phi6_q9 AS DOUBLE) / 6e9 AS shapley_value
     FROM phi ORDER BY channel
     """,
-    survey="A8,J5",
 )
 def q_attribution_shapley(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shapley-value attribution — the coalition model completing the

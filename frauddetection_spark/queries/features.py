@@ -58,7 +58,6 @@ def _counterparty(df: DataFrame) -> DataFrame:
     FROM e
     WINDOW w AS (PARTITION BY user_id, {_WEEK})
     """,
-    survey="A1",
 )
 def q_window_agg_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-row weekly mean/var/count (reference: groupby([user,
@@ -111,7 +110,6 @@ def q_window_agg_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
            count(*) AS n_active_days
     FROM per_day GROUP BY user_id ORDER BY user_id
     """,
-    survey="A5",
 )
 def q_two_level_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mean of per-day means/medians per user (reference: time_gap
@@ -170,7 +168,6 @@ def q_two_level_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(n AS DOUBLE) / sum(n) OVER (PARTITION BY user_id) AS share
     FROM c ORDER BY user_id, hour_of_day
     """,
-    survey="A6",
 )
 def q_histogram_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Normalized hour-of-day histogram per user (reference:
@@ -219,7 +216,6 @@ def q_histogram_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
            n AS n_counterparties
     FROM agg ORDER BY user_id
     """,
-    survey="A7",
 )
 def q_share_dispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Energy dispersion: per-counterparty share of a user's events,
@@ -276,7 +272,6 @@ def q_share_dispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM g WHERE gap_us IS NOT NULL
     GROUP BY user_id ORDER BY user_id
     """,
-    survey="A8",
 )
 def q_lag_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mean inter-event gap per user, same-day pairs only (reference:
@@ -329,7 +324,6 @@ def q_lag_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lagged WHERE prev IS NOT NULL
     ORDER BY user_id, week
     """,
-    survey="A9,U3",
 )
 def q_jaccard_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Jaccard overlap of a user's contact set vs the previous week
@@ -392,7 +386,6 @@ def q_jaccard_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ELSE 0.0 END AS acctbal_z
     FROM s ORDER BY c_custkey
     """,
-    survey="A10",
 )
 def q_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-nation z-score of account balance (reference: normalize,
@@ -432,7 +425,6 @@ def q_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(n AS DOUBLE) / sum(n) OVER () AS type_share
     FROM c ORDER BY event_type
     """,
-    survey="A11",
 )
 def q_class_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Class rates + group shares (reference: fraud rate sum(y)/len(y),
@@ -492,7 +484,6 @@ def q_class_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
     LEFT JOIN counts c ON c.user_id = u.user_id AND c.week = w.week
     ORDER BY u.user_id, w.week
     """,
-    survey="A12",
 )
 def q_dense_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dense (user × week) grid with zero-filled gaps (reference:
@@ -555,7 +546,6 @@ def q_dense_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
            count(*) AS n_weeks
     FROM counts GROUP BY user_id ORDER BY user_id
     """,
-    survey="A13",
 )
 def q_collect_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user week-ordered series (reference: slice_feature[id]
@@ -608,7 +598,6 @@ def q_collect_series(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1, 2, 3
     ORDER BY user_id, scale, window_start
     """,
-    survey="M1,A1,A2",
 )
 def q_multiscale_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's central loop — `for scale in {1W,2W,3W,4W}:
@@ -718,7 +707,6 @@ def q_multiscale_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN gagg g ON a.user_id = g.user_id AND a.week = g.week
     ORDER BY a.user_id, a.week
     """,
-    survey="A1,A2,A3,A6,A8,P4,S5",
 )
 def q_behavioral_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FLAGSHIP: the reference's entire per-slice feature loop
@@ -841,7 +829,6 @@ def q_behavioral_features(spark: SparkSession, sf_dir: str) -> DataFrame:
                          THEN 1 ELSE 0 END) AS BIGINT) AS n_full_funnel
     FROM firsts
     """,
-    survey="A8,P9",
 )
 def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered funnel conversion: users whose FIRST signup precedes
@@ -892,7 +879,6 @@ TRAIL_S = 7 * 86400
                  RANGE BETWEEN {TRAIL_S} PRECEDING AND CURRENT ROW)
     ORDER BY event_id
     """,
-    survey="A1,A8",
 )
 def q_trailing_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event 7-day trailing count + exact-cents sum via an
@@ -944,7 +930,6 @@ def q_trailing_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     WINDOW w AS (ORDER BY cents_total, user_id)
     ORDER BY user_id
     """,
-    survey="A10,A14",
 )
 def q_user_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global spend-distribution ranks per user: decile bucket,
@@ -1013,7 +998,6 @@ def q_user_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM events
     ) WHERE rn = 1 ORDER BY user_id
     """,
-    survey="U2,A8",
 )
 def q_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Upsert compaction: the current-state snapshot a CDC/merge sink
@@ -1057,7 +1041,6 @@ def q_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(valid_to IS NULL AS BIGINT) AS is_current
     FROM ordered ORDER BY user_id, valid_from, event_id
     """,
-    survey="A8,S5",
 )
 def q_scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SCD-type-2 historization: each event opens a validity interval
@@ -1126,7 +1109,6 @@ def q_scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY r.event_type, b.n, b.lo, b.hi
     ORDER BY r.event_type
     """,
-    survey="A4,P10",
 )
 def q_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-group winsorization (clip to [p05, p95]) with RANK-derived
@@ -1217,7 +1199,6 @@ SESSION_GAP_US = 30 * 60 * 1_000_000  # 30-minute inactivity gap
     FROM sess GROUP BY user_id, session_id
     ORDER BY user_id, session_id
     """,
-    survey="A8",
 )
 def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch sessionization: split each user's event stream into
@@ -1284,7 +1265,6 @@ IV_BUCKET_US = 3600 * 1_000_000  # join-bucket granularity (1 hour)
     GROUP BY p.user_id, p.event_id
     ORDER BY p.user_id, p.event_id
     """,
-    survey="J3",
 )
 def q_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Point-in-interval join: every 'error' event opens a 2-hour
@@ -1378,7 +1358,6 @@ _PG_P = 90  # percentile (integer percent, keeps the target arithmetic exact)
                AS p{_PG_P}_cents
     FROM v ORDER BY event_type
     """,
-    survey="A4,A2",
 )
 def q_group_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact linearly-interpolated per-group percentile (p{_PG_P} of
@@ -1479,7 +1458,6 @@ def q_group_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
                AS n_ends
     FROM sw GROUP BY 1 ORDER BY 1
     """,
-    survey="A8,A1",
 )
 def q_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Peak simultaneous sessions per day — the sweep-line interval

@@ -60,7 +60,6 @@ _RES_A = 2_654_435_761
            round(log10(1.0 + 1.0 / digit), 6) AS exp_share
     FROM d, tot ORDER BY digit
     """,
-    survey="A6,A11",
 )
 def q_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Leading-digit distribution of order amounts vs the Benford
@@ -142,7 +141,6 @@ def _ntile(rn: Column, n: Column, k: int) -> Column:
                AS m_score
     FROM s ORDER BY custkey
     """,
-    survey="A14,A2",
 )
 def q_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recency/Frequency/Monetary quintile scores per customer — the
@@ -238,7 +236,6 @@ def q_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE prev_us IS NOT NULL AND us - prev_us <= {SWIPE_GAP_US}
     ORDER BY event_id
     """,
-    survey="A8",
 )
 def q_double_swipe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Repeated identical-amount transactions by the same user within
@@ -295,7 +292,6 @@ def q_double_swipe(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ORDER BY user_id
     """,
-    survey="A14",
 )
 def q_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """2-D Pareto frontier of users over (total spend, event count):
@@ -372,7 +368,6 @@ def q_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE c.op IS NULL OR c.op <> 'D'
     ORDER BY custkey
     """,
-    survey="U1,J1",
 )
 def q_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MERGE INTO semantics (update / delete / insert in one pass) on
@@ -446,7 +441,6 @@ def q_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM r WHERE rn <= 5
     ORDER BY event_type, rn
     """,
-    survey="R4,R2",
 )
 def q_reservoir_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-size (k=5) per-group sample, reproducible across engines
@@ -500,7 +494,6 @@ def q_reservoir_group(spark: SparkSession, sf_dir: str) -> DataFrame:
              / (CAST(row_n * col_n AS DOUBLE) / n_total) AS chisq_term
     FROM m, tot ORDER BY dow, event_type
     """,
-    survey="A11,A6",
 )
 def q_chisq_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Chi-square independence test cells for day-of-week × event-type
@@ -592,7 +585,6 @@ _EWMA_NUM, _EWMA_DEN = _ewma_sql_terms()
     SELECT user_id, day, day_cents, num / den AS ewma
     FROM l ORDER BY user_id, day
     """,
-    survey="A1,A8",
 )
 def q_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exponentially-weighted moving average of daily spend (α = 1/2
@@ -686,7 +678,6 @@ def q_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
            END AS cents_filled
     FROM f ORDER BY user_id, h
     """,
-    survey="A12,A8",
 )
 def q_linear_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-fill each user's hourly spend series by linear interpolation
@@ -793,7 +784,6 @@ def q_linear_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
              / CAST(n * sxx - CAST(sx AS HUGEINT) * sx AS DOUBLE) AS beta
     FROM s ORDER BY flag
     """,
-    survey="A10,A2",
 )
 def q_corr_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-group Pearson correlation + OLS slope of quantity vs price
@@ -875,7 +865,6 @@ def q_corr_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND n * syy - CAST(sy AS HUGEINT) * sy > 0
     ORDER BY user_id
     """,
-    survey="A8,A10",
 )
 def q_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lag-1 autocorrelation of each user's weekly spend — the
@@ -966,7 +955,6 @@ _SQL_INTERP_VALUES = ", ".join(
                   AND hi.grn = i.lo_grn + 1
     ORDER BY i.event_type, i.q_label
     """,
-    survey="A4,A14",
 )
 def q_quantile_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """percentile_cont (linearly interpolated) p50/p90 per event_type —
@@ -1118,7 +1106,6 @@ _BOOT_U = (
     FROM w GROUP BY 1, 2
     ORDER BY event_type, replica
     """,
-    survey="R4,A10",
 )
 def q_bootstrap_means(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Poisson bootstrap of the per-type mean — the distribution-free
@@ -1171,7 +1158,6 @@ def q_bootstrap_means(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(t.n AS DOUBLE) * tt.n_keys / tt.n_rows AS x_mean
     FROM top t, tot tt ORDER BY t.n DESC, t.user_id
     """,
-    survey="A14,A2",
 )
 def q_skew_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heavy-hitter probe for a prospective shuffle key: top-10 keys by
@@ -1240,7 +1226,6 @@ _IT_SPEED = 2_000       # max plausible units per second
       AND dist * 1000000 > {_IT_SPEED} * dt_us
     ORDER BY user_id, event_id
     """,
-    survey="A8,P2",
 )
 def q_impossible_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Impossible-travel detection: flag consecutive events of one
@@ -1321,7 +1306,6 @@ _ST_MIN_HITS = 2           # flag at >= this many near-threshold txns/day
     FROM daily WHERE n_near >= {_ST_MIN_HITS}
     ORDER BY user_id, day
     """,
-    survey="P2,A2,A8",
 )
 def q_structuring(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Structuring / smurfing detection: users making {K}+ purchases
@@ -1420,7 +1404,6 @@ _PEER_Z10000 = 35_000  # flag threshold: 0.6745·dev/MAD > 3.5 (×10⁴)
     WHERE mad.mad > 0 AND dev.d * 6745 > {_PEER_Z10000} * mad.mad
     ORDER BY peer_group, user_id
     """,
-    survey="A4,A10,A11",
 )
 def q_peer_outlier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Peer-group outlier analysis — the AML technique of that name:
@@ -1547,7 +1530,6 @@ _RT_MAX_NET_PCT = 20  # flag pairs whose net is <= this % of gross
             <= {_RT_MAX_NET_PCT} * (ab_cents + ba_cents)
     ORDER BY a, b
     """,
-    survey="J1,A2,P2",
 )
 def q_reciprocal_flows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Round-tripping detection: account pairs moving money in BOTH
@@ -1657,7 +1639,6 @@ _MULE_MIN_PASS_PCT = 60      # passthrough = min(in,out)/max(in,out) >= 60%
             >= {_MULE_MIN_PASS_PCT} * greatest(in_cents, out_cents)
     ORDER BY node, day
     """,
-    survey="A2,P9,U1",
 )
 def q_mule_passthrough(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mule-account passthrough: accounts whose SAME-DAY inbound and
@@ -1770,7 +1751,6 @@ def _taint_sql() -> str:
 @register(
     "q_taint_tracing",
     oracle=_taint_sql(),
-    survey="J5,A2",
 )
 def q_taint_tracing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Follow-the-money taint tracing: seed accounts start with one
@@ -1884,7 +1864,6 @@ _BENFORD_CASE = "CASE d " + " ".join(
     FROM dev JOIN tot USING (event_type)
     GROUP BY event_type ORDER BY event_type
     """,
-    survey="A2,A11,P8",
 )
 def q_benford_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-group Benford conformity: mean absolute deviation between
@@ -1984,7 +1963,6 @@ _CIRC_SIN_CASE = "CASE h " + " ".join(
                AS resultant
     FROM v WHERE n >= 5 ORDER BY user_id
     """,
-    survey="A10,A8",
 )
 def q_circular_hours(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Circular concentration of activity time-of-day: the mean
@@ -2057,7 +2035,6 @@ def q_circular_hours(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM ew JOIN first_seen f ON f.src = ew.src AND f.dst = ew.dst
     GROUP BY 1, 2 ORDER BY user_id, week
     """,
-    survey="J5,A8",
 )
 def q_edge_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Counterparty novelty per user-week: of the distinct
@@ -2162,7 +2139,6 @@ _SEAS_Z10 = 20  # robust-z threshold ×10 (2.0) for the flag predicate
       AND d.ad * 6745 > {_SEAS_Z10} * 1000 * m.mad_n
     ORDER BY event_type, hour_slot, week
     """,
-    survey="A8,A10",
 )
 def q_seasonal_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Seasonal volume anomaly: weekly event counts per (type,
@@ -2287,7 +2263,6 @@ def _fraud_funnel_oracle() -> str:
 @register(
     "q_fraud_funnel",
     oracle=None,  # late-bound below (needs split SQL + threshold consts)
-    survey="A2,J3,R1,M3",
 )
 def q_fraud_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's END-TO-END training-dataset pipeline

@@ -59,7 +59,6 @@ _SQL_EDGES = """
            count(*) AS degree
     FROM sides GROUP BY node ORDER BY node
     """,
-    survey="J5,A2",
 )
 def q_graph_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-node in/out/total degree (reference: nx degree loops over
@@ -84,7 +83,6 @@ def q_graph_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
     HAVING count(*) >= 5
     ORDER BY user_a, user_b
     """,
-    survey="J4",
 )
 def q_join_common_neighbor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """User pairs sharing ≥5 counterparties — buildLSN's similarity
@@ -174,7 +172,6 @@ def _contact_stats(events_path: str) -> ContactStats:
     FROM edges e JOIN node_vals v ON e.src = v.id
     GROUP BY e.dst ORDER BY node
     """,
-    survey="J5",
 )
 def q_graph_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Message passing: per-dst aggregate of src node values (DGL
@@ -229,7 +226,6 @@ def q_graph_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM und u JOIN deg d ON u.dst = d.node
     GROUP BY u.src ORDER BY node
     """,
-    survey="J5",
 )
 def q_neighbor_avg_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mean degree of a node's neighbors over the undirected graph —
@@ -286,7 +282,6 @@ def q_neighbor_avg_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM r1 LEFT JOIN r2 ON r1.id = r2.id
     ORDER BY node
     """,
-    survey="M2,J5",
 )
 def q_propagate_2round(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two rounds of mean-aggregate message passing (the relational
@@ -374,7 +369,6 @@ def q_propagate_2round(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM deg d LEFT JOIN tcount t ON d.node = t.node
     ORDER BY d.node
     """,
-    survey="J5,A2",
 )
 def q_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Local clustering coefficient per node — the reference computes
@@ -427,7 +421,6 @@ def q_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM weighted_edges e JOIN node_vals v ON e.src = v.id
     GROUP BY e.dst ORDER BY node
     """,
-    survey="J5,P9",
 )
 def q_graph_aggregate_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Edge-weighted message passing — DGL's update_all(u_mul_e, sum)
@@ -511,7 +504,6 @@ def q_graph_aggregate_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT node, min(r) AS component
     FROM reach GROUP BY node ORDER BY node
     """,
-    survey="J5,M2",
 )
 def q_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over the events graph — the engine's
@@ -570,7 +562,6 @@ def _pagerank_oracle() -> str:
 @register(
     "q_pagerank",
     oracle=_pagerank_oracle(),
-    survey="J5,M2",
 )
 def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-iteration PageRank over the call graph in exact int64
@@ -614,7 +605,6 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                AS global_clustering
     FROM tri t, wed w
     """,
-    survey="J4,A2",
 )
 def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global triangle census: exact triangle count, wedge (open
@@ -735,7 +725,6 @@ BFS_HOPS = 3
     SELECT node, CAST(min(level) AS INTEGER) AS level
     FROM lv GROUP BY node ORDER BY node
     """,
-    survey="J5",
 )
 def q_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-source BFS, K=3 hops unrolled: shortest hop distance (≤3)
@@ -824,7 +813,6 @@ def _kcore_sql() -> str:
 @register(
     "q_kcore",
     oracle=_kcore_sql(),
-    survey="J5,A2",
 )
 def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """{KCORE_PEELS}-round k-core peel (k={KCORE_K}): repeatedly drop
@@ -928,7 +916,6 @@ def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM nodes CROSS JOIN mx
     ORDER BY node
     """,
-    survey="J5,M2",
 )
 def q_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HITS hubs & authorities, two unrolled power iterations from a
@@ -1029,7 +1016,6 @@ def q_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN deg db ON edge_pairs.v = db.node
     ORDER BY u, v
     """,
-    survey="J4,A9",
 )
 def q_graph_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Neighborhood Jaccard similarity |N(u)∩N(v)| / |N(u)∪N(v)| for
@@ -1170,7 +1156,6 @@ _AA_MAX_CENTER_DEG = 128  # hub-center prune: wedges through hubs excluded
     ANTI JOIN und e ON s.u = e.src AND s.v = e.dst
     ORDER BY s.u, s.v
     """,
-    survey="J4,A9",
 )
 def q_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Adamic-Adar link prediction: score each NON-connected pair that
@@ -1265,7 +1250,6 @@ _TC_DEPTH = 3   # hop bound
     SELECT seed, node, CAST(min(d) AS BIGINT) AS min_depth
     FROM r GROUP BY seed, node ORDER BY seed, node
     """,
-    survey="J5,P2",
 )
 def q_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WITH RECURSIVE transitive closure — nodes reachable within
@@ -1369,7 +1353,6 @@ def _ppr_sql() -> str:
 @register(
     "q_ppr",
     oracle=_ppr_sql(),
-    survey="J5,M2",
 )
 def q_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Personalized PageRank from a seed set (every {MOD}th node),
@@ -1473,7 +1456,6 @@ _CYC_MAX_PIVOT_DEG = 256  # hub pivots excluded from loop enumeration
     SELECT a AS node, count(*) AS n_loops
     FROM cyc GROUP BY 1 ORDER BY node
     """,
-    survey="J4,J5",
 )
 def q_money_loops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Directed 3-cycle census — money-loop detection: A pays B pays C
@@ -1583,7 +1565,6 @@ def _rw_sql() -> str:
 @register(
     "q_random_walks",
     oracle=_rw_sql(),
-    survey="J5,R4",
 )
 def q_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic random-walk corpus — the DeepWalk/node2vec
@@ -1702,7 +1683,6 @@ def q_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
            FROM c3) WHERE rn = 1)
     SELECT node, label FROM l3 ORDER BY node
     """,
-    survey="J5,A2",
 )
 def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Community detection via SYNCHRONOUS label propagation, 3 rounds

@@ -47,7 +47,6 @@ TFIDF_TOP = 3
                          {CHUNK_CHARS})) AS chunk_hash
     FROM spans ORDER BY doc_id, chunk_id
     """,
-    survey="E4",
 )
 def q_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-size character chunking: each document becomes
@@ -117,7 +116,6 @@ def q_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
            min(doc_id) AS first_doc, max(doc_id) AS last_doc
     FROM binned GROUP BY bucket, seq_id ORDER BY bucket, seq_id
     """,
-    survey="E4",
 )
 def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic sequence packing: documents are hash-bucketed
@@ -190,7 +188,6 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) WHERE rank <= {TFIDF_TOP}
     ORDER BY doc_id, rank
     """,
-    survey="E4,E5",
 )
 def q_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 TF-IDF terms per document (smoothed idf = ln((N+1)/(df+1)))
@@ -245,7 +242,6 @@ def q_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_dedup_groups",
     oracle=None,  # set below — needs the similarity module's CTEs
-    survey="E1,E2,M2",
 )
 def q_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """THE dedup endgame: MinHash-LSH near-dup pairs (≥0.2 Jaccard,
@@ -370,7 +366,6 @@ def _decontaminate_oracle() -> str:
 @register(
     "q_decontaminate",
     oracle=None,  # late-bound below (needs textsim's shingle CTE)
-    survey="E2,E4",
 )
 def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Test-set decontamination: flag training documents whose word
@@ -469,7 +464,6 @@ MAX_TOP_FRAC = 0.2
     FROM per p JOIN bg b ON p.doc_id = b.doc_id
     ORDER BY p.doc_id
     """,
-    survey="E5,E4",
 )
 def q_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher/C4-style repetition and shape heuristics per document:
@@ -565,7 +559,6 @@ MIX_ALPHA = 0.7
            round(wt / (SELECT sum(wt) FROM w), 6) AS mix_weight
     FROM w ORDER BY source
     """,
-    survey="R2,E5",
 )
 def q_domain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temperature-based domain mixing (w_s ∝ p_s^0.7, the multilingual
@@ -628,7 +621,6 @@ def q_domain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
                AS max_abs_err
     FROM e ORDER BY vec_id
     """,
-    survey="E3",
 )
 def q_embed_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Symmetric per-vector int8 quantization (scale = max|x|/127,
@@ -670,7 +662,7 @@ def q_embed_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register("q_viz_projection", oracle=None, survey="M7")
+@register("q_viz_projection", oracle=None)
 def q_viz_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Plot-ready 2-D embedding projection (vec_id, label, px, py) —
     the distributed counterpart of the reference's driver-side t-SNE
@@ -749,7 +741,6 @@ def _feature_hash_oracle() -> str:
 @register(
     "q_feature_hash",
     oracle=_feature_hash_oracle(),
-    survey="E8,M1",
 )
 def q_feature_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Feature hashing (Weinberger et al.'s hashing trick — MLlib
@@ -822,7 +813,6 @@ _TMIX_A = 48_271            # Lehmer multiplier
     WHERE r.rn <= t.target
     ORDER BY r.source, r.rn
     """,
-    survey="R2,R4,A2",
 )
 def q_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temperature-weighted source mixing: draw a fixed total budget
@@ -904,7 +894,6 @@ _POOL_Q = 1_000_000  # 1e-6 fixed point per component
            CAST(sum(vq) AS DOUBLE) / {_POOL_Q} / count(*) AS mean_val
     FROM q GROUP BY 1, 2 ORDER BY label, pos
     """,
-    survey="E3,A2",
 )
 def q_embed_meanpool(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Group-wise embedding mean pooling: the per-label centroid table
@@ -992,7 +981,6 @@ def q_embed_meanpool(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM best WHERE rn = 1
     GROUP BY 1, 2 ORDER BY true_label, pred_label
     """,
-    survey="E3,M5",
 )
 def q_nearest_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nearest-centroid classification confusion table: every vector
@@ -1061,9 +1049,6 @@ def q_nearest_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
 # incremental novelty scoring (first-occurrence shingle attribution)
 # ---------------------------------------------------------------------------
 
-_NOV_K = 3  # shingle width (tokens)
-
-
 @register(
     "q_doc_novelty",
     oracle=f"""
@@ -1093,7 +1078,6 @@ _NOV_K = 3  # shingle width (tokens)
     FROM sh JOIN first_seen f USING (shingle)
     GROUP BY 1 ORDER BY doc_id
     """,
-    survey="E2,E7",
 )
 def q_doc_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental novelty score: the fraction of a document's
@@ -1159,7 +1143,6 @@ def q_doc_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_compress_ratio",
     oracle=None,  # DuckDB has no DEFLATE; pinned by property tests +
     #               the driver's rows-only check instead
-    survey="E5,E8",
 )
 def q_compress_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gzip-compressibility quality scoring: compressed/raw byte ratio
@@ -1255,7 +1238,6 @@ def q_compress_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT round, rank, pair, cnt FROM ranked
     WHERE rank <= 10 ORDER BY round, rank
     """,
-    survey="E4,A14",
 )
 def q_bpe_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE tokenizer-training merge step — the pair-statistics kernel
@@ -1391,7 +1373,6 @@ def _corpus_funnel_oracle() -> str:
 @register(
     "q_corpus_funnel",
     oracle=None,  # late-bound below (needs textsim's shingle CTE)
-    survey="E1,E2,E4,E5",
 )
 def q_corpus_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The COMPOSED pretraining-corpus pipeline, end to end, reported

@@ -56,7 +56,6 @@ def _scored(events: DataFrame) -> DataFrame:
            count(*) AS n
     FROM s GROUP BY 1, 2 ORDER BY label, pred
     """,
-    survey="M5,A11",
 )
 def q_metric_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Confusion matrix as a groupBy over (label, pred) — the primitive
@@ -100,7 +99,6 @@ def q_metric_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(2 * tp AS DOUBLE) / nullif(2 * tp + fp + fn, 0) AS f1
     FROM per ORDER BY cls
     """,
-    survey="M5",
 )
 def q_metric_prf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-class precision/recall/F1 from exact TP/FP/FN counts
@@ -164,7 +162,6 @@ def q_metric_prf(spark: SparkSession, sf_dir: str) -> DataFrame:
                / (CAST(n_pos AS DOUBLE) * n_neg) AS auc
     FROM agg
     """,
-    survey="M5",
 )
 def q_metric_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROC-AUC without thresholds: AUC = (R⁺ − n⁺(n⁺+1)/2)/(n⁺·n⁻)
@@ -208,7 +205,6 @@ def q_metric_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(sum(label) AS BIGINT) AS n_pos
     FROM terms
     """,
-    survey="M5",
 )
 def q_metric_ap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Average precision AP = Σ_k P(k)·rel(k) / n⁺ over the ranked
@@ -270,7 +266,6 @@ def q_metric_ap(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(sum(n) AS BIGINT) AS events
     FROM binned GROUP BY bin ORDER BY bin
     """,
-    survey="M5",
 )
 def q_metric_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reliability-diagram bins for the fixture classifier: decile
@@ -364,7 +359,6 @@ _SQL_RR_CASE = "CASE first_rel_rnk " + " ".join(
     WHERE n_rel >= 1
     ORDER BY user_id
     """,
-    survey="M5,A8",
 )
 def q_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ranking-quality metrics per user: NDCG@10 and MRR@10 where the
@@ -470,7 +464,6 @@ def q_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM sweep sw CROSS JOIN tot t
     ORDER BY threshold_q6 DESC
     """,
-    survey="M5,A14",
 )
 def q_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full operating-point table: precision / recall / F1 at EVERY
@@ -589,7 +582,6 @@ def q_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
                / nullif(n_neg - 1, 0) / nullif(4.0 * n_pos * n_pos, 0)) / nullif(n_neg, 0)), 0) AS z_vs_chance
     FROM moments
     """,
-    survey="M5,A10",
 )
 def q_auc_delong(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DeLong variance of the ROC-AUC — the inference layer on top of
@@ -789,7 +781,6 @@ def q_auc_delong(spark: SparkSession, sf_dir: str) -> DataFrame:
                AS within_bin
     FROM cells
     """,
-    survey="M5,A6",
 )
 def q_brier_decomp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brier score with the Murphy decomposition BS ≈ reliability −

@@ -43,7 +43,6 @@ from frauddetection_spark.queries._util import r6, t
     FROM c JOIN m ON c.user_id = m.user_id
     ORDER BY event_id
     """,
-    survey="E8,A10",
 )
 def q_pandas_udf_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user z-score computed in an applyInPandas grouped-map UDF
@@ -83,7 +82,6 @@ def q_pandas_udf_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM counts c JOIN top tp ON c.doc_id = tp.doc_id AND tp.rn = 1
     GROUP BY c.doc_id ORDER BY c.doc_id
     """,
-    survey="E8,E4",
 )
 def q_doc_stats_mapinpandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc token stats via mapInPandas (batch-streaming, no
@@ -103,7 +101,6 @@ def q_doc_stats_mapinpandas(spark: SparkSession, sf_dir: str) -> DataFrame:
            sha256(text) AS sha
     FROM documents ORDER BY doc_id
     """,
-    survey="E8",
 )
 def q_binary_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Typed metadata over an opaque binary media column
@@ -121,7 +118,7 @@ def q_binary_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-@register("q_multimodal_decode", oracle=None, survey="E8")
+@register("q_multimodal_decode", oracle=None)
 def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed media decode via mapInPandas with the deterministic
     fake kernel (real decode is stubbed pending image libs —
@@ -160,7 +157,6 @@ _W1, _W2, _B = 0.3, -0.2, 0.1
            round((exp(2 * z) - 1) / (exp(2 * z) + 1), 6) AS score
     FROM lin ORDER BY user_id
     """,
-    survey="M1,E8",
 )
 def q_model_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Model scoring through the M1 torch hook (functions/torch_hook.py):
@@ -209,7 +205,6 @@ def q_model_score(spark: SparkSession, sf_dir: str) -> DataFrame:
                AS n_tokens
     FROM documents ORDER BY doc_id
     """,
-    survey="E8,E4",
 )
 def q_pandas_udf_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SCALAR pandas_udf surface: whitespace token counts through the
@@ -243,7 +238,6 @@ def q_pandas_udf_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
                / count(*) / 100 AS mean_value
     FROM events GROUP BY event_type ORDER BY event_type
     """,
-    survey="E8,A2",
 )
 def q_pandas_udf_grouped_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUPED_AGG pandas_udf surface: per-type mean through the
@@ -293,7 +287,6 @@ MAX_INSTALLMENTS = 12
     FROM n, unnest(range(1, n_inst + 1)) AS t(i)
     ORDER BY o_orderkey, installment
     """,
-    survey="E8",
 )
 def q_python_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Python UDTF surface (the last cell of the E8 matrix after
@@ -355,7 +348,6 @@ def q_python_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
                AS mod7_total
     FROM events GROUP BY 1 ORDER BY event_type
     """,
-    survey="E8",
 )
 def q_arrow_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
     """mapInArrow surface: the per-partition kernel receives raw

@@ -29,7 +29,6 @@ from frauddetection_spark.queries._util import SQL_WEEK, cents, r6, t, week_str
            round(max(l_extendedprice), 6) AS max_price
     FROM lineitem
     """,
-    survey="S2",
 )
 def q_scan_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Columnar scan + global agg (reference: np.load tensor scans,
@@ -57,7 +56,6 @@ def q_scan_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
            epoch_us(ts) AS ts_us
     FROM events
     """,
-    survey="S5,P4",
 )
 def q_ts_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Date-part extraction (reference: voc['hour'] derivation,
@@ -84,7 +82,6 @@ def q_ts_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     WHERE event_type = 'purchase' AND value > 100
     """,
-    survey="P2",
 )
 def q_filter_compound(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Compound predicate (reference: .loc[(t>t0)&(calltype==2)&(opp==x)],
@@ -114,7 +111,6 @@ def q_filter_compound(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM orders WHERE o_totalprice > 400000 GROUP BY o_custkey
     ) o ON c.c_custkey = o.o_custkey
     """,
-    survey="P5,J1",
 )
 def q_null_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Null coercion at the join boundary (reference: np.nan_to_num x10,
@@ -154,7 +150,6 @@ def q_null_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
            strftime(o_orderdate, '%Y-%m-%d') AS o_orderdate, o_orderpriority
     FROM orders WHERE o_orderkey < 750
     """,
-    survey="P7",
 )
 def q_key_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Key-range filter. The reference slices by *position*
@@ -187,7 +182,6 @@ def q_key_range(spark: SparkSession, sf_dir: str) -> DataFrame:
            substr(c_name, 1, 8) AS name_prefix
     FROM customer
     """,
-    survey="P8",
 )
 def q_string_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """String surface (reference: ' '.join([city, county]),
@@ -216,7 +210,6 @@ def q_string_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
                      ELSE 0 END AS INTEGER) AS edge_weight
     FROM events
     """,
-    survey="P9",
 )
 def q_case_when(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Signed weight by event type (reference: calltype ±1 edge weight,
@@ -249,7 +242,6 @@ def q_case_when(spark: SparkSession, sf_dir: str) -> DataFrame:
            round((exp(2*l_tax) - 1) / (exp(2*l_tax) + 1), 6) AS tanh_tax
     FROM lineitem
     """,
-    survey="P10",
 )
 def q_math_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Elementwise math (reference: degree^-0.5 new_train_1.py:131-138,
@@ -288,7 +280,6 @@ def q_math_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY c.c_mktsegment, o.o_orderpriority
     ORDER BY c.c_mktsegment, o.o_orderpriority
     """,
-    survey="J1,J2",
 )
 def q_join_inner(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fact⋈dim join chain (reference: pd.merge(user, voc, on=phone),
@@ -330,7 +321,6 @@ def q_join_inner(spark: SparkSession, sf_dir: str) -> DataFrame:
                     AND x.event_type = 'error'
                     AND x.ts > e.ts)
     """,
-    survey="J3",
 )
 def q_join_existence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Purchases followed by a later error from the same user — the
@@ -370,7 +360,6 @@ def q_join_existence(spark: SparkSession, sf_dir: str) -> DataFrame:
                       WHERE o.o_custkey = c.c_custkey
                         AND o.o_orderpriority = '1-URGENT')
     """,
-    survey="J6",
 )
 def q_join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Customers with no URGENT order (reference: tmp_ids.discard +
@@ -395,7 +384,6 @@ def q_join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE EXISTS (SELECT 1 FROM customer c
                   WHERE c.c_custkey = o.o_custkey AND c.c_acctbal > 4000)
     """,
-    survey="J7",
 )
 def q_join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Orders whose customer passes a filter (reference: edge endpoints
@@ -437,7 +425,6 @@ def q_join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY l_returnflag, l_linestatus
     ORDER BY l_returnflag, l_linestatus
     """,
-    survey="A2",
 )
 def q_groupby_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grouped mean/var/count/sum (reference: mean_voc_time/var2,
@@ -502,7 +489,6 @@ def q_groupby_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY event_type
     ORDER BY event_type
     """,
-    survey="A3",
 )
 def q_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct users per event type (reference: nunique()/set() size,
@@ -519,7 +505,6 @@ def q_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_approx_count_distinct",
     oracle=None,  # HLL sketch values differ across engines by design
-    survey="A3",
 )
 def q_approx_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """approx_count_distinct (HLL++): the 100 TB path for A3 — one pass,
@@ -548,7 +533,6 @@ def q_approx_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY event_type
     ORDER BY event_type
     """,
-    survey="A4",
 )
 def q_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact interpolated median per group (reference: median
@@ -567,7 +551,7 @@ def q_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("q_median_approx", oracle=None, survey="A4")
+@register("q_median_approx", oracle=None)
 def q_median_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     """percentile_approx — the scale path for A4 (single-pass sketch)."""
     e = t(spark, sf_dir, "events")
@@ -595,7 +579,6 @@ def q_median_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM orders
     ) WHERE rk <= 3
     """,
-    survey="A14",
 )
 def q_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 orders per customer by totalprice. Ties broken by orderkey
@@ -625,7 +608,6 @@ def q_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY ROLLUP (l_returnflag, l_linestatus)
     ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST
     """,
-    survey="A15",
 )
 def q_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hierarchical rollup — free in Spark (absent in the reference)."""
@@ -654,7 +636,6 @@ def q_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     UNION
     SELECT dst AS src, src AS dst FROM edges
     """,
-    survey="U1,U3",
 )
 def q_union_mirror(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Undirected edge list via (src,dst) ∪ (dst,src) (reference: edge
@@ -683,7 +664,6 @@ def q_union_mirror(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY user_id, event_type
     ORDER BY user_id, event_type
     """,
-    survey="U2",
 )
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dedup with deterministic representative (reference:
@@ -709,7 +689,6 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     EXCEPT
     SELECT user_id FROM events WHERE event_type = 'error'
     """,
-    survey="U5",
 )
 def q_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Users who purchased but never errored (set difference)."""
@@ -726,7 +705,6 @@ def q_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     INTERSECT
     SELECT user_id FROM events WHERE event_type = 'signup'
     """,
-    survey="U5",
 )
 def q_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Users present in both behavioral slices (set intersection)."""
@@ -748,7 +726,6 @@ def q_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(json_extract_string(props, '$.k') AS BIGINT) AS k_val
     FROM events
     """,
-    survey="E6",
 )
 def q_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Typed extraction from a JSON props column (multimodal metadata
@@ -773,7 +750,6 @@ def q_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
                AS value_sum
     FROM events GROUP BY event_type ORDER BY event_type
     """,
-    survey="S1",
 )
 def q_scan_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CSV source with a REQUIRED explicit schema (reference:
@@ -831,7 +807,6 @@ PRUNE_TYPES = ("purchase", "signup")
     WHERE event_type IN {PRUNE_TYPES}
     GROUP BY 1, 2 ORDER BY event_type, user_id
     """,
-    survey="S2,P7",
 )
 def q_scan_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scan of a hive-partitioned parquet layout (dir/event_type=…/)
@@ -896,7 +871,6 @@ def q_scan_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY CUBE (l_returnflag, l_linestatus)
     ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST
     """,
-    survey="A15",
 )
 def q_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full cube over (returnflag, linestatus) — all 2² grouping
@@ -928,7 +902,6 @@ def q_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus))
     ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST
     """,
-    survey="A15",
 )
 def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit grouping sets (SQL surface): per-returnflag and
@@ -979,7 +952,6 @@ def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM ranked WHERE rn = 1
     ORDER BY event_id
     """,
-    survey="J3",
 )
 def q_asof_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join: attribute each purchase to the user's most recent
@@ -1050,7 +1022,6 @@ def q_asof_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
                 AS BIGINT) AS n_view
     FROM events GROUP BY user_id ORDER BY user_id
     """,
-    survey="A6,A13",
 )
 def q_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Long→wide pivot on a KNOWN value domain (reference: the 24-bin
@@ -1081,7 +1052,6 @@ def q_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT user_id, event_type, count(*) AS n
     FROM events GROUP BY 1, 2 ORDER BY user_id, event_type
     """,
-    survey="A6,U1",
 )
 def q_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wide→long melt via DataFrame.unpivot, applied to the pivoted
@@ -1128,7 +1098,6 @@ def _write_jsonl(tbl, path: str) -> None:
            CAST(sum(n_chars) AS BIGINT) AS chars_total
     FROM documents GROUP BY lang, source ORDER BY lang, source
     """,
-    survey="S1,E4",
 )
 def q_scan_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON-lines source with a REQUIRED explicit schema — the
@@ -1183,7 +1152,6 @@ _PROFILE_COLS = ("event_id", "ts", "user_id", "event_type", "value", "props")
         for c in _PROFILE_COLS
     )
     + " ORDER BY col",
-    survey="P5,A3",
 )
 def q_profile_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Column-profile audit of the events table — per column: row
@@ -1234,7 +1202,6 @@ def q_profile_events(spark: SparkSession, sf_dir: str) -> DataFrame:
            min(p_partkey) AS min_key, max(p_partkey) AS max_key
     FROM part GROUP BY p_brand ORDER BY p_brand
     """,
-    survey="S1",
 )
 def q_scan_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORC source round-trip: the ``part`` table is rewritten once per
@@ -1294,7 +1261,6 @@ def q_scan_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
            min(c_custkey) AS min_key, max(c_custkey) AS max_key
     FROM customer GROUP BY c_mktsegment ORDER BY c_mktsegment
     """,
-    survey="S1",
 )
 def q_scan_xml(spark: SparkSession, sf_dir: str) -> DataFrame:
     """XML source round-trip (Spark 4's built-in spark-xml reader):
@@ -1374,7 +1340,6 @@ def q_scan_xml(spark: SparkSession, sf_dir: str) -> DataFrame:
                            WHERE o.o_custkey = c.c_custkey))
             AS c_inactive
     """,
-    survey="J6,A2,P5",
 )
 def q_ref_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Referential-integrity audit across the star schema: orphan
@@ -1443,7 +1408,6 @@ def q_ref_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(sum(k) AS BIGINT) AS key_checksum
     FROM j GROUP BY 1 ORDER BY diff_class
     """,
-    survey="J1,J6,A2",
 )
 def q_table_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Snapshot reconciliation: two versions of the orders table
@@ -1528,7 +1492,6 @@ def _rev_e4() -> F.Column:
     ORDER BY rev_e4 DESC, l_orderkey
     LIMIT 10
     """,
-    survey="J1,J2,A2,A14",
 )
 def q_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q3 shape — shipping priority: top-10 unshipped orders of
@@ -1590,7 +1553,6 @@ def q_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1
     ORDER BY rev_e4 DESC, n_name
     """,
-    survey="J1,J2,A2",
 )
 def q_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5 shape — local supplier volume: revenue by nation where
@@ -1657,7 +1619,6 @@ def q_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY rev_e4 DESC, c_custkey
     LIMIT 20
     """,
-    survey="J1,J2,A2,A14",
 )
 def q_tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q10 shape — returned-item reporting: top-20 customers by
@@ -1726,7 +1687,6 @@ def q_tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE l_shipdate <= TIMESTAMP '2001-09-01'
     GROUP BY 1, 2 ORDER BY 1, 2
     """,
-    survey="S2,A2,P2",
 )
 def q_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1 shape — the pricing summary report: one fact scan, one
@@ -1802,7 +1762,6 @@ _Q18_QTY = 300  # large-volume threshold (max order ≈ 458 in testdata)
     ORDER BY totalprice_cents DESC, o_orderkey
     LIMIT 100
     """,
-    survey="J1,J7,A2,A14",
 )
 def q_tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q18 shape — large-volume customers: orders whose total
@@ -1866,7 +1825,6 @@ def q_tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE l.l_shipdate >= TIMESTAMP '1997-09-01'
       AND l.l_shipdate < TIMESTAMP '1997-10-01'
     """,
-    survey="J1,A2,P9",
 )
 def q_tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q14 shape — promotion effect: the revenue share of promo
@@ -1911,7 +1869,6 @@ def q_tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
        OR (p.p_brand = 'Brand#19' AND p.p_size BETWEEN 20 AND 50
            AND l.l_quantity BETWEEN 20 AND 40)
     """,
-    survey="J1,P2,A2",
 )
 def q_tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q19 shape — discounted revenue under a DISJUNCTION of
@@ -1973,7 +1930,6 @@ _PYSRC_PARTS = 16
            CAST(max(id) AS BIGINT) AS max_id
     FROM src GROUP BY 1 ORDER BY bucket
     """,
-    survey="S1,S3",
 )
 def q_scan_pysource(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scan through a CUSTOM PYTHON DATASOURCE (Spark 4
@@ -2026,7 +1982,6 @@ def q_scan_pysource(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE json_extract_string(props, '$.k') IS NOT NULL
     GROUP BY 1 ORDER BY event_type
     """,
-    survey="P4,E6",
 )
 def q_variant_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semi-structured access through Spark 4's VARIANT type:
@@ -2066,7 +2021,6 @@ def q_variant_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE o_orderstatus = 'F'
     GROUP BY 1 ORDER BY o_orderpriority
     """,
-    survey="A2,P2",
 )
 def q_sql_pipe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SAME aggregation stated in Spark 4's SQL PIPE syntax
@@ -2103,7 +2057,6 @@ def q_sql_pipe(spark: SparkSession, sf_dir: str) -> DataFrame:
                 AS BIGINT) AS checksum
     FROM orders GROUP BY 1 ORDER BY o_orderpriority
     """,
-    survey="P4,A2",
 )
 def q_sql_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Declarative SQL UDFs (Spark 4 `CREATE FUNCTION ... RETURN
@@ -2145,7 +2098,6 @@ def q_sql_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
            count(*) AS n_orders
     FROM orders GROUP BY 1 ORDER BY priority_ci
     """,
-    survey="P8,A2",
 )
 def q_collation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Collation-aware grouping (Spark 4 COLLATE): grouping on a
@@ -2187,7 +2139,6 @@ def q_collation(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM state WHERE rn = 1
     GROUP BY 1 ORDER BY week
     """,
-    survey="A1,A8,A2",
 )
 def q_semi_additive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SEMI-ADDITIVE measure: end-of-week balance summed across users
@@ -2239,7 +2190,6 @@ def q_semi_additive(spark: SparkSession, sf_dir: str) -> DataFrame:
            arg_min(event_id, ranked_key) AS smallest_event
     FROM keyed GROUP BY 1 ORDER BY user_id
     """,
-    survey="A2,A14",
 )
 def q_minmax_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     """max_by / min_by (argmax aggregates): each user's event type and
@@ -2286,7 +2236,6 @@ def q_minmax_by(spark: SparkSession, sf_dir: str) -> DataFrame:
       )
     GROUP BY 1 ORDER BY o_orderpriority
     """,
-    survey="J7,A2,P2",
 )
 def q_tpch_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q4 shape — order-priority checking: orders in one quarter
@@ -2338,7 +2287,6 @@ def q_tpch_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM rich_idle r JOIN nation n ON r.c_nationkey = n.n_nationkey
     GROUP BY 1 ORDER BY n_name
     """,
-    survey="J6,A2,P2",
 )
 def q_tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q22 shape — global-sales-opportunity: customers with
@@ -2391,7 +2339,6 @@ def q_tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND CAST(round(l_discount * 100) AS BIGINT) BETWEEN 5 AND 7
       AND l_quantity < 24
     """,
-    survey="S2,P2,A2",
 )
 def q_tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q6 shape — forecasting revenue change: the would-be gain
@@ -2437,7 +2384,6 @@ def q_tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1, 2
     ORDER BY n_name, o_year DESC
     """,
-    survey="J1,J2,A2,P8",
 )
 def q_tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q9 shape — product-type profit: revenue minus supply cost
@@ -2510,7 +2456,6 @@ def q_tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1, 2, 3
     ORDER BY 1, 2, 3
     """,
-    survey="J1,J2,A2",
 )
 def q_tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q7 shape — volume shipping between two nations: revenue
@@ -2601,7 +2546,6 @@ def q_tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
                / CAST(CAST(sum(vol) AS BIGINT) AS DOUBLE) AS mkt_share
     FROM v GROUP BY 1 ORDER BY 1
     """,
-    survey="J1,J2,A2,P9",
 )
 def q_tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q8 shape — national market share: NATION_2's share of
@@ -2689,7 +2633,6 @@ def q_tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM co GROUP BY 1
     ORDER BY custdist DESC, c_count DESC
     """,
-    survey="J1,A2,A6",
 )
 def q_tpch_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q13 shape — customer order-count distribution: how many
@@ -2737,7 +2680,6 @@ def q_tpch_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE r.rev_e4 = (SELECT max(rev_e4) FROM r)
     ORDER BY s.s_suppkey
     """,
-    survey="A2,A14,J1",
 )
 def q_tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q15 shape — top supplier: the supplier(s) whose quarterly
@@ -2803,7 +2745,6 @@ def q_tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM pl JOIN ag ON pl.l_partkey = ag.l_partkey
     WHERE 5 * pl.q * ag.n < ag.sq
     """,
-    survey="J1,A2,A3",
 )
 def q_tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q17 shape — small-quantity-order revenue: yearly revenue
@@ -2873,7 +2814,6 @@ def q_tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events
     GROUP BY 1 ORDER BY user_id
     """,
-    survey="A2,A5",
 )
 def q_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental aggregate maintenance: per-user (count, sum, min,
@@ -2956,7 +2896,6 @@ def q_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     WINDOW w AS (PARTITION BY user_id ORDER BY cents DESC, event_id)
     ORDER BY user_id, event_id
     """,
-    survey="A1,A8",
 )
 def q_window_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Window-function surface suite: ntile, cume_dist, nth_value with
@@ -3016,7 +2955,6 @@ def q_window_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
                          THEN 1 ELSE 0 END) AS BIGINT) AS n_coalesce_id
     FROM base GROUP BY 1 ORDER BY event_type
     """,
-    survey="P5,P9",
 )
 def q_null_logic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Three-valued-logic pins: (1) `a = b` vs null-safe `a <=> b`
@@ -3084,7 +3022,6 @@ def q_null_logic(spark: SparkSession, sf_dir: str) -> DataFrame:
                AS sum_days_to_eom
     FROM orders GROUP BY 1 ORDER BY month
     """,
-    survey="S5,P4",
 )
 def q_calendar_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Calendar-arithmetic pins aggregated monthly: weekday numbering
@@ -3139,7 +3076,6 @@ def q_calendar_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
                 AS BIGINT) AS sum_k
     FROM events GROUP BY 1 ORDER BY event_type
     """,
-    survey="P3,P5",
 )
 def q_try_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Error-safe expression pins (Spark 4 runs ANSI mode by default,
@@ -3196,7 +3132,6 @@ def q_try_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM (SELECT * FROM i UNION ALL SELECT * FROM x)
     GROUP BY 1, 2 ORDER BY op, user_id
     """,
-    survey="U5,U1",
 )
 def q_bag_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bag-semantics set operations: INTERSECT ALL keeps each user
@@ -3239,7 +3174,6 @@ def q_bag_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
            min(p_partkey) AS min_key, max(p_partkey) AS max_key
     FROM part GROUP BY p_type ORDER BY p_type
     """,
-    survey="S1,U1",
 )
 def q_scan_federated(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Federated scan: ONE logical table whose shards live in FOUR
@@ -3369,7 +3303,6 @@ def _morton_sql(div: str) -> str:
                AS span_product
     FROM files ORDER BY layout, file_id
     """,
-    survey="U4,A2",
 )
 def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-order (Morton) layout optimization — the engine side of
@@ -3463,7 +3396,6 @@ def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
       AND l.l_shipdate < TIMESTAMP '1998-01-01'
     GROUP BY 1 ORDER BY l_returnflag
     """,
-    survey="J1,A2,P9",
 )
 def q_tpch_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q12 shape — shipping-modes-and-priority: for lines shipped
@@ -3528,7 +3460,6 @@ def q_tpch_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY numwait DESC, s_name
     LIMIT 10
     """,
-    survey="J1,J4,J6,A3,A14",
 )
 def q_tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q21 shape — suppliers who kept orders waiting: on
@@ -3640,7 +3571,6 @@ def _supply(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY bal_c DESC, s_name, p_partkey
     LIMIT 100
     """,
-    survey="J1,J2,A2,A14",
 )
 def q_tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q2 shape — minimum-cost supplier: for every size-15 part,
@@ -3717,7 +3647,6 @@ def q_tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE v.val * np > 2 * tv
     ORDER BY value_e4 DESC, ps_partkey
     """,
-    survey="A2,J1,P2",
 )
 def q_tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q11 shape — important stock identification: parts whose
@@ -3779,7 +3708,6 @@ def q_tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1, 2, 3
     ORDER BY supplier_cnt DESC, p_brand, p_type, p_size
     """,
-    survey="A3,J6,A2",
 )
 def q_tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q16 shape — parts/supplier relationship: how many
@@ -3837,7 +3765,6 @@ def q_tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN nation n ON n.n_nationkey = s.s_nationkey
     ORDER BY s_name
     """,
-    survey="J7,A2,P8",
 )
 def q_tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q20 shape — potential part promotion: suppliers holding
@@ -3924,7 +3851,6 @@ def q_tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
                CAST(tl AS BIGINT), round(nl * 1.0 / tl, 6) FROM tot
     ) ORDER BY level
     """,
-    survey="J7,A2",
 )
 def q_cascade_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Erasure-impact analysis — the data-governance planning query

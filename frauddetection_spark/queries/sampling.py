@@ -62,7 +62,6 @@ def _labels(events: DataFrame) -> DataFrame:
     FROM customer
     GROUP BY 1, 2 ORDER BY c_mktsegment, split
     """,
-    survey="R1",
 )
 def q_split_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     """80/20 train/test split as a pure hash of the key (reference:
@@ -80,7 +79,7 @@ def q_split_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register("q_split_xxhash", oracle=None, survey="R1")
+@register("q_split_xxhash", oracle=None)
 def q_split_xxhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Production-grade split on xxhash64(key, seed) — rows-only
     (DuckDB lacks xxhash64). Same shape as q_split_stratified."""
@@ -131,7 +130,6 @@ _SQL_EDGES = """
            CAST(raw AS DOUBLE) / (SELECT sum(raw) FROM raw) AS prob
     FROM raw ORDER BY user_id
     """,
-    survey="R2",
 )
 def q_sampling_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Node sampling distribution p(v) ∝ sqrt(deg(v)+1) / rate(label(v))
@@ -224,7 +222,6 @@ def q_sampling_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(raw AS DOUBLE) / (SELECT sum(raw) FROM raw) AS prob
     FROM raw ORDER BY src, dst
     """,
-    survey="R3,J7,P9,A11",
 )
 def q_edge_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Edge sampling distribution by label-pair class (reference:
@@ -297,7 +294,6 @@ def q_edge_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE {sql_portable_uniform_keep('event_id')}
     GROUP BY event_type ORDER BY event_type
     """,
-    survey="R4",
 )
 def q_uniform_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Uniform ~10% subsample as a pure hash of the row key (reference:
@@ -326,7 +322,7 @@ def q_uniform_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register("q_weighted_draw", oracle=None, survey="R2,R4")
+@register("q_weighted_draw", oracle=None)
 def q_weighted_draw(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted sample without replacement, size 50, via the
     Efraimidis–Spirakis exponential-jitter trick: key = -ln(u)/w with
@@ -355,7 +351,6 @@ def q_weighted_draw(spark: SparkSession, sf_dir: str) -> DataFrame:
            count(*) AS n
     FROM events GROUP BY event_type ORDER BY event_type
     """,
-    survey="A2",
 )
 def q_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-phase salted aggregation (operators/sampling.py::
@@ -397,7 +392,6 @@ _JOIN_SALTS = 8
     FROM events e JOIN dim d USING (user_id)
     GROUP BY e.user_id, d.first_type ORDER BY e.user_id
     """,
-    survey="J1,R1",
 )
 def q_join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skew-safe salted equi-join: the dimension side is exploded over
@@ -477,7 +471,6 @@ _NEG_K = 3              # negatives kept per user
     FROM ranked WHERE neg_rank <= {_NEG_K}
     ORDER BY user_id, neg_rank
     """,
-    survey="R2,R4,J6",
 )
 def q_negative_sampling(spark, sf_dir):
     """Deterministic per-user negative sampling — the training-data op
@@ -570,7 +563,6 @@ def q_negative_sampling(spark, sf_dir):
     FROM r CROSS JOIN k WHERE rn <= k
     ORDER BY event_type, rn
     """,
-    survey="R4,A11",
 )
 def q_class_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Class-balanced downsampling: every event_type keeps exactly
@@ -628,7 +620,6 @@ _SP_AY = 16_807        # Lehmer multiplier for y (classic MINSTD)
      AND abs(a.y - b.y) <= {_SP_R}
     ORDER BY u, v
     """,
-    survey="J3,E3",
 )
 def q_spatial_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spatial proximity self-join: all pairs of points within L∞
@@ -757,7 +748,6 @@ _GD_MINPTS = 4  # core-cell threshold
            CAST(sum(n) AS BIGINT) AS n_core_points
     FROM g GROUP BY 1 ORDER BY cluster_id
     """,
-    survey="E3,J4",
 )
 def q_cluster_griddensity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grid-density clustering — the DBSCAN shape made distributed:
@@ -894,7 +884,6 @@ _NEY_QW = 1_000_000      # 1e-6 fixed point for N_h·σ_h weights
     WHERE r.rn <= a.quota
     ORDER BY r.event_type, r.rn
     """,
-    survey="R1,R4,A10",
 )
 def q_sample_neyman(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Neyman-allocation stratified sampling: the survey-statistics
@@ -992,7 +981,6 @@ _TEMPORAL_HOLDOUT_US = 7 * 86400 * 1000000  # 7-day per-user holdout
            CAST(sum(cents) AS BIGINT) AS cents_total
     FROM tagged GROUP BY 1 ORDER BY split
     """,
-    survey="R1",
 )
 def q_split_temporal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temporal train/test split: each user's LAST 7 days of activity
@@ -1064,7 +1052,6 @@ _LABEL_HORIZON_US = 7 * 86400 * 1000000  # will-purchase-within-7d
                          THEN 1 ELSE 0 END) AS BIGINT) AS n_censored
     FROM nxt GROUP BY 1 ORDER BY user_id
     """,
-    survey="R1,A8",
 )
 def q_future_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Forward-looking label generation: for every event, 'does this

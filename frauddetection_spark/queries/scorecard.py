@@ -64,7 +64,6 @@ _Q = 1_000_000_000  # fixed-point quantum for order-independent float sums
     FROM c CROSS JOIN tot
     GROUP BY n_pos, n_neg
     """,
-    survey="M5,A10",
 )
 def q_ks_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kolmogorov-Smirnov statistic of the fixture classifier — the
@@ -142,7 +141,6 @@ def q_ks_score(spark: SparkSession, sf_dir: str) -> DataFrame:
              / (CAST(n_users AS DOUBLE) * total_pos) AS lift
     FROM f ORDER BY decile
     """,
-    survey="M5,A14",
 )
 def q_lift_gains(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cumulative-gains / lift table: rank by score descending, cut
@@ -234,7 +232,6 @@ _PSI_BIN = "LEAST({c} // 5000, 9)"  # 10 fixed 50.00-wide amount bins
                 AS DOUBLE) / {_Q} AS psi_total
     FROM terms ORDER BY bin
     """,
-    survey="A6,A10,M5",
 )
 def q_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Population Stability Index between the first and second half of
@@ -333,7 +330,6 @@ def q_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
                 AS DOUBLE) / {_Q} AS iv_total
     FROM terms ORDER BY bin
     """,
-    survey="A11,M5",
 )
 def q_woe_iv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weight-of-evidence per score bin and total information value —
@@ -413,7 +409,6 @@ def q_woe_iv(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM e JOIN s USING (event_type)
     ORDER BY e.event_id
     """,
-    survey="A2,P4",
 )
 def q_target_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Leave-one-out target encoding of event_type by amount — the
@@ -489,7 +484,6 @@ def q_target_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
              / (se1 * se1 / (n1 - 1) + se2 * se2 / (n2 - 1)) AS df
     FROM v
     """,
-    survey="A7,A10",
 )
 def q_ttest_welch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Welch's unequal-variance t-test: do purchase and view amounts
@@ -575,7 +569,6 @@ def q_ttest_welch(spark: SparkSession, sf_dir: str) -> DataFrame:
     CROSS JOIN tot
     ORDER BY p1, p2
     """,
-    survey="J1,A2,A14",
 )
 def q_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Market-basket pair mining: parts bought together in ≥2 orders,
@@ -684,7 +677,6 @@ def q_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
                     * (1.0 / n1 + 1.0 / n2)) AS z_stat
     FROM v
     """,
-    survey="A7,A11",
 )
 def q_ztest_proportions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-proportion z-test: did the purchase-conversion rate move
@@ -768,7 +760,6 @@ def q_ztest_proportions(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM cum CROSS JOIN tot
     GROUP BY n1_tot, n2_tot
     """,
-    survey="A10,A7",
 )
 def q_ks_2sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-sample Kolmogorov-Smirnov: are purchase and view amounts
@@ -837,7 +828,6 @@ def q_ks_2sample(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(rn AS DOUBLE) / n AS cume_dist
     FROM r ORDER BY user_id
     """,
-    survey="A10,A14",
 )
 def q_percent_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """percent_rank and cume_dist over per-user spend as CLOSED FORMS
@@ -911,7 +901,6 @@ _CUPED_SPLIT_TS = "TIMESTAMP '2024-01-16'"  # pre/post boundary (events span 202
                      - CAST(t.sx AS DOUBLE) / t.n) AS mean_y_cuped
     FROM v, theta t ORDER BY v.variant
     """,
-    survey="A10,M5",
 )
 def q_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUPED variance reduction — the experimentation-platform
@@ -1026,7 +1015,6 @@ def q_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
                 AS DOUBLE) AS z
     FROM s
     """,
-    survey="A10,M5",
 )
 def q_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mann-Whitney U (Wilcoxon rank-sum) — the nonparametric
@@ -1130,7 +1118,6 @@ def q_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
                AS var_ratio
     FROM g ORDER BY variant
     """,
-    survey="A10,M5",
 )
 def q_ratio_delta_method(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Delta-method variance of a RATIO metric (revenue per event,
@@ -1232,7 +1219,6 @@ def q_ratio_delta_method(spark: SparkSession, sf_dir: str) -> DataFrame:
              - CAST(s_c_pre AS DOUBLE) / n_c_pre) AS did_cents
     FROM wide
     """,
-    survey="A10,M5",
 )
 def q_did(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Difference-in-differences: the quasi-experimental lift estimate
@@ -1344,7 +1330,6 @@ _QTE_PCTS = (25, 50, 75, 90)
     FROM q a JOIN q b ON a.pct = b.pct AND a.variant = 0 AND b.variant = 1
     ORDER BY pct
     """,
-    survey="A4,A10,M5",
 )
 def q_qte(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quantile treatment effects: the treated-minus-control gap at
@@ -1483,7 +1468,6 @@ def q_qte(spark: SparkSession, sf_dir: str) -> DataFrame:
                / (1 + 3.8416 / n) AS wilson_hi
     FROM agg ORDER BY event_type
     """,
-    survey="M5,A11",
 )
 def q_wilson_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wilson score interval (95%) for the high-value-event rate per
@@ -1556,7 +1540,6 @@ _ES_WINDOW = 7  # days each side of the alignment event
            CAST(sum(cents) AS DOUBLE) / count(*) AS avg_cents
     FROM aligned GROUP BY 1 ORDER BY rel_day
     """,
-    survey="A8,A12",
 )
 def q_event_study(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Event-study alignment: every user's daily spend re-indexed to
@@ -1632,7 +1615,6 @@ def q_event_study(spark: SparkSession, sf_dir: str) -> DataFrame:
                AS wape
     FROM joined GROUP BY 1 ORDER BY event_type
     """,
-    survey="A8,A2",
 )
 def q_backtest_snaive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Seasonal-naive forecast backtest: predict each day's revenue
@@ -1735,7 +1717,6 @@ def q_backtest_snaive(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM g CROSS JOIN prior p
     ORDER BY user_id
     """,
-    survey="A11,A10",
 )
 def q_eb_shrinkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Empirical-Bayes rate shrinkage: each user's error rate pulled
@@ -1830,7 +1811,6 @@ _KANON_K = 5
            CAST(group_size < {_KANON_K} AS INTEGER) AS violates_k
     FROM groups ORDER BY nation, segment, bal_band
     """,
-    survey="A2,P2",
 )
 def q_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-anonymity / l-diversity audit over quasi-identifiers — the
@@ -1911,7 +1891,6 @@ def q_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
                / nullif(CAST(n * szx - sz * sx AS DOUBLE), 0) AS beta_iv
     FROM m
     """,
-    survey="A10,A11",
 )
 def q_iv_wald(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Instrumental-variables (Wald) estimate — the quasi-experimental
@@ -2003,7 +1982,6 @@ def q_iv_wald(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM scored
     ) WHERE rank <= 5 ORDER BY item, rank
     """,
-    survey="J1,A2,A14",
 )
 def q_item_cf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Item-based collaborative filtering (the classic item-item

@@ -65,7 +65,6 @@ NEARDUP_COS = 0.4
            count(*) AS n_copies
     FROM documents GROUP BY 1 ORDER BY keeper_doc_id
     """,
-    survey="E1",
 )
 def q_dedup_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup: group by sha256(content), keep min(doc_id) —
@@ -104,7 +103,6 @@ def q_dedup_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
           >= {JACCARD_MIN}
     ORDER BY doc_a, doc_b
     """,
-    survey="E2,J4",
 )
 def q_shingle_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact near-dup pairs: word-3-shingle Jaccard ≥ 0.2 via the
@@ -208,7 +206,6 @@ def sql_minhash_pair_ctes() -> str:
     SELECT doc_a, doc_b, n_common, jaccard
     FROM dup ORDER BY doc_a, doc_b
     """,
-    survey="E2",
 )
 def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup dedup the way it runs at 100 TB: MinHash signatures
@@ -265,7 +262,6 @@ _SQL_SIMHASH_PACK = " + ".join(
     SELECT doc_id, CAST({_SQL_SIMHASH_PACK} AS BIGINT) AS simhash
     FROM bits ORDER BY doc_id
     """,
-    survey="E2",
 )
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """32-bit SimHash per document (count-weighted token hashes →
@@ -298,7 +294,6 @@ def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM ranked WHERE rank <= {KNN_K}
     ORDER BY vec_id, rank
     """,
-    survey="E3,A14",
 )
 def q_knn_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 cosine neighbors per embedding, brute force — the exact
@@ -307,7 +302,7 @@ def q_knn_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     engines. O(n²·d): correct up to ~10⁵ vectors; beyond that use the
     LSH-bucketed variant (q_ann_lsh_ml) with this as the in-bucket
     rerank."""
-    knn = knn_topk_bruteforce(spark, t(spark, sf_dir, "embeddings"))
+    knn = knn_topk_bruteforce(t(spark, sf_dir, "embeddings"))
     return knn.select("vec_id", "rank", "neighbor", "cos").orderBy(
         "vec_id", "rank"
     )
@@ -330,14 +325,11 @@ def q_knn_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM cos WHERE cos >= {NEARDUP_COS}
     ORDER BY id_a, id_b
     """,
-    survey="E3",
 )
 def q_embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding near-duplicate pairs: cosine ≥ 0.4 over unordered
     pairs. Same quantized machinery as q_knn_cosine."""
-    pairs = neardup_pairs_bruteforce(
-        spark, t(spark, sf_dir, "embeddings"), NEARDUP_COS
-    )
+    pairs = neardup_pairs_bruteforce(t(spark, sf_dir, "embeddings"), NEARDUP_COS)
     return pairs.select("id_a", "id_b", "cos").orderBy("id_a", "id_b")
 
 
@@ -349,7 +341,6 @@ def q_embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_ann_lsh_ml",
     oracle=None,  # MLlib LSH hash seeds are engine-private → rows-only
-    survey="E3,E2",
 )
 def q_ann_lsh_ml(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN candidate pairs via MLlib BucketedRandomProjectionLSH
@@ -388,7 +379,7 @@ def q_ann_lsh_ml(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("id_a", "id_b")
 
 
-@register("q_dedup_minhash_ml", oracle=None, survey="E2")
+@register("q_dedup_minhash_ml", oracle=None)
 def q_dedup_minhash_ml(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup candidates via the MLlib path (SURVEY E2's alternate
     route: HashingTF over shingle tokens → MinHashLSH →
@@ -441,7 +432,7 @@ def _embeddings_count(sf_dir: str) -> int:
 # (operators/vectors.py), which both twins read.
 
 
-@register("q_ann_ivf", oracle=sql_ivf(), survey="E3")
+@register("q_ann_ivf", oracle=sql_ivf())
 def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF approximate kNN, fully deterministic AND learned: a Lloyd-
     iterated codebook (seeded with the K lowest vec_ids, 2 exact-int
@@ -478,7 +469,6 @@ IVF_SEED = 9001
         sample_pct=IVF_SAMPLE_PCT,
         seed=IVF_SEED,
     ),
-    survey="E3",
 )
 def q_ann_ivf_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF kNN with SAMPLED codebook training — the shape that holds at
@@ -538,7 +528,7 @@ _MINHASH_EST_ORACLE = f"""
     """
 
 
-@register("q_minhash_est", oracle=_MINHASH_EST_ORACLE, survey="E2")
+@register("q_minhash_est", oracle=_MINHASH_EST_ORACLE)
 def q_minhash_est(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash estimator diagnostics: for every LSH candidate pair,
     the signature-agreement Jaccard ESTIMATE (matching components /
@@ -613,7 +603,6 @@ def q_minhash_est(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM ranked WHERE rank <= {KNN_K}
     ORDER BY query_id, rank
     """,
-    survey="E3,A14",
 )
 def q_ann_query_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Asymmetric similarity search: a FIXED probe batch (the first
@@ -652,7 +641,7 @@ def q_ann_query_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register("q_ann_pq", oracle=sql_pq(), survey="E3")
+@register("q_ann_pq", oracle=sql_pq())
 def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ANN for the q_ann_query_batch probe set —
     the MEMORY-compressed scale path: the corpus index is 8 codebook
@@ -715,7 +704,6 @@ _SC_MIN_COS = 0.15  # emitted similarity threshold
     WHERE dot / sqrt(CAST(na.n2 AS DOUBLE) * nb.n2) >= {_SC_MIN_COS}
     ORDER BY doc_a, doc_b
     """,
-    survey="E2,E4,J4",
 )
 def q_sparse_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All-pairs sparse cosine similarity over word-3-shingle TF
@@ -851,7 +839,6 @@ _SH_MAX_HAMMING = 3                 # accept pairs within this distance
     WHERE bit_count(xor(ha, hb)) <= {_SH_MAX_HAMMING}
     ORDER BY doc_a, doc_b
     """,
-    survey="E2",
 )
 def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup PAIRS via bit-band LSH — the Google-crawl
@@ -935,7 +922,6 @@ CONTAIN_MIN_PCT = 40  # integer percent threshold on the smaller side
     WHERE 100 * m.n_common >= {CONTAIN_MIN_PCT} * least(sa.n, sb.n)
     ORDER BY doc_a, doc_b
     """,
-    survey="E2,J4",
 )
 def q_shingle_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Asymmetric near-dup: shingle CONTAINMENT |A∩B|/|A| in both
@@ -1069,7 +1055,6 @@ _SQL_HP_COS_CASE = "CASE hamming WHEN 0 THEN 1000000000 WHEN 1 THEN 998795456 WH
                AS cos_exact
     FROM pairs ORDER BY vec_a
     """,
-    survey="E3,M7",
 )
 def q_hyperplane_est(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Random-hyperplane cosine sketch (Charikar's SimHash for dense
@@ -1339,7 +1324,6 @@ def _semdup_pairs_kernel(pdf):
            string_agg(vec_id, ',' ORDER BY vec_id) AS members
     FROM g GROUP BY group_id ORDER BY group_id
     """,
-    survey="E2,E3,M2",
 )
 def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine (semantic) near-dup groups — the dedup family

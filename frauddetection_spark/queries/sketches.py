@@ -36,11 +36,9 @@ from frauddetection_spark.queries._util import t
 # 1.6e13, far inside int64 in both engines.
 # ---------------------------------------------------------------------------
 
-_CM_D = 4          # Count-Min depth (rows)
 _CM_W = 64         # Count-Min width (counters per row)
 _CM_AB = ((1299721, 7), (2750161, 101), (104729, 997), (15485863, 10007))
 
-_BF_K = 3          # Bloom hash count
 _BF_M = 65536      # Bloom bits (2048 32-bit words) — sized so k·n/m stays
 #                    ≈0.3 at sf0.1's ~6.6k member keys → ~1.7% FP; at a
 #                    real 100-TB member set you'd scale m the same way
@@ -89,7 +87,6 @@ def _col_hash(key, a: int, b: int, m: int):
     SELECT user_id, true_n, est_n, est_n - true_n AS overest
     FROM est ORDER BY user_id
     """,
-    survey="A3,A14",
 )
 def q_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-Min sketch frequency estimates: per-user event counts
@@ -192,7 +189,6 @@ def q_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(sum(CASE WHEN maybe THEN 1 ELSE 0 END) AS BIGINT) AS n_maybe
     FROM classed GROUP BY 1 ORDER BY 1
     """,
-    survey="J6,A3",
 )
 def q_bloom_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bloom-filter membership screen: a 65536-bit filter over

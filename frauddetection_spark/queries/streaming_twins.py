@@ -37,7 +37,6 @@ SESSION_GAP_S = 30 * 60
     FROM events
     GROUP BY 1, 2 ORDER BY window_start, event_type
     """,
-    survey="E7,A1",
 )
 def q_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hourly tumbling counts + exact-cents sums per event_type —
@@ -65,7 +64,6 @@ def q_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT window_start, event_type, count(*) AS n
     FROM expanded GROUP BY 1, 2 ORDER BY window_start, event_type
     """,
-    survey="E7",
 )
 def q_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1-hour windows sliding every 30 min: each event belongs to two
@@ -115,7 +113,6 @@ def q_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM numbered
     GROUP BY 1, 2 ORDER BY user_id, session_id
     """,
-    survey="E7,A8",
 )
 def q_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user 30-min-gap activity sessions as gaps-and-islands
@@ -198,7 +195,6 @@ def q_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                          ELSE wm_us - us END) AS BIGINT) AS max_late_us
     FROM m GROUP BY day ORDER BY day
     """,
-    survey="A8,E8",
 )
 def q_watermark_lateness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermark-tuning diagnostic for the streaming suite: replay the

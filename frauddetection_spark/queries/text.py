@@ -53,7 +53,6 @@ def _tokens() -> F.Column:
                AS avg_tokens_per_doc
     FROM tok GROUP BY lang ORDER BY lang
     """,
-    survey="E4",
 )
 def q_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language corpus stats: docs, token occurrences, vocabulary
@@ -102,7 +101,6 @@ def q_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 AS INTEGER) AS passes_filter
     FROM q ORDER BY doc_id
     """,
-    survey="E5,E4",
 )
 def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc quality features (length, mean token length, unique- and
@@ -176,7 +174,6 @@ def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(cand_lang = true_lang AS INTEGER) AS correct
     FROM ranked WHERE rn = 1 ORDER BY doc_id
     """,
-    survey="E5",
 )
 def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Language-ID by corpus token-frequency profiles: build per-(lang,
@@ -238,7 +235,6 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
            len(list_distinct(toks)) AS n_distinct
     FROM tk ORDER BY doc_id
     """,
-    survey="E4",
 )
 def q_token_regex(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sub-word-style token counting with a BPE-ish regex (letter runs
@@ -285,7 +281,6 @@ _FP_SQL = (
     SELECT doc_id, {_FP_SQL} AS fingerprint, length(text) AS n_chars
     FROM documents ORDER BY doc_id
     """,
-    survey="E1",
 )
 def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document rolling-hash fingerprint (h = h*31 + c mod p) —
@@ -324,7 +319,6 @@ def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     HAVING count(*) >= 20
     ORDER BY bigram
     """,
-    survey="E4",
 )
 def q_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus bigram counts through the MLlib feature path
@@ -391,7 +385,6 @@ _PHONE_RE = "555-[0-9]{4}"
            min(sha256(clean)) AS sample_hash
     FROM redacted GROUP BY source ORDER BY source
     """,
-    survey="E4",
 )
 def q_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PII scrubbing — the mandatory pass before any corpus ships:
@@ -475,7 +468,6 @@ def q_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(count(*) AS DOUBLE) / sum(n) AS distinct_share
     FROM c GROUP BY doc_id ORDER BY doc_id
     """,
-    survey="E5",
 )
 def q_repetition_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document repetition profile over word bigrams — the Gopher
@@ -540,7 +532,6 @@ _LEX_NEG = ("slow", "small")
                 ELSE 0.0 END AS polarity
     FROM s ORDER BY doc_id
     """,
-    survey="E7,A11",
 )
 def q_lexicon_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lexicon polarity scoring: per-document (pos−neg)/(pos+neg) over
@@ -630,7 +621,6 @@ _BM25_B = 0.75
            CAST(sum(sq9) AS DOUBLE) / 1e9 AS bm25
     FROM term_scores GROUP BY 1 ORDER BY doc_id
     """,
-    survey="E4,E7",
 )
 def q_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 relevance of every document against a fixed query-term set
@@ -786,7 +776,6 @@ _PMI_Q = 1_000_000_000
     WHERE c_ab >= {_PMI_MIN_COUNT}
     ORDER BY w1, w2
     """,
-    survey="E4,A9",
 )
 def q_bigram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pointwise mutual information of adjacent token pairs —
@@ -873,7 +862,6 @@ def q_bigram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(sum_q9 AS DOUBLE) / {_PMI_Q} / dl AS avg_logprob
     FROM d ORDER BY doc_id
     """,
-    survey="E4,E7",
 )
 def q_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document average log-probability under a unigram LM trained
@@ -955,7 +943,6 @@ def q_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
              / CAST(n * sxx - sx * sx AS DOUBLE) AS zipf_slope
     FROM s
     """,
-    survey="E4,A10",
 )
 def q_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zipf's-law exponent of the corpus: OLS slope of ln(frequency)
@@ -1054,7 +1041,6 @@ def q_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(sum(lp_q9) AS DOUBLE) / {_PMI_Q} / count(*) AS avg_logprob
     FROM scored GROUP BY 1 ORDER BY doc_id
     """,
-    survey="E4,E7",
 )
 def q_bigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Held-out bigram-LM scoring — the actual protocol of perplexity
@@ -1156,7 +1142,6 @@ def q_bigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
                AS postings_head
     FROM tf GROUP BY token ORDER BY token
     """,
-    survey="E4,A13,A14",
 )
 def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inverted-index build — the search-infrastructure primitive the

@@ -129,12 +129,7 @@ _REQUIRED_CONFS: tuple[tuple[str, str], ...] = (
 def ensure_read_confs(spark: SparkSession) -> None:
     """Apply the runtime confs any session needs to read our tables."""
     for key, value in _REQUIRED_CONFS:
-        try:
-            spark.conf.set(key, value)
-        except Exception:
-            # Best effort: if a conf became static in some future Spark,
-            # the subsequent read will raise a clear error anyway.
-            pass
+        spark.conf.set(key, value)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

@@ -186,83 +186,6 @@ def dedup_stream(events: DataFrame, keys: list[str] | None = None) -> DataFrame:
     )
 
 
-class _RunningTotalsProcessor:
-    """StatefulProcessor for transformWithState: per-user lifetime
-    (count, exact-cents sum) in a ValueState of two int64s. Quantizes
-    per row with the shared half-away kernel — same arithmetic as
-    _running_totals_fn, so both stateful APIs and the batch aggregate
-    are bit-identical."""
-
-    def init(self, handle) -> None:
-        self._state = handle.getValueState("totals", "n BIGINT, cents BIGINT")
-
-    def handleInputRows(self, key, rows, timerValues):
-        from frauddetection_spark.operators.vectors import round_half_away_np
-
-        n, cents = self._state.get() if self._state.exists() else (0, 0)
-        for pdf in rows:
-            n += len(pdf)
-            cents += int(round_half_away_np(pdf["value"].to_numpy(), 100).sum())
-        self._state.update((n, cents))
-        yield pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_events": [n],
-                "value_total": [cents / 100.0],
-            }
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def running_totals_tws(events: DataFrame) -> DataFrame:
-    """Modern stateful API (Spark 4 transformWithStateInPandas): the
-    same per-user running totals as :func:`running_totals`, expressed
-    as a StatefulProcessor with typed ValueState. transformWithState
-    requires the RocksDB state store (disk-backed, changelog
-    checkpointing) — exactly the provider a 1000-executor deployment
-    runs, where per-key state must spill past executor memory.
-
-    Raises ImportError when `google.protobuf` is absent: the
-    transformWithState Python worker speaks protobuf to the JVM state
-    server, and the container has no protobuf (environment boundary,
-    same policy as the torch hook — API + parity test are real, the
-    test skips where the dependency is missing)."""
-    try:
-        import google.protobuf  # noqa: F401
-    except ImportError:
-        raise ImportError(
-            "transformWithStateInPandas needs google.protobuf "
-            "(absent in this container); use running_totals() "
-            "(applyInPandasWithState) instead"
-        )
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    # build the processor class dynamically so importing this module
-    # never hard-depends on the new API's presence
-    proc = type(
-        "RunningTotalsProcessor",
-        (StatefulProcessor,),
-        dict(_RunningTotalsProcessor.__dict__),
-    )()
-    events.sparkSession.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    return (
-        events.select("user_id", "value")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            proc,
-            outputStructType=_RUNNING_SCHEMA,
-            outputMode="Update",
-            timeMode="None",
-        )
-    )
-
-
 def run_to_memory(
     df: DataFrame, name: str, output_mode: str = "complete"
 ) -> None:

@@ -281,6 +281,7 @@ def test_common_neighbor_auto_cost_model(spark):
     budget and the 4096-contact mask bound."""
     from frauddetection_spark.operators.graph import (
         BITMASK_MAX_WORDOPS,
+        ContactStats,
         _pick_cn_strategy,
         common_neighbor_pairs,
     )
@@ -291,7 +292,8 @@ def test_common_neighbor_auto_cost_model(spark):
     contacts = spark.range(n_users).select(
         F.col("id").alias("user"), (F.col("id") % 10).alias("contact")
     )
-    df = common_neighbor_pairs(contacts, min_common=1)
+    dense = ContactStats(10, n_users, 10 * 1500**2, list(range(10)))
+    df = common_neighbor_pairs(contacts, min_common=1, stats=dense)
     plan = df._jdf.queryExecution().optimizedPlan().toString()
     assert "bit_count" in plan
     # sparse regime: Σd² tiny relative to the pair space → inverted
@@ -307,9 +309,28 @@ def test_common_neighbor_auto_cost_model(spark):
     small = spark.range(100).select(
         F.col("id").alias("user"), (F.col("id") % 10).alias("contact")
     )
-    df2 = common_neighbor_pairs(small, min_common=1)
+    small_stats = ContactStats(10, 100, 10 * 10**2, list(range(10)))
+    df2 = common_neighbor_pairs(small, min_common=1, stats=small_stats)
     plan2 = df2._jdf.queryExecution().optimizedPlan().toString()
     assert "bit_count" in plan2
+
+
+def test_common_neighbor_without_stats_is_inverted_and_job_free(spark):
+    """Without ContactStats the operator plans the inverted join and
+    launches no Spark job while building it."""
+    from frauddetection_spark.operators.graph import common_neighbor_pairs
+
+    contacts = spark.range(50).select(
+        F.col("id").alias("user"), (F.col("id") % 5).alias("contact")
+    )
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    df = common_neighbor_pairs(contacts, min_common=1)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert set(tracker.getJobIdsForGroup(None)) == before
+    assert "bit_count" not in plan
+    # 5 contacts of 10 users each: every pair within a contact shares it
+    assert df.count() == 5 * 10 * 9 // 2
 
 
 def test_common_neighbor_injected_stats_skip_probe(spark):

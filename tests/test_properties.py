@@ -150,7 +150,7 @@ def test_ivf_rank1_recall(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     sub = emb.filter("vec_id < 256")
     floor_recall = _rank1_recall(
-        knn_topk_bruteforce(spark, sub),
+        knn_topk_bruteforce(sub),
         ivf_topk(sub, n_centroids=adaptive_centroids(256)),
     )
     assert floor_recall >= 0.8, f"floor-K rank-1 recall {floor_recall:.3f}"
@@ -622,7 +622,7 @@ def test_ivf_sampled_recall_and_sample_shape(spark, sf_dir):
     )
 
     floor_recall = _rank1_recall(
-        knn_topk_bruteforce(spark, sub),
+        knn_topk_bruteforce(sub),
         ivf_topk(sub, n_centroids=adaptive_centroids(256),
                  seeding="sampled", sample_pct=IVF_SAMPLE_PCT, seed=IVF_SEED),
     )

@@ -57,8 +57,8 @@ def helpers_of(fn) -> tuple[tuple[str, str], ...]:
     and ``mod.attr`` calls through module objects. Only functions whose
     source file lives under ``frauddetection_spark/`` count, minus
     ``plans/registry.py`` (the registration path is no helper of the
-    built plan); one level only (helpers' own callees are out of scope
-    by design — the operators tree is shallow)."""
+    built plan); one level per call — ``_persist_backed`` follows the
+    helpers' own callees."""
     import ast
     import importlib
     import inspect
@@ -189,11 +189,13 @@ _CONSTRUCTION_CONSUMED = {
 
 
 def _persist_backed() -> list[str]:
-    """Queries whose own source OR any called package helper (one
-    import level, via ``helpers_of``) contains a
+    """Queries whose own source OR any package helper they reach
+    (``helpers_of``, followed transitively) contains a
     ``track_cache`` site — a dropped persist in ``prefix_rank`` or
     ``ivf_topk`` must fail its consumers' lint rows, not just direct
-    callers' (review r11: the hand-scan covered only the query body).
+    callers' (review r11: the hand-scan covered only the query body),
+    and ``q_join_common_neighbor``'s persist sits two calls down, in
+    ``common_neighbor_pairs`` → ``_common_neighbors_bitmask``.
     Granularity caveat, stated honestly: the assertion is reuse >= 1
     per QUERY plan, so a consumer with both its own persist and a
     helper persist can mask exactly one of the two being dropped;
@@ -211,20 +213,19 @@ def _persist_backed() -> list[str]:
     for name, spec in sorted(REGISTRY.items()):
         if name in _CONSTRUCTION_CONSUMED:
             continue
-        fn = inspect.unwrap(spec.fn)
-        hit = has_track_cache(fn)
-        if not hit:
-            for hname, hrel in helpers_of(fn):
+        todo, seen = [inspect.unwrap(spec.fn)], set()
+        while todo:
+            fn = todo.pop()
+            if has_track_cache(fn):
+                out.append(name)
+                break
+            for hname, hrel in set(helpers_of(fn)) - seen:
+                seen.add((hname, hrel))
                 mod = hrel.replace(os.sep, ".").removesuffix(".py")
                 try:
-                    helper = getattr(importlib.import_module(mod), hname)
+                    todo.append(getattr(importlib.import_module(mod), hname))
                 except (ImportError, AttributeError):
                     continue
-                if has_track_cache(helper):
-                    hit = True
-                    break
-        if hit:
-            out.append(name)
     return out
 
 

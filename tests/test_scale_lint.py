@@ -1,12 +1,12 @@
 """Scale lints over EVERY registered query, pinned as tests:
 
 1. **Zero Spark jobs at plan construction** — calling any
-   ``queries()[name](spark, sf_dir)`` must only BUILD a plan. An
-   earlier common-neighbor auto path ran persist() + two probe actions
-   at construction time; stats now come from a driver-side pyarrow
-   probe held by the table catalog (queries/graph.py). Driver-side
-   (non-Spark) prep like the pyarrow fixture builders is allowed — the
-   lint counts Spark jobs only.
+   ``queries()[name](spark, sf_dir)`` must only BUILD a plan.
+   Plan-time statistics come from driver-side pyarrow probes held by
+   the table catalog (queries/graph.py); the common-neighbor operator
+   has no probe of its own and plans the inverted join without them.
+   Driver-side (non-Spark) prep like the pyarrow fixture builders is
+   allowed — the lint counts Spark jobs only.
 
 2. **No unpartitioned row-level windows** — a
    ``Window.orderBy(...)`` without ``partitionBy`` funnels every row
@@ -377,13 +377,62 @@ def test_engine_never_imports_duckdb():
     assert sites == [], "engine modules import duckdb:\n" + "\n".join(sites)
 
 
+def test_every_module_name_is_referenced():
+    """Every module-level function, class and assigned name under
+    ``frauddetection_spark/`` (dunders aside) must occur, as a whole
+    word, outside its own definition somewhere in the package,
+    ``tests/``, ``perfbench/``, ``__spark_entry__.py`` or
+    ``check_catalog.py``. A name nothing reads is dead code, and a
+    constant nothing reads suggests a setting that changes nothing."""
+    import ast
+    import os
+    import re
+    from collections import Counter
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    paths = [os.path.join(root, "__spark_entry__.py"),
+             os.path.join(root, "check_catalog.py")]
+    for top in ("frauddetection_spark", "tests", "perfbench"):
+        for dirpath, _dirs, files in os.walk(os.path.join(root, top)):
+            paths += [os.path.join(dirpath, f) for f in files if f.endswith(".py")]
+    sources = {}
+    for path in paths:
+        with open(path) as fh:
+            sources[os.path.relpath(path, root)] = fh.read()
+    words = Counter(w for src in sources.values() for w in re.findall(r"\w+", src))
+
+    unread = []
+    for rel, src in sources.items():
+        if not rel.startswith("frauddetection_spark" + os.sep):
+            continue
+        lines = src.splitlines()
+        for node in ast.parse(src, filename=rel).body:
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                names = [node.name]
+            elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+                targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+                names = [n.id for t in targets for n in ast.walk(t)
+                         if isinstance(n, ast.Name)]
+            else:
+                continue
+            own = Counter(re.findall(
+                r"\w+", "\n".join(lines[node.lineno - 1:node.end_lineno])
+            ))
+            unread += [
+                f"{rel}:{node.lineno} {name}" for name in names
+                if not (name.startswith("__") and name.endswith("__"))
+                and words[name] <= own[name]
+            ]
+    assert unread == [], "module names nothing references:\n" + "\n".join(unread)
+
+
 def test_zero_jobs_at_construction(spark, sf_dir, plan_inspections):
     """Constructing any non-exempt query must launch ZERO Spark jobs —
-    constructors are pure plan builders (an earlier common-neighbor
-    auto path ran persist() + two probe actions at construction; stats
-    probes belong in the driver-side table catalog, actions in the
-    caller). The construction pass and its two job-id snapshots live
-    in the shared ``plan_inspections`` fixture (see its docstring for
+    constructors are pure plan builders (stats probes belong in the
+    driver-side table catalog, actions in the caller; the
+    common-neighbor operator runs no probe: a caller passes catalog
+    stats or gets the inverted join). The construction pass and its
+    two job-id snapshots live in the shared ``plan_inspections`` fixture (see its docstring for
     the cost story); only a failure pays for the serial per-query
     re-run that names the offending constructor."""
     _, new = plan_inspections
