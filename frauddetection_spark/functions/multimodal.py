@@ -1,12 +1,11 @@
 """Multimodal column plumbing (SURVEY.md north-star: image/audio/video
 as opaque binary columns + typed metadata).
 
-The container has no image/audio libraries, so the *decode kernels*
-are stubbed: `decode_image` raises NotImplementedError unless
-`fake=True`, in which case a deterministic fake decoder derives
-metadata from the bytes themselves. Everything Spark-side — the
-schema, the mapInPandas batch shape, the partitioning behavior, the
-binary handling through Arrow — is real and tested
+The kernels here (`decode_image`, `resize_image`, `extract_frame`)
+are stand-ins for the PIL/av kernels, which are not installed: each
+returns a deterministic digest of its input bytes. Everything
+Spark-side — the schema, the mapInPandas batch shape, the partitioning
+behavior, the binary handling through Arrow — is real and tested
 (tests/test_multimodal.py), so dropping in PIL/libav later changes
 one function body, not the pipeline.
 
@@ -65,9 +64,9 @@ def with_media_column(docs: DataFrame) -> DataFrame:
     )
 
 
-def _fake_decode(payload: bytes) -> tuple[int, int, int]:
-    """Deterministic fake decode: metadata derived from a digest of the
-    payload. Stands in for PIL.Image.open until the lib is present."""
+def decode_image(payload: bytes) -> tuple[int, int, int]:
+    """Decode kernel: (width, height, n_frames) derived from a digest of
+    the payload — the stand-in for PIL.Image.open."""
     d = hashlib.sha256(payload).digest()
     width = 64 + d[0] % 192
     height = 64 + d[1] % 192
@@ -75,19 +74,7 @@ def _fake_decode(payload: bytes) -> tuple[int, int, int]:
     return width, height, n_frames
 
 
-def decode_image(payload: bytes, fake: bool = False) -> tuple[int, int, int]:
-    """Decode kernel boundary. Real implementation requires an image
-    library that is not in this container — STUB (clearly marked); the
-    deterministic fake exists so the distributed plumbing is testable."""
-    if fake:
-        return _fake_decode(payload)
-    raise NotImplementedError(
-        "image decode requires PIL/opencv (not installed); "
-        "pass fake=True for the deterministic test decoder"
-    )
-
-
-def decode_media(media_df: DataFrame, fake: bool = True) -> DataFrame:
+def decode_media(media_df: DataFrame) -> DataFrame:
     """mapInPandas over (doc_id, media): batch-streaming decode.
 
     Batch shape: each Arrow batch arrives as a pandas DataFrame whose
@@ -101,7 +88,7 @@ def decode_media(media_df: DataFrame, fake: bool = True) -> DataFrame:
         for pdf in batches:
             rows = []
             for doc_id, media in zip(pdf["doc_id"], pdf["media"]):
-                w, h, n = decode_image(bytes(media["content"]), fake=fake)
+                w, h, n = decode_image(bytes(media["content"]))
                 rows.append((doc_id, media["meta"]["kind"], w, h, n))
             yield pd.DataFrame(
                 rows, columns=["doc_id", "kind", "width", "height", "n_frames"]
@@ -113,7 +100,7 @@ def decode_media(media_df: DataFrame, fake: bool = True) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# resize + frame-sample plumbing (same stub-kernel discipline)
+# resize + frame-sample plumbing (same stand-in kernels)
 # ---------------------------------------------------------------------------
 
 RESIZED_SCHEMA = StructType(
@@ -134,37 +121,23 @@ FRAMES_SCHEMA = StructType(
 )
 
 
-def resize_image(
-    payload: bytes, width: int, height: int, fake: bool = False
-) -> bytes:
-    """Resize kernel boundary — STUB without an image library. The
-    deterministic fake derives a pseudo-thumbnail from the payload
-    digest + target size, so pipeline identity (same input + size →
-    same bytes) is testable end-to-end."""
-    if fake:
-        d = hashlib.sha256(
-            payload + width.to_bytes(4, "big") + height.to_bytes(4, "big")
-        ).digest()
-        return d
-    raise NotImplementedError(
-        "image resize requires PIL/opencv (not installed); "
-        "pass fake=True for the deterministic test kernel"
-    )
+def resize_image(payload: bytes, width: int, height: int) -> bytes:
+    """Resize kernel: a pseudo-thumbnail digested from the payload and
+    the target size — the stand-in for a PIL resize, so pipeline
+    identity (same input + size → same bytes) is testable end-to-end."""
+    return hashlib.sha256(
+        payload + width.to_bytes(4, "big") + height.to_bytes(4, "big")
+    ).digest()
 
 
-def extract_frame(payload: bytes, idx: int, fake: bool = False) -> bytes:
-    """Frame-extraction kernel boundary — STUB without libav. The fake
-    derives a per-index frame signature from the payload digest."""
-    if fake:
-        return hashlib.sha256(payload + idx.to_bytes(4, "big")).digest()
-    raise NotImplementedError(
-        "frame extraction requires av/ffmpeg (not installed); "
-        "pass fake=True for the deterministic test kernel"
-    )
+def extract_frame(payload: bytes, idx: int) -> bytes:
+    """Frame-extraction kernel: a per-index frame signature digested
+    from the payload — the stand-in for an av frame decode."""
+    return hashlib.sha256(payload + idx.to_bytes(4, "big")).digest()
 
 
 def resize_media(
-    media_df: DataFrame, width: int = 64, height: int = 64, fake: bool = True
+    media_df: DataFrame, width: int = 64, height: int = 64
 ) -> DataFrame:
     """mapInPandas thumbnail pass: map-only, partition-preserving; the
     payload crosses into Python once per batch and only the thumbnail
@@ -175,9 +148,7 @@ def resize_media(
         for pdf in batches:
             rows = []
             for doc_id, media in zip(pdf["doc_id"], pdf["media"]):
-                thumb = resize_image(
-                    bytes(media["content"]), width, height, fake=fake
-                )
+                thumb = resize_image(bytes(media["content"]), width, height)
                 rows.append((doc_id, width, height, thumb.hex()))
             yield pd.DataFrame(
                 rows, columns=["doc_id", "width", "height", "thumb_sha"]
@@ -188,9 +159,7 @@ def resize_media(
     )
 
 
-def sample_frames(
-    media_df: DataFrame, every_k: int = 2, fake: bool = True
-) -> DataFrame:
+def sample_frames(media_df: DataFrame, every_k: int = 2) -> DataFrame:
     """Frame sampling: decode the frame COUNT per payload, keep every
     k-th index, extract only the kept frames — the fan-out op for
     video corpora (a clip becomes n_frames/k rows). Map-only with
@@ -203,9 +172,9 @@ def sample_frames(
             rows = []
             for doc_id, media in zip(pdf["doc_id"], pdf["media"]):
                 payload = bytes(media["content"])
-                _w, _h, n_frames = decode_image(payload, fake=fake)
+                _w, _h, n_frames = decode_image(payload)
                 for idx in range(0, n_frames, every_k):
-                    sig = extract_frame(payload, idx, fake=fake)
+                    sig = extract_frame(payload, idx)
                     rows.append((doc_id, idx, sig.hex()))
             yield pd.DataFrame(
                 rows, columns=["doc_id", "frame_idx", "frame_sha"]

@@ -28,13 +28,12 @@ def write_observed(
     path: str,
     key_col: str,
     extra_metrics: dict | None = None,
-    mode: str = "overwrite",
 ) -> WriteMetrics:
-    """Write parquet while collecting row count, null-key count, and
-    any extra named aggregate expressions — all measured by the write
-    job itself (zero additional scans). Returns the observed metrics
-    so the caller can gate downstream steps (e.g. refuse to swap a
-    partition whose null-key rate jumped)."""
+    """Overwrite ``path`` with parquet while collecting row count,
+    null-key count, and any extra named aggregate expressions — all
+    measured by the write job itself (zero additional scans). Returns
+    the observed metrics so the caller can gate downstream steps (e.g.
+    refuse to swap a partition whose null-key rate jumped)."""
     # The observed write runs on a THROWAWAY CHILD SESSION (same
     # SparkContext, own session state): registering an Observation
     # initializes the session's lazy observation listener, after which
@@ -52,14 +51,13 @@ def write_observed(
     obs = Observation("write_metrics")
     exprs = [
         F.count(F.lit(1)).alias("n_rows"),
-        F.sum(
-            F.when(F.col(key_col).isNull(), 1).otherwise(0)
-        ).alias("n_null_keys"),
+        # count, not sum: a global sum over an empty write is NULL
+        F.count(F.when(F.col(key_col).isNull(), 1)).alias("n_null_keys"),
     ]
     for name, col in (extra_metrics or {}).items():
         exprs.append(col.alias(name))
     observed = cdf.observe(obs, *exprs)
-    observed.write.mode(mode).parquet(path)
+    observed.write.mode("overwrite").parquet(path)
     got = obs.get
     return WriteMetrics(
         n_rows=got["n_rows"],

@@ -1,43 +1,30 @@
-"""Distributed model-scoring hook (SURVEY.md §2.7 M1's optional
-torch-scoring path; reference: MultiLstm forward pass,
-``src/layers.py:9-69``, scored full-batch on the driver at
-``main.py:128-142``).
+"""Distributed model-scoring hook (SURVEY.md §2.7 M1's scoring path;
+reference: MultiLstm forward pass, ``src/layers.py:9-69``, scored
+full-batch on the driver at ``main.py:128-142``).
 
 The engine's M1 mapping replaces the learned LSTM with engineered
 sequence aggregates + MLlib (ml/pipeline.py), but a user migrating a
-trained torch model needs a way to SCORE it over cluster-resident
-features without collecting them. This module is that hook:
+trained model needs a way to SCORE it over cluster-resident features
+without collecting them. This module is that hook:
 
 - weights ship once per executor as a Spark broadcast (model params
   are small; the feature table is the big side and never moves);
 - scoring is ``mapInPandas`` — Arrow-batched, map-only, no shuffle;
   at 100 TB this is a pure scan+append pass;
-- the forward function is pluggable. ``numpy_linear_tanh`` is the
-  built-in deterministic reference (also the oracle twin's closed
-  form); a torch ``nn.Module`` drops into the same interface via
-  :func:`torch_forward` — gated behind an import-try because this
-  container ships no torch (same honest-stub policy as
-  functions/multimodal.py).
+- the forward pass is ``numpy_linear_tanh``, a deterministic 1-layer
+  scorer whose closed form the oracle twin also evaluates. torch is
+  not installed, so a torch module has no path here; one would
+  replace this kernel and keep the broadcast and batching as they are.
 """
 
 from __future__ import annotations
 
-from typing import Callable, Iterator
+from typing import Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.types import DoubleType, StructField, StructType
-
-
-def try_import_torch():
-    """Torch if installed, else None (this container: None)."""
-    try:
-        import torch  # noqa: F401
-
-        return torch
-    except ImportError:
-        return None
 
 
 def numpy_linear_tanh(X: np.ndarray, weights: dict) -> np.ndarray:
@@ -48,34 +35,11 @@ def numpy_linear_tanh(X: np.ndarray, weights: dict) -> np.ndarray:
     return np.tanh(X.astype(np.float64) @ weights["w"] + weights["b"])
 
 
-def torch_forward(X: np.ndarray, weights: dict) -> np.ndarray:
-    """Forward through a torch module reconstructed from
-    ``weights['state_dict']`` by ``weights['factory']``. The Spark
-    plumbing (broadcast, Arrow batching) is identical to the numpy
-    path — only this kernel changes when torch is available."""
-    torch = try_import_torch()
-    if torch is None:
-        raise NotImplementedError(
-            "torch is not installed in this environment; the scoring "
-            "plumbing is fully functional — plug numpy_linear_tanh or "
-            "install torch (model = weights['factory']();"
-            " model.load_state_dict(weights['state_dict']))"
-        )
-    model = weights["factory"]()
-    model.load_state_dict(weights["state_dict"])
-    model.eval()
-    with torch.no_grad():
-        return model(torch.from_numpy(X.astype("float32"))).numpy().ravel()
-
-
 def score_batches(
-    features: DataFrame,
-    feature_cols: list[str],
-    weights: dict,
-    forward: Callable[[np.ndarray, dict], np.ndarray] = numpy_linear_tanh,
-    output_col: str = "score",
+    features: DataFrame, feature_cols: list[str], weights: dict
 ) -> DataFrame:
-    """Append ``output_col`` = forward(features, weights) to every row.
+    """Append ``score`` = numpy_linear_tanh(features, weights) to every
+    row.
 
     Weights are broadcast once (sc.broadcast — the CORRECT use of a
     driver broadcast: model params are KBs; contrast the banned
@@ -86,7 +50,7 @@ def score_batches(
     b_weights = spark.sparkContext.broadcast(weights)
 
     out_schema = StructType(
-        features.schema.fields + [StructField(output_col, DoubleType())]
+        features.schema.fields + [StructField("score", DoubleType())]
     )
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -94,7 +58,7 @@ def score_batches(
         for pdf in batches:
             X = pdf[feature_cols].to_numpy(dtype="float64")
             scored = pdf.copy()
-            scored[output_col] = forward(X, w)
+            scored["score"] = numpy_linear_tanh(X, w)
             yield scored
 
     return features.mapInPandas(kernel, schema=out_schema)

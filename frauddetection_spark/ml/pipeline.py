@@ -10,7 +10,7 @@ neighbor features — with a fully distributed pipeline:
 - M1 (sequence encoder)   → per-scale windowed aggregates from the
   §2.4 feature queries become flat feature columns (the LSTM's input
   statistics, minus the learned recurrence);
-- M2 (gated graph conv)   → K rounds of join-aggregate feature
+- M2 (gated graph conv)   → PROP_ROUNDS rounds of join-aggregate feature
   propagation (operators/graph.py::aggregate_messages) producing
   neighbor-aggregate columns — the message-passing structure without
   torch (the gate is a learned scalar; LR learns feature weights on
@@ -70,22 +70,19 @@ def user_features(events: DataFrame) -> DataFrame:
 
 
 def propagate_features(
-    features: DataFrame,
-    edges: DataFrame,
-    cols: list[str],
-    rounds: int = PROP_ROUNDS,
+    features: DataFrame, edges: DataFrame, cols: list[str]
 ) -> DataFrame:
-    """M2: K rounds of mean-aggregate message passing. Round k adds
+    """M2: PROP_ROUNDS rounds of mean-aggregate message passing. Round k adds
     `{col}_nbr{k}` = mean over in-neighbors of the previous round's
     value (round 1 reads the raw columns).
 
     Scale: each round is one join (features onto edge src) + one
-    groupBy(dst) — 2 shuffles × K. Frames are persisted between rounds
+    groupBy(dst) — 2 shuffles × PROP_ROUNDS. Frames are persisted between rounds
     to cut lineage (SURVEY §7 watch-list #4: checkpointing between
     propagation rounds over 7M-edge relations)."""
     out = features
     prev_cols = cols
-    for k in range(1, rounds + 1):
+    for k in range(1, PROP_ROUNDS + 1):
         msgs = edges.join(
             out.select(F.col("user_id").alias("src"), *prev_cols), "src"
         )
@@ -170,11 +167,12 @@ def evaluate(model, dataset: DataFrame) -> dict[str, float]:
             "n_pos": int(agg.n_pos), "n_neg": int(agg.n_neg)}
 
 
-def save_load_roundtrip(model, spark: SparkSession, path: str | None = None):
-    """M6: persist and restore (MLlib Pipeline persistence)."""
+def save_load_roundtrip(model):
+    """M6: persist to a fresh temp dir and restore (MLlib Pipeline
+    persistence). Returns the restored model and the path."""
     from pyspark.ml import PipelineModel
 
-    path = path or os.path.join(tempfile.mkdtemp(), "frauddetection_model")
+    path = os.path.join(tempfile.mkdtemp(), "frauddetection_model")
     model.write().overwrite().save(path)
     return PipelineModel.load(path), path
 

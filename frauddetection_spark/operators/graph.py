@@ -57,9 +57,9 @@ def mirror(edges: DataFrame) -> DataFrame:
     Explode-scatter, not a self-union: the union form planned
     its two branches as independent subtrees (no ReusedExchange), so
     an unpersisted upstream edge pipeline executed twice — the hazard
-    the connected-components checkpoint-before-mirror comment profiled
-    at 8.5s vs 3.1s. One reference → one evaluation, whatever the
-    caller passes."""
+    the connected-components checkpoint-before-mirror comment
+    describes. One reference → one evaluation, whatever the caller
+    passes."""
     return (
         edges.select(
             F.explode(
@@ -392,8 +392,8 @@ def connected_components(edges: DataFrame) -> DataFrame:
     in operators/sampling.py) the components come from one driver-side
     min-id union-find instead of diameter-many distributed rounds:
     each distributed round costs 2+ jobs (checkpoint + convergence
-    count), so a 500-node dup graph paid ~8 scheduler round-trips to
-    label 477 nodes (profiled 3.4s → 0.2s at sf0.1). Above the gate —
+    count), so a small graph would pay one scheduler round-trip per
+    unit of diameter for work one driver pass finishes. Above the gate —
     the only regime a 100-TB run sees — the iterative path below runs
     unchanged; both paths compute the identical min-reachable-id
     fixpoint (pinned by tests/test_plans.py::
@@ -407,7 +407,7 @@ def connected_components(edges: DataFrame) -> DataFrame:
     propagation). Deterministic fixpoint ⇒ oracle-verifiable even
     though the algorithm is iterative driver-side control flow.
     """
-    # Lineage discipline (profiled 7s→2s): persist
+    # Lineage discipline: persist
     # alone does NOT truncate the LOGICAL plan — each round's frame
     # references the previous round twice, so by round k the analyzer
     # walks an O(2^k)-node tree that embeds the (large) upstream edge
@@ -420,8 +420,8 @@ def connected_components(edges: DataFrame) -> DataFrame:
     #
     # Checkpoint BEFORE mirroring: mirror() is a self-union, and Spark
     # plans its two branches as independent subtrees (no reuse) — a
-    # post-mirror checkpoint would execute the upstream pipeline twice
-    # (profiled: 8.5s vs 3.1s on the MinHash pair feed). The union
+    # post-mirror checkpoint would execute the upstream pipeline (the
+    # MinHash pair feed, for q_dedup_groups) twice. The union
     # itself stays lazy: re-deriving it from the checkpointed leaf per
     # round is two cached-block scans, nothing more.
     ck = edges.localCheckpoint()

@@ -306,10 +306,9 @@ def adaptive_centroids(n: int) -> int:
     """Smallest power of two K >= ``IVF_K_FLOOR`` with K² >= n — the √n
     centroid-count rule that keeps IVF buckets at ~√n vectors — CAPPED
     at ``IVF_K_MAX`` (2¹⁶, the same cap as the twin's CASE ladder).
-    With FIXED K the probed candidate space is ~n²·nprobe/K,
-    a hidden quadratic: the sf0.1→sf1 audit measured
-    q_ann_ivf_sampled at 72× for 10× data (20k vectors / 16 centroids
-    = 1250-vector buckets). With K ~ √n and fixed nprobe the candidate
+    With FIXED K the probed candidate space is ~n²·nprobe/K, a hidden
+    quadratic: every bucket grows with n, so tenfold data means
+    hundredfold pair work. With K ~ √n and fixed nprobe the candidate
     space is ~n^1.5·nprobe — the standard IVF scaling. Integer-only on
     purpose: the DuckDB twin computes the SAME K via a CASE ladder
     over count(*) (sql_ivf), and float log2 could disagree in the last
@@ -343,8 +342,8 @@ def _sql_adaptive_centroids() -> str:
 # 128 MB-rule split holding 200k vectors). ASSIGN_BLOCKS is the FLOOR;
 # assign_blocks(n) scales the count with the corpus so the per-task
 # pandas frame stays bounded (a fixed 32 meant ~n/32 rows per task —
-# ≈16 GB/task at 10⁹ vectors, the same hidden-linear-footprint class
-# the scale audit exists to catch).
+# ≈16 GB/task at 10⁹ vectors, a footprint that grows hidden with the
+# corpus).
 ASSIGN_BLOCKS = 32
 
 # ~rows per kernel task: 64-dim int64 qv ≈ 0.5 KB/row ⇒ ~32 MB/task.
@@ -431,11 +430,10 @@ def _centroid_topn(
     This replaces the Catalyst transform/aggregate scoring expression:
     higher-order functions never enter whole-stage codegen, so the n·K·d
     assignment ran as interpreted per-element expression eval — invisible
-    at K=16, but the sf1→sf10 audit caught the adaptive codebook at
-    n=200k/K=512 spending ~6.5e9 interpreted evals in one scan task
-    (>20 min). The same arithmetic as a
-    per-block matmul is seconds, and the block split parallelizes a
-    single-partition scan. Semantics are bit-identical to the old
+    at K=16, but the adaptive codebook at n=200k/K=512 means ~6.5e9
+    interpreted evals in one scan task. The same arithmetic as a
+    per-block matmul runs in compiled numpy, and the block split
+    parallelizes a single-partition scan. Semantics are bit-identical to the old
     sort_array(struct(ccos, -cid, cid)) expression AND the DuckDB
     twin's row_number window: exact int64 dot, one IEEE double
     division, NaN ranked greatest (Spark's double order), ties by cid
@@ -619,7 +617,7 @@ def ivf_topk(
     # final assignment, and both sides of the bucket join; Spark plans
     # those as independent subtrees (no ReusedExchange), so without a
     # persist the parquet scan + quantization re-executes once per
-    # reference — measured 9.9s → 1.8s at sf0.1 for the sampled path.
+    # reference — one scan per Lloyd iteration instead of one in all.
     # Lazy persist only (zero jobs at construction, lint-pinned);
     # released by operators.caching.release_caches().
     q = track_cache(quantize(emb).select("vec_id", "qv", "n2").persist())
@@ -635,9 +633,9 @@ def ivf_topk(
     # Catalyst expression (transform + aggregate over the codebook
     # array) kept the shuffle away but never entered whole-stage
     # codegen — interpreted per-element eval made the n·K·d
-    # assignment the plan's bottleneck once K went adaptive (the
-    # sf1→sf10 audit caught it at >20 min in a single scan task at
-    # n=200k/K=512; the matmul form is seconds). Ordering semantics
+    # assignment the plan's bottleneck once K went adaptive (n·K·d
+    # interpreted evals in a single scan task; the matmul form runs
+    # them in compiled numpy). Ordering semantics
     # (ccos DESC, cid ASC, NaN greatest) and the exact int64-dot +
     # IEEE-division arithmetic are unchanged — the DuckDB twin still
     # hash-matches. The persisted probe index stays n·nprobe rows.
@@ -726,8 +724,8 @@ def ivf_topk(
     # pair space (~n²·nprobe/B) rides inside a per-bucket numpy int64
     # matmul — one cogrouped kernel per bucket, emitting only each
     # probe's bucket-local top-k — NOT as n²·nprobe/B materialized rows
-    # through Catalyst array lambdas (measured 20× slower per pair than
-    # the matmul; this swap took q_ann_ivf* from ~9s to ~2s at sf0.1).
+    # through Catalyst array lambdas, which are interpreted per element
+    # and never enter whole-stage codegen.
     # A (probe, candidate) pair meets in exactly one bucket (home is
     # unique), so tile top-ks merge with no dedup, same as
     # knn_topk_bruteforce. Arithmetic is the identical int64 dot +
@@ -914,8 +912,8 @@ def sql_ivf(
 # The query batch: the probes are the first QUERY_CAP multiples of
 # QUERY_MOD (q_ann_query_batch and q_ann_pq). The batch is FIXED, NOT a
 # fixed fraction of the corpus: a "5% of vec_ids" probe rule made
-# probes x corpus = n²/20 work (measured 44.8x on a 10x decade). With
-# the batch pinned, probe-side work is QUERY_CAP·n — linear per decade.
+# probes x corpus = n²/20 work, quadratic in the corpus. With the
+# batch pinned, probe-side work is QUERY_CAP·n — linear per decade.
 # 512 is above every oracle-gate probe count (sf0.001/0.01: 25, sf0.1:
 # 100); it binds only at sf1+.
 QUERY_MOD = 20
@@ -935,9 +933,10 @@ def query_batch_topk(corpus: DataFrame, probes: DataFrame) -> DataFrame:
     dedup. No driver collect, no broadcast variable — the whole plan
     is lazy (zero jobs at construction, lint-enforced) and the
     replication cost is |probes|·B rows of int64 vectors (tiny by the
-    asymmetry assumption). Profiled at sf0.1: 4× faster than the
-    Catalyst higher-order-function dot products (same lesson as the
-    IVF rerank kernel) while keeping the identical int64-dot + single
+    asymmetry assumption). The numpy kernel replaces Catalyst
+    higher-order-function dot products, which are interpreted per
+    element and never enter whole-stage codegen (same lesson as the
+    IVF rerank kernel), while keeping the identical int64-dot + single
     IEEE-division arithmetic the DuckDB twin runs.
 
     Inputs are PRE-QUANTIZED frames (vec_id, qv, n2) from
@@ -1044,9 +1043,9 @@ def _pq_partials(
     the codebooks onto the n·m subvector rows and ran the argmin as an
     interpreted array_min(transform(...aggregate(zip_with(...))))
     Catalyst expression — n·m·ksub interpreted lambda evals per pass
-    (HOFs never enter whole-stage codegen; an attempt to unroll it into
-    ksub positional codegen'd struct keys measured 3.1s → 10.2s at
-    ksub=32 — the 32-branch conditional defeats subexpression sharing).
+    (HOFs never enter whole-stage codegen; unrolling it into ksub
+    positional codegen'd struct keys is no cure — a ksub-branch
+    conditional defeats subexpression sharing).
     Here each cogroup block scores its vectors against the full
     replicated codebook as one exact int64 matmul per subspace and
     emits ≤ B·m·ksub partial-sum rows. Exactness: int64 partials are
@@ -1234,12 +1233,11 @@ def pq_topk(emb: DataFrame, n_rows: int | None = None) -> DataFrame:
     # over n·m·ksub candidate evals per training/encode pass — is
     # never materialized: assignment now runs inside the blocked
     # numpy kernels (_pq_partials / _pq_encode, guide §4.2; the IVF
-    # _lloyd_partials precedent). An intermediate
-    # attempt to keep the Catalyst expression and unroll it into ksub
-    # positional codegen'd struct keys measured 3.1s → 10.2s at
-    # ksub=32 (the 32-branch conditional defeats codegen
-    # subexpression sharing) — kernels, not expressions, are the
-    # right tool at this candidate count.
+    # _lloyd_partials precedent). Unrolling the Catalyst expression
+    # into ksub positional codegen'd struct keys does not help (a
+    # ksub-branch conditional defeats codegen subexpression sharing)
+    # — kernels, not expressions, are the right tool at this
+    # candidate count.
     subs = q.select("vec_id", F.explode(sub_structs).alias("s")).select(
         "vec_id", "s.m", "s.sub"
     )
@@ -1283,9 +1281,9 @@ def pq_topk(emb: DataFrame, n_rows: int | None = None) -> DataFrame:
 
     # Probe set = the fixed serving batch (see QUERY_CAP); corpus =
     # everything else. An unbounded "every multiple of QUERY_MOD" rule
-    # made ADC work probes*corpus*m quadratic (measured 18.9x on a 10x
-    # decade); with the batch pinned, ADC is QUERY_CAP*n*m LUT
-    # gathers: linear per decade.
+    # made ADC work probes*corpus*m quadratic in the corpus; with the
+    # batch pinned, ADC is QUERY_CAP*n*m LUT gathers: linear per
+    # decade.
     probe = (F.col("vec_id") % QUERY_MOD == 0) & (
         F.col("vec_id") < QUERY_MOD * QUERY_CAP
     )

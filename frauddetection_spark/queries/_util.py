@@ -5,6 +5,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from frauddetection_spark.operators.caching import track_cache
+from frauddetection_spark.operators.rank import prefix_rank
 from frauddetection_spark.sources.tables import load_table
 
 
@@ -55,3 +57,58 @@ def cents(c: Column | str, scale: int = 100) -> Column:
     """
     col = F.col(c) if isinstance(c, str) else c
     return F.round(col * scale).cast("bigint")
+
+
+def quantile_ranks(
+    spark: SparkSession, sf_dir: str, quantiles: tuple[tuple[str, int, int], ...]
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Shared scaffolding of the exact per-event_type quantile queries
+    (q_quantile_grid, q_quantile_interp). Returns three frames:
+
+    - ``goff``: per event_type, its first global rank ``rn0`` and its
+      row count ``nn``;
+    - ``r``: every event with its value in cents ``c``, its group's
+      ``nn`` and its 1-based rank ``grn`` within its event_type by
+      (c, event_id);
+    - ``fr``: the quantile spec as a ``(q_label, num, den)`` literal
+      frame, one row per ``quantiles`` entry.
+
+    Ranks come from prefix_rank over the TOTAL order (event_type, c,
+    event_id) — range-partitioned two-phase ranking, never a per-group
+    window that funnels a huge group through one task — and per-group
+    ranks subtract each group's broadcast min-rank offset."""
+    e = t(spark, sf_dir, "events")
+    c = e.select("event_type", "event_id", cents("value").alias("c"))
+    # the ranked frame feeds BOTH the row side and the per-group offset
+    # aggregate; without the (tracked) persist Spark re-runs the whole
+    # two-phase rank for each subtree — a doubled scan at any scale
+    ranked = track_cache(
+        prefix_rank(
+            c, [F.col("event_type"), F.col("c"), F.col("event_id")]
+        ).persist()
+    )
+    goff = ranked.groupBy("event_type").agg(
+        F.min("rn").alias("rn0"), F.count("*").alias("nn")
+    )
+    r = ranked.join(F.broadcast(goff), "event_type").withColumn(
+        "grn", F.col("rn") - F.col("rn0") + 1
+    )
+    fr = (
+        spark.range(1)
+        .select(
+            F.explode(
+                F.array(
+                    *[
+                        F.struct(
+                            F.lit(lbl).alias("q_label"),
+                            F.lit(num).cast("bigint").alias("num"),
+                            F.lit(den).cast("bigint").alias("den"),
+                        )
+                        for lbl, num, den in quantiles
+                    ]
+                )
+            ).alias("f")
+        )
+        .select("f.*")
+    )
+    return goff, r, fr

@@ -22,7 +22,14 @@ from pyspark.sql import functions as F
 
 from frauddetection_spark.operators.caching import track_cache
 from frauddetection_spark.plans.registry import register
-from frauddetection_spark.queries._util import SQL_WEEK, cents, r6, t, week_str
+from frauddetection_spark.queries._util import (
+    SQL_WEEK,
+    cents,
+    quantile_ranks,
+    r6,
+    t,
+    week_str,
+)
 
 # Anchor for day indexing (testdata epoch start; any fixed date works —
 # slope is translation-invariant, intercept is defined w.r.t. this).
@@ -714,43 +721,9 @@ def q_quantile_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-phase ranking, never a per-group window that funnels a huge
     group through one task — and per-group ranks are recovered by
     subtracting each group's broadcast min-rank offset. The quantile
-    spec is a 5-row literal joined on the computed index."""
-    from frauddetection_spark.operators.rank import prefix_rank
-
-    e = t(spark, sf_dir, "events")
-    c = e.select("event_type", "event_id", cents("value").alias("c"))
-    # the ranked frame feeds BOTH the row side and the per-group offset
-    # aggregate; without the (tracked) persist Spark re-runs the whole
-    # two-phase rank for each subtree — a doubled scan at any scale
-    ranked = track_cache(
-        prefix_rank(
-            c, [F.col("event_type"), F.col("c"), F.col("event_id")]
-        ).persist()
-    )
-    goff = ranked.groupBy("event_type").agg(
-        F.min("rn").alias("rn0"), F.count("*").alias("nn")
-    )
-    r = ranked.join(F.broadcast(goff), "event_type").withColumn(
-        "grn", F.col("rn") - F.col("rn0") + 1
-    )
-    fr = (
-        spark.range(1)
-        .select(
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(lbl).alias("q_label"),
-                            F.lit(num).cast("bigint").alias("num"),
-                            F.lit(den).cast("bigint").alias("den"),
-                        )
-                        for lbl, num, den in _QUANTILES
-                    ]
-                )
-            ).alias("f")
-        )
-        .select("f.*")
-    )
+    spec is a 5-row literal joined on the computed index
+    (queries/_util.py::quantile_ranks builds the ranks and the spec)."""
+    _goff, r, fr = quantile_ranks(spark, sf_dir, _QUANTILES)
     idx = F.expr("(num * nn + den - 1) div den")
     return (
         r.join(F.broadcast(fr), F.col("grn") == idx)
@@ -2241,9 +2214,9 @@ def q_date_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the other branches at ≥ d0; its max day IS max(d0+nd) —
     branch-3 rows dominate both others), which is calendar-bounded,
     so the one persist this plan carries is O(days), never O(data).
-    Output verified row-identical at sf0.1; interleaved A/B min
-    1.62s → 1.51s cold-path (the win is the deleted triple scan+join,
-    which at 100 TB is 3 extra full passes of lineitem ⨝ orders)."""
+    Output verified row-identical at sf0.1; the win is the deleted
+    triple scan+join, which at 100 TB is 3 extra full passes of
+    lineitem ⨝ orders."""
     from frauddetection_spark.operators.rank import prefix_rank
 
     li = (

@@ -21,7 +21,7 @@ from pyspark.sql.window import Window
 
 from frauddetection_spark.operators.rank import prefix_rank
 from frauddetection_spark.plans.registry import register
-from frauddetection_spark.queries._util import SQL_WEEK, cents, r6, t, week_str
+from frauddetection_spark.queries._util import SQL_WEEK, cents, t, week_str
 
 _WEEK = SQL_WEEK.format(ts="ts")
 
@@ -726,11 +726,10 @@ def q_behavioral_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     scans, 4 → 2 sorts, and the two-countDistinct Expand (3× rows
     through the agg) disappears — the one remaining distinct (contact,
     unbounded domain) plans as a two-level agg reusing the same
-    partitioning. At sf0.1 the interleaved A/B is a wash (min 1.51s vs
-    1.61s, medians equal — fixed per-query overheads dominate 7.5k
-    groups); the rewrite is adopted for the plan SHAPE: at 100 TB the
-    deleted branch is a second full scan plus two event-scale shuffles
-    and a join. The shape that turns a driver-RAM pandas job into a
+    partitioning. On small data fixed per-query overheads hide the
+    difference; the rewrite is adopted for the plan SHAPE: at 100 TB
+    the deleted branch is a second full scan plus two event-scale
+    shuffles and a join. The shape that turns a driver-RAM pandas job into a
     100-TB plan."""
     e = t(spark, sf_dir, "events")
     base = e.select(

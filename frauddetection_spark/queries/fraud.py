@@ -24,7 +24,13 @@ from pyspark.sql import functions as F
 
 from frauddetection_spark.operators.rank import prefix_max, prefix_rank
 from frauddetection_spark.plans.registry import register
-from frauddetection_spark.queries._util import SQL_WEEK, cents, t, week_str
+from frauddetection_spark.queries._util import (
+    SQL_WEEK,
+    cents,
+    quantile_ranks,
+    t,
+    week_str,
+)
 
 # double-swipe window (same (user, amount) pair within 10 minutes)
 SWIPE_GAP_US = 600 * 1_000_000
@@ -964,41 +970,9 @@ def q_quantile_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
     are the final identical-form lerp — no float q·n drift. Same
     prefix_rank scale shape as the grid: range-partitioned global
     ranks, per-group offsets broadcast, the two bracketing rows fetched
-    by rank join (never a per-group sort in one task)."""
-    from frauddetection_spark.operators.caching import track_cache
-    from frauddetection_spark.operators.rank import prefix_rank
-
-    e = t(spark, sf_dir, "events")
-    c = e.select("event_type", "event_id", cents("value").alias("c"))
-    ranked = track_cache(
-        prefix_rank(
-            c, [F.col("event_type"), F.col("c"), F.col("event_id")]
-        ).persist()
-    )
-    goff = ranked.groupBy("event_type").agg(
-        F.min("rn").alias("rn0"), F.count("*").alias("nn")
-    )
-    r = ranked.join(F.broadcast(goff), "event_type").withColumn(
-        "grn", F.col("rn") - F.col("rn0") + 1
-    )
-    fr = (
-        spark.range(1)
-        .select(
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(lbl).alias("q_label"),
-                            F.lit(num).cast("bigint").alias("num"),
-                            F.lit(den).cast("bigint").alias("den"),
-                        )
-                        for lbl, num, den in _INTERP_QUANTILES
-                    ]
-                )
-            ).alias("f")
-        )
-        .select("f.*")
-    )
+    by rank join (never a per-group sort in one task); the ranks and
+    the spec frame come from queries/_util.py::quantile_ranks."""
+    goff, r, fr = quantile_ranks(spark, sf_dir, _INTERP_QUANTILES)
     ix = (
         goff.crossJoin(F.broadcast(fr))
         .select(

@@ -27,7 +27,7 @@ from frauddetection_spark.operators.graph import (
     mirror,
 )
 from frauddetection_spark.plans.registry import register
-from frauddetection_spark.queries._util import r6, t
+from frauddetection_spark.queries._util import t
 from frauddetection_spark.sources import catalog
 
 # DuckDB twin of edges_from_events
@@ -629,8 +629,7 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 3× and ori 3× (both wedge sides + the closing edge) — persist
     # them or the edge derivation replays per reference (20 parquet
     # scans / 48 exchanges in the executed plan without them; the
-    # replay, not the wedge join, drove a measured 3.2× sf-growth
-    # ratio).
+    # replay, not the wedge join, is the cost that grows with data).
     und = track_cache(mirror(e).persist())
     deg = track_cache(
         und.groupBy("src")
@@ -830,9 +829,8 @@ def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     the old double-reference (degree aggregate + two semi-joins on a
     keep set) at the source: no per-round persist, no aux keep frame,
     no broadcast materializations — the old shape ran 26 AQE jobs per
-    execution at sf0.01 (5.4s in a scale audit, flat 1.1x to
-    sf0.1, i.e. pure scheduler overhead); windows-in-rounds runs 10
-    (measured 3.0s -> 1.3s warm at sf0.01, 5.8s -> 3.0s at sf0.1).
+    execution at sf0.01, almost all of it scheduler overhead that does
+    not grow with data; windows-in-rounds runs 10.
     Round order (dst then src) ends each round partitioned by src, so
     the final degree aggregate adds no extra shuffle. Skew trade-off,
     stated honestly: a hub node's window group is a single task (AQE
@@ -1042,9 +1040,8 @@ def q_graph_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # und feeds deg + the orientation join, deg is probed 4× and ori
     # 3× (both wedge sides + the closing edge) — without persists the
     # whole edge derivation replays per reference (executed plan: 22
-    # parquet scans, 53 exchanges, zero reuse; with the three persists,
-    # sf0.1 steady 3.3s → 2.0s and cold 13.1s → 5.2s, same-session
-    # calib).
+    # parquet scans, 53 exchanges, zero reuse without the three
+    # persists).
     und = track_cache(
         mirror(no_self)
         .persist()
@@ -1266,10 +1263,9 @@ def q_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan note: Spark's recursive execution re-evaluates every
     non-recursive CTE it references PER ITERATION — with `edges` as a
-    CTE the DISTINCT json-extract scan ran once per hop (measured
-    4.2s at sf0.1). The edge list is therefore pre-materialized
-    behind a cached temp view (2.4s) — the same move a 100-TB closure
-    makes: derive the edge relation once, iterate over the
+    CTE the DISTINCT json-extract scan ran once per hop. The edge
+    list is therefore pre-materialized behind a cached temp view —
+    the same move a 100-TB closure makes: derive the edge relation once, iterate over the
     materialization. The RECURSIVE body is textually identical to the
     DuckDB twin; only the edges derivation moved out front."""
     from frauddetection_spark.operators.caching import track_cache

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from frauddetection_spark.operators.rank import auc_stats, prefix_rank
 from frauddetection_spark.plans.registry import register
-from frauddetection_spark.queries._util import r6, t
+from frauddetection_spark.queries._util import t
 
 ERROR_THRESHOLD = 15
 SCORE_THRESHOLD = 0.15

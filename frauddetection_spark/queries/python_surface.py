@@ -121,15 +121,15 @@ def q_binary_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("q_multimodal_decode", oracle=None)
 def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed media decode via mapInPandas with the deterministic
-    fake kernel (real decode is stubbed pending image libs —
-    functions/multimodal.py::decode_image). Rows-only: the kernel is
+    digest kernel that stands in for an image library
+    (functions/multimodal.py::decode_image). Rows-only: the kernel is
     not SQL-expressible."""
     media = with_media_column(t(spark, sf_dir, "documents"))
-    return decode_media(media, fake=True).orderBy("doc_id")
+    return decode_media(media).orderBy("doc_id")
 
 
 # ---------------------------------------------------------------------------
-# M1 hook — broadcast-weights model scoring (torch-compatible interface)
+# M1 hook — broadcast-weights model scoring
 # ---------------------------------------------------------------------------
 
 # fixed demo scorer: tanh(w1·f1 + w2·f2 + b) over two per-user features
@@ -159,7 +159,7 @@ _W1, _W2, _B = 0.3, -0.2, 0.1
     """,
 )
 def q_model_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Model scoring through the M1 torch hook (functions/torch_hook.py):
+    """Model scoring through the M1 scoring hook (functions/torch_hook.py):
     per-user features stay cluster-resident, the (tiny) weight vector is
     broadcast, and a mapInPandas forward pass appends the score — the
     migration path for the reference's trained MultiLstm
@@ -167,8 +167,7 @@ def q_model_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     forward is the deterministic numpy reference (tanh(Xw+b)); the
     oracle evaluates the same closed form in SQL ((e^{{2z}}-1)/(e^{{2z}}+1)
     — DuckDB has no tanh), with r6 rounding absorbing libm 1-ulp drift
-    per the engine's transcendental policy. A real torch module uses
-    torch_hook.torch_forward with identical plumbing."""
+    per the engine's transcendental policy."""
     import numpy as np
 
     from frauddetection_spark.functions.torch_hook import score_batches
@@ -300,7 +299,7 @@ def q_python_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
     batches, schema declaration, lateral binding); the identical
     expansion is expressible as the sequence-explode the oracle runs,
     which is also the 100-TB plan."""
-    from pyspark.sql.functions import lit, udtf
+    from pyspark.sql.functions import udtf
 
     @udtf(returnType="installment int, amount_cents bigint")
     class Installments:

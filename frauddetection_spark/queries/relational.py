@@ -3672,7 +3672,7 @@ def q_tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Persist v: it feeds BOTH the 1-row (Σ, n) total and the filtered
     # output — unpersisted, the lineitem groupBy + supplier join replay
     # once per reference (the base-relation-probed-by-own-aggregate
-    # shape; this query was the scale audit's last >3× grower).
+    # shape, whose replayed fact scan grows with the data).
     # Per-part aggregate rows, far smaller than the fact input.
     v = track_cache(
         sup.join(F.broadcast(s), F.col("s_suppkey") == F.col("ps_suppkey"))

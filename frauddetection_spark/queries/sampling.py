@@ -23,7 +23,7 @@ from frauddetection_spark.operators.sampling import (
     xxhash_split,
 )
 from frauddetection_spark.plans.registry import register
-from frauddetection_spark.queries._util import cents, r6, t
+from frauddetection_spark.queries._util import cents, t
 
 ERROR_THRESHOLD = 15
 
@@ -768,9 +768,8 @@ def q_cluster_griddensity(spark: SparkSession, sf_dir: str) -> DataFrame:
     collected constant-size edge list (the same class of driver hop
     as collecting an aggregate scalar). A distributed min-label
     fixpoint here costs diameter-many rounds on a graph whose
-    diameter GROWS with grid occupancy — measured 14.6× growth across
-    the 10× data step (the scale-audit flag that triggered this
-    rewrite) for a graph union-find resolves in microseconds.
+    diameter GROWS with grid occupancy — scheduler rounds that grow
+    with the data for a graph union-find resolves in microseconds.
     Everything data-sized stays distributed: two shuffles (cell
     count, adjacency join), then one broadcast mapping join."""
     pts = (

@@ -10,7 +10,7 @@ engines run the *same* integer algorithm.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from frauddetection_spark.operators.textsim import (
@@ -424,8 +424,8 @@ def _embeddings_count(sf_dir: str) -> int:
 
 # Centroid count is ADAPTIVE: K = adaptive_centroids(n) ~ √n, computed
 # from the catalog's row count above — a FIXED K made the probed
-# candidate space ~n²·nprobe/K, a hidden quadratic the sf0.1→sf1 audit
-# measured at 72× for 10× data. At the oracle-gate scale factors
+# candidate space ~n²·nprobe/K, a hidden quadratic (tenfold data,
+# hundredfold pair work). At the oracle-gate scale factors
 # (sf0.001/0.01) embeddings has n=500, so K=32, not the floor of 16;
 # the twin computes the same K from its CASE ladder, so the hashes
 # match. NPROBE and IVF_ITERS live with the operator
@@ -478,8 +478,7 @@ def q_ann_ivf_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the full corpus is scanned exactly once, by the final
     assignment + probe + rerank stage. The centroid count is adaptive
     (~√n) like q_ann_ivf's — fixed-K buckets grow linearly and the
-    bucket rerank goes quadratic (measured 72× for 10× data in the
-    sf1 audit before this change). Seeds are the sample's
+    bucket rerank goes quadratic. Seeds are the sample's
     n_centroids smallest portable-hash values — id-order-independent
     spread, the deterministic stand-in for k-means‖ oversampling —
     making the whole path, sampling included, oracle-checkable.
@@ -612,13 +611,13 @@ def q_ann_query_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/vectors.py::query_batch_topk): the corpus stays
     in its natural hash block, the probe set is replicated onto every
     block, each pair meets in exactly one kernel call, and tiles emit
-    only their local top-k. Profiled 4× faster at sf0.1 than the
-    Catalyst zip_with/aggregate dot products (the IVF-rerank lesson),
-    with the identical int64-dot + one-IEEE-division arithmetic the
-    DuckDB twin runs — still hash-equal. Scale: QUERY_CAP·n dots —
-    linear per decade by construction (the scale audit measured the old
-    probes-as-5%-of-corpus rule at 44.8x/decade, a quadratic hiding
-    inside the serving query; a growing probe WORKLOAD is sharded
+    only their local top-k. The numpy kernel replaces Catalyst
+    zip_with/aggregate dot products, which never enter whole-stage
+    codegen (the IVF-rerank lesson), with the identical int64-dot +
+    one-IEEE-division arithmetic the DuckDB twin runs — still
+    hash-equal. Scale: QUERY_CAP·n dots — linear per decade by
+    construction (the old probes-as-5%-of-corpus rule was a quadratic
+    hiding inside the serving query; a growing probe WORKLOAD is sharded
     into fixed batches by the caller, it never rides one query). At
     100 TB the same plan holds until the per-batch corpus scan
     itself is the bottleneck, at which point the IVF bucket route
@@ -739,9 +738,9 @@ def q_sparse_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     df = tf.groupBy("shingle").agg(F.count("*").alias("df"))
     # Every join below is between DATA-SCALED relations (postings,
-    # pair aggregates, per-doc norms): pin them to shuffle joins. The
-    # sf1→sf10 audit caught AQE broadcast-converting the posting
-    # self-join — repeated shingle strings compress the shuffled side
+    # pair aggregates, per-doc norms): pin them to shuffle joins. AQE
+    # can broadcast-convert the posting self-join at sf10 —
+    # repeated shingle strings compress the shuffled side
     # under the 64 MB threshold while decompressing to 3.7 GiB in the
     # broadcast build, which is equally wrong on a 1000-executor
     # cluster (a posting relation grows with the corpus; only truly
@@ -854,7 +853,6 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sig feeds BOTH sides of the band bucket join — persist the tiny
     # (doc_id, simhash) table or the whole 32-column signature build
     # (token hashes → per-bit contributions → pack) replays twice
-    # (sf0.1 min-of-2: 5.5s → ~2.7s, steady ~1.5s)
     sig = track_cache(simhash(t(spark, sf_dir, "documents")).persist())
     bands_idx = spark.range(_SH_BANDS).select(F.col("id").alias("band"))
     mask = (1 << _SH_BAND_BITS) - 1

@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from frauddetection_spark.operators.rank import prefix_max
 from frauddetection_spark.plans.registry import register
-from frauddetection_spark.queries._util import r6, t
+from frauddetection_spark.queries._util import t
 from frauddetection_spark.streaming.windows import sliding_counts, tumbling_counts
 
 SESSION_GAP_S = 30 * 60

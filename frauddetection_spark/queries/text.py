@@ -15,7 +15,7 @@ from pyspark.sql import functions as F
 
 from frauddetection_spark.operators.caching import track_cache
 from frauddetection_spark.plans.registry import register
-from frauddetection_spark.queries._util import r6, t
+from frauddetection_spark.queries._util import t
 
 # Whitespace tokenization, identical in both engines.
 _TOKENS_SPARK = r"\s+"

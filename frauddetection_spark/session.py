@@ -32,14 +32,14 @@ DEFAULT_CPUS = int(
 
 def get_spark(
     app_name: str = "frauddetection-spark",
-    master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession configured for this engine.
 
-    Parameters are overridable for tests; production deployments pass
-    ``master=None`` and let spark-submit supply the cluster manager.
+    Without ``SPARK_MASTER_URL`` the master is ``local[DEFAULT_CPUS]``;
+    a deployment sets that variable and spark-submit supplies the
+    cluster manager.
     """
     cpus = DEFAULT_CPUS
     builder = (
@@ -86,9 +86,7 @@ def get_spark(
             ),
         )
     )
-    if master is not None:
-        builder = builder.master(master)
-    elif not os.environ.get("SPARK_MASTER_URL"):
+    if not os.environ.get("SPARK_MASTER_URL"):
         builder = builder.master(f"local[{cpus}]")
     if extra_conf:
         for k, v in extra_conf.items():

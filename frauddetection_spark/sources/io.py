@@ -24,16 +24,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 
-def write_partitioned(
-    df: DataFrame,
-    path: str,
-    partition_by: list[str],
-    mode: str = "overwrite",
-) -> None:
+def write_partitioned(df: DataFrame, path: str, partition_by: list[str]) -> None:
     """Directory-partitioned parquet sink. Caller picks partition keys
     with enough files per partition to parallelize but few enough
     directories to keep listings cheap (≲ 10⁴)."""
-    df.write.mode(mode).partitionBy(*partition_by).parquet(path)
+    df.write.mode("overwrite").partitionBy(*partition_by).parquet(path)
 
 
 def read_partitioned(
@@ -51,39 +46,32 @@ def read_partitioned(
 
 
 def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_by: str,
-    n_buckets: int = 8,
-    sort_by: str | None = None,
-    mode: str = "overwrite",
+    df: DataFrame, table: str, bucket_by: str, n_buckets: int = 8
 ) -> None:
-    """Bucketed + sorted managed table (saveAsTable — bucketing
-    metadata lives in the session catalog). Joins/aggregations on
-    `bucket_by` between co-bucketed tables skip the shuffle."""
+    """Bucketed managed table (saveAsTable — bucketing metadata lives
+    in the session catalog), replacing any table of that name.
+    Joins/aggregations on `bucket_by` between co-bucketed tables skip
+    the shuffle."""
     spark = df.sparkSession
-    if mode == "overwrite":
-        # a managed-table location can outlive the catalog entry (new
-        # session, old warehouse dir) — clear both before writing
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        warehouse = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-        loc = os.path.join(warehouse.removeprefix("file:"), table.lower())
-        if os.path.exists(loc):
-            import shutil
+    # a managed-table location can outlive the catalog entry (new
+    # session, old warehouse dir) — clear both before writing
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    warehouse = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
+    loc = os.path.join(warehouse.removeprefix("file:"), table.lower())
+    if os.path.exists(loc):
+        import shutil
 
-            shutil.rmtree(loc)
-    w = df.write.mode(mode).bucketBy(n_buckets, bucket_by)
-    if sort_by:
-        w = w.sortBy(sort_by)
-    w.format("parquet").saveAsTable(table)
+        shutil.rmtree(loc)
+    (
+        df.write.mode("overwrite")
+        .bucketBy(n_buckets, bucket_by)
+        .format("parquet")
+        .saveAsTable(table)
+    )
 
 
 def write_range_sorted(
-    df: DataFrame,
-    path: str,
-    keys: list[str],
-    n_partitions: int,
-    mode: str = "overwrite",
+    df: DataFrame, path: str, keys: list[str], n_partitions: int
 ) -> None:
     """Range-partitioned, within-partition-sorted parquet sink — the
     layout that makes downstream merge joins and key-range scans cheap
@@ -97,15 +85,15 @@ def write_range_sorted(
     (
         df.repartitionByRange(n_partitions, *keys)
         .sortWithinPartitions(*keys)
-        .write.mode(mode)
+        .write.mode("overwrite")
         .parquet(path)
     )
 
 
-def export_csv(df: DataFrame, path: str, mode: str = "overwrite") -> None:
+def export_csv(df: DataFrame, path: str) -> None:
     """CSV sink (header, default quoting). Doubles round-trip via
     Spark's shortest-repr writer."""
-    df.write.mode(mode).option("header", "true").csv(path)
+    df.write.mode("overwrite").option("header", "true").csv(path)
 
 
 def read_csv(
@@ -238,18 +226,17 @@ def overwrite_partitions_dynamic(
         .parquet(path)
     )
 
+
+# Bits per key of write_zordered's Morton value: 2^8 rank levels each.
+ZORDER_BITS = 8
+
+
 def write_zordered(
-    df: DataFrame,
-    path: str,
-    key_a: str,
-    key_b: str,
-    n_partitions: int,
-    bits: int = 8,
-    mode: str = "overwrite",
+    df: DataFrame, path: str, key_a: str, key_b: str, n_partitions: int
 ) -> None:
     """Z-order (Morton-curve) layout over TWO numeric keys — the
     multi-dimension file-pruning technique (Delta OPTIMIZE ZORDER BY's
-    core): each key is rank-normalized to 2^bits levels, the two
+    core): each key is rank-normalized to 2^ZORDER_BITS levels, the two
     bit-strings are interleaved into one Morton value, and files are
     range-split + sorted on it. A single-key sort makes the OTHER
     key's per-file min/max spans useless (every file spans the full
@@ -268,7 +255,7 @@ def write_zordered(
     from frauddetection_spark.operators.caching import release_caches
     from frauddetection_spark.operators.rank import prefix_rank
 
-    levels = 1 << bits
+    levels = 1 << ZORDER_BITS
     ra = prefix_rank(
         df, [F.col(key_a), F.col(key_b)], total_count="_n"
     ).withColumnRenamed("rn", "_rna")
@@ -282,7 +269,7 @@ def write_zordered(
     )
     # interleave bits: z = Σ_i ((ba>>i & 1) << 2i+1 | (bb>>i & 1) << 2i)
     z = F.lit(0).cast("bigint")
-    for i in range(bits):
+    for i in range(ZORDER_BITS):
         z = (
             z
             + (F.shiftright(F.col("_ba"), i).bitwiseAND(1).cast("bigint")
@@ -295,7 +282,7 @@ def write_zordered(
         .repartitionByRange(n_partitions, "_z")
         .sortWithinPartitions("_z")
         .drop("_rna", "_rnb", "_n", "_n2", "_ba", "_bb", "_z")
-        .write.mode(mode)
+        .write.mode("overwrite")
         .parquet(path)
     )
     # the two prefix_rank passes persist their range frames; the write

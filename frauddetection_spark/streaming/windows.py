@@ -10,6 +10,9 @@ Design:
   twins in queries/streaming_twins.py run `tumbling_counts` and
   `sliding_counts` over the batch table and are oracle-checked, so a
   backfill (batch) and the live path (stream) cannot disagree.
+- One geometry: window sizes, the session gap, the attribution
+  horizon and the watermark are module constants, because each batch
+  twin's SQL fixes the same values.
 - Watermark = late-event tolerance. State for a tumbling window is
   dropped once `max(event time) - watermark` passes the window end —
   bounded state at any scale.
@@ -36,11 +39,16 @@ from pyspark.sql.types import (
 )
 
 WATERMARK = "10 minutes"
+# Window geometry and attribution horizon. The batch twins' SQL
+# (queries/streaming_twins.py, q_stream_join) spells the same values;
+# change them together.
+TUMBLE = "1 hour"
+SLIDE_SIZE, SLIDE_STEP = "1 hour", "30 minutes"
+SESSION_GAP = "30 minutes"
+ATTRIBUTION_HORIZON = "1 hour"
 
 
-def stream_events(
-    spark: SparkSession, sf_dir: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
+def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events as an unbounded stream from the parquet file source.
 
     Streaming sources cannot infer schemas, so the raw schema comes
@@ -56,18 +64,16 @@ def stream_events(
         spark.readStream.schema(raw)
         .option("pathGlobFilter", "events.parquet")
     )
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
     return pinned_projection(reader.parquet(sf_dir), "events", raw)
 
 
-def tumbling_counts(events: DataFrame, size: str = "1 hour") -> DataFrame:
+def tumbling_counts(events: DataFrame) -> DataFrame:
     """Per-(hour, event_type) counts + exact-cents value sum, tolerant
     of 10 minutes of event-time disorder. Streaming twin of
     q_tumbling_counts."""
     return (
         events.withWatermark("ts", WATERMARK)
-        .groupBy(F.window("ts", size).alias("w"), "event_type")
+        .groupBy(F.window("ts", TUMBLE).alias("w"), "event_type")
         .agg(
             F.count("*").alias("n"),
             (
@@ -84,14 +90,14 @@ def tumbling_counts(events: DataFrame, size: str = "1 hour") -> DataFrame:
     )
 
 
-def sliding_counts(
-    events: DataFrame, size: str = "1 hour", slide: str = "30 minutes"
-) -> DataFrame:
-    """Overlapping windows — each event lands in size/slide windows.
-    Streaming twin of q_sliding_counts."""
+def sliding_counts(events: DataFrame) -> DataFrame:
+    """Overlapping windows — each event lands in SLIDE_SIZE/SLIDE_STEP
+    windows. Streaming twin of q_sliding_counts."""
     return (
         events.withWatermark("ts", WATERMARK)
-        .groupBy(F.window("ts", size, slide).alias("w"), "event_type")
+        .groupBy(
+            F.window("ts", SLIDE_SIZE, SLIDE_STEP).alias("w"), "event_type"
+        )
         .agg(F.count("*").alias("n"))
         .select(
             F.unix_timestamp("w.start").alias("window_start"),
@@ -101,14 +107,14 @@ def sliding_counts(
     )
 
 
-def session_stats(events: DataFrame, gap: str = "30 minutes") -> DataFrame:
+def session_stats(events: DataFrame) -> DataFrame:
     """Per-user activity sessions via native session_window (dynamic
     gap-merged windows; state closes when the watermark passes
     last-event + gap). Batch twin q_session_stats expresses the same
     sessions as gaps-and-islands — parity is asserted in tests."""
     return (
         events.withWatermark("ts", WATERMARK)
-        .groupBy("user_id", F.session_window("ts", gap).alias("w"))
+        .groupBy("user_id", F.session_window("ts", SESSION_GAP).alias("w"))
         .agg(F.count("*").alias("n_events"))
         .select(
             "user_id",
@@ -170,19 +176,19 @@ def running_totals(events: DataFrame) -> DataFrame:
     )
 
 
-def dedup_stream(events: DataFrame, keys: list[str] | None = None) -> DataFrame:
+def dedup_stream(events: DataFrame) -> DataFrame:
     """Exactly-once delivery from an at-least-once source:
     ``dropDuplicatesWithinWatermark`` keeps the first arrival of each
-    key and drops redeliveries, holding per-key state only until the
-    watermark passes the first arrival's event time — bounded state,
-    unlike a plain dropDuplicates whose key set grows forever on an
-    unbounded stream. This is the ingestion-side dedup every
+    ``event_id`` and drops redeliveries, holding per-key state only
+    until the watermark passes the first arrival's event time —
+    bounded state, unlike a plain dropDuplicates whose key set grows
+    forever on an unbounded stream. This is the ingestion-side dedup every
     at-least-once bus (Kafka, Kinesis) needs in front of the batch
     exact-dedup pass (queries/similarity.py::q_dedup_hash).
-    Batch twin: DISTINCT ON (key) — pinned in tests/test_streaming.py
-    by draining a deliberately doubled stream."""
+    Batch twin: DISTINCT ON (event_id) — pinned in
+    tests/test_streaming.py by draining a deliberately doubled stream."""
     return events.withWatermark("ts", WATERMARK).dropDuplicatesWithinWatermark(
-        keys or ["event_id"]
+        ["event_id"]
     )
 
 
@@ -202,11 +208,10 @@ def run_to_memory(
     q.awaitTermination()
 
 
-def run_to_parquet(
-    df: DataFrame, path: str, checkpoint: str, output_mode: str = "append"
-) -> None:
+def run_to_parquet(df: DataFrame, path: str, checkpoint: str) -> None:
     """File-sink drain: writeStream → parquet with a checkpoint dir —
-    the production landing-zone sink. The checkpoint's write-ahead log
+    the production landing-zone sink, in append mode (the only mode
+    Spark's file sink accepts). The checkpoint's write-ahead log
     gives exactly-once file commits (a restarted query never re-writes
     a committed batch; readers see only files recorded in the
     _spark_metadata log). availableNow bounds the run for tests; a
@@ -215,7 +220,7 @@ def run_to_parquet(
         df.writeStream.format("parquet")
         .option("path", path)
         .option("checkpointLocation", checkpoint)
-        .outputMode(output_mode)
+        .outputMode("append")
         .trigger(availableNow=True)
         .start()
     )
@@ -251,64 +256,12 @@ def run_foreach_batch(
     q.awaitTermination()
 
 
-def stream_stream_attribution(
-    spark: SparkSession, sf_dir: str, horizon: str = "1 hour"
-) -> DataFrame:
-    """Stream-stream interval join: purchases joined to the same
-    user's clicks within the preceding `horizon` — the streaming form
-    of as-of attribution (operators/asof.py is the batch form). Both
-    sides are watermarked, so join state for a purchase/click is
-    dropped once the other stream's watermark passes its interval:
-    bounded state, the requirement for stream-stream joins at scale."""
-    ev = stream_events(spark, sf_dir)
-    purchases = (
-        ev.filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("event_id").alias("purchase_id"),
-            F.col("user_id"),
-            F.col("ts").alias("p_ts"),
-        )
-        .withWatermark("p_ts", WATERMARK)
-    )
-    clicks = (
-        ev.filter(F.col("event_type") == "click")
-        .select(
-            F.col("event_id").alias("click_id"),
-            F.col("user_id"),
-            F.col("ts").alias("c_ts"),
-        )
-        .withWatermark("c_ts", WATERMARK)
-    )
-    return purchases.join(
-        clicks,
-        (purchases.user_id == clicks.user_id)
-        & (F.col("c_ts") <= F.col("p_ts"))
-        & (F.col("c_ts") >= F.col("p_ts") - F.expr(f"INTERVAL {horizon}")),
-    ).select(
-        "purchase_id",
-        purchases.user_id.alias("user_id"),
-        "p_ts",
-        "click_id",
-        "c_ts",
-    )
-
-
-def stream_stream_attribution_outer(
-    spark: SparkSession, sf_dir: str, horizon: str = "1 hour"
-) -> DataFrame:
-    """LEFT OUTER stream-stream interval join: every purchase emits —
-    attributed to a preceding click when one exists within `horizon`,
-    or with NULL click columns once the click watermark has passed its
-    interval and no match can still arrive. This 'emit the negative'
-    semantics is what inner joins can't express and what funnels need
-    (an unattributed purchase IS the signal); the engine holds each
-    purchase in state exactly until the opposing watermark clears its
-    window, then emits the null row — bounded state, delayed-null
-    emission. End-of-stream caveat (pinned in the parity test):
-    purchases whose interval the final watermark never passes are
-    dropped with the state at query termination, not flushed — a
-    replayed/checkpointed continuation would emit them, a bounded
-    drain does not."""
+def _attribution_sides(spark: SparkSession, sf_dir: str):
+    """The two watermarked sides of a stream-stream attribution join,
+    both cut from one event stream — purchases ``(purchase_id,
+    user_id, p_ts)`` and clicks ``(click_id, c_user_id, c_ts)`` — and
+    the interval condition that pairs a purchase with the same user's
+    clicks at most ATTRIBUTION_HORIZON before it."""
     ev = stream_events(spark, sf_dir)
     purchases = (
         ev.filter(F.col("event_type") == "purchase")
@@ -328,10 +281,48 @@ def stream_stream_attribution_outer(
         )
         .withWatermark("c_ts", WATERMARK)
     )
-    return purchases.join(
-        clicks,
+    within = (
         (purchases.user_id == clicks.c_user_id)
         & (F.col("c_ts") <= F.col("p_ts"))
-        & (F.col("c_ts") >= F.col("p_ts") - F.expr(f"INTERVAL {horizon}")),
-        "leftOuter",
-    ).select("purchase_id", "user_id", "p_ts", "click_id", "c_ts")
+        & (
+            F.col("c_ts")
+            >= F.col("p_ts") - F.expr(f"INTERVAL {ATTRIBUTION_HORIZON}")
+        )
+    )
+    return purchases, clicks, within
+
+
+def stream_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Stream-stream interval join: purchases joined to the same
+    user's clicks within the preceding ATTRIBUTION_HORIZON — the
+    streaming form of as-of attribution (operators/asof.py is the
+    batch form). Both sides are watermarked, so join state for a
+    purchase/click is dropped once the other stream's watermark passes
+    its interval: bounded state, the requirement for stream-stream
+    joins at scale."""
+    purchases, clicks, within = _attribution_sides(spark, sf_dir)
+    return purchases.join(clicks, within).select(
+        "purchase_id", "user_id", "p_ts", "click_id", "c_ts"
+    )
+
+
+def stream_stream_attribution_outer(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """LEFT OUTER stream-stream interval join: every purchase emits —
+    attributed to a preceding click when one exists within
+    ATTRIBUTION_HORIZON, or with NULL click columns once the click
+    watermark has passed its interval and no match can still arrive.
+    This 'emit the negative' semantics is what inner joins can't
+    express and what funnels need (an unattributed purchase IS the
+    signal); the engine holds each purchase in state exactly until the
+    opposing watermark clears its window, then emits the null row —
+    bounded state, delayed-null emission. End-of-stream caveat (pinned
+    in the parity test): purchases whose interval the final watermark
+    never passes are dropped with the state at query termination, not
+    flushed — a replayed/checkpointed continuation would emit them, a
+    bounded drain does not."""
+    purchases, clicks, within = _attribution_sides(spark, sf_dir)
+    return purchases.join(clicks, within, "leftOuter").select(
+        "purchase_id", "user_id", "p_ts", "click_id", "c_ts"
+    )

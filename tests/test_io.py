@@ -640,3 +640,14 @@ def test_write_observed_metrics_match_direct_agg(spark, sf_dir, tmp_path):
 
     with pytest.raises(ValueError, match="quality gate"):
         assert_quality(m, min_rows=want_rows + 1)
+
+
+def test_write_observed_counts_zero_null_keys_on_empty_write(spark, sf_dir, tmp_path):
+    """An empty write has no null keys: n_null_keys is 0, not NULL (a
+    global sum over empty input is NULL; a count is 0)."""
+    from frauddetection_spark.functions.observe import write_observed
+
+    empty = load_table(spark, sf_dir, "events").select("event_id").limit(0)
+    m = write_observed(empty, str(tmp_path / "observed_empty"), key_col="event_id")
+    assert m.n_rows == 0
+    assert m.n_null_keys == 0

@@ -39,10 +39,10 @@ def test_classifier_beats_majority_baseline(dataset):
     assert 0.0 <= metrics["accuracy"] <= 1.0
 
 
-def test_persistence_roundtrip(dataset, spark):
+def test_persistence_roundtrip(dataset):
     ds, cols = dataset
     model = train(ds, cols, classifier="lr")
-    restored, path = save_load_roundtrip(model, spark)
+    restored, path = save_load_roundtrip(model)
     test = ds.filter(F.col("split") == "test").na.fill(0.0)
     a = model.transform(test).select("user_id", "prediction")
     b = restored.transform(test).select("user_id", "prediction")

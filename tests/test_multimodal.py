@@ -1,5 +1,5 @@
 """Multimodal plumbing: the binary column survives the Arrow hop with
-exact bytes, the decode kernel is correctly stubbed, and metadata
+exact bytes, the stand-in kernels are deterministic, and metadata
 projection doesn't require the payload.
 """
 
@@ -7,7 +7,6 @@ from __future__ import annotations
 
 import hashlib
 
-import pytest
 from pyspark.sql import functions as F
 
 from frauddetection_spark.functions.multimodal import (
@@ -18,14 +17,9 @@ from frauddetection_spark.functions.multimodal import (
 from frauddetection_spark.sources.tables import load_table
 
 
-def test_real_decode_is_stubbed():
-    with pytest.raises(NotImplementedError):
-        decode_image(b"\x89PNG...")
-
-
 def test_fake_decode_deterministic():
-    a = decode_image(b"same bytes", fake=True)
-    assert a == decode_image(b"same bytes", fake=True)
+    a = decode_image(b"same bytes")
+    assert a == decode_image(b"same bytes")
     w, h, n = a
     assert 64 <= w < 256 and 64 <= h < 256 and 1 <= n <= 8
 
@@ -43,7 +37,7 @@ def test_binary_roundtrip_through_arrow(spark, sf_dir):
 
 def test_decode_media_batch_shape(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
-    decoded = decode_media(with_media_column(docs), fake=True)
+    decoded = decode_media(with_media_column(docs))
     assert [f.name for f in decoded.schema.fields] == [
         "doc_id", "kind", "width", "height", "n_frames",
     ]
@@ -54,31 +48,19 @@ def test_decode_media_batch_shape(spark, sf_dir):
     texts = {r.doc_id: r.text for r in docs.filter(
         F.col("doc_id").isin(*sample)).collect()}
     for doc_id, got in sample.items():
-        assert got == decode_image(texts[doc_id].encode(), fake=True)
+        assert got == decode_image(texts[doc_id].encode())
 
 
 def test_resize_and_frame_kernels_stubbed():
-    import pytest
-
     from frauddetection_spark.functions.multimodal import (
         extract_frame,
         resize_image,
     )
 
-    with pytest.raises(NotImplementedError):
-        resize_image(b"x", 64, 64)
-    with pytest.raises(NotImplementedError):
-        extract_frame(b"x", 0)
-    # fakes are deterministic and size/index-sensitive
-    assert resize_image(b"x", 64, 64, fake=True) == resize_image(
-        b"x", 64, 64, fake=True
-    )
-    assert resize_image(b"x", 64, 64, fake=True) != resize_image(
-        b"x", 32, 32, fake=True
-    )
-    assert extract_frame(b"x", 0, fake=True) != extract_frame(
-        b"x", 1, fake=True
-    )
+    # the stand-in kernels are deterministic and size/index-sensitive
+    assert resize_image(b"x", 64, 64) == resize_image(b"x", 64, 64)
+    assert resize_image(b"x", 64, 64) != resize_image(b"x", 32, 32)
+    assert extract_frame(b"x", 0) != extract_frame(b"x", 1)
 
 
 def test_resize_media_plumbing(spark, sf_dir):
@@ -112,6 +94,6 @@ def test_sample_frames_every_k(spark, sf_dir):
 
     per_doc = Counter(r["doc_id"] for r in out)
     for doc_id, text in texts.items():
-        _w, _h, n = decode_image(text.encode(), fake=True)
+        _w, _h, n = decode_image(text.encode())
         assert per_doc[doc_id] == (n + 1) // 2
     assert all(r["frame_idx"] % 2 == 0 for r in out)

@@ -234,35 +234,36 @@ _PERSIST_BACKED = _persist_backed()
 
 def _track_cache_call_sites(fn) -> int:
     """Number of ``track_cache(`` CALL SITES reachable from the query
-    function (its own source plus helpers one import level deep,
-    excluding the wrapper's definition in operators/caching.py) — the
-    mechanical definition of "multi-persist" for the floor pin below."""
+    function (its own source plus every package helper it reaches,
+    followed transitively as in ``_persist_backed``, excluding the
+    wrapper's definition in operators/caching.py) — the mechanical
+    definition of "multi-persist" for the floor pin below. Transitive,
+    so moving a persist into a shared helper (q_quantile_grid's ranks
+    live in queries/_util.py::quantile_ranks, which calls prefix_rank)
+    does not hide it."""
     import importlib
 
     seen: set[tuple[str, str]] = set()
     n = 0
-
-    def count(f) -> None:
-        nonlocal n
+    todo = [fn]
+    while todo:
+        f = todo.pop()
         try:
             src = inspect.getsource(f)
             rel = os.path.relpath(inspect.getsourcefile(f), _REPO)
         except (OSError, TypeError):
-            return
+            continue
         key = (f.__name__, rel)
         if key in seen or rel.endswith(os.path.join("operators", "caching.py")):
-            return
+            continue
         seen.add(key)
         n += src.count("track_cache(")
-
-    count(fn)
-    for hname, hrel in helpers_of(fn):
-        mod = hrel.replace(os.sep, ".").removesuffix(".py")
-        try:
-            helper = getattr(importlib.import_module(mod), hname)
-        except (ImportError, AttributeError):
-            continue
-        count(helper)
+        for hname, hrel in helpers_of(f):
+            mod = hrel.replace(os.sep, ".").removesuffix(".py")
+            try:
+                todo.append(getattr(importlib.import_module(mod), hname))
+            except (ImportError, AttributeError):
+                continue
     return n
 
 
@@ -295,6 +296,9 @@ _MULTI_PERSIST_FLOOR = {
     "q_bfs_levels": 1,
     "q_bpe_merge": 2,
     "q_cascade_delete": 3,
+    # clustering_coefficients persists und, and node_triangles persists
+    # tri built from it; the final plan reads tri's cache only.
+    "q_clustering_coeff": 1,
     "q_cooccurrence": 2,
     "q_corpus_funnel": 1,
     "q_date_spread": 2,
@@ -327,6 +331,8 @@ _MULTI_PERSIST_FLOOR = {
     "q_sequence_gaps": 2,
     "q_sparse_cosine": 2,
     "q_taint_tracing": 1,
+    # reads q_sampling_weights' plan, so its floor is that query's
+    "q_weighted_draw": 2,
 }
 
 

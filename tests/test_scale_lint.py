@@ -208,7 +208,12 @@ def test_every_persist_is_tracked_or_local():
     between bench/driver
     queries) or be followed by a local ``.unpersist()`` in the same
     function. Untracked persists accumulated across a 19-query
-    benchmark run and inflated later queries 1.5-3x."""
+    benchmark run and inflated later queries 1.5-3x.
+
+    Conversely, every ``track_cache(`` argument must itself be a
+    ``.persist(...)`` call: a tracked frame that was never persisted
+    caches nothing, and a query whose reuse the cache exists for then
+    silently recomputes the shared subtree."""
     import ast
     import os
 
@@ -232,6 +237,20 @@ def test_every_persist_is_tracked_or_local():
                 for child in ast.iter_child_nodes(node):
                     parents[child] = node
             for node in ast.walk(tree):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Name)
+                    and node.func.id == "track_cache"
+                    and not (
+                        len(node.args) == 1
+                        and isinstance(node.args[0], ast.Call)
+                        and isinstance(node.args[0].func, ast.Attribute)
+                        and node.args[0].func.attr == "persist"
+                    )
+                ):
+                    offenders.append(
+                        f"{path}:{node.lineno} track_cache without persist"
+                    )
                 if not (
                     isinstance(node, ast.Call)
                     and isinstance(node.func, ast.Attribute)
@@ -268,61 +287,81 @@ def test_every_persist_is_tracked_or_local():
                 offenders.append(f"{path}:{node.lineno}")
     assert offenders == [], (
         "untracked persist() call sites (wrap in operators.caching."
-        "track_cache "
-        "or unpersist in the same function):\n" + "\n".join(offenders)
+        "track_cache or unpersist in the same function), or track_cache "
+        "calls whose argument is not a .persist(...) call:\n"
+        + "\n".join(offenders)
     )
 
 
 def test_operator_defaults_are_set():
-    """Every defaulted parameter of a function under operators/ or
-    queries/ must be passed — by keyword or by position — at one or
-    more call sites in the package, ``__spark_entry__.py`` or
-    ``check_catalog.py``. A default that no caller overrides is a
-    constant in disguise: it multiplies the configurations tests must
-    cover while only one is ever run (and its never-taken branches go
-    untested). Make it a module constant instead. Call sites are
-    matched by callee name; a ``*args`` / ``**kwargs`` call sets
-    every parameter."""
+    """Every defaulted parameter of a function under
+    ``frauddetection_spark/`` must be passed — by keyword or by
+    position — at one or more call sites. A default that no caller
+    overrides is a constant in disguise: it multiplies the
+    configurations tests must cover while only one is ever run (and
+    its never-taken branches go untested). Make it a module constant
+    instead. Call sites are matched by callee name; a ``*args`` /
+    ``**kwargs`` call sets every parameter.
+
+    For operators/ and queries/ the callers that count are the
+    package, ``__spark_entry__.py`` and ``check_catalog.py``. The other
+    modules (IO, streaming, ML, multimodal, session) are user API with
+    no caller in the package, so for them callers in ``tests/`` and
+    ``perfbench/`` count as well."""
     import ast
     import os
 
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    pkg = os.path.join(root, "frauddetection_spark")
-    paths = [os.path.join(root, "__spark_entry__.py"),
-             os.path.join(root, "check_catalog.py")]
-    for dirpath, _dirs, files in os.walk(pkg):
-        paths += [os.path.join(dirpath, f) for f in files if f.endswith(".py")]
-    trees = {}
-    for path in paths:
-        with open(path) as fh:
-            trees[os.path.relpath(path, root)] = ast.parse(fh.read())
 
-    # callee name -> (keywords passed, most positional args passed)
-    passed: dict[str, tuple[set, float]] = {}
-    for tree in trees.values():
-        for node in ast.walk(tree):
-            if not isinstance(node, ast.Call):
-                continue
-            f = node.func
-            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
-            if name is None:
-                continue
-            kws, npos = passed.get(name, (set(), 0))
-            splat = any(isinstance(a, ast.Starred) for a in node.args) or any(
-                k.arg is None for k in node.keywords
-            )
-            passed[name] = (
-                kws | {k.arg for k in node.keywords},
-                max(npos, float("inf") if splat else len(node.args)),
-            )
+    def sources(top):
+        for dirpath, _dirs, files in os.walk(os.path.join(root, top)):
+            yield from (os.path.join(dirpath, f) for f in files if f.endswith(".py"))
+
+    def parse(paths):
+        trees = {}
+        for path in paths:
+            with open(path) as fh:
+                trees[os.path.relpath(path, root)] = ast.parse(fh.read())
+        return trees
+
+    def passed_by(trees):
+        """callee name -> (keywords passed, most positional args passed)"""
+        passed: dict[str, tuple[set, float]] = {}
+        for tree in trees:
+            for node in ast.walk(tree):
+                if not isinstance(node, ast.Call):
+                    continue
+                f = node.func
+                name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+                if name is None:
+                    continue
+                kws, npos = passed.get(name, (set(), 0))
+                splat = any(isinstance(a, ast.Starred) for a in node.args) or any(
+                    k.arg is None for k in node.keywords
+                )
+                passed[name] = (
+                    kws | {k.arg for k in node.keywords},
+                    max(npos, float("inf") if splat else len(node.args)),
+                )
+        return passed
+
+    package = parse(
+        [os.path.join(root, "__spark_entry__.py"),
+         os.path.join(root, "check_catalog.py"),
+         *sources("frauddetection_spark")]
+    )
+    outside = parse([*sources("tests"), *sources("perfbench")])
+    by_package = passed_by(package.values())
+    by_anyone = passed_by([*package.values(), *outside.values()])
+    library = tuple(
+        os.path.join("frauddetection_spark", d) for d in ("operators", "queries")
+    )
 
     unset = []
-    for rel, tree in trees.items():
-        if not rel.startswith(
-            (os.path.join("frauddetection_spark", "operators"),
-             os.path.join("frauddetection_spark", "queries"))
-        ):
+    for rel, tree in package.items():
+        if not rel.startswith("frauddetection_spark" + os.sep):
             continue
+        passed = by_package if rel.startswith(library) else by_anyone
         for fn in ast.walk(tree):
             if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
                 continue
@@ -424,6 +463,46 @@ def test_every_module_name_is_referenced():
                 and words[name] <= own[name]
             ]
     assert unread == [], "module names nothing references:\n" + "\n".join(unread)
+
+
+def test_every_import_is_used():
+    """Every name a module under ``frauddetection_spark/`` imports
+    (``from __future__`` aside) must occur, as a whole word, somewhere
+    in that module outside the import statement. The module-name lint
+    above checks definitions; an import nothing reads is the same dead
+    code, and it still costs its import time."""
+    import ast
+    import os
+    import re
+    from collections import Counter
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    unused = []
+    for dirpath, _dirs, files in os.walk(os.path.join(root, "frauddetection_spark")):
+        for fname in files:
+            if not fname.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, fname)
+            with open(path) as fh:
+                src = fh.read()
+            lines = src.splitlines()
+            words = Counter(re.findall(r"\w+", src))
+            for node in ast.walk(ast.parse(src, filename=path)):
+                if isinstance(node, ast.ImportFrom) and node.module == "__future__":
+                    continue
+                if not isinstance(node, (ast.Import, ast.ImportFrom)):
+                    continue
+                own = Counter(re.findall(
+                    r"\w+", "\n".join(lines[node.lineno - 1:node.end_lineno])
+                ))
+                unused += [
+                    f"{os.path.relpath(path, root)}:{node.lineno} {name}"
+                    for name in (
+                        a.asname or a.name.split(".")[0] for a in node.names
+                    )
+                    if words[name] <= own[name]
+                ]
+    assert unused == [], "imports nothing in the module reads:\n" + "\n".join(unused)
 
 
 def test_zero_jobs_at_construction(spark, sf_dir, plan_inspections):

@@ -1,18 +1,15 @@
 """M1 scoring-hook tests: the broadcast-weights mapInPandas plumbing
-is real and deterministic; the torch kernel is honestly gated (no
-torch in this container)."""
+is real and deterministic, and its forward kernel matches a committed
+golden."""
 
 from __future__ import annotations
 
 import numpy as np
-import pytest
 from pyspark.sql import functions as F
 
 from frauddetection_spark.functions.torch_hook import (
     numpy_linear_tanh,
     score_batches,
-    torch_forward,
-    try_import_torch,
 )
 
 
@@ -42,59 +39,21 @@ def test_scoring_is_map_only(spark):
     assert "Exchange" not in plan
 
 
-def test_torch_kernel_honestly_gated(spark):
-    if try_import_torch() is not None:
-        pytest.skip("torch installed; gating path not applicable")
-    with pytest.raises(NotImplementedError, match="torch is not installed"):
-        torch_forward(np.zeros((1, 2)), {})
-
-
-def _golden():
-    import json
-    import os
-
-    path = os.path.join(os.path.dirname(__file__), "golden", "torch_forward_golden.json")
-    with open(path) as fh:
-        return json.load(fh)
-
-
 def test_numpy_forward_matches_golden():
-    """The committed golden IS numpy_linear_tanh's closed form — the
-    always-run anchor the torch test below compares against, so the
-    two kernels can't drift apart unnoticed. Tolerance is a few ULPs,
-    not zero: np.tanh delegates to the host libm, and a glibc update
-    moved these values by 1 ULP (~1e-17) mid-round-10 — the same
+    """The committed golden IS numpy_linear_tanh's closed form, so a
+    change to the kernel's formula cannot pass unnoticed. Tolerance is
+    a few ULPs, not zero: np.tanh delegates to the host libm, and a
+    glibc update once moved these values by 1 ULP (~1e-17) — the same
     transcendental drift q_model_score's 6dp rounding absorbs. A
     formula change in the kernel diverges by orders of magnitude more
     than this bound, so the anchor still catches real drift."""
-    g = _golden()
+    import json
+    import os
+
+    path = os.path.join(os.path.dirname(__file__), "golden", "linear_tanh_golden.json")
+    with open(path) as fh:
+        g = json.load(fh)
     got = numpy_linear_tanh(
         np.array(g["X"]), {"w": np.array(g["w"]), "b": g["b"]}
     )
     assert np.allclose(got, np.array(g["expected"]), rtol=0, atol=1e-12)
-
-
-def test_torch_forward_matches_golden():
-    """Torch-kernel evidence (VERDICT r3 item 6): in any torch-enabled
-    environment, a 1-layer Linear+Tanh module loaded with the golden
-    weights must reproduce the committed outputs within float32
-    tolerance. Skipped (not passed) where torch is absent, so the
-    skip is visible in the report."""
-    torch = try_import_torch()
-    if torch is None:
-        pytest.skip("torch not installed in this container")
-    g = _golden()
-
-    def factory():
-        import torch.nn as nn
-
-        return nn.Sequential(nn.Linear(3, 1), nn.Tanh())
-
-    sd = {
-        "0.weight": torch.tensor([g["w"]], dtype=torch.float32),
-        "0.bias": torch.tensor([g["b"]], dtype=torch.float32),
-    }
-    got = torch_forward(
-        np.array(g["X"]), {"factory": factory, "state_dict": sd}
-    )
-    assert np.allclose(got, np.array(g["expected"]), atol=1e-6)
