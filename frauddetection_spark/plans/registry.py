@@ -10,6 +10,9 @@ contract column) to
 SURVEY.md §2 and §2.9 map every query name to the row it covers.
 
 Authoring rules (SURVEY.md §5):
+- results are multisets; no terminal sort unless a limit makes it a
+  top-k (the comparators ignore row order, and a bare global sort
+  costs a range-partitioned shuffle plus a sampling job);
 - alias every computed column identically in both twins;
 - round floats (``round(x, 6)``) in both to dodge summation-order drift;
 - ``sort_array`` any collected arrays;

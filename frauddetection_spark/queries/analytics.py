@@ -111,7 +111,6 @@ def q_trend_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / F.col("n_days")
             ).alias("intercept"),
         )
-        .orderBy("user_id")
     )
 
 
@@ -176,7 +175,6 @@ def q_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / (F.col("n_events") * F.col("n_events")).cast("double")
             ).alias("gini"),
         )
-        .orderBy("user_id")
     )
 
 
@@ -259,7 +257,6 @@ def q_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "retention"
             ),
         )
-        .orderBy("cohort_week", "week_offset")
     )
 
 
@@ -324,7 +321,6 @@ def q_running_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         active.join(news, ["user_id", "week"], "left")
         .na.fill(0, ["new_contacts"])
         .withColumn("cum_contacts", F.sum("new_contacts").over(w))
-        .orderBy("user_id", "week")
     )
 
 
@@ -416,7 +412,6 @@ def q_skew_kurtosis(spark: SparkSession, sf_dir: str) -> DataFrame:
             r6(skew).alias("skewness"),
             r6(kurt).alias("kurtosis"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -488,7 +483,6 @@ def q_multi_grain_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         shape(hourly, "hour")
         .unionAll(shape(daily, "day"))
         .unionAll(shape(weekly, "week"))
-        .orderBy("grain", "bucket")
     )
 
 
@@ -577,7 +571,6 @@ def q_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.when(F.col("ad") > 3 * F.col("mad"), 1).otherwise(0)
             ).alias("n_outliers"),
         )
-        .orderBy("user_id")
     )
 
 
@@ -637,7 +630,6 @@ def q_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "click_id",
             F.date_format("c_ts_t", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("c_ts"),
         )
-        .orderBy("purchase_id", "click_id")
     )
 
 
@@ -666,7 +658,7 @@ def q_posexplode(spark: SparkSession, sf_dir: str) -> DataFrame:
     lambda + unnest). Positions matter for every sequence-model
     pipeline (packing offsets, n-gram windows, positional features);
     this pins the cross-engine ordinal semantics. Map-only — zero
-    shuffles before the presentation sort."""
+    shuffles."""
     d = t(spark, sf_dir, "documents")
     return (
         d.select(
@@ -674,7 +666,6 @@ def q_posexplode(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("token") != "")
         .select("doc_id", (F.col("pos0") + 1).alias("pos"), "token")
-        .orderBy("doc_id", "pos")
     )
 
 
@@ -733,7 +724,6 @@ def q_quantile_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("c").alias("value_cents"),
             F.col("nn").cast("bigint").alias("n"),
         )
-        .orderBy("event_type", "q_label")
     )
 
 
@@ -791,7 +781,6 @@ def q_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("hour").cast("int").alias("wmedian_hour"),
             F.min("tot").alias("total_cents"),
         )
-        .orderBy("user_id")
     )
 
 
@@ -846,7 +835,6 @@ def q_bitmap_weeks(spark: SparkSession, sf_dir: str) -> DataFrame:
             "first_week",
             "last_week",
         )
-        .orderBy("user_id")
     )
 
 
@@ -893,7 +881,6 @@ def q_pct_change(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("cents") - F.col("prev_cents")).cast("double")
             / F.col("prev_cents"),
         )
-        .orderBy("user_id", "week")
     )
 
 
@@ -921,11 +908,10 @@ def q_pct_change(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_array_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-embedding L2 norm, mean and max-abs computed entirely with
     codegen'd higher-order functions (aggregate/transform/array_max) —
-    zero Python, zero shuffles before the presentation sort; the
-    normalize-then-score prologue of every vector pipeline. Both
-    engines fold the list SEQUENTIALLY (Spark `aggregate` ≡ DuckDB
-    `list_reduce`) over float32→float64 promoted elements, so the
-    sums — and therefore the unrounded doubles — are bit-identical."""
+    zero Python, zero shuffles; the normalize-then-score prologue of
+    every vector pipeline. Both engines fold the list SEQUENTIALLY
+    (Spark `aggregate` ≡ DuckDB `list_reduce`) over float32→float64
+    promoted elements, so the sums — and therefore the unrounded doubles — are bit-identical."""
     emb = t(spark, sf_dir, "embeddings")
     sq = F.aggregate(
         F.transform("embedding", lambda x: x.cast("double") * x.cast("double")),
@@ -948,7 +934,6 @@ def q_array_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.transform("embedding", lambda x: F.abs(x.cast("double")))
             ).alias("max_abs"),
         )
-        .orderBy("vec_id")
     )
 
 
@@ -1000,7 +985,6 @@ def q_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("cnt").alias("mode_count"),
             F.col("n_types").cast("bigint").alias("n_types"),
         )
-        .orderBy("user_id")
     )
 
 
@@ -1042,7 +1026,6 @@ def q_json_flatten(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("pj.k").alias("k_max"),
             F.sum("pj.k").alias("k_sum"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -1107,7 +1090,6 @@ def q_first_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
             "click_id",
             (F.col("p_us") - F.col("c_us")).alias("gap_us"),
         )
-        .orderBy("purchase_id")
     )
 
 
@@ -1163,7 +1145,6 @@ def q_join_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("n_big", F.lit(0)).cast("bigint").alias("n_big"),
             F.coalesce(cents("c_acctbal"), F.lit(0)).alias("acctbal_cents"),
         )
-        .orderBy("custkey")
     )
 
 
@@ -1220,7 +1201,6 @@ def q_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / 100
             ).alias("moving_avg"),
         )
-        .orderBy("user_id", "day")
     )
 
 
@@ -1301,7 +1281,6 @@ def q_fuzzy_match(spark: SparkSession, sf_dir: str) -> DataFrame:
         cross.unionByName(same)
         .groupBy("p_brand", F.col("dist").cast("int").alias("dist"))
         .agg(F.sum("w").cast("bigint").alias("n_pairs"))
-        .orderBy("p_brand", "dist")
     )
 
 
@@ -1354,7 +1333,6 @@ def q_sequence_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("next_id") - 1).alias("gap_end"),
             (F.col("next_id") - F.col("event_id") - 1).alias("gap_len"),
         )
-        .orderBy("gap_start")
     )
 
 
@@ -1488,8 +1466,7 @@ def q_union_by_name(spark: SparkSession, sf_dir: str) -> DataFrame:
     silently mis-assign the reordered columns, the production failure
     mode this operator exists to prevent. The missing column
     null-fills on the old side (coalesced to a sentinel for type-
-    stable hashing). Map-only: no shuffle before the presentation
-    sort."""
+    stable hashing). Map-only: no shuffle."""
     orders = t(spark, sf_dir, "orders")
     old = orders.filter(F.col("o_orderkey") % 2 == 0).select(
         "o_orderkey", "o_custkey", cents("o_totalprice").alias("price_cents")
@@ -1508,7 +1485,6 @@ def q_union_by_name(spark: SparkSession, sf_dir: str) -> DataFrame:
             "price_cents",
             F.coalesce("order_year", F.lit(-1)).alias("order_year"),
         )
-        .orderBy("o_orderkey")
     )
 
 
@@ -1541,10 +1517,7 @@ def q_map_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sort_array(F.collect_list(F.struct("event_type", "cnt")))
         ).alias("type_counts")
     )
-    return (
-        m.select("user_id", F.explode("type_counts").alias("event_type", "cnt"))
-        .orderBy("user_id", "event_type")
-    )
+    return m.select("user_id", F.explode("type_counts").alias("event_type", "cnt"))
 
 
 # ---------------------------------------------------------------------------
@@ -1574,7 +1547,6 @@ def q_hll_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_weeks"),
             F.hll_sketch_estimate(F.hll_union_agg("sk")).alias("est_users"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -1671,7 +1643,6 @@ def q_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " x -> cast(x AS string)), ',')"
             ).alias("members"),
         )
-        .orderBy("entity_id")
     )
 
 
@@ -1797,7 +1768,6 @@ def q_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
             "b0q",
             (F.col("bq") - F.col("b0q")).alias("gain_q"),
         )
-        .orderBy("user_id")
     )
 
 
@@ -1911,7 +1881,6 @@ def q_mutual_info(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum(term), 6).alias("mi_nats"),
         )
         .select("feature", "n_cells", "mi_nats")
-        .orderBy("feature")
     )
 
 
@@ -2148,7 +2117,6 @@ def q_theilsen(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "ts_slope_cents_per_day"
             ),
         )
-        .orderBy("user_id")
     )
 
 
@@ -2311,5 +2279,4 @@ def q_date_spread(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("recognized_c").cast("bigint").alias("recognized_c"),
             F.col("n_allocs").cast("bigint").alias("n_allocs"),
         )
-        .orderBy("day")
     )

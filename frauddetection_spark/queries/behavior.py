@@ -77,9 +77,7 @@ def q_funnel_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("k") == PATH_STEPS)
     )
-    return (
-        p.groupBy("path").agg(F.count("*").alias("n_users")).orderBy("path")
-    )
+    return p.groupBy("path").agg(F.count("*").alias("n_users"))
 
 
 # ---------------------------------------------------------------------------
@@ -136,7 +134,6 @@ def q_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / F.sum("n").over(Window.partitionBy("from_type"))
             ).alias("prob"),
         )
-        .orderBy("from_type", "to_type")
     )
 
 
@@ -344,7 +341,6 @@ def q_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             ORDER BY amt_cents DESC, event_id
             LIMIT 2
         ) s
-        ORDER BY u.user_id, s.event_id
         """
     )
 
@@ -402,7 +398,6 @@ def q_rle_islands(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         runs.groupBy("event_type", F.col("run_len").cast("bigint").alias("run_len"))
         .agg(F.count("*").alias("n_runs"))
-        .orderBy("event_type", "run_len")
     )
 
 
@@ -479,7 +474,6 @@ def q_decay_score(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "decay_score"
             ),
         )
-        .orderBy("user_id")
     )
 
 
@@ -547,7 +541,7 @@ def q_cusum_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         "x_cents",
         scaled.cast("bigint").alias("cusum_scaled"),
         (scaled.cast("double") / F.col("n_days") / 100).alias("cusum"),
-    ).orderBy("day")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -629,7 +623,7 @@ def q_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("sd_us") - F.col("mean_us"))
             / (F.col("sd_us") + F.col("mean_us"))
         ).alias("burstiness"),
-    ).orderBy("user_id")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -766,7 +760,7 @@ def q_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.exp(F.sum("term_q").over(w_incl).cast("double") / F.lit(_KM_Q))
         )
         .alias("survival"),
-    ).orderBy("t")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -823,7 +817,6 @@ def q_cep_3step(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("user_id")
         .agg(F.count("*").alias("n_patterns"))
-        .orderBy("user_id")
     )
 
 
@@ -892,7 +885,6 @@ def q_ohlc_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_events"),
             F.sum("c").cast("bigint").alias("volume_cents"),
         )
-        .orderBy("hour")
     )
 
 
@@ -958,7 +950,7 @@ def q_twap(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_holds").cast("bigint").alias("n_holds"),
         "dur_us",
         (F.col("wsum").cast("double") / F.col("dur_us")).alias("twap_cents"),
-    ).orderBy("user_id")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1013,7 +1005,7 @@ def q_dwell_time(spark: SparkSession, sf_dir: str) -> DataFrame:
         (
             F.col("dwell_us").cast("double") / F.sum("dwell_us").over(one)
         ).alias("share"),
-    ).orderBy("event_type")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1118,7 +1110,7 @@ def q_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
         "y",
         F.col("n").cast("bigint").alias("n"),
         F.when(F.col("n") >= 3, num / F.sqrt(denx * deny)).alias("corr_7d"),
-    ).orderBy("day")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1224,7 +1216,6 @@ def q_growth_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
         classed.unionByName(churn)
         .groupBy("day", "status")
         .agg(F.count("*").alias("n_users"))
-        .orderBy("day", "status")
     )
 
 
@@ -1305,7 +1296,6 @@ def q_rolling_dau(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("wau").cast("bigint").alias("wau"),
             (F.col("dau").cast("double") / F.col("wau")).alias("stickiness"),
         )
-        .orderBy("day")
     )
 
 
@@ -1383,7 +1373,7 @@ def q_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("active_users").cast("bigint").alias("active_users"),
         "rev_cents",
         F.sum("rev_cents").over(cum).cast("bigint").alias("cum_rev_cents"),
-    ).orderBy("cohort", "week_index")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1436,7 +1426,7 @@ def q_fill_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         "obs_cents",
         F.last("obs_cents", ignorenulls=True).over(w).alias("filled_cents"),
-    ).orderBy("user_id", "event_id")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1504,7 +1494,6 @@ def q_seasonality_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / (F.col("n_events").cast(dec) * F.col("tot_c"))
             ).alias("dow_index"),
         )
-        .orderBy("dow")
     )
 
 
@@ -1563,7 +1552,6 @@ def q_sequence_examples(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.concat_ws(">", "event_type", "t1", "t2").alias("context"),
             F.col("t3").alias("target"),
         )
-        .orderBy("user_id", "example_id")
     )
 
 
@@ -1657,7 +1645,6 @@ def q_attribution_ushape(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").cast("bigint").alias("n_touches"),
             F.sum("bp").cast("bigint").alias("credit_bp"),
         )
-        .orderBy("channel")
     )
 
 
@@ -2073,7 +2060,7 @@ def q_chain_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
         "s_cur",
         "s_next",
         (F.col("s_next").cast("double") / F.col("s_cur")).alias("dev_factor"),
-    ).orderBy("from_age")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -2289,4 +2276,4 @@ def q_attribution_shapley(spark: SparkSession, sf_dir: str) -> DataFrame:
         "channel",
         "phi6_q9",
         (F.col("phi6_q9").cast("double") / 6e9).alias("shapley_value"),
-    ).orderBy("channel")
+    )

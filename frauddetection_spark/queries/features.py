@@ -148,7 +148,6 @@ def q_two_level_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.sum("day_n").cast("double") / n).alias("mean_daily_events"),
             F.count("*").alias("n_active_days"),
         )
-        .orderBy("user_id")
     )
 
 
@@ -184,7 +183,6 @@ def q_histogram_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
             "hour_of_day",
             (F.col("n").cast("double") / F.sum("n").over(w)).alias("share"),
         )
-        .orderBy("user_id", "hour_of_day")
     )
 
 
@@ -248,7 +246,7 @@ def q_share_dispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
             / n
         ).alias("var_share"),
         n.alias("n_counterparties"),
-    ).orderBy("user_id")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -291,7 +289,6 @@ def q_lag_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.sum("gap_us").cast("double") / F.count("gap_us") / 1e6).alias("mean_gap_sec"),
             F.count("gap_us").alias("n_gaps"),
         )
-        .orderBy("user_id")
     )
 
 
@@ -357,7 +354,7 @@ def q_jaccard_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.size(F.array_intersect("cur", "prev")).cast("double") / union,
         ).alias("jaccard"),
         F.size("cur").cast("bigint").alias("n_contacts"),
-    ).orderBy("user_id", "week")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -405,7 +402,7 @@ def q_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_custkey",
         "c_nationkey",
         F.when(var > 0, z).otherwise(F.lit(0.0)).alias("acctbal_z"),
-    ).orderBy("c_custkey")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -457,7 +454,6 @@ def q_class_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
             "high_rate",
             (F.col("n").cast("double") / F.col("_tot")).alias("type_share"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -525,7 +521,6 @@ def q_dense_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce("n", F.lit(0)).cast("bigint").alias("n_events"),
             F.coalesce("sum_value", F.lit(0.0)).alias("sum_value"),
         )
-        .orderBy("user_id", "week")
     )
 
 
@@ -568,7 +563,6 @@ def q_collect_series(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("weekly_series"),
             F.count("*").alias("n_weeks"),
         )
-        .orderBy("user_id")
     )
 
 
@@ -634,7 +628,6 @@ def q_multiscale_features(spark: SparkSession, sf_dir: str) -> DataFrame:
                 s2 / n / 10000 - (s1 / n / 100) * (s1 / n / 100) + F.lit(0.0)
             ).alias("value_var"),
         )
-        .orderBy("user_id", "scale", "window_start")
     )
 
 
@@ -800,7 +793,7 @@ def q_behavioral_features(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("gap_n") > 0,
             F.col("gap_sum").cast("double") / F.col("gap_n"),
         ).otherwise(0.0).alias("mean_gap_s"),
-    ).orderBy("user_id", "week")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -904,7 +897,7 @@ def q_trailing_range(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         F.count("*").over(w).alias("n_7d"),
         F.sum("cents").over(w).cast("bigint").alias("cents_7d"),
-    ).orderBy("event_id")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -976,7 +969,7 @@ def q_user_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit(0.0))
         .alias("pct_rank"),
         (F.col("rn").cast("double") / F.col("_n")).alias("cume"),
-    ).orderBy("user_id")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1020,7 +1013,6 @@ def q_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("event_type").alias("last_type"),
             F.round(F.col("value") * 100).cast("bigint").alias("last_cents"),
         )
-        .orderBy("user_id")
     )
 
 
@@ -1069,7 +1061,6 @@ def q_scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             F.col("valid_to_raw").isNull().cast("bigint").alias("is_current"),
         )
-        .orderBy("user_id", "valid_from", "event_id")
     )
 
 
@@ -1161,7 +1152,6 @@ def q_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.sum(cents("v")).cast("double") / 100).alias("winsorized_sum")
         )
         .select("event_type", "n", "lo", "hi", "winsorized_sum")
-        .orderBy("event_type")
     )
 
 
@@ -1234,7 +1224,6 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.max("us") - F.min("us")).alias("duration_us"),
             F.sum("cents").alias("cents_total"),
         )
-        .orderBy("user_id", "session_id")
     )
 
 
@@ -1312,7 +1301,6 @@ def q_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         joined.groupBy("user_id", "event_id")
         .agg(F.count("iv_id").alias("n_episodes"))
-        .orderBy("user_id", "event_id")
     )
 
 
@@ -1408,7 +1396,7 @@ def q_group_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
             + F.col("frac_pct").cast("double") / 100
             * (F.col("c_hi") - F.col("c_lo"))
         ).alias(f"p{_PG_P}_cents"),
-    ).orderBy("event_type")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1524,5 +1512,4 @@ def q_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.when(F.col("delta") == -1, 1).otherwise(0))
             .cast("bigint").alias("n_ends"),
         )
-        .orderBy("day")
     )

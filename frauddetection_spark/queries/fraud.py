@@ -98,7 +98,6 @@ def q_benford(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "exp_share"
             ),
         )
-        .orderBy("digit")
     )
 
 
@@ -213,7 +212,7 @@ def q_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(
         "custkey", "recency_us", "f", "m_cents",
         "r_score", "f_score", "m_score",
-    ).orderBy("custkey")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -269,7 +268,6 @@ def q_double_swipe(spark: SparkSession, sf_dir: str) -> DataFrame:
             "us",
             (F.col("us") - F.col("prev_us")).alias("gap_us"),
         )
-        .orderBy("event_id")
     )
 
 
@@ -336,7 +334,6 @@ def q_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("gmax") <= F.col("n_events"))
         )
         .select("user_id", "total_cents", "n_events")
-        .orderBy("user_id")
     )
 
 
@@ -419,7 +416,6 @@ def q_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise("base")
             .alias("src"),
         )
-        .orderBy("custkey")
     )
 
 
@@ -468,7 +464,6 @@ def q_reservoir_group(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.withColumn("rn", F.row_number().over(w).cast("bigint"))
         .filter(F.col("rn") <= 5)
         .select("event_type", "rn", "event_id", "hv")
-        .orderBy("event_type", "rn")
     )
 
 
@@ -544,7 +539,6 @@ def q_chisq_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "chisq_term"
             ),
         )
-        .orderBy("dow", "event_type")
     )
 
 
@@ -623,7 +617,6 @@ def q_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
             "day_cents",
             (num / den).alias("ewma"),
         )
-        .orderBy("user_id", "day")
     )
 
 
@@ -754,7 +747,6 @@ def q_linear_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("is_interp"),
             filled.alias("cents_filled"),
         )
-        .orderBy("user_id", "h")
     )
 
 
@@ -831,7 +823,7 @@ def q_corr_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n",
         (num / F.sqrt(denx * deny)).alias("corr"),
         (num / denx).alias("beta"),
-    ).orderBy("flag")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -914,7 +906,6 @@ def q_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "r1"
             ),
         )
-        .orderBy("user_id")
     )
 
 
@@ -1014,7 +1005,6 @@ def q_quantile_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("value_interp"),
             F.col("nn").cast("bigint").alias("n"),
         )
-        .orderBy("event_type", "q_label")
     )
 
 
@@ -1110,7 +1100,6 @@ def q_bootstrap_means(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum(F.col("w") * F.col("c")).cast("double") / F.sum("w")
             ).alias("mean_cents"),
         )
-        .orderBy("event_type", "replica")
     )
 
 
@@ -1160,7 +1149,6 @@ def q_skew_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("n").cast("double") * F.col("n_keys") / F.col("n_rows")
             ).alias("x_mean"),
         )
-        .orderBy(F.col("n").desc(), F.col("user_id").asc())
     )
 
 
@@ -1244,7 +1232,6 @@ def q_impossible_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("dist").cast("bigint").alias("dist"),
             "dt_us",
         )
-        .orderBy("user_id", "event_id")
     )
 
 
@@ -1312,7 +1299,6 @@ def q_structuring(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("c").cast("bigint").alias("max_cents"),
         )
         .filter(F.col("n_near") >= _ST_MIN_HITS)
-        .orderBy("user_id", "day")
     )
 
 
@@ -1464,7 +1450,6 @@ def q_peer_outlier(spark: SparkSession, sf_dir: str) -> DataFrame:
                 0.6745 * F.col("d").cast("double") / F.col("mad")
             ).alias("robust_z"),
         )
-        .orderBy("peer_group", "user_id")
     )
 
 
@@ -1566,7 +1551,6 @@ def q_reciprocal_flows(spark: SparkSession, sf_dir: str) -> DataFrame:
             "ba_n",
             (net.cast("double") / gross).alias("net_ratio"),
         )
-        .orderBy("a", "b")
     )
 
 
@@ -1668,7 +1652,6 @@ def q_mule_passthrough(spark: SparkSession, sf_dir: str) -> DataFrame:
             "out_cents",
             (lo.cast("double") / hi).alias("passthrough"),
         )
-        .orderBy("node", "day")
     )
 
 
@@ -1787,7 +1770,6 @@ def q_taint_tracing(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         out.filter(F.col("taint") > 0)
         .select("node", F.col("hop").cast("bigint").alias("hop"), "taint")
-        .orderBy("node", "hop")
     )
 
 
@@ -1890,7 +1872,6 @@ def q_benford_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "benford_mad"
             ),
         )
-        .orderBy("event_type")
     )
 
 
@@ -1978,7 +1959,6 @@ def q_circular_hours(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / F.col("n")
             ).alias("resultant"),
         )
-        .orderBy("user_id")
     )
 
 
@@ -2059,7 +2039,6 @@ def q_edge_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "novelty_ratio"
             ),
         )
-        .orderBy("user_id", "week")
     )
 
 
@@ -2172,7 +2151,6 @@ def q_seasonal_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("ad") * 6745 > _SEAS_Z10 * 1000 * F.col("mad_n"))
         )
         .select("event_type", "hour_slot", "week", "n", "med_n", "mad_n")
-        .orderBy("event_type", "hour_slot", "week")
     )
 
 
@@ -2329,7 +2307,6 @@ def q_fraud_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         one.select(F.explode(stages).alias("s"))
         .select("s.stage", "s.stage_name", "s.n_users")
-        .orderBy("stage")
     )
 
 

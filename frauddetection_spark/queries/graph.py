@@ -65,7 +65,7 @@ def q_graph_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
     unique counterparties, data_process.py:131-138; intended semantics,
     not B9's last-write-wins weight). Single pass via edge explode."""
     e = edges_from_events(t(spark, sf_dir, "events"))
-    return degrees(e).orderBy("node")
+    return degrees(e)
 
 
 # ---------------------------------------------------------------------------
@@ -103,9 +103,7 @@ def q_join_common_neighbor(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = edges_from_events(t(spark, sf_dir, "events"))
     contacts = e.select(F.col("src").alias("user"), F.col("dst").alias("contact"))
     stats = catalog.stats(path, "contact_stats", lambda: _contact_stats(path))
-    return common_neighbor_pairs(contacts, min_common=5, stats=stats).orderBy(
-        "user_a", "user_b"
-    )
+    return common_neighbor_pairs(contacts, min_common=5, stats=stats)
 
 
 def _contact(props: str | None) -> int | None:
@@ -202,7 +200,7 @@ def q_graph_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("msg_sum").cast("double") / 1_000_000).alias("msg_sum"),
         (F.col("msg_sum").cast("double") / F.col("n_msgs") / 1_000_000).alias("msg_avg"),
         "n_msgs",
-    ).orderBy("node")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -243,7 +241,6 @@ def q_neighbor_avg_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.sum("degree").cast("double") / F.count("*")).alias("neighbor_avg_degree"),
             F.count("*").alias("n_neighbors"),
         )
-        .orderBy("node")
     )
 
 
@@ -325,7 +322,6 @@ def q_propagate_2round(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("h1q").cast("double") / 1_000_000).alias("h1"),
             F.col("h2").alias("h2"),
         )
-        .orderBy("node")
     )
 
 
@@ -380,7 +376,7 @@ def q_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     cc = clustering_coefficients(e)
     return cc.select(
         "node", "degree", "triangles", "clustering_coeff"
-    ).orderBy("node")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -472,7 +468,6 @@ def q_graph_aggregate_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("n_pos_edges"),
             F.count("*").alias("n_msgs"),
         )
-        .orderBy("node")
     )
 
 
@@ -515,7 +510,7 @@ def q_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     only viable at oracle scale; the propagation loop is
     O(diameter · |E|) and is the 100-TB path."""
     e = edges_from_events(t(spark, sf_dir, "events"))
-    return connected_components(e).orderBy("node")
+    return connected_components(e)
 
 
 # ---------------------------------------------------------------------------
@@ -571,7 +566,7 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     unrolled DuckDB twin hash-matches; see
     operators/graph.py::pagerank_integer for the scale shape."""
     e = edges_from_events(t(spark, sf_dir, "events"))
-    return pagerank_integer(e).orderBy("node")
+    return pagerank_integer(e)
 
 
 # ---------------------------------------------------------------------------
@@ -768,7 +763,6 @@ def q_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         lv.groupBy("node")
         .agg(F.min("level").cast("int").alias("level"))
-        .orderBy("node")
     )
 
 
@@ -877,7 +871,6 @@ def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         und.groupBy(F.col("src").alias("node"))
         .agg(F.count("*").alias("degree"))
-        .orderBy("node")
     )
 
 
@@ -976,7 +969,6 @@ def q_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "auth_norm"
             ),
         )
-        .orderBy("node")
     )
 
 
@@ -1105,7 +1097,6 @@ def q_graph_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / (F.col("da") + F.col("db") - F.col("cn"))
             ).alias("jaccard"),
         )
-        .orderBy("u", "v")
     )
 
 
@@ -1220,7 +1211,6 @@ def q_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("cn").cast("bigint").alias("cn"),
             (F.col("aa_q").cast("double") / F.lit(_AA_Q)).alias("adamic_adar"),
         )
-        .orderBy("u", "v")
     )
 
 
@@ -1293,7 +1283,7 @@ def q_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
             WHERE r.d < {_TC_DEPTH}
         )
         SELECT seed, node, CAST(min(d) AS BIGINT) AS min_depth
-        FROM r GROUP BY seed, node ORDER BY seed, node
+        FROM r GROUP BY seed, node
         """
     )
 
@@ -1414,7 +1404,6 @@ def q_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         r.filter(F.col("r") > 0)
         .select("node", F.col("r").cast("bigint").alias("ppr_micro"))
-        .orderBy("node")
     )
 
 
@@ -1501,7 +1490,6 @@ def q_money_loops(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         cyc.groupBy(F.col("a").alias("node"))
         .agg(F.count("*").alias("n_loops"))
-        .orderBy("node")
     )
 
 
@@ -1631,7 +1619,7 @@ def q_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("walk").cast("bigint").alias("walk"),
         F.col("step").cast("bigint").alias("step"),
         "node",
-    ).orderBy("seed", "walk", "step")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1741,4 +1729,4 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .select(F.col("v").alias("node"), F.col("s.label").alias("label"))
         )
-    return labels.orderBy("node")
+    return labels

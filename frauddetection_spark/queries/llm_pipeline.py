@@ -80,7 +80,6 @@ def q_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.length(chunk).alias("chunk_len"),
             F.sha2(chunk, 256).alias("chunk_hash"),
         )
-        .orderBy("doc_id", "chunk_id")
     )
 
 
@@ -157,7 +156,6 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("doc_id").alias("first_doc"),
             F.max("doc_id").alias("last_doc"),
         )
-        .orderBy("bucket", "seq_id")
     )
 
 
@@ -230,7 +228,6 @@ def q_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= TFIDF_TOP)
         .select("doc_id", "rank", "token", r6("score").alias("score"))
-        .orderBy("doc_id", "rank")
     )
 
 
@@ -290,7 +287,6 @@ def q_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " x -> cast(x AS string)), ',')"
             ).alias("members"),
         )
-        .orderBy("group_id")
     )
 
 
@@ -405,7 +401,7 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_overlap").cast("bigint").alias("n_overlap"),
         rate.alias("overlap_rate"),
         (rate >= CONTAM_RATE).cast("bigint").alias("contaminated"),
-    ).orderBy("doc_id")
+    )
 
 
 _REG["q_decontaminate"] = _dc.replace(
@@ -531,7 +527,6 @@ def q_quality_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("passes"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -586,7 +581,6 @@ def q_domain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_chars",
             r6(F.col("wt") / F.col("wt_sum")).alias("mix_weight"),
         )
-        .orderBy("source")
     )
 
 
@@ -653,7 +647,6 @@ def q_embed_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "max_abs_err"
             ),
         )
-        .orderBy("vec_id")
     )
 
 
@@ -700,7 +693,6 @@ def q_viz_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
             r6(proj[0] * signs[0]).alias("px"),
             r6(proj[1] * signs[1]).alias("py"),
         )
-        .orderBy("vec_id")
     )
 
 
@@ -767,7 +759,6 @@ def q_feature_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
         hashed.groupBy("doc_id", "bucket")
         .agg(F.sum("sign").alias("w"))
         .filter(F.col("w") != 0)
-        .orderBy("doc_id", "bucket")
     )
 
 
@@ -864,7 +855,6 @@ def q_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
             F.col("target").cast("bigint").alias("target"),
         )
-        .orderBy("source", "rn")
     )
 
 
@@ -931,7 +921,6 @@ def q_embed_meanpool(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("sum_q").cast("double") / F.lit(_POOL_Q) / F.col("n_vecs")
             ).alias("mean_val"),
         )
-        .orderBy("label", "pos")
     )
 
 
@@ -1041,7 +1030,6 @@ def q_nearest_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("c_label").alias("pred_label"),
         )
         .agg(F.count("*").alias("n_vecs"))
-        .orderBy("true_label", "pred_label")
     )
 
 
@@ -1130,7 +1118,6 @@ def q_doc_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "novelty"
             ),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -1189,7 +1176,6 @@ def q_compress_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("ratio").alias("min_ratio"),
             F.max("ratio").alias("max_ratio"),
         )
-        .orderBy("source")
     )
 
 
@@ -1304,7 +1290,6 @@ def q_bpe_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "round", F.col("rank").cast("bigint").alias("rank"), "pair", "cnt"
         )
-        .orderBy("round", "rank")
     )
 
 
@@ -1494,7 +1479,6 @@ def q_corpus_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         one.select(F.explode(stages).alias("s"))
         .select("s.stage", "s.stage_name", "s.n_docs")
-        .orderBy("stage")
     )
 
 

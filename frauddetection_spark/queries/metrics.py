@@ -65,7 +65,6 @@ def q_metric_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         s.withColumn("pred", (F.col("score") >= SCORE_THRESHOLD).cast("int"))
         .groupBy("label", "pred")
         .agg(F.count("*").alias("n"))
-        .orderBy("label", "pred")
     )
 
 
@@ -133,7 +132,7 @@ def q_metric_prf(spark: SparkSession, sf_dir: str) -> DataFrame:
         (tp.cast("double") / F.nullif(tp + fp, F.lit(0))).alias("precision"),
         (tp.cast("double") / F.nullif(tp + fn, F.lit(0))).alias("recall"),
         ((2 * tp).cast("double") / F.nullif(2 * tp + fp + fn, F.lit(0))).alias("f1"),
-    ).orderBy("cls")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -296,7 +295,6 @@ def q_metric_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n_err").alias("err_events"),
             F.sum("n").alias("events"),
         )
-        .orderBy("bin")
     )
 
 
@@ -422,7 +420,6 @@ def q_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("dcg_e9").cast("double") / idcg.cast("double")).alias("ndcg"),
             F.coalesce(rr, F.lit(0)).cast("bigint").alias("rr_e9"),
         )
-        .orderBy("user_id")
     )
 
 
@@ -516,7 +513,6 @@ def q_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / (F.col("n_pred_pos") + F.col("p"))
             ).alias("f1"),
         )
-        .orderBy(F.col("threshold_q6").desc())
     )
 
 

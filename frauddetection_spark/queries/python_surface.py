@@ -54,7 +54,6 @@ def q_pandas_udf_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         zscore_per_user(events)
         .select("event_id", "user_id", "zscore")
-        .orderBy("event_id")
     )
 
 
@@ -89,7 +88,7 @@ def q_doc_stats_mapinpandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition-transform path, oracle-checked against the pure-SQL
     equivalent."""
     docs = t(spark, sf_dir, "documents")
-    return document_stats(docs).orderBy("doc_id")
+    return document_stats(docs)
 
 
 @register(
@@ -115,7 +114,7 @@ def q_binary_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("media.meta.kind").alias("kind"),
         F.col("media.meta.n_bytes").alias("n_bytes"),
         F.col("media.meta.sha").alias("sha"),
-    ).orderBy("doc_id")
+    )
 
 
 @register("q_multimodal_decode", oracle=None)
@@ -125,7 +124,7 @@ def q_multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     (functions/multimodal.py::decode_image). Rows-only: the kernel is
     not SQL-expressible."""
     media = with_media_column(t(spark, sf_dir, "documents"))
-    return decode_media(media).orderBy("doc_id")
+    return decode_media(media)
 
 
 # ---------------------------------------------------------------------------
@@ -188,7 +187,7 @@ def q_model_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         r6("f_rate").alias("f_rate"),
         r6("f_mean").alias("f_mean"),
         r6("score").alias("score"),
-    ).orderBy("user_id")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -218,10 +217,7 @@ def q_pandas_udf_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     from frauddetection_spark.functions.pandas_udfs import token_count
 
     docs = t(spark, sf_dir, "documents")
-    return (
-        docs.select("doc_id", token_count("text").alias("n_tokens"))
-        .orderBy("doc_id")
-    )
+    return docs.select("doc_id", token_count("text").alias("n_tokens"))
 
 
 # ---------------------------------------------------------------------------
@@ -252,7 +248,6 @@ def q_pandas_udf_grouped_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         e.groupBy("event_type")
         .agg(exact_mean("value").alias("mean_value"))
-        .orderBy("event_type")
     )
 
 
@@ -326,7 +321,6 @@ def q_python_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
                      CAST(round(o_totalprice * 100) AS BIGINT) AS amt
               FROM orders) o,
              LATERAL fd_installments(o.amt) s
-        ORDER BY o.o_orderkey, s.installment
         """
     )
 
@@ -403,5 +397,4 @@ def q_arrow_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("cents").cast("bigint").alias("cents_total"),
             F.sum("mod7").cast("bigint").alias("mod7_total"),
         )
-        .orderBy("event_type")
     )

@@ -301,7 +301,6 @@ def q_join_inner(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_lines"),
             r6(F.sum(rev).cast("double") / 10000).alias("revenue"),
         )
-        .orderBy("c_mktsegment", "o_orderpriority")
     )
 
 
@@ -470,7 +469,6 @@ def q_groupby_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("var_qty"),
             F.count("*").alias("count_order"),
         )
-        .orderBy("l_returnflag", "l_linestatus")
     )
 
 
@@ -498,7 +496,6 @@ def q_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         e.groupBy("event_type")
         .agg(F.countDistinct("user_id").alias("n_users"), F.count("*").alias("n_events"))
-        .orderBy("event_type")
     )
 
 
@@ -514,7 +511,6 @@ def q_approx_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         e.groupBy("event_type")
         .agg(F.approx_count_distinct("user_id", 0.01).alias("n_users_approx"))
-        .orderBy("event_type")
     )
 
 
@@ -547,7 +543,6 @@ def q_median(spark: SparkSession, sf_dir: str) -> DataFrame:
             r6(F.percentile("value", 0.5)).alias("median_value"),
             r6(F.percentile("value", 0.9)).alias("p90_value"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -558,7 +553,6 @@ def q_median_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         e.groupBy("event_type")
         .agg(r6(F.percentile_approx("value", 0.5, 10000)).alias("median_value_approx"))
-        .orderBy("event_type")
     )
 
 
@@ -615,7 +609,6 @@ def q_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         li.rollup("l_returnflag", "l_linestatus")
         .agg(r6(F.sum("l_quantity")).alias("sum_qty"), F.count("*").alias("n"))
-        .orderBy(F.asc_nulls_first("l_returnflag"), F.asc_nulls_first("l_linestatus"))
     )
 
 
@@ -673,7 +666,6 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         e.groupBy("user_id", "event_type")
         .agg(F.min("event_id").alias("min_event_id"), F.count("*").alias("n_dups"))
-        .orderBy("user_id", "event_type")
     )
 
 
@@ -786,7 +778,6 @@ def q_scan_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / 100
             ).alias("value_sum"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -851,7 +842,6 @@ def q_scan_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("cents"),
         )
-        .orderBy("event_type", "user_id")
     )
 
 
@@ -887,9 +877,6 @@ def q_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("revenue"),
             F.count("*").alias("n"),
         )
-        .orderBy(
-            F.asc_nulls_first("l_returnflag"), F.asc_nulls_first("l_linestatus")
-        )
     )
 
 
@@ -915,7 +902,6 @@ def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
                round(sum(l_quantity), 6) AS sum_qty
         FROM _li_gs
         GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus))
-        ORDER BY l_returnflag NULLS FIRST, l_linestatus NULLS FIRST
         """
     )
 
@@ -998,7 +984,7 @@ def q_asof_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("asof_click_event_id").alias("click_event_id"),
         F.col("asof_click_epoch_s").alias("click_epoch_s"),
         (F.col("epoch_s") - F.col("asof_click_epoch_s")).alias("gap_s"),
-    ).orderBy("event_id")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1038,7 +1024,7 @@ def q_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return wide.select(
         "user_id", *[F.col(k).cast("bigint").alias(f"n_{k}") for k in kinds]
-    ).orderBy("user_id")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1072,7 +1058,6 @@ def q_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
             valueColumnName="n",
         )
         .filter(F.col("n") > 0)
-        .orderBy("user_id", "event_type")
     )
 
 
@@ -1129,7 +1114,6 @@ def q_scan_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_docs"),
             F.sum("n_chars").alias("chars_total"),
         )
-        .orderBy("lang", "source")
     )
 
 
@@ -1183,7 +1167,6 @@ def q_profile_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
         .select("col", "n", F.col("n_null").cast("bigint"), "n_distinct")
-        .orderBy("col")
     )
 
 
@@ -1242,7 +1225,6 @@ def q_scan_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("p_partkey").alias("min_key"),
             F.max("p_partkey").alias("max_key"),
         )
-        .orderBy("p_brand")
     )
 
 
@@ -1311,7 +1293,6 @@ def q_scan_xml(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("c_custkey").alias("min_key"),
             F.max("c_custkey").alias("max_key"),
         )
-        .orderBy("c_mktsegment")
     )
 
 
@@ -1450,7 +1431,6 @@ def q_table_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_rows"),
             F.sum("k").cast("bigint").alias("key_checksum"),
         )
-        .orderBy("diff_class")
     )
 
 
@@ -1596,7 +1576,6 @@ def q_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
             "rev_e4",
             (F.col("rev_e4").cast("double") / 10000).alias("revenue"),
         )
-        .orderBy(F.col("rev_e4").desc(), "n_name")
     )
 
 
@@ -1735,7 +1714,6 @@ def q_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("sum_base_cents").cast("double") / F.col("n_rows") / 100
             ).alias("avg_price"),
         )
-        .orderBy("l_returnflag", "l_linestatus")
     )
 
 
@@ -1960,7 +1938,6 @@ def q_scan_pysource(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("id").cast("bigint").alias("min_id"),
             F.max("id").cast("bigint").alias("max_id"),
         )
-        .orderBy("bucket")
     )
 
 
@@ -2007,7 +1984,6 @@ def q_variant_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("k").cast("bigint").alias("sum_k"),
             F.max("k").cast("bigint").alias("max_k"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -2042,7 +2018,6 @@ def q_sql_pipe(spark: SparkSession, sf_dir: str) -> DataFrame:
                           AS BIGINT) AS sum_cents
            GROUP BY o_orderpriority
         |> SELECT o_orderpriority, n_orders, sum_cents
-        |> ORDER BY o_orderpriority
         """
     )
 
@@ -2086,7 +2061,7 @@ def q_sql_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT o_orderpriority,
                count(*) AS n_orders,
                CAST(sum(price_checksum(o_totalprice)) AS BIGINT) AS checksum
-        FROM orders_u GROUP BY 1 ORDER BY o_orderpriority
+        FROM orders_u GROUP BY 1
         """
     )
 
@@ -2117,7 +2092,6 @@ def q_collation(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lower(F.col("k")).cast("string").alias("priority_ci"),
             "n_orders",
         )
-        .orderBy("priority_ci")
     )
 
 
@@ -2169,7 +2143,6 @@ def q_semi_additive(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_users"),
             F.sum("c").cast("bigint").alias("eow_balance_cents"),
         )
-        .orderBy("week")
     )
 
 
@@ -2218,7 +2191,6 @@ def q_minmax_by(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min_by("event_type", "ranked_key").alias("smallest_type"),
             F.min_by("event_id", "ranked_key").alias("smallest_event"),
         )
-        .orderBy("user_id")
     )
 
 
@@ -2260,7 +2232,6 @@ def q_tpch_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("o_orderpriority")
         .agg(F.count("*").alias("n_orders"))
-        .orderBy("o_orderpriority")
     )
 
 
@@ -2322,7 +2293,6 @@ def q_tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_custs"),
             F.sum("bal_c").cast("bigint").alias("total_bal_cents"),
         )
-        .orderBy("n_name")
     )
 
 
@@ -2421,7 +2391,6 @@ def q_tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.year("o_orderdate").cast("bigint").alias("o_year"),
         )
         .agg(F.sum(_rev_e4() - cost).cast("bigint").alias("profit_e4"))
-        .orderBy("n_name", F.col("o_year").desc())
     )
 
 
@@ -2514,7 +2483,6 @@ def q_tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
             "rev_e4",
             (F.col("rev_e4").cast("double") / 10000).alias("revenue"),
         )
-        .orderBy("supp_nation", "cust_nation", "l_year")
     )
 
 
@@ -2614,7 +2582,6 @@ def q_tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("nation_e4").cast("double") / F.col("total_e4").cast("double")
             ).alias("mkt_share"),
         )
-        .orderBy("o_year")
     )
 
 
@@ -2659,7 +2626,6 @@ def q_tpch_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         co.groupBy("c_count")
         .agg(F.count("*").alias("custdist"))
-        .orderBy(F.col("custdist").desc(), F.col("c_count").desc())
     )
 
 
@@ -2718,7 +2684,6 @@ def q_tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
             "rev_e4",
             (F.col("rev_e4").cast("double") / 10000).alias("total_revenue"),
         )
-        .orderBy("s_suppkey")
     )
 
 
@@ -2862,7 +2827,7 @@ def q_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         "max_cents",
         "ssq",
         (F.col("sum_cents").cast("double") / F.col("n")).alias("mean_cents"),
-    ).orderBy("user_id")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -2930,7 +2895,7 @@ def q_window_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.cume_dist().over(w).alias("cd"),
         F.nth_value("cents", 3).over(wrun).alias("nth3"),
         F.last("cents").over(wfull).alias("min_cents"),
-    ).orderBy("user_id", "event_id")
+    )
 
 
 @register(
@@ -2998,7 +2963,6 @@ def q_null_logic(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("n_coalesce_id"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -3056,7 +3020,6 @@ def q_calendar_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "sum_days_to_eom"
             ),
         )
-        .orderBy("month")
     )
 
 
@@ -3115,7 +3078,6 @@ def q_try_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("n_ok_cast"),
             F.sum(k_str.try_cast("bigint")).cast("bigint").alias("sum_k"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -3154,7 +3116,6 @@ def q_bag_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
         i.unionByName(x)
         .groupBy("op", "user_id")
         .agg(F.count("*").alias("multiplicity"))
-        .orderBy("op", "user_id")
     )
 
 
@@ -3244,7 +3205,6 @@ def q_scan_federated(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("p_partkey").alias("min_key"),
             F.max("p_partkey").alias("max_key"),
         )
-        .orderBy("p_type")
     )
 
 
@@ -3372,7 +3332,6 @@ def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
                 * (F.col("y_max") - F.col("y_min") + 1)
             ).alias("span_product"),
         )
-        .orderBy("layout", "file_id")
     )
 
 
@@ -3429,7 +3388,6 @@ def q_tpch_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.when(high, 1).otherwise(0)).cast("bigint").alias("high_line_count"),
             F.sum(F.when(high, 0).otherwise(1)).cast("bigint").alias("low_line_count"),
         )
-        .orderBy("l_returnflag")
     )
 
 
@@ -3689,7 +3647,6 @@ def q_tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
         v.crossJoin(F.broadcast(tot))
         .filter(F.col("val") * F.col("np") > F.lit(2) * F.col("tv"))
         .select("ps_partkey", F.col("val").cast("bigint").alias("value_e4"))
-        .orderBy(F.col("value_e4").desc(), "ps_partkey")
     )
 
 
@@ -3736,7 +3693,6 @@ def q_tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(p), F.col("p_partkey") == F.col("ps_partkey"))
         .groupBy("p_brand", "p_type", F.col("p_size").cast("bigint").alias("p_size"))
         .agg(F.countDistinct("ps_suppkey").cast("bigint").alias("supplier_cnt"))
-        .orderBy(F.col("supplier_cnt").desc(), "p_brand", "p_type", "p_size")
     )
 
 
@@ -3808,7 +3764,6 @@ def q_tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
         hot.join(F.broadcast(s), F.col("s_suppkey") == F.col("l_suppkey"))
         .join(F.broadcast(n), F.col("n_nationkey") == F.col("s_nationkey"))
         .select("s_name", "n_name", "n_excess_parts")
-        .orderBy("s_name")
     )
 
 
@@ -3942,5 +3897,4 @@ def q_cascade_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
             "s.level", "s.table_name", "s.n_affected", "s.n_total",
             "s.affected_pct",
         )
-        .orderBy("level")
     )

@@ -75,7 +75,6 @@ def q_split_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
         c.withColumn("split", portable_split(F.col("c_custkey")))
         .groupBy("c_mktsegment", "split")
         .agg(F.count("*").alias("n"), F.min("c_custkey").alias("min_key"))
-        .orderBy("c_mktsegment", "split")
     )
 
 
@@ -88,7 +87,6 @@ def q_split_xxhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         c.withColumn("split", xxhash_split(F.col("c_custkey")))
         .groupBy("c_mktsegment", "split")
         .agg(F.count("*").alias("n"))
-        .orderBy("c_mktsegment", "split")
     )
 
 
@@ -180,7 +178,6 @@ def q_sampling_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         normalized_probability(raw, "raw")
         .select("user_id", "label", "degree", "prob")
-        .orderBy("user_id")
     )
 
 
@@ -273,7 +270,6 @@ def q_edge_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         normalized_probability(raw, "raw")
         .select("src", "dst", "edge_class", "prob")
-        .orderBy("src", "dst")
     )
 
 
@@ -313,7 +309,6 @@ def q_uniform_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.min("event_id").alias("min_id"),
             F.max("event_id").alias("max_id"),
         )
-        .orderBy("event_type")
     )
 
 
@@ -328,8 +323,10 @@ def q_weighted_draw(spark: SparkSession, sf_dir: str) -> DataFrame:
     Efraimidis–Spirakis exponential-jitter trick: key = -ln(u)/w with
     u ~ rand(seed), take the k smallest — one pass, fully distributed
     (reference: np.random.choice(p=node_prob), new_train_1.py:156).
-    Seeded but engine-specific RNG → rows-only."""
-    weights = q_sampling_weights(spark, sf_dir)
+    Seeded but engine-specific RNG → rows-only. rand() draws in
+    partition row order, so the weights are sorted first: the same
+    seed then gives the same sample on every run."""
+    weights = q_sampling_weights(spark, sf_dir).orderBy("user_id")
     keyed = weights.withColumn(
         "draw_key", -F.log(F.rand(seed=42)) / F.col("prob")
     )
@@ -369,7 +366,7 @@ def q_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return out.select(
         "event_type", F.col("cents_sum").cast("bigint"), F.col("n")
-    ).orderBy("event_type")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -421,7 +418,6 @@ def q_join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_events"),
             F.sum("cents").alias("cents_total"),
         )
-        .orderBy("user_id")
     )
 
 
@@ -530,7 +526,6 @@ def q_negative_sampling(spark, sf_dir):
         neg.withColumn("neg_rank", F.row_number().over(w).cast("bigint"))
         .filter(F.col("neg_rank") <= _NEG_K)
         .select("user_id", "neg_rank", "cand_part")
-        .orderBy("user_id", "neg_rank")
     )
 
 
@@ -589,7 +584,6 @@ def q_class_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
         r.crossJoin(F.broadcast(k))
         .filter(F.col("rn") <= F.col("k"))
         .select("event_type", "rn", "event_id")
-        .orderBy("event_type", "rn")
     )
 
 
@@ -692,7 +686,6 @@ def q_spatial_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("cheb"),
         )
-        .orderBy("u", "v")
     )
 
 
@@ -830,7 +823,6 @@ def q_cluster_griddensity(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_cells"),
             F.sum("n").cast("bigint").alias("n_core_points"),
         )
-        .orderBy("cluster_id")
     )
 
 
@@ -949,7 +941,6 @@ def q_sample_neyman(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_id",
             F.col("quota").cast("bigint").alias("quota"),
         )
-        .orderBy("event_type", "rn")
     )
 
 
@@ -1017,7 +1008,6 @@ def q_split_temporal(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count_distinct("user_id").alias("n_users"),
             F.sum("cents").cast("bigint").alias("cents_total"),
         )
-        .orderBy("split")
     )
 
 
@@ -1099,5 +1089,4 @@ def q_future_label(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("n_censored"),
         )
-        .orderBy("user_id")
     )

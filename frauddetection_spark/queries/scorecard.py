@@ -185,7 +185,7 @@ def q_lift_gains(spark: SparkSession, sf_dir: str) -> DataFrame:
             * F.col("total_users")
             / (F.col("n_users").cast("double") * F.col("total_pos"))
         ).alias("lift"),
-    ).orderBy("decile")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -279,7 +279,7 @@ def q_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("double")
             / F.lit(_Q)
         ).alias("psi_total"),
-    ).orderBy("bin")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -381,7 +381,7 @@ def q_woe_iv(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("double")
             / F.lit(_Q)
         ).alias("iv_total"),
-    ).orderBy("bin")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -437,7 +437,6 @@ def q_target_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
                 / (F.col("n") - 1)
             ).alias("loo_mean_cents"),
         )
-        .orderBy("event_id")
     )
 
 
@@ -640,7 +639,7 @@ def q_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
             * F.col("n_orders")
             / (F.col("na").cast("double") * F.col("nb"))
         ).alias("lift"),
-    ).orderBy("p1", "p2")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -852,7 +851,7 @@ def q_percent_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
             "pct_rank"
         ),
         (F.col("rn").cast("double") / F.col("n")).alias("cume_dist"),
-    ).orderBy("user_id")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -966,7 +965,6 @@ def q_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ).alias("mean_y_cuped"),
         )
-        .orderBy("variant")
     )
 
 
@@ -1171,7 +1169,7 @@ def q_ratio_delta_method(spark: SparkSession, sf_dir: str) -> DataFrame:
                 - 2 * cov / (mx * my)
             )
         ).alias("var_ratio"),
-    ).orderBy("variant")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1435,7 +1433,6 @@ def q_qte(spark: SparkSession, sf_dir: str) -> DataFrame:
             "treated_q",
             (F.col("treated_q") - F.col("control_q")).alias("qte_cents"),
         )
-        .orderBy("pct")
     )
 
 
@@ -1504,7 +1501,7 @@ def q_wilson_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         p.alias("p_hat"),
         ((center - half) / denom).alias("wilson_lo"),
         ((center + half) / denom).alias("wilson_hi"),
-    ).orderBy("event_type")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1582,7 +1579,6 @@ def q_event_study(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "avg_cents"
             ),
         )
-        .orderBy("rel_day")
     )
 
 
@@ -1667,7 +1663,6 @@ def q_backtest_snaive(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "wape"
             ),
         )
-        .orderBy("event_type")
     )
 
 
@@ -1780,7 +1775,6 @@ def q_eb_shrinkage(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "eb_rate"
             ),
         )
-        .orderBy("user_id")
     )
 
 
@@ -1851,7 +1845,6 @@ def q_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
             "l_diversity",
             (F.col("group_size") < _KANON_K).cast("int").alias("violates_k"),
         )
-        .orderBy("nation", "segment", "bal_band")
     )
 
 
@@ -2118,5 +2111,4 @@ def q_item_cf(spark: SparkSession, sf_dir: str) -> DataFrame:
             "item", F.col("rank").cast("bigint").alias("rank"),
             "neighbor", "n_uv", "cosine",
         )
-        .orderBy("item", "rank")
     )

@@ -75,7 +75,6 @@ def q_dedup_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         docs.groupBy(F.sha2("text", 256).alias("content_hash"))
         .agg(F.min("doc_id").alias("keeper_doc_id"), F.count("*").alias("n_copies"))
-        .orderBy("keeper_doc_id")
     )
 
 
@@ -140,7 +139,6 @@ def q_shingle_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         jac.filter(F.col("jaccard") >= JACCARD_MIN)
         .select("doc_a", "doc_b", "n_common", "jaccard")
-        .orderBy("doc_a", "doc_b")
     )
 
 
@@ -227,7 +225,6 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         exact_jaccard(cands, sh)
         .filter(F.col("jaccard") >= JACCARD_MIN)
         .select("doc_a", "doc_b", "n_common", "jaccard")
-        .orderBy("doc_a", "doc_b")
     )
 
 
@@ -268,7 +265,7 @@ def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-bit majority vote → packed int). Near-dup candidates then come
     from hamming distance on a single bigint — the cheapest-possible
     shuffle key for fuzzy dedup at scale."""
-    return simhash(t(spark, sf_dir, "documents")).orderBy("doc_id")
+    return simhash(t(spark, sf_dir, "documents"))
 
 
 # ---------------------------------------------------------------------------
@@ -303,9 +300,7 @@ def q_knn_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     LSH-bucketed variant (q_ann_lsh_ml) with this as the in-bucket
     rerank."""
     knn = knn_topk_bruteforce(t(spark, sf_dir, "embeddings"))
-    return knn.select("vec_id", "rank", "neighbor", "cos").orderBy(
-        "vec_id", "rank"
-    )
+    return knn.select("vec_id", "rank", "neighbor", "cos")
 
 
 # ---------------------------------------------------------------------------
@@ -330,7 +325,7 @@ def q_embed_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding near-duplicate pairs: cosine ≥ 0.4 over unordered
     pairs. Same quantized machinery as q_knn_cosine."""
     pairs = neardup_pairs_bruteforce(t(spark, sf_dir, "embeddings"), NEARDUP_COS)
-    return pairs.select("id_a", "id_b", "cos").orderBy("id_a", "id_b")
+    return pairs.select("id_a", "id_b", "cos")
 
 
 # ---------------------------------------------------------------------------
@@ -376,7 +371,7 @@ def q_ann_lsh_ml(spark: SparkSession, sf_dir: str) -> DataFrame:
     rerank = cosine_pairs(q, q).join(pairs, ["id_a", "id_b"])
     return rerank.select(
         "id_a", "id_b", r6("cos").alias("cos"), r6("euclid").alias("euclid")
-    ).orderBy("id_a", "id_b")
+    )
 
 
 @register("q_dedup_minhash_ml", oracle=None)
@@ -404,7 +399,6 @@ def q_dedup_minhash_ml(spark: SparkSession, sf_dir: str) -> DataFrame:
             r6(1 - F.col("jaccard_dist")).alias("jaccard_approx"),
         )
         .filter(F.col("doc_a") < F.col("doc_b"))
-        .orderBy("doc_a", "doc_b")
     )
 
 
@@ -446,12 +440,11 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle-checkable despite being approximate (operators/vectors.py::
     ivf_topk and sql_ivf are the same algorithm in both engines)."""
     n = _embeddings_count(sf_dir)
-    knn = ivf_topk(
+    return ivf_topk(
         t(spark, sf_dir, "embeddings"),
         n_centroids=adaptive_centroids(n),
         n_rows=n,
     )
-    return knn.orderBy("vec_id", "rank")
 
 
 # Sampled-seeding IVF: the 100-TB codebook-training shape. Lloyd runs
@@ -484,7 +477,7 @@ def q_ann_ivf_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     making the whole path, sampling included, oracle-checkable.
     Recall vs the exact kNN is pinned in tests/test_properties.py."""
     n = _embeddings_count(sf_dir)
-    knn = ivf_topk(
+    return ivf_topk(
         t(spark, sf_dir, "embeddings"),
         n_centroids=adaptive_centroids(n),
         seeding="sampled",
@@ -492,7 +485,6 @@ def q_ann_ivf_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
         seed=IVF_SEED,
         n_rows=n,
     )
-    return knn.orderBy("vec_id", "rank")
 
 
 # ---------------------------------------------------------------------------
@@ -573,7 +565,6 @@ def q_minhash_est(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_common",
             "exact_jaccard",
         )
-        .orderBy("doc_a", "doc_b")
     )
 
 
@@ -630,9 +621,7 @@ def q_ann_query_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("vec_id") % QUERY_MOD == 0)
         & (F.col("vec_id") < QUERY_MOD * QUERY_CAP)
     )
-    return query_batch_topk(q_all, probes).orderBy(
-        "query_id", "rank"
-    )
+    return query_batch_topk(q_all, probes)
 
 
 # ---------------------------------------------------------------------------
@@ -657,7 +646,7 @@ def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return pq_topk(
         t(spark, sf_dir, "embeddings"), n_rows=_embeddings_count(sf_dir)
-    ).orderBy("query_id", "rank")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -786,7 +775,6 @@ def q_sparse_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(cos >= _SC_MIN_COS)
         .select("doc_a", "doc_b", "n_shared", "dot", cos.alias("cosine"))
-        .orderBy("doc_a", "doc_b")
     )
 
 
@@ -890,7 +878,6 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_b",
             hamming.cast("bigint").alias("hamming"),
         )
-        .orderBy("doc_a", "doc_b")
     )
 
 
@@ -972,7 +959,6 @@ def q_shingle_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "contain_b_in_a"
             ),
         )
-        .orderBy("doc_a", "doc_b")
     )
 
 
@@ -1226,7 +1212,7 @@ def q_hyperplane_est(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("nrm_a").cast("double") * F.col("nrm_b").cast("double")
             )
         ).alias("cos_exact"),
-    ).orderBy("vec_a")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1370,5 +1356,4 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sort_array(F.collect_list("vec_id")), ","
             ).alias("members"),
         )
-        .orderBy("group_id")
     )

@@ -136,7 +136,6 @@ def q_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
             "est_n",
             (F.col("est_n") - F.col("true_n")).alias("overest"),
         )
-        .orderBy("user_id")
     )
 
 
@@ -275,5 +274,4 @@ def q_bloom_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("n_maybe"),
         )
-        .orderBy("cls")
     )

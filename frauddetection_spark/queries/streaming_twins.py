@@ -42,9 +42,7 @@ def q_tumbling_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hourly tumbling counts + exact-cents sums per event_type —
     window() is epoch-aligned, so batch and stream bucket identically.
     This is streaming.windows.tumbling_counts run as a batch."""
-    return tumbling_counts(t(spark, sf_dir, "events")).orderBy(
-        "window_start", "event_type"
-    )
+    return tumbling_counts(t(spark, sf_dir, "events"))
 
 
 # ---------------------------------------------------------------------------
@@ -70,9 +68,7 @@ def q_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows (the oracle derives both starts arithmetically — the
     definition window() implements). This is
     streaming.windows.sliding_counts run as a batch."""
-    return sliding_counts(t(spark, sf_dir, "events")).orderBy(
-        "window_start", "event_type"
-    )
+    return sliding_counts(t(spark, sf_dir, "events"))
 
 
 # ---------------------------------------------------------------------------
@@ -159,7 +155,6 @@ def q_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_events"),
             (F.sum("cents").cast("double") / 100).alias("value_sum"),
         )
-        .orderBy("user_id", "session_id")
     )
 
 
@@ -238,5 +233,4 @@ def q_watermark_lateness(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.when(late.isNull() | (late < 0), 0).otherwise(late)
             ).cast("bigint").alias("max_late_us"),
         )
-        .orderBy("day")
     )

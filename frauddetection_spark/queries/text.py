@@ -69,7 +69,6 @@ def q_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "avg_tokens_per_doc"
             ),
         )
-        .orderBy("lang")
     )
 
 
@@ -141,7 +140,7 @@ def q_text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .cast("int")
         .alias("passes_filter"),
-    ).orderBy("doc_id")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -209,7 +208,6 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
             "score",
             (F.col("cand_lang") == F.col("true_lang")).cast("int").alias("correct"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -253,7 +251,7 @@ def q_token_regex(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_digit_tokens"
         ),
         F.size(F.array_distinct("toks")).alias("n_distinct"),
-    ).orderBy("doc_id")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -293,7 +291,7 @@ def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.expr(_FP_SPARK).alias("fingerprint"),
         F.length("text").alias("n_chars"),
-    ).orderBy("doc_id")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -341,7 +339,6 @@ def q_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("bigram")
         .agg(F.count("*").alias("n"), F.countDistinct("doc_id").alias("n_docs"))
         .filter(F.col("n") >= 20)
-        .orderBy("bigram")
     )
 
 
@@ -438,7 +435,6 @@ def q_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.length("clean")).alias("clean_chars"),
             F.min(F.sha2("clean", 256)).alias("sample_hash"),
         )
-        .orderBy("source")
     )
 
 
@@ -500,7 +496,6 @@ def q_repetition_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.max("n").cast("double") / F.sum("n")).alias("top_share"),
             (F.count("*").cast("double") / F.sum("n")).alias("distinct_share"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -567,7 +562,7 @@ def q_lexicon_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .otherwise(F.lit(0.0))
         .alias("polarity"),
-    ).orderBy("doc_id")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -737,7 +732,6 @@ def q_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
             "score_q9",
             (F.col("score_q9").cast("double") / F.lit(1e9)).alias("bm25"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -829,7 +823,6 @@ def q_bigram_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("pmi_q9"),
         )
-        .orderBy("w1", "w2")
     )
 
 
@@ -903,7 +896,7 @@ def q_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("sum_q9").cast("double") / F.lit(_PMI_Q) / F.col("dl")).alias(
             "avg_logprob"
         ),
-    ).orderBy("doc_id")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1116,7 +1109,6 @@ def q_bigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("sum_q9").cast("double") / _PMI_Q / F.col("n_bigrams")
             ).alias("avg_logprob"),
         )
-        .orderBy("doc_id")
     )
 
 
@@ -1192,5 +1184,4 @@ def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ",",
             ).alias("postings_head"),
         )
-        .orderBy("token")
     )

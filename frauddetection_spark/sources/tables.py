@@ -161,21 +161,21 @@ def pinned_projection(df: DataFrame, name: str, raw: StructType) -> DataFrame:
     in micros pass through untouched. Shared by the batch loader and
     the streaming source so both adapt to whichever physical encoding
     the files carry. ``raw`` is the schema the caller already holds,
-    so projecting costs no schema round trip to the JVM.
+    so projecting costs no schema round trip to the JVM, and the
+    projection is SQL text handed over in one ``selectExpr`` rather
+    than a ``Column`` built call by call.
     """
-    from pyspark.sql import functions as F
-
     got = {f.name: f.dataType for f in raw.fields}
-    cols = []
+    exprs = []
     for f in SCHEMAS[name].fields:
-        c, want = f.name, f.dataType
-        if isinstance(want, TimestampType) and got[c] == LongType():
-            cols.append(F.timestamp_micros(F.expr(f"`{c}` div 1000")).alias(c))
-        elif got[c] != want:
-            cols.append(F.col(c).cast(want).alias(c))
+        c, want = f"`{f.name}`", f.dataType
+        if isinstance(want, TimestampType) and got[f.name] == LongType():
+            exprs.append(f"timestamp_micros({c} div 1000) AS {c}")
+        elif got[f.name] != want:
+            exprs.append(f"CAST({c} AS {want.simpleString()}) AS {c}")
         else:
-            cols.append(F.col(c))
-    return df.select(*cols)
+            exprs.append(c)
+    return df.selectExpr(*exprs)
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

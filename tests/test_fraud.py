@@ -171,8 +171,9 @@ def test_merge_upsert_rules(spark, sf_dir):
 
 
 def test_reservoir_group_bounded_and_deterministic(spark, sf_dir):
-    a = REGISTRY["q_reservoir_group"].fn(spark, sf_dir).collect()
-    b = REGISTRY["q_reservoir_group"].fn(spark, sf_dir).collect()
+    q = REGISTRY["q_reservoir_group"].fn
+    a = q(spark, sf_dir).orderBy("event_type", "rn").collect()
+    b = q(spark, sf_dir).orderBy("event_type", "rn").collect()
     assert a == b
     per = {}
     for r in a:

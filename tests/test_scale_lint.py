@@ -14,6 +14,12 @@
    WindowExec). The only allowed unpartitioned window is the
    bounded-by-construction one: prefix offsets over per-range-partition
    totals (≤ RANK_PARTITIONS rows, order col ``_pid``).
+
+3. **No presentation sort** — results are multisets (the oracle and
+   the driver compare them order-insensitively), so a plan may end in
+   a global ``Sort`` only under a ``Limit``, where the order selects
+   the top-k rows. A bare terminal sort plans a range-partitioned
+   exchange whose sampling job re-runs the query's last stage.
 """
 
 from __future__ import annotations
@@ -51,6 +57,20 @@ def _unpartitioned_windows(df) -> list[str]:
 
     walk(df._jdf.queryExecution().analyzed())
     return out
+
+
+def _presentation_sort(df) -> bool:
+    """True when the optimized plan, walked from the root through unary
+    nodes, reaches a global Sort with no Limit above it."""
+    node, limited = df._jdf.queryExecution().optimizedPlan(), False
+    while True:
+        cls = node.getClass().getSimpleName()
+        if cls == "Sort":
+            return getattr(node, "global")() and not limited
+        limited = limited or "Limit" in cls
+        if node.children().size() != 1:
+            return False
+        node = node.children().apply(0)
 
 
 def _live_scan_count(df) -> int:
@@ -97,9 +117,9 @@ def plan_inspections(spark, sf_dir):
     parametrized tests would read plans whose InMemoryRelations were
     already unpersisted (observed: q_attribution_shapley counted 12
     live scans instead of its true ≤10 when inspected after the full
-    catalog pass). Storing the three verdicts (window order-cols,
-    cartesian presence, live-scan count) keeps the per-query
-    attribution in the params while paying construction once.
+    catalog pass). Storing the four verdicts (window order-cols,
+    cartesian presence, live-scan count, presentation sort) keeps the
+    per-query attribution in the params while paying construction once.
 
     Also returns the set of Spark job ids launched while constructing
     the NON-exempt queries — snapshotted twice TOTAL, not per query,
@@ -121,6 +141,7 @@ def plan_inspections(spark, sf_dir):
             "cartesian": "CartesianProduct"
             in df._jdf.queryExecution().executedPlan().toString(),
             "live_scans": _live_scan_count(df),
+            "root_sort": _presentation_sort(df),
         }
 
     inspections = {}
@@ -173,6 +194,19 @@ def test_no_unpartitioned_windows(name, plan_inspections):
         "a multi-referenced subtree is replaying; persist it "
         "(track_cache) or restructure so each base relation is "
         "scanned a bounded number of times"
+    )
+
+
+def test_no_presentation_sort(plan_inspections):
+    """No query ends in a sort that only orders its output: a caller
+    that wants ordered rows sorts the returned frame or its pandas
+    result. A sort under a limit is a top-k and stays."""
+    sorted_out = sorted(
+        name for name, found in plan_inspections[0].items() if found["root_sort"]
+    )
+    assert sorted_out == [], (
+        f"{len(sorted_out)} queries end in a global Sort with no Limit "
+        f"above it: {sorted_out}"
     )
 
 
