@@ -169,9 +169,7 @@ def _pick_cn_strategy(n_contacts: int, n_users: int, sum_d2: int) -> str:
 
 
 def common_neighbor_pairs(
-    contacts: DataFrame,
-    min_common: int = 1,
-    stats: ContactStats | None = None,
+    contacts: DataFrame, min_common: int, stats: ContactStats
 ) -> DataFrame:
     """Pairs of users sharing ≥ min_common contacts (buildLSN,
     data_process.py:20-48, live k=1 at :219-220). The reference's
@@ -193,10 +191,10 @@ def common_neighbor_pairs(
       masked pairs. Its contact→bit index is a driver literal built
       from ``stats.values``.
 
-    Pass ``stats`` when the caller already knows them (catalog /
-    ANALYZE) to get the cost-based pick. Without them the operator
-    plans the inverted join. Either way NO Spark job runs at
-    construction.
+    ``stats`` come from the caller (catalog / ANALYZE); with
+    ``stats.values`` None (the contact domain is too large to list, or
+    unknown) the operator plans the inverted join. Either way NO Spark
+    job runs at construction.
 
     Both strategies are semantically identical for min_common ≥ 1 (the
     join-based inverted path cannot observe zero-overlap pairs, so
@@ -211,8 +209,7 @@ def common_neighbor_pairs(
         .distinct()
     )
     if (
-        stats is not None
-        and stats.values is not None
+        stats.values is not None
         and _pick_cn_strategy(stats.n_contacts, stats.n_users, stats.sum_d2)
         == "bitmask"
     ):

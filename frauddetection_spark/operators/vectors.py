@@ -15,14 +15,17 @@ candidates, exact rerank inside buckets) bounds the join. Both share
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import functools
+
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType
 
 QUANT = 10_000
 KNN_K = 3  # neighbors kept per vector / probe by every search below
 
 
-def round_half_away_np(arr, scale: int = 1):
+def round_half_away_np(arr, scale: int):
     """THE numpy fixed-point kernel for the whole engine: round half
     AWAY FROM ZERO (matching Spark/DuckDB ``round()``), never
     ``np.rint``/``round`` (half-to-even) — a .5-cent value would
@@ -31,11 +34,6 @@ def round_half_away_np(arr, scale: int = 1):
 
     s = np.asarray(arr, dtype="float64") * scale
     return np.where(s >= 0, np.floor(s + 0.5), np.ceil(s - 0.5)).astype("int64")
-
-
-def _quant_np(m):
-    """Fixed-point embedding quantization (×QUANT), half away from zero."""
-    return round_half_away_np(m, QUANT)
 
 
 def quantize(emb: DataFrame) -> DataFrame:
@@ -112,6 +110,89 @@ def _topk_not_self(aids, bids, cos, k: int):
     return out_id, out_nb, out_cos
 
 
+def _ints(col):
+    """int64 matrix of a pandas column of equal-length integer arrays."""
+    import numpy as np
+
+    return np.stack(col.to_numpy()).astype(np.int64)
+
+
+# pandas dtype of a zero-row output column, by Spark type name; any
+# other type (arrays) is an object column
+_EMPTY_DTYPES = {"long": "int64", "integer": "int32", "double": "float64"}
+
+# output schema of the kNN and IVF rerank tile kernels
+_NEIGHBOR_TILE = "vec_id long, neighbor long, cos double"
+
+
+def _apply_tiles(grouped, ddl: str, body) -> DataFrame:
+    """The scaffold of every pandas kernel in this module: run
+    ``body(left, right)`` on each group pair of the cogrouped
+    ``grouped``. The body returns the output columns in the order of
+    the ``ddl`` schema, or None when it keeps no row; a group pair with
+    an empty side, like a None, yields a zero-row frame typed from the
+    schema (Arrow needs the types even when there are no rows). The UDF
+    carries the body's name into plans and the Spark UI."""
+    schema = DataType.fromDDL(ddl)
+
+    @functools.wraps(body)
+    def kern(left, right):
+        import pandas as pd
+
+        cols = None if left.empty or right.empty else body(left, right)
+        if cols is None:
+            return pd.DataFrame(
+                {
+                    f.name: pd.Series(
+                        [], dtype=_EMPTY_DTYPES.get(f.dataType.typeName(), "object")
+                    )
+                    for f in schema.fields
+                }
+            )
+        return pd.DataFrame(dict(zip(schema.names, cols)))
+
+    return grouped.applyInPandas(kern, schema)
+
+
+def _top_k(
+    tiles: DataFrame, key: str, score: str, k: int, cast: str | None
+) -> DataFrame:
+    """(key, rank, neighbor, score): the ``k`` best rows per ``key`` by
+    (``score`` DESC, neighbor ASC), ``rank`` cast to ``cast`` unless it
+    is None — the one merge of the tile top-ks below. Every kernel
+    meets a (row, neighbor) pair in exactly one tile, so the merge
+    needs no dedup."""
+    rank = F.row_number().over(
+        Window.partitionBy(key).orderBy(F.col(score).desc(), "neighbor")
+    )
+    return (
+        tiles.withColumn("rank", rank if cast is None else rank.cast(cast))
+        .filter(F.col("rank") <= k)
+        .select(key, "rank", "neighbor", score)
+    )
+
+
+def rerank(left, right):
+    """Tile body: each probe row of ``left`` (vec_id, qv, n2) keeps its
+    ``KNN_K`` best candidates of ``right`` (r_vec_id, r_qv, r_n2) by
+    exact quantized cosine, its own id excluded (a probe is in the
+    corpus too). Zero-norm (all-zero quantized) vectors would produce
+    NaN cosines, which np.lexsort on -cos ranks LAST while SQL's ORDER
+    BY cos DESC ranks them FIRST — dropping them keeps the tile's
+    ordering domain NaN-free so both engines provably agree."""
+    left = left[left["n2"].to_numpy() > 0]
+    right = right[right["r_n2"].to_numpy() > 0]
+    if left.empty or right.empty:
+        return None
+    cos = _cos_tile(
+        _ints(left["qv"]), left["n2"].to_numpy(),
+        _ints(right["r_qv"]), right["r_n2"].to_numpy(),
+    )
+    return _topk_not_self(
+        left["vec_id"].to_numpy(), right["r_vec_id"].to_numpy(), cos, KNN_K
+    )
+
+
 # Block count for the block-nested-loop kNN. Pair compute is O(n²·d)
 # regardless (exact all-pairs); blocks only control distribution:
 # 2·B·n rows are shuffled and each of the B² kernel calls handles an
@@ -120,10 +201,11 @@ def _topk_not_self(aids, bids, cos, k: int):
 KNN_BLOCKS = 4
 
 
-def _block_pairs_cogrouped(emb: DataFrame):
-    """Replicate both sides over (left_block, right_block) keys and
-    cogroup — the distributed block nested loop. Every (a, b) vector
-    pair meets in EXACTLY ONE kernel call: (block(a), block(b)).
+def _block_pairs(emb: DataFrame, ddl: str, body) -> DataFrame:
+    """Replicate both sides over (left_block, right_block) keys,
+    cogroup, and run ``body(left, right)`` per block pair — the
+    distributed block nested loop. Every (a, b) vector pair meets in
+    EXACTLY ONE kernel call: (block(a), block(b)).
 
     This is the scale-out replacement for a driver-collect +
     sc.broadcast kernel: nothing touches the driver, the plan is fully
@@ -152,20 +234,32 @@ def _block_pairs_cogrouped(emb: DataFrame):
         .withColumn("rb", F.pmod(F.col("r_vec_id"), F.lit(KNN_BLOCKS)).cast("int"))
         .withColumn("lb", F.explode(all_blocks))
     )
-    return left.groupBy("lb", "rb").cogroup(right.groupBy("lb", "rb"))
+    grouped = left.groupBy("lb", "rb").cogroup(right.groupBy("lb", "rb"))
+    return _apply_tiles(grouped, ddl, body)
+
+
+def _embedding_tile(left, right):
+    """(left ids, right ids, cosine tile) of a `_block_pairs` block:
+    both sides' raw embeddings quantized here, rounding half away from
+    zero like Spark/DuckDB round(), not numpy's half-to-even."""
+    import numpy as np
+
+    qa = round_half_away_np(np.stack(left["embedding"].to_numpy()), QUANT)
+    qb = round_half_away_np(np.stack(right["r_vec"].to_numpy()), QUANT)
+    cos = _cos_tile(qa, (qa * qa).sum(axis=1), qb, (qb * qb).sum(axis=1))
+    return left["vec_id"].to_numpy(), right["r_vec_id"].to_numpy(), cos
 
 
 def knn_topk_bruteforce(emb: DataFrame) -> DataFrame:
     """Exact top-KNN_K cosine neighbors via a distributed numpy int64
-    kernel (block nested loop, `_block_pairs_cogrouped`).
+    kernel (block nested loop, `_block_pairs`).
 
     Each kernel call does one BLAS-free exact integer matmul for its
     block tile and keeps only the tile-local top-k, so the n² pair
     space is never materialized as rows; a final per-vector window
     merges the B tile top-ks into the global top-k. Integer dot
     products are order-independent ⇒ results stay bit-identical to the
-    SQL/DuckDB formulation. Rounding matches Spark/DuckDB round()
-    (half away from zero), not numpy's half-to-even.
+    SQL/DuckDB formulation.
 
     Scale: exact all-pairs is O(n²·d) compute by definition — this
     distributes it evenly with no driver participation. For corpus
@@ -173,52 +267,12 @@ def knn_topk_bruteforce(emb: DataFrame) -> DataFrame:
     (q_ann_lsh_ml / q_ann_ivf), which reuse the same quantized
     arithmetic inside buckets.
     """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
 
-    _quant = _quant_np
+    def kernel(left, right):
+        return _topk_not_self(*_embedding_tile(left, right), KNN_K)
 
-    tile_schema = StructType(
-        [
-            StructField("vec_id", LongType()),
-            StructField("neighbor", LongType()),
-            StructField("cos", DoubleType()),
-        ]
-    )
-
-    def kernel(_key, left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if left.empty or right.empty:
-            return pd.DataFrame(
-                {"vec_id": [], "neighbor": [], "cos": []}
-            ).astype({"vec_id": "int64", "neighbor": "int64", "cos": "float64"})
-        qa = _quant(np.stack(left["embedding"].to_numpy()))
-        qb = _quant(np.stack(right["r_vec"].to_numpy()))
-        bids = right["r_vec_id"].to_numpy()
-        cos = _cos_tile(qa, (qa * qa).sum(axis=1), qb, (qb * qb).sum(axis=1))
-        out_id, out_nb, out_cos = _topk_not_self(
-            left["vec_id"].to_numpy(), bids, cos, KNN_K
-        )
-        return pd.DataFrame(
-            {"vec_id": out_id, "neighbor": out_nb, "cos": out_cos}
-        )
-
-    tiles = _block_pairs_cogrouped(emb).applyInPandas(
-        kernel, schema=tile_schema
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("vec_id").orderBy(F.col("cos").desc(), "neighbor")
-    return (
-        tiles.withColumn("rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rank") <= KNN_K)
-        .select("vec_id", "rank", "neighbor", "cos")
-    )
+    tiles = _block_pairs(emb, _NEIGHBOR_TILE, kernel)
+    return _top_k(tiles, "vec_id", "cos", KNN_K, "int")
 
 
 def neardup_pairs_bruteforce(emb: DataFrame, threshold: float) -> DataFrame:
@@ -227,42 +281,15 @@ def neardup_pairs_bruteforce(emb: DataFrame, threshold: float) -> DataFrame:
     are emitted inside the kernel (id_a < id_b appears in exactly one
     tile), so the n² space is never materialized and no merge window
     is needed."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
 
-    _quant = _quant_np
+    def kernel(left, right):
+        import numpy as np
 
-    schema = StructType(
-        [
-            StructField("id_a", LongType()),
-            StructField("id_b", LongType()),
-            StructField("cos", DoubleType()),
-        ]
-    )
+        aids, bids, cos = _embedding_tile(left, right)
+        ai, bi = np.nonzero((cos >= threshold) & (aids[:, None] < bids[None, :]))
+        return aids[ai], bids[bi], cos[ai, bi]
 
-    def kernel(_key, left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        if left.empty or right.empty:
-            return pd.DataFrame({"id_a": [], "id_b": [], "cos": []}).astype(
-                {"id_a": "int64", "id_b": "int64", "cos": "float64"}
-            )
-        qa = _quant(np.stack(left["embedding"].to_numpy()))
-        qb = _quant(np.stack(right["r_vec"].to_numpy()))
-        aids = left["vec_id"].to_numpy()
-        bids = right["r_vec_id"].to_numpy()
-        cos = _cos_tile(qa, (qa * qa).sum(axis=1), qb, (qb * qb).sum(axis=1))
-        keep = (cos >= threshold) & (aids[:, None] < bids[None, :])
-        ai, bi = np.nonzero(keep)
-        return pd.DataFrame(
-            {"id_a": aids[ai], "id_b": bids[bi], "cos": cos[ai, bi]}
-        )
-
-    return _block_pairs_cogrouped(emb).applyInPandas(kernel, schema=schema)
+    return _block_pairs(emb, "id_a long, id_b long, cos double", kernel)
 
 
 # DuckDB twin of quantize(): (vec_id, qv, n2)
@@ -336,12 +363,12 @@ def _sql_adaptive_centroids() -> str:
     return ("CASE " + " ".join(arms) + f" ELSE {IVF_K_MAX} END")
 
 
-# Block count for the cogrouped centroid-scoring kernel: the corpus
-# side is hash-split so every core gets work even when the parquet
-# scan is a single partition (a 30 MB embeddings file at sf10 is ONE
-# 128 MB-rule split holding 200k vectors). ASSIGN_BLOCKS is the FLOOR;
+# Block count for the cogrouped corpus kernels: the corpus side is
+# hash-split so every core gets work even when the parquet scan is a
+# single partition (a 30 MB embeddings file at sf10 is ONE 128 MB-rule
+# split holding 200k vectors). ASSIGN_BLOCKS is the FLOOR;
 # assign_blocks(n) scales the count with the corpus so the per-task
-# pandas frame stays bounded (a fixed 32 meant ~n/32 rows per task —
+# pandas frame stays bounded (a fixed 32 means ~n/32 rows per task —
 # ≈16 GB/task at 10⁹ vectors, a footprint that grows hidden with the
 # corpus).
 ASSIGN_BLOCKS = 32
@@ -350,16 +377,13 @@ ASSIGN_BLOCKS = 32
 ASSIGN_TARGET_ROWS = 1 << 16
 
 
-def assign_blocks(n_rows: int | None) -> int:
-    """Deterministic block count for :func:`_centroid_topn`: the
+def assign_blocks(n_rows: int) -> int:
+    """Deterministic block count for :func:`_block_cogroup`: the
     smallest power of two ≥ ``ASSIGN_BLOCKS`` with ≤
     ``ASSIGN_TARGET_ROWS`` corpus rows per block. Block count does NOT
-    affect results (each block scores its vectors against the full
-    replicated codebook), so the DuckDB twin needs no mirror — it only
-    bounds per-task memory and sets parallelism. ``None`` (caller has
-    no cheap row count) falls back to the floor, today's behavior."""
-    if n_rows is None or n_rows <= ASSIGN_BLOCKS * ASSIGN_TARGET_ROWS:
-        return ASSIGN_BLOCKS
+    affect results (each block meets the full replica of the small
+    side), so the DuckDB twins need no mirror — it only bounds per-task
+    memory and sets parallelism."""
     B = ASSIGN_BLOCKS
     while B * ASSIGN_TARGET_ROWS < n_rows:
         B *= 2
@@ -367,20 +391,24 @@ def assign_blocks(n_rows: int | None) -> int:
 
 
 def _block_cogroup(
-    corpus: DataFrame, cent: DataFrame, n_rows: int | None, kern, schema
+    corpus: DataFrame, small: DataFrame, n_rows: int, ddl: str, body
 ) -> DataFrame:
-    """Run the pandas ``kern`` over ``corpus`` hash-split by vec_id into
+    """Run ``body(corpus_block, small)`` (see :func:`_apply_tiles`) with
+    ``corpus`` hash-split on its first (id) column into
     :func:`assign_blocks` ``(n_rows)`` blocks, each cogrouped with a
-    full replica of the small codebook frame ``cent`` — the layout of
-    every centroid-scoring kernel below."""
+    full replica of the small frame — a codebook or a probe batch. Each
+    (corpus row, small row) pair meets in exactly one block, so tile
+    top-ks merge with no dedup; the replication costs |small|·B rows.
+    No driver collect and no broadcast variable: the plan stays lazy
+    (zero jobs at construction, lint-pinned)."""
     B = assign_blocks(n_rows)
-    left = corpus.withColumn("b", F.pmod(F.col("vec_id"), F.lit(B)).cast("int"))
-    right = cent.withColumn(
+    left = corpus.withColumn(
+        "b", F.pmod(F.col(corpus.columns[0]), F.lit(B)).cast("int")
+    )
+    right = small.withColumn(
         "b", F.explode(F.sequence(F.lit(0), F.lit(B - 1)))
     ).withColumn("b", F.col("b").cast("int"))
-    return left.groupBy("b").cogroup(right.groupBy("b")).applyInPandas(
-        kern, schema
-    )
+    return _apply_tiles(left.groupBy("b").cogroup(right.groupBy("b")), ddl, body)
 
 
 def _cos_sort_key(qv, n2, r):
@@ -394,7 +422,7 @@ def _cos_sort_key(qv, n2, r):
     never drift apart."""
     import numpy as np
 
-    cqv = np.stack(r["cqv"].to_numpy()).astype(np.int64)
+    cqv = _ints(r["cqv"])
     cn2 = r["cn2"].to_numpy().astype(np.float64)
     cids = r["cid"].to_numpy()
     # pre-sort the codebook by cid ascending: a STABLE argsort (or
@@ -403,181 +431,102 @@ def _cos_sort_key(qv, n2, r):
     ordc = np.argsort(cids, kind="stable")
     cids, cqv, cn2 = cids[ordc], cqv[ordc], cn2[ordc]
     with np.errstate(invalid="ignore", divide="ignore"):
-        cos = (qv @ cqv.T) / np.sqrt(n2[:, None] * cn2[None, :])
+        cos = (qv @ cqv.T) / np.sqrt(n2.astype(np.float64)[:, None] * cn2[None, :])
     key = np.where(np.isnan(cos), np.inf, cos)
     return cids, key
 
 
-def _assign_rank1(qv, n2, r):
-    """(sorted cids, rank-1 centroid POSITION per row) — argmax over
-    the shared key; first-wins on ties = lowest cid, identical to
-    `_centroid_topn(..., n_top=1)`."""
-    import numpy as np
-
-    cids, key = _cos_sort_key(qv, n2, r)
-    return cids, np.argmax(key, axis=1)
-
-
 def _centroid_topn(
-    frame: DataFrame,
-    cent: DataFrame,
-    n_top: int,
-    n_rows: int | None = None,
+    frame: DataFrame, cent: DataFrame, n_top: int, n_rows: int
 ) -> DataFrame:
     """(vec_id, cid, crank) — each vector's ``n_top`` centroids by
     (ccos DESC, cid ASC), as a cogrouped numpy int64 matmul.
 
-    This replaces the Catalyst transform/aggregate scoring expression:
-    higher-order functions never enter whole-stage codegen, so the n·K·d
-    assignment ran as interpreted per-element expression eval — invisible
-    at K=16, but the adaptive codebook at n=200k/K=512 means ~6.5e9
-    interpreted evals in one scan task. The same arithmetic as a
-    per-block matmul runs in compiled numpy, and the block split
-    parallelizes a single-partition scan. Semantics are bit-identical to the old
-    sort_array(struct(ccos, -cid, cid)) expression AND the DuckDB
-    twin's row_number window: exact int64 dot, one IEEE double
-    division, NaN ranked greatest (Spark's double order), ties by cid
-    ascending. Fully lazy — no driver collect, no broadcast variable,
-    zero jobs at construction (lint-pinned); the ≤K-row codebook is
-    replicated onto each of the assign_blocks(n_rows) corpus blocks,
-    the standard small-side replication of query_batch_topk.
-    ``n_rows`` is an optional caller-known corpus size hint that only
-    sizes the block split (per-task memory bound), never the result.
+    Catalyst higher-order functions never enter whole-stage codegen,
+    so a transform/aggregate scoring expression would run the n·K·d
+    assignment as interpreted per-element evals (~6.5e9 in one scan
+    task at n=200k/K=512); the per-block matmul runs them in compiled
+    numpy, and the block split parallelizes a single-partition scan.
+    Semantics match the DuckDB twin's row_number window: exact int64
+    dot, one IEEE double division, NaN ranked greatest (Spark's double
+    order), ties by cid ascending. The ≤K-row codebook is replicated
+    onto each corpus block (:func:`_block_cogroup`); ``n_rows`` sizes
+    the block split, never the result.
     """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import (
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
 
-    schema = StructType(
-        [
-            StructField("vec_id", LongType()),
-            StructField("cid", LongType()),
-            StructField("crank", IntegerType()),
-        ]
-    )
+    def kern(l, r):
+        import numpy as np
 
-    def kern(_key, l: pd.DataFrame, r: pd.DataFrame) -> pd.DataFrame:
-        if l.empty or r.empty:
-            return pd.DataFrame({"vec_id": [], "cid": [], "crank": []}).astype(
-                {"vec_id": "int64", "cid": "int64", "crank": "int32"}
-            )
-        qv = np.stack(l["qv"].to_numpy()).astype(np.int64)
-        vids = l["vec_id"].to_numpy()
-        # scoring + NaN/tie semantics live in the shared _cos_sort_key
-        # (one definition for ranking AND the Lloyd assignment)
-        cids, key = _cos_sort_key(
-            qv, l["n2"].to_numpy().astype(np.float64), r
-        )
+        cids, key = _cos_sort_key(_ints(l["qv"]), l["n2"].to_numpy(), r)
         n_keep = min(n_top, len(cids))
         idx = np.argsort(-key, axis=1, kind="stable")[:, :n_keep]
-        return pd.DataFrame(
-            {
-                "vec_id": np.repeat(vids, n_keep),
-                "cid": cids[idx].ravel(),
-                "crank": np.tile(
-                    np.arange(1, n_keep + 1, dtype=np.int32), len(vids)
-                ),
-            }
+        return (
+            np.repeat(l["vec_id"].to_numpy(), n_keep),
+            cids[idx].ravel(),
+            np.tile(np.arange(1, n_keep + 1, dtype=np.int32), len(l)),
         )
 
     return _block_cogroup(
         frame.select("vec_id", "qv", "n2"),
         cent.select("cid", "cqv", "cn2"),
-        n_rows, kern, schema,
+        n_rows, "vec_id long, cid long, crank int", kern,
     )
 
 
-def _lloyd_partials(
-    frame: DataFrame,
-    cent: DataFrame,
-    n_rows: int | None = None,
-) -> DataFrame:
+def _lloyd_partials(frame: DataFrame, cent: DataFrame, n_rows: int) -> DataFrame:
     """(cid, psum: array<bigint>, pcnt: bigint) — per-block PARTIAL
     sums for one Lloyd update: each cogroup block assigns its vectors
-    to their rank-1 centroid (the exact `_centroid_topn` ordering —
-    shared `_assign_rank1` helper, so the two can never drift) and
-    emits one row per non-empty centroid with the int64 elementwise
-    sum and member count of its local assignees.
+    to their rank-1 centroid (the exact `_centroid_topn` ordering:
+    argmax over the shared `_cos_sort_key`, first-wins on ties = lowest
+    cid) and emits one row per non-empty centroid with the int64
+    elementwise sum and member count of its local assignees.
 
     This is the map-side-combine form of the centroid-mean update
-    (guide §2.3 "aggregate before you shuffle"): the previous shape
-    joined the n-row assignment back onto the n-row train set (a
-    train-sized shuffle per iteration) and then posexploded n·d
-    (vector, dim) rows through an aggregate — 6.4e10 exploded rows per
-    iteration at 10⁹ 64-dim vectors. Partial sums shuffle ≤ B·K rows
-    per iteration instead, independent of n. Exactness: int64 addition
-    is associative and commutative, so Σ_blocks(partial sums) is
-    bit-equal to the global Σ, the member counts are identical, and
-    the one IEEE division + round downstream sees identical inputs —
-    the DuckDB twin (sql_ivf, unchanged) still hash-matches."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import (
-        ArrayType,
-        LongType,
-        StructField,
-        StructType,
-    )
+    (aggregate before you shuffle): joining the n-row assignment back
+    onto the n-row train set would shuffle the train set per
+    iteration, and posexploding n·d (vector, dim) rows through an
+    aggregate is 6.4e10 rows per iteration at 10⁹ 64-dim vectors.
+    Partial sums shuffle ≤ B·K rows per iteration instead, independent
+    of n. Exactness: int64 addition is associative and commutative, so
+    Σ_blocks(partial sums) is bit-equal to the global Σ, the member
+    counts are identical, and the one IEEE division + round downstream
+    sees identical inputs."""
 
-    schema = StructType(
-        [
-            StructField("cid", LongType()),
-            StructField("psum", ArrayType(LongType())),
-            StructField("pcnt", LongType()),
-        ]
-    )
+    def kern(l, r):
+        import numpy as np
 
-    def kern(_key, l: pd.DataFrame, r: pd.DataFrame) -> pd.DataFrame:
-        if l.empty or r.empty:
-            return pd.DataFrame(
-                {"cid": pd.Series([], dtype="int64"),
-                 "psum": pd.Series([], dtype="object"),
-                 "pcnt": pd.Series([], dtype="int64")}
-            )
-        qv = np.stack(l["qv"].to_numpy()).astype(np.int64)
-        cids, pos = _assign_rank1(
-            qv,
-            l["n2"].to_numpy().astype(np.float64),
-            r,
-        )
+        qv = _ints(l["qv"])
+        cids, key = _cos_sort_key(qv, l["n2"].to_numpy(), r)
+        pos = np.argmax(key, axis=1)
         K = len(cids)
         sums = np.zeros((K, qv.shape[1]), dtype=np.int64)
         np.add.at(sums, pos, qv)
         cnts = np.bincount(pos, minlength=K).astype(np.int64)
         keep = cnts > 0
-        return pd.DataFrame(
-            {
-                "cid": cids[keep],
-                "psum": [s.tolist() for s in sums[keep]],
-                "pcnt": cnts[keep],
-            }
-        )
+        return cids[keep], [s.tolist() for s in sums[keep]], cnts[keep]
 
     return _block_cogroup(
         frame.select("vec_id", "qv", "n2"),
         cent.select("cid", "cqv", "cn2"),
-        n_rows, kern, schema,
+        n_rows, "cid long, psum array<long>, pcnt long", kern,
     )
 
 
-def ivf_topk(
-    emb: DataFrame,
-    n_centroids: int = 16,
-    seeding: str = "low_id",
-    sample_pct: int = 25,
-    seed: int = 9001,
-    n_rows: int | None = None,
-) -> DataFrame:
+# Sampled IVF seeding trains on a ~35% hash sample (any pct works; 35
+# keeps sf0.01's 600-vector sample statistically meaningful) under a
+# fixed hash seed.
+IVF_SAMPLE_PCT = 35
+IVF_SEED = 9001
+
+
+def ivf_topk(emb: DataFrame, n_rows: int, seeding: str = "low_id") -> DataFrame:
     """IVF approximate kNN with a LEARNED codebook, fully deterministic
-    and oracle-expressible.
+    and oracle-expressible. ``n_rows`` is the corpus size: it sets the
+    centroid count K = :func:`adaptive_centroids` ``(n_rows)`` (the twin
+    computes the same K from count(*)) and the kernels' block split.
 
     Codebook (``seeding="low_id"``): Lloyd iterations over the FULL
-    table, seeded with the n_centroids lowest vec_ids. Each iteration
+    table, seeded with the K lowest vec_ids. Each iteration
     assigns every vector to its max-cosine centroid (ties → lower cid)
     and re-estimates centroids as the requantized elementwise mean
     ``round(sum/count)`` — int64 sums and one IEEE double division keep
@@ -585,8 +534,8 @@ def ivf_topk(
     (deterministically, in both twins).
 
     Codebook (``seeding="sampled"`` — the 100-TB shape): Lloyd trains
-    on a ~``sample_pct``% hash sample of the table only; seeds are the
-    n_centroids sample vectors with the smallest ``portable_hash_u32``
+    on a ~``IVF_SAMPLE_PCT``% hash sample of the table only; seeds are
+    the K sample vectors with the smallest ``portable_hash_u32``
     values (a deterministic scatter playing k-means‖'s random-spread
     role — seed choice independent of id order, still pure SQL), and
     the full table is touched ONLY by the final assignment + search
@@ -600,19 +549,18 @@ def ivf_topk(
     pair meets through exactly one bucket (home is unique), so no dedup
     shuffle.
 
-    Scale: assignment is a broadcast of the tiny codebook (n·n_centroids
-    row expansion, map-side); centroid update shuffles sample·d rows per
-    iteration; search joins on bucket — pair space ~n²·nprobe/B instead
-    of n².
+    Scale: assignment and the Lloyd partial sums run in blocked
+    kernels against the replicated codebook; each update shuffles
+    ≤ B·K partial rows; search joins on bucket — pair space
+    ~n²·nprobe/K instead of n².
     """
-    from pyspark.sql import Window
-
     from frauddetection_spark.operators.caching import track_cache
     from frauddetection_spark.operators.sampling import (
         portable_hash_u32,
         portable_uniform_keep,
     )
 
+    n_centroids = adaptive_centroids(n_rows)
     # The quantized corpus is referenced by every Lloyd iteration, the
     # final assignment, and both sides of the bucket join; Spark plans
     # those as independent subtrees (no ReusedExchange), so without a
@@ -622,27 +570,12 @@ def ivf_topk(
     # released by operators.caching.release_caches().
     q = track_cache(quantize(emb).select("vec_id", "qv", "n2").persist())
     if seeding == "sampled":
-        train = q.filter(portable_uniform_keep(F.col("vec_id"), sample_pct, seed))
-    elif seeding == "low_id":
-        train = q
-    else:
-        raise ValueError(f"unknown seeding {seeding!r}")
-
-    # Scoring + ranking against the codebook runs in the cogrouped
-    # numpy kernel (_centroid_topn): the earlier broadcast-argmin
-    # Catalyst expression (transform + aggregate over the codebook
-    # array) kept the shuffle away but never entered whole-stage
-    # codegen — interpreted per-element eval made the n·K·d
-    # assignment the plan's bottleneck once K went adaptive (n·K·d
-    # interpreted evals in a single scan task; the matmul form runs
-    # them in compiled numpy). Ordering semantics
-    # (ccos DESC, cid ASC, NaN greatest) and the exact int64-dot +
-    # IEEE-division arithmetic are unchanged — the DuckDB twin still
-    # hash-matches. The persisted probe index stays n·nprobe rows.
-    if seeding == "sampled":
+        train = q.filter(
+            portable_uniform_keep(F.col("vec_id"), IVF_SAMPLE_PCT, IVF_SEED)
+        )
         cent = (
             train.withColumn(
-                "_h", portable_hash_u32(F.col("vec_id"), seed + 1)
+                "_h", portable_hash_u32(F.col("vec_id"), IVF_SEED + 1)
             )
             .orderBy("_h", "vec_id")
             .limit(n_centroids)
@@ -652,24 +585,22 @@ def ivf_topk(
                 F.col("n2").alias("cn2"),
             )
         )
-    else:
+    elif seeding == "low_id":
+        train = q
         cent = q.filter(F.col("vec_id") < n_centroids).select(
             F.col("vec_id").alias("cid"),
             F.col("qv").alias("cqv"),
             F.col("n2").alias("cn2"),
         )
+    else:
+        raise ValueError(f"unknown seeding {seeding!r}")
+
     for _ in range(IVF_ITERS):
-        # Update via per-block PARTIAL sums from the assignment kernel
-        # (_lloyd_partials): the earlier shape joined the n-row assignment
-        # back onto train (a train-sized shuffle) and posexploded n·d
-        # (vector, dim) rows per iteration; partials shuffle ≤ B·K
-        # rows, independent of n, and the explode below runs over
-        # B·K·d rows. Σ_blocks of int64 partials is bit-equal to the
-        # global Σ and Σ pcnt is the member count, so round(sum/count)
-        # sees identical inputs — sql_ivf (unchanged) still
-        # hash-matches.
+        # Σ_blocks of the int64 partials is the global Σ and Σ pcnt the
+        # member count, so round(sum/count) sees the twin's inputs; the
+        # explode runs over ≤ B·K·d rows.
         comp = (
-            _lloyd_partials(train, cent, n_rows=n_rows)
+            _lloyd_partials(train, cent, n_rows)
             .select("cid", "pcnt", F.posexplode("psum").alias("dim", "s"))
             .groupBy("cid", "dim")
             .agg(
@@ -702,9 +633,7 @@ def ivf_topk(
 
     # referenced twice (home + probes): persist the n·nprobe probe
     # list — the standard materialized IVF index.
-    ranked = track_cache(
-        _centroid_topn(q, cent, NPROBE, n_rows=n_rows).persist()
-    )
+    ranked = track_cache(_centroid_topn(q, cent, NPROBE, n_rows).persist())
     home = ranked.filter(F.col("crank") == 1).select(
         F.col("vec_id").alias("r_vec_id"), F.col("cid").alias("bucket")
     )
@@ -719,72 +648,16 @@ def ivf_topk(
         .join(home, "r_vec_id")
         .select("bucket", "r_vec_id", "r_qv", "r_n2")
     )
-
-    # Rerank: exact quantized cosine over the candidate pairs. The
-    # pair space (~n²·nprobe/B) rides inside a per-bucket numpy int64
-    # matmul — one cogrouped kernel per bucket, emitting only each
-    # probe's bucket-local top-k — NOT as n²·nprobe/B materialized rows
-    # through Catalyst array lambdas, which are interpreted per element
-    # and never enter whole-stage codegen.
-    # A (probe, candidate) pair meets in exactly one bucket (home is
-    # unique), so tile top-ks merge with no dedup, same as
-    # knn_topk_bruteforce. Arithmetic is the identical int64 dot +
-    # one IEEE division — bit-equal to the SQL form the oracle runs.
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
+    # Rerank: one cogrouped numpy kernel per bucket keeps each probe's
+    # bucket-local top-k, so the ~n²·nprobe/K candidate pairs never
+    # become rows of Catalyst array lambdas (interpreted per element).
+    tiles = _apply_tiles(
+        qa.groupBy("bucket").cogroup(qb.groupBy("bucket")), _NEIGHBOR_TILE, rerank
     )
-
-    tile_schema = StructType(
-        [
-            StructField("vec_id", LongType()),
-            StructField("neighbor", LongType()),
-            StructField("cos", DoubleType()),
-        ]
-    )
-
-    def rerank(_key, left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        # Zero-norm (all-zero quantized) vectors would produce NaN
-        # cosines, which np.lexsort on -cos ranks LAST while SQL's
-        # ORDER BY cos DESC ranks them FIRST — keep the tile's ordering
-        # domain NaN-free so both engines provably agree.
-        left = left[left["n2"].to_numpy() > 0]
-        right = right[right["r_n2"].to_numpy() > 0]
-        if left.empty or right.empty:
-            return pd.DataFrame({"vec_id": [], "neighbor": [], "cos": []}).astype(
-                {"vec_id": "int64", "neighbor": "int64", "cos": "float64"}
-            )
-        cos = _cos_tile(
-            np.stack(left["qv"].to_numpy()).astype(np.int64),
-            left["n2"].to_numpy(),
-            np.stack(right["r_qv"].to_numpy()).astype(np.int64),
-            right["r_n2"].to_numpy(),
-        )
-        out_id, out_nb, out_cos = _topk_not_self(
-            left["vec_id"].to_numpy(), right["r_vec_id"].to_numpy(), cos, KNN_K
-        )
-        return pd.DataFrame({"vec_id": out_id, "neighbor": out_nb, "cos": out_cos})
-
-    tiles = qa.groupBy("bucket").cogroup(qb.groupBy("bucket")).applyInPandas(
-        rerank, schema=tile_schema
-    )
-    w_rank = Window.partitionBy("vec_id").orderBy(F.col("cos").desc(), "neighbor")
-    return (
-        tiles.withColumn("rank", F.row_number().over(w_rank))
-        .filter(F.col("rank") <= KNN_K)
-        .select("vec_id", "rank", "neighbor", "cos")
-    )
+    return _top_k(tiles, "vec_id", "cos", KNN_K, None)
 
 
-def sql_ivf(
-    seeding: str = "low_id",
-    sample_pct: int = 25,
-    seed: int = 9001,
-) -> str:
+def sql_ivf(seeding: str = "low_id") -> str:
     """DuckDB twin of :func:`ivf_topk` — the same Lloyd iterations as
     chained CTEs. Centroid means are generated per-dimension (the SQL
     is synthesized for the fixed embedding dim), packed back into a
@@ -821,13 +694,13 @@ def sql_ivf(
     if seeding == "sampled":
         ctes.append(
             f"train AS (SELECT * FROM q WHERE "
-            f"{sql_portable_uniform_keep('vec_id', sample_pct, seed)})"
+            f"{sql_portable_uniform_keep('vec_id', IVF_SAMPLE_PCT, IVF_SEED)})"
         )
         # row_number instead of LIMIT so K can be a scalar subquery
         ctes.append(
             f"cent0 AS (SELECT cid, cqv, cn2 FROM ("
             f"SELECT vec_id AS cid, qv AS cqv, n2 AS cn2, row_number()"
-            f" OVER (ORDER BY {sql_portable_hash_u32('vec_id', seed + 1)},"
+            f" OVER (ORDER BY {sql_portable_hash_u32('vec_id', IVF_SEED + 1)},"
             f" vec_id) AS rn FROM train) WHERE rn <= {kc})"
         )
     else:
@@ -918,90 +791,45 @@ def sql_ivf(
 # 100); it binds only at sf1+.
 QUERY_MOD = 20
 QUERY_CAP = 512
-QUERY_BLOCKS = 32  # corpus blocks of query_batch_topk
 
 
-def query_batch_topk(corpus: DataFrame, probes: DataFrame) -> DataFrame:
+def query_batch_topk(
+    corpus: DataFrame, probes: DataFrame, n_rows: int
+) -> DataFrame:
     """Asymmetric (serving-shape) exact top-KNN_K: a SMALL probe set
-    against the full corpus, as a cogrouped numpy int64 matmul — the
-    query-batch sibling of :func:`knn_topk_bruteforce`.
+    against the full corpus of ``n_rows`` vectors, as a cogrouped numpy
+    int64 matmul — the query-batch sibling of
+    :func:`knn_topk_bruteforce`.
 
-    Layout: the corpus lives in its natural hash block b =
-    pmod(vec_id, B); the probe set is REPLICATED onto every block
-    (explode over sequence(B)), so each (probe, corpus-vector) pair
-    meets in exactly one kernel call and tile top-ks merge with no
-    dedup. No driver collect, no broadcast variable — the whole plan
-    is lazy (zero jobs at construction, lint-enforced) and the
-    replication cost is |probes|·B rows of int64 vectors (tiny by the
-    asymmetry assumption). The numpy kernel replaces Catalyst
-    higher-order-function dot products, which are interpreted per
-    element and never enter whole-stage codegen (same lesson as the
-    IVF rerank kernel), while keeping the identical int64-dot + single
-    IEEE-division arithmetic the DuckDB twin runs.
+    Layout (:func:`_block_cogroup`): the corpus is hash-split into
+    blocks and the probe set is REPLICATED onto every block, so each
+    (probe, corpus-vector) pair meets in exactly one kernel call. The
+    kernel is the IVF bucket rerank (:func:`rerank`), which keeps the
+    identical int64-dot + single IEEE-division arithmetic the DuckDB
+    twin runs; Catalyst higher-order-function dot products would be
+    interpreted per element, outside whole-stage codegen.
 
     Inputs are PRE-QUANTIZED frames (vec_id, qv, n2) from
-    :func:`quantize`. Zero-norm rows are dropped inside the kernel so
-    the numpy ordering domain stays NaN-free (same guard as ivf_topk).
+    :func:`quantize`.
     """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import Window
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
+    # the corpus side is renamed: cogrouping two frames derived from
+    # one source with the same names binds both sides' UDF inputs to
+    # one side's attributes (see _block_pairs)
     c = corpus.select(
         F.col("vec_id").alias("r_vec_id"),
         F.col("qv").alias("r_qv"),
         F.col("n2").alias("r_n2"),
-    ).withColumn("b", F.pmod(F.col("r_vec_id"), F.lit(QUERY_BLOCKS)).cast("int"))
-    p = probes.withColumn(
-        "b", F.explode(F.sequence(F.lit(0), F.lit(QUERY_BLOCKS - 1)))
     )
 
-    tile_schema = StructType(
-        [
-            StructField("query_id", LongType()),
-            StructField("neighbor", LongType()),
-            StructField("cos", DoubleType()),
-        ]
-    )
+    # _block_cogroup hands over the corpus block first; the probes are
+    # the rows that keep their top-k
+    def rerank_batch(block, batch):
+        return rerank(batch, block)
 
-    def kernel(_key, left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        left = left[left["n2"].to_numpy() > 0]
-        right = right[right["r_n2"].to_numpy() > 0]
-        if left.empty or right.empty:
-            return pd.DataFrame(
-                {"query_id": [], "neighbor": [], "cos": []}
-            ).astype(
-                {"query_id": "int64", "neighbor": "int64", "cos": "float64"}
-            )
-        cos = _cos_tile(
-            np.stack(left["qv"].to_numpy()).astype(np.int64),
-            left["n2"].to_numpy(),
-            np.stack(right["r_qv"].to_numpy()).astype(np.int64),
-            right["r_n2"].to_numpy(),
-        )
-        # a probe is in the corpus too: skip its self-match
-        out_q, out_n, out_c = _topk_not_self(
-            left["vec_id"].to_numpy(), right["r_vec_id"].to_numpy(), cos, KNN_K
-        )
-        return pd.DataFrame(
-            {"query_id": out_q, "neighbor": out_n, "cos": out_c}
-        )
-
-    tiles = p.groupBy("b").cogroup(c.groupBy("b")).applyInPandas(
-        kernel, schema=tile_schema
+    tiles = _block_cogroup(
+        c, probes, n_rows, "query_id long, neighbor long, cos double", rerank_batch
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos").desc(), "neighbor")
-    return (
-        tiles.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= KNN_K)
-        .select("query_id", "rank", "neighbor", "cos")
-    )
+    return _top_k(tiles, "query_id", "cos", KNN_K, None)
 
 
 # ---------------------------------------------------------------------------
@@ -1013,19 +841,19 @@ def _pq_assign_np(QV, cent_pdf, subdim: int):
     """Per-subspace argmin-L2 assignment for one kernel block: exact
     int64 matmul per subspace present in ``cent_pdf``. Candidates are
     cid-ascending-sorted so ``np.argmin``'s first-minimum IS the
-    (d2 ASC, cid ASC) tie rule of the earlier Catalyst expression; the
-    key drops the row-constant |s|² term (a uniform shift per row that
-    cannot change the argmin or its ties). Returns
-    ``[(mm, cids, pos, SUB)]`` — subspace id, its sorted candidate
-    cids, each row's argmin POSITION into them, and the rows'
-    subvector matrix — so callers can emit codes (encode) or
-    per-centroid partial sums (training) without re-scoring."""
+    (d2 ASC, cid ASC) tie rule of the twin; the key drops the
+    row-constant |s|² term (a uniform shift per row that cannot change
+    the argmin or its ties). Returns ``[(mm, cids, pos, SUB)]`` —
+    subspace id, its sorted candidate cids, each row's argmin POSITION
+    into them, and the rows' subvector matrix — so callers can emit
+    codes (encode) or per-centroid partial sums (training) without
+    re-scoring."""
     import numpy as np
 
     out = []
     for mm in sorted(cent_pdf["m"].unique()):
         cm = cent_pdf[cent_pdf["m"] == mm].sort_values("cid")
-        C = np.stack(cm["csub"].to_numpy()).astype(np.int64)
+        C = _ints(cm["csub"])
         cids = cm["cid"].to_numpy().astype(np.int64)
         SUB = QV[:, mm * subdim : (mm + 1) * subdim]
         key = (C * C).sum(axis=1)[None, :] - 2 * (SUB @ C.T)
@@ -1034,59 +862,24 @@ def _pq_assign_np(QV, cent_pdf, subdim: int):
 
 
 def _pq_partials(
-    q: DataFrame, cent: DataFrame, subdim: int, n_rows: int | None = None
+    q: DataFrame, cent: DataFrame, subdim: int, n_rows: int
 ) -> DataFrame:
     """(m, cid, psum: array<bigint>, pcnt: bigint) — per-block PARTIAL
     sums for one PQ Lloyd update, the `_lloyd_partials` pattern applied
-    per subspace (guide §2.3 aggregate-before-you-shuffle + §4.2 numpy
-    kernel at the Python boundary). The earlier shape broadcast-joined
-    the codebooks onto the n·m subvector rows and ran the argmin as an
-    interpreted array_min(transform(...aggregate(zip_with(...))))
-    Catalyst expression — n·m·ksub interpreted lambda evals per pass
-    (HOFs never enter whole-stage codegen; unrolling it into ksub
-    positional codegen'd struct keys is no cure — a ksub-branch
-    conditional defeats subexpression sharing).
-    Here each cogroup block scores its vectors against the full
-    replicated codebook as one exact int64 matmul per subspace and
-    emits ≤ B·m·ksub partial-sum rows. Exactness: int64 partials are
+    per subspace: each cogroup block scores its vectors against the
+    full replicated codebook as one exact int64 matmul per subspace
+    and emits ≤ B·m·ksub partial-sum rows. An argmin over a
+    broadcast-joined n·m subvector frame would instead run n·m·ksub
+    interpreted lambda evals per pass (higher-order functions never
+    enter whole-stage codegen). Exactness: int64 partials are
     associative, counts are exact, and the one IEEE division + round
-    downstream sees identical inputs — sql_pq (unchanged) still
-    hash-matches."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import (
-        ArrayType,
-        IntegerType,
-        LongType,
-        StructField,
-        StructType,
-    )
+    downstream sees identical inputs."""
 
-    schema = StructType(
-        [
-            StructField("m", IntegerType()),
-            StructField("cid", LongType()),
-            StructField("psum", ArrayType(LongType())),
-            StructField("pcnt", LongType()),
-        ]
-    )
+    def kern(l, r):
+        import numpy as np
 
-    def kern(_key, l: pd.DataFrame, r: pd.DataFrame) -> pd.DataFrame:
-        if l.empty or r.empty:
-            return pd.DataFrame(
-                {
-                    "m": pd.Series([], dtype="int32"),
-                    "cid": pd.Series([], dtype="int64"),
-                    "psum": pd.Series([], dtype="object"),
-                    "pcnt": pd.Series([], dtype="int64"),
-                }
-            )
-        QV = np.stack(l["qv"].to_numpy()).astype(np.int64)
-        out_m: list = []
-        out_cid: list = []
-        out_psum: list = []
-        out_pcnt: list = []
-        for mm, cids, pos, SUB in _pq_assign_np(QV, r, subdim):
+        out_m, out_cid, out_psum, out_pcnt = [], [], [], []
+        for mm, cids, pos, SUB in _pq_assign_np(_ints(l["qv"]), r, subdim):
             K = len(cids)
             sums = np.zeros((K, SUB.shape[1]), dtype=np.int64)
             np.add.at(sums, pos, SUB)
@@ -1096,73 +889,37 @@ def _pq_partials(
             out_cid.extend(cids[keep].tolist())
             out_psum.extend(s.tolist() for s in sums[keep])
             out_pcnt.extend(cnts[keep].tolist())
-        return pd.DataFrame(
-            {"m": out_m, "cid": out_cid, "psum": out_psum, "pcnt": out_pcnt}
-        )
+        return out_m, out_cid, out_psum, out_pcnt
 
     return _block_cogroup(
         q.select("vec_id", "qv"),
         cent.select("m", "cid", "csub"),
-        n_rows, kern, schema,
+        n_rows, "m int, cid long, psum array<long>, pcnt long", kern,
     )
 
 
 def _pq_encode(
-    q: DataFrame, cent: DataFrame, subdim: int, n_rows: int | None = None
+    q: DataFrame, cent: DataFrame, subdim: int, n_rows: int
 ) -> DataFrame:
     """(vec_id, code: array<bigint>, n2) — the corpus encode pass as
     one blocked cogroup kernel sharing `_pq_assign_np` with the
-    training update (the two can never drift). Replaces three earlier
-    operators at once: the broadcast-join + interpreted-HOF argmin
-    over n·m subvector rows, the groupBy(vec_id)
-    sort_array(collect_list) re-assembly of the m codes (an n·m-row
-    shuffle), and the join back onto the corpus for n2 — the kernel
-    emits the assembled code array (m-ascending, exactly the old
-    sort_array order) with n2 carried through, one n-row cogroup
-    exchange total."""
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import (
-        ArrayType,
-        LongType,
-        StructField,
-        StructType,
-    )
+    training update (the two can never drift). The kernel emits the
+    assembled code array (m-ascending) with n2 carried through: one
+    n-row cogroup exchange, where assigning per (vector, subspace) row
+    would add an n·m-row shuffle to re-assemble the codes and a join
+    back onto the corpus for n2."""
 
-    schema = StructType(
-        [
-            StructField("vec_id", LongType()),
-            StructField("code", ArrayType(LongType())),
-            StructField("n2", LongType()),
-        ]
-    )
+    def kern(l, r):
+        import numpy as np
 
-    def kern(_key, l: pd.DataFrame, r: pd.DataFrame) -> pd.DataFrame:
-        if l.empty or r.empty:
-            return pd.DataFrame(
-                {
-                    "vec_id": pd.Series([], dtype="int64"),
-                    "code": pd.Series([], dtype="object"),
-                    "n2": pd.Series([], dtype="int64"),
-                }
-            )
-        QV = np.stack(l["qv"].to_numpy()).astype(np.int64)
-        per_m = _pq_assign_np(QV, r, subdim)
-        codes = np.stack(
-            [cids[pos] for _mm, cids, pos, _sub in per_m], axis=1
-        )
-        return pd.DataFrame(
-            {
-                "vec_id": l["vec_id"].to_numpy(),
-                "code": [c.tolist() for c in codes],
-                "n2": l["n2"].to_numpy(),
-            }
-        )
+        per_m = _pq_assign_np(_ints(l["qv"]), r, subdim)
+        codes = np.stack([cids[pos] for _mm, cids, pos, _sub in per_m], axis=1)
+        return l["vec_id"].to_numpy(), [c.tolist() for c in codes], l["n2"].to_numpy()
 
     return _block_cogroup(
         q.select("vec_id", "qv", "n2"),
         cent.select("m", "cid", "csub"),
-        n_rows, kern, schema,
+        n_rows, "vec_id long, code array<long>, n2 long", kern,
     )
 
 
@@ -1178,7 +935,7 @@ PQ_ITERS = 1    # Lloyd refinement rounds per subspace
 PQ_CAND = 64
 
 
-def pq_topk(emb: DataFrame, n_rows: int | None = None) -> DataFrame:
+def pq_topk(emb: DataFrame, n_rows: int) -> DataFrame:
     """Product-quantization ANN for a query batch, fully deterministic
     and oracle-expressible (:func:`sql_pq` is the same algorithm in
     DuckDB).
@@ -1198,21 +955,15 @@ def pq_topk(emb: DataFrame, n_rows: int | None = None) -> DataFrame:
     3. encode the corpus: per (vector, subspace) the argmin-d² cid;
     4. ADC search: each query precomputes an m×ksub dot-product LUT
        against the codebooks; the approximate dot of query·vector is
-       the sum of PQ_M LUT lookups — a join on (m, cid) + sum, never
-       touching corpus vectors;
+       the sum of PQ_M LUT lookups, never touching corpus vectors;
     5. exact quantized-cosine rerank of the top-``PQ_CAND`` ADC
        candidates per query, keeping the top ``KNN_K``.
 
     All similarity arithmetic is exact int64 up to the final IEEE
     divisions, so even the APPROXIMATE scores hash-match the SQL twin.
-    Scale: codes + codebooks broadcast-size; the ADC join fans each
-    corpus code row out only to the (small) query batch. ``n_rows`` is
-    the caller-known corpus size: the training, encode and ADC kernels
+    ``n_rows`` is the corpus size: the training, encode and ADC kernels
     split the corpus into :func:`assign_blocks` ``(n_rows)`` blocks, so
-    per-task memory stays bounded as the corpus grows (``None`` keeps
-    the floor of 32)."""
-    from pyspark.sql import Window
-
+    per-task memory stays bounded as the corpus grows."""
     from frauddetection_spark.operators.caching import track_cache
 
     q = track_cache(quantize(emb).select("vec_id", "qv", "n2").persist())
@@ -1225,19 +976,11 @@ def pq_topk(emb: DataFrame, n_rows: int | None = None) -> DataFrame:
             for mm in range(PQ_M)
         ]
     )
-    # `subs` is not persisted — only the two CONSTANT-SIZE
-    # slices below (codebook seeds, probe subvectors for the LUT) read
-    # it, and their vec_id filters push below the Generate to the
-    # persisted q's cache scan. The full n·m subvector frame — the old
-    # hot path, carrying a broadcast-joined interpreted-HOF argmin
-    # over n·m·ksub candidate evals per training/encode pass — is
-    # never materialized: assignment now runs inside the blocked
-    # numpy kernels (_pq_partials / _pq_encode, guide §4.2; the IVF
-    # _lloyd_partials precedent). Unrolling the Catalyst expression
-    # into ksub positional codegen'd struct keys does not help (a
-    # ksub-branch conditional defeats codegen subexpression sharing)
-    # — kernels, not expressions, are the right tool at this
-    # candidate count.
+    # `subs` is not persisted: only the two CONSTANT-SIZE slices below
+    # (codebook seeds, probe subvectors for the LUT) read it, and their
+    # vec_id filters push below the Generate to the persisted q's cache
+    # scan. Assignment over the full n·m subvector space runs inside
+    # the blocked numpy kernels (_pq_partials / _pq_encode).
     subs = q.select("vec_id", F.explode(sub_structs).alias("s")).select(
         "vec_id", "s.m", "s.sub"
     )
@@ -1247,14 +990,10 @@ def pq_topk(emb: DataFrame, n_rows: int | None = None) -> DataFrame:
         F.col("sub").alias("csub"),
     )
     for _ in range(PQ_ITERS):
-        # Lloyd update from per-block partial sums (the IVF
-        # _lloyd_partials shape): the kernel assigns AND pre-aggregates
-        # map-side, so the update shuffles ≤ B·m·ksub tiny rows
-        # regardless of corpus size; Σ_blocks of int64 partials is
-        # bit-equal to the global Σ and the one IEEE division + round
-        # sees identical inputs — sql_pq (unchanged) still
-        # hash-matches.
-        part = _pq_partials(q, cent, PQ_SUBDIM, n_rows=n_rows)
+        # Lloyd update from per-block partial sums: the update shuffles
+        # ≤ B·m·ksub tiny rows regardless of corpus size, and Σ_blocks
+        # of int64 partials is bit-equal to the global Σ.
+        part = _pq_partials(q, cent, PQ_SUBDIM, n_rows)
         comp = part.groupBy("m", "cid").agg(
             F.sum("pcnt").alias("_n"),
             *[
@@ -1280,9 +1019,7 @@ def pq_topk(emb: DataFrame, n_rows: int | None = None) -> DataFrame:
         )
 
     # Probe set = the fixed serving batch (see QUERY_CAP); corpus =
-    # everything else. An unbounded "every multiple of QUERY_MOD" rule
-    # made ADC work probes*corpus*m quadratic in the corpus; with the
-    # batch pinned, ADC is QUERY_CAP*n*m LUT gathers: linear per
+    # everything else. ADC is QUERY_CAP·n·m LUT gathers: linear per
     # decade.
     probe = (F.col("vec_id") % QUERY_MOD == 0) & (
         F.col("vec_id") < QUERY_MOD * QUERY_CAP
@@ -1301,60 +1038,29 @@ def pq_topk(emb: DataFrame, n_rows: int | None = None) -> DataFrame:
                 lambda a, x: a + x,
             ).alias("ldot"),
         )
-    )
-    # ADC as a cogrouped numpy LUT-gather kernel. The relational form
-    # (codes ⋈ lut on (m, cid) → groupBy sum) materializes
-    # |corpus|·|queries|·m shuffle rows — ~10⁹ at sf0.1 — because every
-    # code row matches every query; ADC's whole point is that those
-    # "rows" are table lookups. Layout mirrors query_batch_topk: codes
-    # stay in their hash block, every query's LUT is replicated onto
-    # each block, the kernel gathers adot[q, x] = Σ_m LUT[q, m, code]
-    # as m int64 numpy gathers (exact in any order → still hash-equal
-    # to the SQL twin). Per-block top-PQ_CAND tiles merge under the same
-    # (acos DESC, neighbor) order globally.
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    n_blocks = assign_blocks(n_rows)
-    # the encode pass is the _pq_encode kernel — it emits the
-    # assembled m-ascending code array with n2 carried through, so the
-    # old groupBy(vec_id) sort_array(collect_list) re-assembly (an
-    # n·m-row shuffle) and the n2 join back onto the corpus are gone.
-    codes_wide = _pq_encode(
-        q.filter(~probe), cent, PQ_SUBDIM, n_rows=n_rows
-    ).withColumn("b", F.pmod(F.col("vec_id"), F.lit(n_blocks)).cast("int"))
-    lut_rep = (
-        lut.join(
+        .join(
             q.select(
                 F.col("vec_id").alias("query_id"), F.col("n2").alias("qn2")
             ),
             "query_id",
         )
-        .withColumn("b", F.explode(F.sequence(F.lit(0), F.lit(n_blocks - 1))))
     )
-    tile_schema = StructType(
-        [
-            StructField("query_id", LongType()),
-            StructField("neighbor", LongType()),
-            StructField("acos", DoubleType()),
-        ]
-    )
-    def adc_kernel(_key, lt: pd.DataFrame, ct: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {"query_id": [], "neighbor": [], "acos": []}
-        ).astype(
-            {"query_id": "int64", "neighbor": "int64", "acos": "float64"}
-        )
+
+    # ADC as a blocked numpy LUT-gather kernel. The relational form
+    # (codes ⋈ lut on (m, cid) → groupBy sum) materializes
+    # |corpus|·|queries|·m shuffle rows — ~10⁹ at sf0.1 — because every
+    # code row matches every query; ADC's whole point is that those
+    # "rows" are table lookups. The codes stay in their hash block,
+    # every query's LUT is replicated onto each block, and the kernel
+    # gathers adot[q, x] = Σ_m LUT[q, m, code] as m int64 numpy gathers
+    # (exact in any order → still hash-equal to the SQL twin).
+    def adc(ct, lt):
+        import numpy as np
+
         ct = ct[ct["n2"].to_numpy() > 0]
         lt = lt[lt["qn2"].to_numpy() > 0]
         if lt.empty or ct.empty:
-            return empty
+            return None
         qids = np.sort(lt["query_id"].unique())
         qpos = {int(qq): i for i, qq in enumerate(qids)}
         # dense LUT tensor [nq, m*ksub] (int64, exact)
@@ -1365,30 +1071,21 @@ def pq_topk(emb: DataFrame, n_rows: int | None = None) -> DataFrame:
         ].to_numpy()
         qn2 = np.zeros(len(qids), dtype=np.float64)
         qn2[li] = lt["qn2"].to_numpy()
-        C = np.stack(ct["code"].to_numpy()).astype(np.int64)  # [nx, m]
+        C = _ints(ct["code"])  # [nx, m]
         xids = ct["vec_id"].to_numpy()
         xn2 = ct["n2"].to_numpy().astype(np.float64)
         adot = np.zeros((len(qids), len(xids)), dtype=np.int64)
         for mm in range(PQ_M):
             adot += T[:, mm * PQ_KSUB + C[:, mm]]
         acos = adot / np.sqrt(qn2[:, None] * xn2[None, :])
-        out_q, out_n, out_a = _topk_not_self(qids, xids, acos, PQ_CAND)
-        return pd.DataFrame(
-            {"query_id": out_q, "neighbor": out_n, "acos": out_a}
-        )
+        return _topk_not_self(qids, xids, acos, PQ_CAND)
 
-    tiles = (
-        lut_rep.groupBy("b")
-        .cogroup(codes_wide.groupBy("b"))
-        .applyInPandas(adc_kernel, schema=tile_schema)
+    codes = _pq_encode(q.filter(~probe), cent, PQ_SUBDIM, n_rows)
+    tiles = _block_cogroup(
+        codes, lut, n_rows, "query_id long, neighbor long, acos double", adc
     )
-    w_cand = Window.partitionBy("query_id").orderBy(
-        F.col("acos").desc(), F.col("neighbor").asc()
-    )
-    cands = (
-        tiles.withColumn("crn", F.row_number().over(w_cand))
-        .filter(F.col("crn") <= PQ_CAND)
-        .select("query_id", "neighbor")
+    cands = _top_k(tiles, "query_id", "acos", PQ_CAND, None).select(
+        "query_id", "neighbor"
     )
     pair_dot = F.aggregate(
         F.zip_with("qa", "qb", lambda x, y: x * y),
@@ -1418,14 +1115,7 @@ def pq_topk(emb: DataFrame, n_rows: int | None = None) -> DataFrame:
             / F.sqrt(F.col("na").cast("double") * F.col("nb").cast("double")),
         )
     )
-    w_k = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("neighbor").asc()
-    )
-    return (
-        rr.withColumn("rank", F.row_number().over(w_k).cast("bigint"))
-        .filter(F.col("rank") <= KNN_K)
-        .select("query_id", "rank", "neighbor", "cos")
-    )
+    return _top_k(rr, "query_id", "cos", KNN_K, "bigint")
 
 
 def sql_pq() -> str:

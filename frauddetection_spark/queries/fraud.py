@@ -2212,10 +2212,7 @@ def _fraud_funnel_oracle() -> str:
     """
 
 
-@register(
-    "q_fraud_funnel",
-    oracle=None,  # late-bound below (needs split SQL + threshold consts)
-)
+@register("q_fraud_funnel", oracle=_fraud_funnel_oracle())
 def q_fraud_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's END-TO-END training-dataset pipeline
     (data_process.py feature rollup → graph construction → labeling →
@@ -2226,7 +2223,7 @@ def q_fraud_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     → connected (present in the repeat-contact graph — the SAME ≥3-
     contacts sparsification as q_label_propagation) → train (the
     portable 80% hash split of q_split_stratified) → train positives
-    (the ≥{ERROR}-error label rule the MLlib pipeline trains on).
+    (the ≥ERROR_THRESHOLD-error label rule the MLlib pipeline trains on).
     Stages are nested by construction so the funnel is monotone; the
     counts are the class-balance numbers a training run starts from
     (the reference reports exactly these: nodes, edges, fraud/benign
@@ -2308,13 +2305,3 @@ def q_fraud_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         one.select(F.explode(stages).alias("s"))
         .select("s.stage", "s.stage_name", "s.n_users")
     )
-
-
-q_fraud_funnel.__doc__ = (q_fraud_funnel.__doc__ or "").replace("{ERROR}", "15")
-
-from frauddetection_spark.plans.registry import REGISTRY as _FREG  # noqa: E402
-import dataclasses as _fdc  # noqa: E402
-
-_FREG["q_fraud_funnel"] = _fdc.replace(
-    _FREG["q_fraud_funnel"], oracle=_fraud_funnel_oracle()
-)

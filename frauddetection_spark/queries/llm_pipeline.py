@@ -236,10 +236,35 @@ def q_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-@register(
-    "q_dedup_groups",
-    oracle=None,  # set below — needs the similarity module's CTEs
-)
+def _dedup_groups_oracle() -> str:
+    from frauddetection_spark.queries.similarity import sql_minhash_pair_ctes
+
+    return f"""
+    WITH RECURSIVE {sql_minhash_pair_ctes()},
+    und AS (
+        SELECT doc_a AS src, doc_b AS dst FROM dup
+        UNION
+        SELECT doc_b, doc_a FROM dup
+    ),
+    nodes AS (SELECT DISTINCT src AS node FROM und),
+    reach(node, r) AS (
+        SELECT node, node FROM nodes
+        UNION
+        SELECT reach.node, und.dst
+        FROM reach JOIN und ON und.src = reach.r
+    ),
+    comp AS (SELECT node, min(r) AS component FROM reach GROUP BY node),
+    g AS (
+        SELECT d.doc_id, coalesce(c.component, d.doc_id) AS group_id
+        FROM documents d LEFT JOIN comp c ON d.doc_id = c.node
+    )
+    SELECT group_id, count(*) AS n_docs,
+           string_agg(doc_id, ',' ORDER BY doc_id) AS members
+    FROM g GROUP BY group_id ORDER BY group_id
+    """
+
+
+@register("q_dedup_groups", oracle=_dedup_groups_oracle())
 def q_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """THE dedup endgame: MinHash-LSH near-dup pairs (≥0.2 Jaccard,
     q_dedup_minhash's exact pipeline) become undirected edges, connected
@@ -290,43 +315,6 @@ def q_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _dedup_groups_oracle() -> str:
-    from frauddetection_spark.queries.similarity import sql_minhash_pair_ctes
-
-    return f"""
-    WITH RECURSIVE {sql_minhash_pair_ctes()},
-    und AS (
-        SELECT doc_a AS src, doc_b AS dst FROM dup
-        UNION
-        SELECT doc_b, doc_a FROM dup
-    ),
-    nodes AS (SELECT DISTINCT src AS node FROM und),
-    reach(node, r) AS (
-        SELECT node, node FROM nodes
-        UNION
-        SELECT reach.node, und.dst
-        FROM reach JOIN und ON und.src = reach.r
-    ),
-    comp AS (SELECT node, min(r) AS component FROM reach GROUP BY node),
-    g AS (
-        SELECT d.doc_id, coalesce(c.component, d.doc_id) AS group_id
-        FROM documents d LEFT JOIN comp c ON d.doc_id = c.node
-    )
-    SELECT group_id, count(*) AS n_docs,
-           string_agg(doc_id, ',' ORDER BY doc_id) AS members
-    FROM g GROUP BY group_id ORDER BY group_id
-    """
-
-
-# late-bind the oracle (avoids a circular import at module load)
-from frauddetection_spark.plans.registry import REGISTRY as _REG  # noqa: E402
-import dataclasses as _dc  # noqa: E402
-
-_REG["q_dedup_groups"] = _dc.replace(
-    _REG["q_dedup_groups"], oracle=_dedup_groups_oracle()
-)
-
-
 # ---------------------------------------------------------------------------
 # benchmark decontamination: n-gram overlap against a held-out set
 # ---------------------------------------------------------------------------
@@ -359,10 +347,7 @@ def _decontaminate_oracle() -> str:
     """
 
 
-@register(
-    "q_decontaminate",
-    oracle=None,  # late-bound below (needs textsim's shingle CTE)
-)
+@register("q_decontaminate", oracle=_decontaminate_oracle())
 def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Test-set decontamination: flag training documents whose word
     3-shingle sets overlap a benchmark set (stand-in: doc_id %
@@ -402,11 +387,6 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         rate.alias("overlap_rate"),
         (rate >= CONTAM_RATE).cast("bigint").alias("contaminated"),
     )
-
-
-_REG["q_decontaminate"] = _dc.replace(
-    _REG["q_decontaminate"], oracle=_decontaminate_oracle()
-)
 
 
 # ---------------------------------------------------------------------------
@@ -1355,10 +1335,7 @@ def _corpus_funnel_oracle() -> str:
     """
 
 
-@register(
-    "q_corpus_funnel",
-    oracle=None,  # late-bound below (needs textsim's shingle CTE)
-)
+@register("q_corpus_funnel", oracle=_corpus_funnel_oracle())
 def q_corpus_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The COMPOSED pretraining-corpus pipeline, end to end, reported
     as a funnel: raw → language filter (en) → Gopher-style quality
@@ -1480,8 +1457,3 @@ def q_corpus_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         one.select(F.explode(stages).alias("s"))
         .select("s.stage", "s.stage_name", "s.n_docs")
     )
-
-
-_REG["q_corpus_funnel"] = _dc.replace(
-    _REG["q_corpus_funnel"], oracle=_corpus_funnel_oracle()
-)

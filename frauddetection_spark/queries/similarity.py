@@ -34,7 +34,6 @@ from frauddetection_spark.operators.vectors import (
     QUERY_MOD,
     SQL_COS,
     SQL_QUANTIZED,
-    adaptive_centroids,
     cosine_pairs,
     ivf_topk,
     knn_topk_bruteforce,
@@ -408,16 +407,16 @@ def q_dedup_minhash_ml(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _embeddings_count(sf_dir: str) -> int:
-    """Corpus size from the catalog's footer read: the K pick (IVF) and
-    the block count (PQ) must not launch Spark jobs at plan-construction
-    time (tests/test_scale_lint.py)."""
+    """Corpus size from the catalog's footer read: the IVF K pick and
+    the kernels' block count must not launch Spark jobs at
+    plan-construction time (tests/test_scale_lint.py)."""
     import os
 
     return footer(os.path.join(sf_dir, "embeddings.parquet")).num_rows
 
 
-# Centroid count is ADAPTIVE: K = adaptive_centroids(n) ~ √n, computed
-# from the catalog's row count above — a FIXED K made the probed
+# Centroid count is ADAPTIVE: ivf_topk picks K = adaptive_centroids(n)
+# ~ √n from the catalog's row count above — a FIXED K made the probed
 # candidate space ~n²·nprobe/K, a hidden quadratic (tenfold data,
 # hundredfold pair work). At the oracle-gate scale factors
 # (sf0.001/0.01) embeddings has n=500, so K=32, not the floor of 16;
@@ -439,30 +438,14 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_properties.py. Exact quantized arithmetic end-to-end ⇒
     oracle-checkable despite being approximate (operators/vectors.py::
     ivf_topk and sql_ivf are the same algorithm in both engines)."""
-    n = _embeddings_count(sf_dir)
-    return ivf_topk(
-        t(spark, sf_dir, "embeddings"),
-        n_centroids=adaptive_centroids(n),
-        n_rows=n,
-    )
+    return ivf_topk(t(spark, sf_dir, "embeddings"), _embeddings_count(sf_dir))
 
 
 # Sampled-seeding IVF: the 100-TB codebook-training shape. Lloyd runs
 # on a ~35% hash sample; seeds are a deterministic hash scatter
 # (k-means‖'s spread without its RNG); the full table is touched only
 # by the final assignment+search pass.
-IVF_SAMPLE_PCT = 35
-IVF_SEED = 9001
-
-
-@register(
-    "q_ann_ivf_sampled",
-    oracle=sql_ivf(
-        seeding="sampled",
-        sample_pct=IVF_SAMPLE_PCT,
-        seed=IVF_SEED,
-    ),
-)
+@register("q_ann_ivf_sampled", oracle=sql_ivf(seeding="sampled"))
 def q_ann_ivf_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF kNN with SAMPLED codebook training — the shape that holds at
     100 TB, where `q_ann_ivf`'s full-table Lloyd pass is the bottleneck:
@@ -472,18 +455,14 @@ def q_ann_ivf_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment + probe + rerank stage. The centroid count is adaptive
     (~√n) like q_ann_ivf's — fixed-K buckets grow linearly and the
     bucket rerank goes quadratic. Seeds are the sample's
-    n_centroids smallest portable-hash values — id-order-independent
+    K smallest portable-hash values — id-order-independent
     spread, the deterministic stand-in for k-means‖ oversampling —
     making the whole path, sampling included, oracle-checkable.
     Recall vs the exact kNN is pinned in tests/test_properties.py."""
-    n = _embeddings_count(sf_dir)
     return ivf_topk(
         t(spark, sf_dir, "embeddings"),
-        n_centroids=adaptive_centroids(n),
+        _embeddings_count(sf_dir),
         seeding="sampled",
-        sample_pct=IVF_SAMPLE_PCT,
-        seed=IVF_SEED,
-        n_rows=n,
     )
 
 
@@ -621,7 +600,7 @@ def q_ann_query_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("vec_id") % QUERY_MOD == 0)
         & (F.col("vec_id") < QUERY_MOD * QUERY_CAP)
     )
-    return query_batch_topk(q_all, probes)
+    return query_batch_topk(q_all, probes, _embeddings_count(sf_dir))
 
 
 # ---------------------------------------------------------------------------
@@ -644,9 +623,7 @@ def q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_fraud.py."""
     from frauddetection_spark.operators.vectors import pq_topk
 
-    return pq_topk(
-        t(spark, sf_dir, "embeddings"), n_rows=_embeddings_count(sf_dir)
-    )
+    return pq_topk(t(spark, sf_dir, "embeddings"), _embeddings_count(sf_dir))
 
 
 # ---------------------------------------------------------------------------

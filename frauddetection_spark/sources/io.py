@@ -110,30 +110,21 @@ def read_csv(
     return reader.csv(path)
 
 
-def read_orc(
-    spark: SparkSession, path: str, schema: StructType | None = None
-) -> DataFrame:
-    """ORC source (S1 — the other columnar interchange format big
-    lakes actually hold; Spark's reader is built in, same pushdown +
-    pruning machinery as parquet). Explicit schema preferred for the
-    usual reason: footer inference over 10⁶ files is a driver stall."""
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.orc(path)
+def read_orc(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
+    """ORC source with a REQUIRED explicit schema (S1 — the other
+    columnar interchange format big lakes actually hold; Spark's reader
+    is built in, same pushdown + pruning machinery as parquet). Never
+    infer: footer inference over 10⁶ files is a driver stall."""
+    return spark.read.schema(schema).orc(path)
 
 
-def read_xml(
-    spark: SparkSession, path: str, schema: StructType | None = None
-) -> DataFrame:
-    """XML source (S1 — Spark 4 ships the spark-xml reader built in;
-    rowTag-scoped parsing with the same explicit-schema discipline as
-    the other sources: footer/structure inference over many files is a
-    driver stall, and inference can type-flip sparse columns)."""
+def read_xml(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
+    """XML source with a REQUIRED explicit schema (S1 — Spark 4 ships
+    the spark-xml reader built in; rowTag-scoped parsing). Never infer:
+    structure inference over many files is a driver stall, and it can
+    type-flip sparse columns."""
     reader = spark.read.format("xml").option("rowTag", "row")
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.load(path)
+    return reader.schema(schema).load(path)
 
 
 def read_jsonl(

@@ -1,8 +1,8 @@
-"""Driver-contract regression: the round driver builds a PLAIN
-SparkSession (no repo conf). Round 1 failed 34/50 queries because
-``spark.sql.legacy.parquet.nanosAsLong`` lived only in the repo's own
-session factory and events.parquet (INT64 TIMESTAMP(NANOS)) was
-unreadable on a vanilla session.
+"""Driver-contract regression: the driver builds a PLAIN SparkSession
+(no repo conf). When ``spark.sql.legacy.parquet.nanosAsLong`` lived
+only in the repo's own session factory, 34 of 50 queries failed on the
+driver because events.parquet (INT64 TIMESTAMP(NANOS)) was unreadable
+on a vanilla session.
 
 This test runs in a SUBPROCESS — an in-process test would inherit the
 suite's already-configured session via getOrCreate() and prove
@@ -61,10 +61,9 @@ def test_every_declared_query_named_in_survey():
     rows or the §2.9 name-reconciliation table), or coverage claims and
     the registry drift apart silently.
 
-    Matching is EXACT-TOKEN (VERDICT r06 item 3): substring matching let
-    q_ann_ivf / q_simhash / q_funnel pass for three rounds because they
-    are substrings of q_ann_ivf_sampled / q_simhash_pairs /
-    q_funnel_paths."""
+    Matching is EXACT-TOKEN: substring matching once let q_ann_ivf /
+    q_simhash / q_funnel pass unlisted because they are substrings of
+    q_ann_ivf_sampled / q_simhash_pairs / q_funnel_paths."""
     import os
     import re
 

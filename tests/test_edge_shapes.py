@@ -1,6 +1,7 @@
-"""Queries on edge-shaped copies of the testdata: an empty events table
-and events whose ``props`` are all null must still match their DuckDB
-twins, not return a wrong answer or raise."""
+"""Queries on edge-shaped copies of the testdata: an empty events table,
+events whose ``props`` are all null, and an embeddings table cut to a
+handful of rows must still match their DuckDB twins, not return a
+wrong answer or raise."""
 
 from __future__ import annotations
 
@@ -8,6 +9,7 @@ import os
 
 import pyarrow as pa
 import pyarrow.parquet as pq
+import pytest
 
 from frauddetection_spark.oracle import compare, duckdb_connection
 from frauddetection_spark.plans.registry import load_all
@@ -15,17 +17,31 @@ from frauddetection_spark.sources.tables import TABLE_NAMES
 
 REGISTRY = load_all()
 
+# the embedding search, dedup and ETL queries
+EMBEDDING_QUERIES = [
+    "q_ann_ivf",
+    "q_ann_ivf_sampled",
+    "q_ann_pq",
+    "q_ann_query_batch",
+    "q_dedup_semantic",
+    "q_embed_meanpool",
+    "q_embed_neardup",
+    "q_embed_quantize",
+    "q_knn_cosine",
+    "q_nearest_centroid",
+]
 
-def _copy_with_events(sf_dir: str, tmp_path, reshape) -> str:
+
+def _copy_with(sf_dir: str, tmp_path, table: str, reshape) -> str:
     """A data directory linking every table of ``sf_dir`` except
-    events, which is written back as ``reshape(events)``."""
+    ``table``, which is written back as ``reshape(table)``."""
     d = tmp_path / "sf"
     d.mkdir()
     for name in TABLE_NAMES:
-        if name != "events":
+        if name != table:
             os.symlink(os.path.join(sf_dir, f"{name}.parquet"), d / f"{name}.parquet")
-    events = pq.read_table(os.path.join(sf_dir, "events.parquet"))
-    pq.write_table(reshape(events), d / "events.parquet")
+    src = pq.read_table(os.path.join(sf_dir, f"{table}.parquet"))
+    pq.write_table(reshape(src), d / f"{table}.parquet")
     return str(d)
 
 
@@ -43,7 +59,7 @@ def _check(spark, d: str, name: str):
 def test_csv_malformed_on_empty_events(spark, sf_dir, tmp_path):
     """A global sum over no rows is NULL; the good-row count must be
     a count, 0 on empty input like the twin's count(*)."""
-    d = _copy_with_events(sf_dir, tmp_path, lambda e: e.slice(0, 0))
+    d = _copy_with(sf_dir, tmp_path, "events", lambda e: e.slice(0, 0))
     got = _check(spark, d, "q_csv_malformed")
     assert (got["n_good"].tolist(), got["n_dropped"].tolist()) == ([0], [0])
 
@@ -56,7 +72,18 @@ def test_jaccard_lag_on_null_props(spark, sf_dir, tmp_path):
         i = e.schema.get_field_index("props")
         return e.set_column(i, "props", pa.nulls(e.num_rows, pa.string()))
 
-    d = _copy_with_events(sf_dir, tmp_path, null_props)
+    d = _copy_with(sf_dir, tmp_path, "events", null_props)
     got = _check(spark, d, "q_jaccard_lag")
     assert len(got) > 0
     assert (got["n_contacts"] == 0).all() and got["jaccard"].isna().all()
+
+
+@pytest.mark.parametrize("rows", [0, 5])
+@pytest.mark.parametrize("name", EMBEDDING_QUERIES)
+def test_embedding_queries_on_few_rows(spark, sf_dir, tmp_path, name, rows):
+    """With 0 or 5 vectors most of the blocks of the cogrouped vector
+    kernels (32 corpus blocks, KNN_BLOCKS² block pairs) are empty, and
+    the IVF and PQ codebooks have fewer vectors than centroids: each
+    embedding query must still match its twin."""
+    d = _copy_with(sf_dir, tmp_path, "embeddings", lambda e: e.slice(0, rows))
+    _check(spark, d, name)

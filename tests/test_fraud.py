@@ -1,4 +1,4 @@
-"""Property tests for the round-4b fraud/behavioral operators
+"""Property tests for the fraud/behavioral operators
 (queries/fraud.py) and a regression pin for the prefix_rank
 double-evaluation bug (operators/rank.py).
 """

@@ -1,5 +1,5 @@
-"""Pins for the latent negative-zero hash hazard (SURVEY §7.7, VERDICT
-r09 item 6) and the driver-leg mismatch classifier (ADVICE r09).
+"""Pins for the latent negative-zero hash hazard (SURVEY §7.7) and the
+driver-leg mismatch classifier.
 
 The hazard: ``f"{-0.0:.6f}"`` renders ``-0.000000``, so if Spark and
 DuckDB ever disagree on the SIGN of a rounded zero (summation-order
@@ -55,7 +55,7 @@ def test_negative_zero_stays_detectable_in_both_legs():
 
 
 def test_order_only_raw_sort_tie_classified_as_such():
-    # ADVICE r09: sub-tolerance float drift on near-tied rows can order
+    # sub-tolerance float drift on near-tied rows can order
     # the two frames differently while every RENDERED row matches —
     # the classifier must say order-only, not value diff
     # "amt" sorts before "tag", so the raw float column drives the
@@ -69,9 +69,9 @@ def test_order_only_raw_sort_tie_classified_as_such():
 
 
 # every spelling of "round this" in the repo: F.round plus the _util
-# helpers that wrap it (r6 = F.round(·, 6); review r10 found r6 was a
-# blind spot — 34 call sites rounded through it invisibly to a lint
-# that only matched the literal name "round")
+# helpers that wrap it (r6 = F.round(·, 6): a lint that matched only
+# the literal name "round" missed the 34 call sites rounding through
+# it)
 _ROUNDERS = {"round", "r6"}
 
 
@@ -102,8 +102,8 @@ def _round_of_sum_spark(fn) -> bool:
 
 
 # SQL leg: ROUND and SUM co-present ANYWHERE in the twin (not
-# ROUND-textually-before-SUM — review r10: a sum computed in a CTE and
-# rounded in the outer SELECT evaded the forward-only pattern). A
+# ROUND-textually-before-SUM: a sum computed in a CTE and rounded in
+# the outer SELECT evades a forward-only pattern). A
 # watch-list over-approximates by design.
 _SQL_ROUND = re.compile(r"\bROUND\s*\(", re.IGNORECASE)
 _SQL_SUM = re.compile(r"\bSUM\s*\(", re.IGNORECASE)
@@ -144,7 +144,7 @@ def test_round_of_sum_watchlist_matches_committed_file():
 
 
 def test_negzero_immunity_rules():
-    """Pins the three IEEE-754 facts the round-13 headline triage in
+    """Pins the three IEEE-754 facts the headline triage in
     NEGZERO_WATCHLIST.txt relies on (if a runtime/libm ever broke
     these, the immunity argument for the 17 headline entries would be
     void and this test names exactly which clause fell):
@@ -182,7 +182,7 @@ def test_negzero_immunity_rules():
 
 
 # ---------------------------------------------------------------------------
-# Round-13 full-catalog triage (VERDICT r12 item 6 — the burn-down).
+# Full-catalog triage (the burn-down of the watch-list).
 #
 # The headline triage covered 17 entries by hand; the remaining ~130
 # are classified MECHANICALLY here, using one more fact on top of

@@ -311,16 +311,23 @@ def test_common_neighbor_auto_cost_model(spark):
 
 
 def test_common_neighbor_without_stats_is_inverted_and_job_free(spark):
-    """Without ContactStats the operator plans the inverted join and
-    launches no Spark job while building it."""
-    from frauddetection_spark.operators.graph import common_neighbor_pairs
+    """Without a contact list (``ContactStats.values`` None) the
+    operator plans the inverted join and launches no Spark job while
+    building it."""
+    from frauddetection_spark.operators.graph import (
+        ContactStats,
+        common_neighbor_pairs,
+    )
 
     contacts = spark.range(50).select(
         F.col("id").alias("user"), (F.col("id") % 5).alias("contact")
     )
+    no_values = ContactStats(
+        n_contacts=5, n_users=50, sum_d2=5 * 10 * 10, values=None
+    )
     tracker = spark.sparkContext.statusTracker()
     before = set(tracker.getJobIdsForGroup(None))
-    df = common_neighbor_pairs(contacts, min_common=1)
+    df = common_neighbor_pairs(contacts, min_common=1, stats=no_values)
     plan = df._jdf.queryExecution().optimizedPlan().toString()
     assert set(tracker.getJobIdsForGroup(None)) == before
     assert "bit_count" not in plan

@@ -142,17 +142,13 @@ def test_ivf_rank1_recall(spark, sf_dir):
        design. Clustered real-world embeddings sit far above this
        floor."""
     from frauddetection_spark.operators.vectors import (
-        adaptive_centroids,
         ivf_topk,
         knn_topk_bruteforce,
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
     sub = emb.filter("vec_id < 256")
-    floor_recall = _rank1_recall(
-        knn_topk_bruteforce(sub),
-        ivf_topk(sub, n_centroids=adaptive_centroids(256)),
-    )
+    floor_recall = _rank1_recall(knn_topk_bruteforce(sub), ivf_topk(sub, 256))
     assert floor_recall >= 0.8, f"floor-K rank-1 recall {floor_recall:.3f}"
 
     adaptive_recall = _rank1_recall(
@@ -198,7 +194,7 @@ def test_lloyd_partials_update_matches_rowwise_shape(spark):
         "cid: bigint, cqv: array<bigint>, cn2: bigint",
     )
     new = (
-        _lloyd_partials(train, cent)
+        _lloyd_partials(train, cent, len(rows))
         .select("cid", "pcnt", F.posexplode("psum").alias("dim", "s"))
         .groupBy("cid", "dim")
         .agg(
@@ -208,7 +204,7 @@ def test_lloyd_partials_update_matches_rowwise_shape(spark):
         )
     )
     old = (
-        _centroid_topn(train, cent, 1)
+        _centroid_topn(train, cent, 1, len(rows))
         .join(train.select("vec_id", "qv"), "vec_id")
         .select("cid", F.posexplode("qv").alias("dim", "xv"))
         .groupBy("cid", "dim")
@@ -314,7 +310,7 @@ def test_pq_partials_update_matches_hof_shape(spark):
         _PQ_PIN_CENT, "m: int, cid: bigint, csub: array<bigint>"
     )
     new = (
-        _pq_partials(q, cent, subdim)
+        _pq_partials(q, cent, subdim, len(_PQ_PIN_ROWS))
         .groupBy("m", "cid")
         .agg(
             F.sum("pcnt").alias("_n"),
@@ -369,7 +365,9 @@ def test_pq_encode_matches_hof_shape(spark):
     cent = spark.createDataFrame(
         _PQ_PIN_CENT, "m: int, cid: bigint, csub: array<bigint>"
     )
-    new = _pq_encode(q, cent, subdim).select("vec_id", "code", "n2")
+    new = _pq_encode(q, cent, subdim, len(_PQ_PIN_ROWS)).select(
+        "vec_id", "code", "n2"
+    )
     old = (
         _pq_old_hof_assignment(spark, q, subdim, n_m, cent)
         .groupBy("vec_id")
@@ -432,13 +430,16 @@ def test_asof_rejects_column_collision(spark):
 
 
 def test_common_neighbors_rejects_min_common_zero(spark, sf_dir):
-    from frauddetection_spark.operators.graph import common_neighbor_pairs
-    from frauddetection_spark.sources.tables import load_table
+    from frauddetection_spark.operators.graph import (
+        ContactStats,
+        common_neighbor_pairs,
+    )
     import pytest as _pytest
 
     contacts = spark.createDataFrame([(1, 2)], ["user", "contact"])
+    stats = ContactStats(n_contacts=1, n_users=1, sum_d2=1, values=None)
     with _pytest.raises(ValueError):
-        common_neighbor_pairs(contacts, min_common=0)
+        common_neighbor_pairs(contacts, min_common=0, stats=stats)
 
 
 def test_pack_sequences_bin_bound(spark, sf_dir):
@@ -605,7 +606,12 @@ def test_ivf_sampled_recall_and_sample_shape(spark, sf_dir):
     silently widened to the full table, the scale story (Lloyd cost
     O(sample) not O(table)) would be gone with no test noticing."""
     from frauddetection_spark.operators.sampling import portable_uniform_keep
-    from frauddetection_spark.queries.similarity import IVF_SAMPLE_PCT, IVF_SEED
+    from frauddetection_spark.operators.vectors import (
+        IVF_SAMPLE_PCT,
+        IVF_SEED,
+        ivf_topk,
+        knn_topk_bruteforce,
+    )
 
     emb = load_table(spark, sf_dir, "embeddings")
     n = emb.count()
@@ -615,16 +621,8 @@ def test_ivf_sampled_recall_and_sample_shape(spark, sf_dir):
     assert 0.25 * n <= n_train <= 0.45 * n, f"sample {n_train}/{n}"
 
     sub = emb.filter("vec_id < 256")
-    from frauddetection_spark.operators.vectors import (
-        adaptive_centroids,
-        ivf_topk,
-        knn_topk_bruteforce,
-    )
-
     floor_recall = _rank1_recall(
-        knn_topk_bruteforce(sub),
-        ivf_topk(sub, n_centroids=adaptive_centroids(256),
-                 seeding="sampled", sample_pct=IVF_SAMPLE_PCT, seed=IVF_SEED),
+        knn_topk_bruteforce(sub), ivf_topk(sub, 256, seeding="sampled")
     )
     assert floor_recall >= 0.75, (
         f"sampled floor-K rank-1 recall {floor_recall:.3f}"

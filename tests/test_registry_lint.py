@@ -1,50 +1,42 @@
 """Registry-wide output-shape lints.
 
-The r08 driver run failed exactly one query — ``q_inverted_index`` —
-because it emitted a raw ``ArrayType`` top-level column and the DRIVER's
-canonicalizer (pandas ``sort_values`` over raw cells) crashes on list
-values (``TypeError: unhashable type: 'list'``), even though values
-hash-matched locally. Two defenses, both here:
+A query that emits a raw ``ArrayType`` top-level column can hash-match
+locally and still fail the driver: the DRIVER's canonicalizer (pandas
+``sort_values`` over raw cells) crashes on list values (``TypeError:
+unhashable type: 'list'``) — ``q_inverted_index`` once failed that
+way. Two defenses:
 
-1. **Structural**: no declared ORACLE query may emit ArrayType /
+1. **Structural** (here): no declared ORACLE query may emit ArrayType /
    MapType / StructType at the top level of its output schema. Arrays
    must be joined to strings (the ``q_collect_series`` convention:
    ``array_join(transform(...), ',')`` / DuckDB ``array_to_string``).
    Rows-only queries (no DuckDB twin → the driver only counts rows)
-   are exempt: the driver never canonicalizes them.
+   are exempt: the driver never canonicalizes them. The schemas come
+   from the suite's one catalog construction pass (the
+   ``plan_inspections`` fixture in tests/conftest.py).
 
 2. **Behavioral** (lives in :func:`frauddetection_spark.oracle.compare`):
    every oracle comparison also runs a vendored replica of the driver's
    own canonicalizer, so any OTHER shape pandas cannot sort fails the
-   local suite before it can fail a round.
-
-Mostly schema-only: each plan is BUILT (analyzed), and for most
-queries that executes nothing — but iterative queries (the
-connected-components consumers) run real jobs AT CONSTRUCTION
-(localCheckpoint + count + the gated local finish), so the full
-parametrized pass costs ~1 min at test sf, not seconds. Keep it out
-of any "fast lint" tier.
+   local suite before it can fail the driver.
 """
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import types as T
 
 from frauddetection_spark.plans.registry import load_all
 
 REGISTRY = load_all()
 ORACLE_QUERIES = sorted(n for n, s in REGISTRY.items() if s.oracle is not None)
 
-_NON_ATOMIC = (T.ArrayType, T.MapType, T.StructType)
-
 
 def test_driver_canon_rejects_list_cells():
     """The vendored driver leg must reproduce the driver's crash on
     list cells — otherwise it silently stops being the stricter
-    comparator and the r08 class can recur undetected. (The repo's own
-    _canon_frame stringifies the same frame fine: that permissiveness
-    gap is exactly what hid q_inverted_index.)"""
+    comparator and the q_inverted_index failure can recur undetected.
+    (The repo's own _canon_frame stringifies the same frame fine: that
+    permissiveness gap is exactly what hid q_inverted_index.)"""
     import pandas as pd
     import pytest as _pytest
 
@@ -57,15 +49,10 @@ def test_driver_canon_rejects_list_cells():
 
 
 @pytest.mark.parametrize("name", ORACLE_QUERIES)
-def test_oracle_output_is_atomic(name, spark, sf_dir):
-    df = REGISTRY[name].fn(spark, sf_dir)
-    bad = [
-        f"{f.name}: {f.dataType.simpleString()}"
-        for f in df.schema.fields
-        if isinstance(f.dataType, _NON_ATOMIC)
-    ]
+def test_oracle_output_is_atomic(name, plan_inspections):
+    bad = plan_inspections[0][name]["non_atomic"]
     assert not bad, (
         f"{name} emits non-atomic top-level column(s) {bad} — the driver "
-        "canonicalizer crashes on these (r08 q_inverted_index). Join "
-        "arrays to strings per the q_collect_series convention."
+        "canonicalizer crashes on these (as it did on q_inverted_index). "
+        "Join arrays to strings per the q_collect_series convention."
     )

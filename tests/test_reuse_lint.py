@@ -1,10 +1,10 @@
-"""Executed-plan reuse lint (VERDICT r10 item 2).
+"""Executed-plan reuse lint.
 
-Round 10's reuse probe found ~18 plans re-running their full upstream
-lineage once per reference (zero ReusedExchange) and fixed them with
-aggregate-sized persists or single-evaluation restructures (MIGRATION
-"reuse probe"; commits a942447, 1952c95, 147ef49, d06424c). This lint
-pins those wins so the recompute class cannot silently return: each
+A reuse probe once found ~18 plans re-running their full upstream
+lineage once per reference (zero ReusedExchange); aggregate-sized
+persists or single-evaluation restructures fixed them (MIGRATION
+"reuse probe"). This lint pins those wins so the recompute class
+cannot silently return: each
 persist-based plan is EXECUTED (collect — AQE only finalizes the plan
 after an action) and its final plan must read the shared frame from
 cache (InMemoryTableScan) or reuse the exchange (ReusedExchange) —
@@ -170,13 +170,12 @@ def test_helpers_of_excludes_registration_decorator():
 # reference surfaces as an InMemoryTableScan in the final plan, so a
 # dropped persist drives the count to zero (Catalyst sometimes saves
 # the day with ReusedExchange — also acceptable: the work still runs
-# once). Computed from source rather than hand-listed (r11) so every
-# FUTURE persist-backed query is covered the commit it lands; the r10
-# rewrites the lint was built for (q_bm25, q_rolling_dau,
-# q_cooccurrence, q_dedup_minhash, q_rfm, q_item_cf, ...) are all in
-# the computed set.
+# once). Computed from source rather than hand-listed so every FUTURE
+# persist-backed query is covered the commit it lands; the rewrites
+# the lint was built for (q_bm25, q_rolling_dau, q_cooccurrence,
+# q_dedup_minhash, q_rfm, q_item_cf, ...) are all in the computed set.
 #
-# Exceptions, each verified by the r11 catalog probe: their persists
+# Exceptions, each verified by a catalog probe: their persists
 # feed CONSTRUCTION-TIME fixpoint/driver-hop actions (convergence
 # loops, collected constant-size matrices) and are fully consumed
 # before the returned plan exists, so the final plan legitimately
@@ -193,7 +192,7 @@ def _persist_backed() -> list[str]:
     (``helpers_of``, followed transitively) contains a
     ``track_cache`` site — a dropped persist in ``prefix_rank`` or
     ``ivf_topk`` must fail its consumers' lint rows, not just direct
-    callers' (review r11: the hand-scan covered only the query body),
+    callers' (a scan of the query body alone misses helper persists),
     and ``q_join_common_neighbor``'s persist sits two calls down, in
     ``common_neighbor_pairs`` → ``_common_neighbors_bitmask``.
     Granularity caveat, stated honestly: the assertion is reuse >= 1
@@ -267,7 +266,7 @@ def _track_cache_call_sites(fn) -> int:
     return n
 
 
-# ADVICE r11: reuse >= 1 per query lets a plan with BOTH its own
+# Reuse >= 1 per query lets a plan with BOTH its own
 # persist and a helper-level persist drop exactly one of the two
 # without failing. For every query with >= 2 reachable track_cache
 # call sites, pin the InMemoryTableScan count MEASURED on the
@@ -286,11 +285,10 @@ _MULTI_PERSIST_FLOOR = {
     "q_adamic_adar": 2,
     "q_ann_ivf": 8,
     "q_ann_ivf_sampled": 8,
-    # r14 kernel rewrite: subs is no longer persisted (only constant-
-    # size slices read it) and the encode/training argmin moved into
-    # blocked cogroup kernels, so the final plan reads the persisted q
-    # and trained-cent frames 4 times (measured on the suite config;
-    # was 7 when the n·m subs frame was a third persist).
+    # subs is not persisted (only constant-size slices read it) and
+    # the encode/training argmin runs in blocked cogroup kernels, so
+    # the final plan reads the persisted q and trained-cent frames 4
+    # times (measured on the suite config).
     "q_ann_pq": 4,
     "q_assortativity": 1,
     "q_bfs_levels": 1,
@@ -308,9 +306,8 @@ _MULTI_PERSIST_FLOOR = {
     "q_graph_triangles": 2,
     "q_growth_accounting": 2,
     "q_hits": 2,
-    # q_hyperplane_est left this table in r13: the kernel rewrite's
-    # single persisted signature frame (read by both spine sides)
-    # replaced the old comp/sig/norms persist trio, so the query is
+    # q_hyperplane_est is not listed: its kernel's single persisted
+    # signature frame is read by both spine sides, so the query is
     # single-persist and rides the base >= 1 assertion.
     "q_minhash_est": 2,
     "q_money_loops": 2,
@@ -320,7 +317,7 @@ _MULTI_PERSIST_FLOOR = {
     "q_quantile_grid": 2,
     "q_quantile_interp": 2,
     "q_random_walks": 2,
-    # r13 flatten: the three ntile passes rank narrow PROJECTIONS of
+    # the three ntile passes rank narrow PROJECTIONS of
     # one persisted base and join back (they no longer chain, so the
     # nested per-pass range frames left the top-level plan); the final
     # plan reads the persisted base + the last join's rank frame — the
@@ -440,7 +437,7 @@ def test_shared_frame_reused(spark, sf_dir, name):
 
 
 def test_winsorize_windows_run_once(spark, sf_dir):
-    """r10: the clip side reads the raw projection, so the two rank
+    """The clip side reads the raw projection, so the two rank
     windows run exactly once (bounds only). A regression back to
     clipping from the ranked frame doubles the Window nodes."""
     df = REGISTRY["q_winsorize"].fn(spark, sf_dir)
@@ -453,7 +450,7 @@ def test_winsorize_windows_run_once(spark, sf_dir):
 
 
 def test_edge_novelty_no_join_back(spark, sf_dir):
-    """r10: first_week is a window min over the edge key — the old
+    """first_week is a window min over the edge key — the old
     groupBy + join-back shape must not return."""
     df = REGISTRY["q_edge_novelty"].fn(spark, sf_dir)
     try:

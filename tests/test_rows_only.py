@@ -1,4 +1,4 @@
-"""Property tests for the rows-only surface (VERDICT r07 item 7).
+"""Property tests for the rows-only surface.
 
 Ten declared queries have no DuckDB twin by design (engine-private
 sketches, MLlib hash seeds, eigen round-off, env-gated kernels) — the

@@ -27,6 +27,12 @@ from __future__ import annotations
 import pytest
 
 from frauddetection_spark.plans.registry import load_all
+from tests.conftest import (
+    ITERATIVE_FIXPOINT,
+    ML_FIT,
+    _live_scan_count,
+    _unpartitioned_windows,
+)
 
 REGISTRY = load_all()
 
@@ -35,124 +41,6 @@ REGISTRY = load_all()
 # operators/rank.py (offsets over ≤ RANK_PARTITIONS per-partition
 # totals).
 BOUNDED_ORDER_COLS = {"_pid"}
-
-
-def _unpartitioned_windows(df) -> list[str]:
-    """First-order-column names of Window nodes with an empty
-    partitionSpec anywhere in the analyzed logical plan."""
-    out: list[str] = []
-
-    def walk(node) -> None:
-        if node.getClass().getSimpleName() == "Window":
-            part = node.partitionSpec()
-            if part.isEmpty():
-                order = node.orderSpec()
-                first = (
-                    order.apply(0).child().toString() if order.size() else "?"
-                )
-                out.append(first.split("#")[0])
-        kids = node.children()
-        for i in range(kids.size()):
-            walk(kids.apply(i))
-
-    walk(df._jdf.queryExecution().analyzed())
-    return out
-
-
-def _presentation_sort(df) -> bool:
-    """True when the optimized plan, walked from the root through unary
-    nodes, reaches a global Sort with no Limit above it."""
-    node, limited = df._jdf.queryExecution().optimizedPlan(), False
-    while True:
-        cls = node.getClass().getSimpleName()
-        if cls == "Sort":
-            return getattr(node, "global")() and not limited
-        limited = limited or "Limit" in cls
-        if node.children().size() != 1:
-            return False
-        node = node.children().apply(0)
-
-
-def _live_scan_count(df) -> int:
-    """Live (re-executed) file scans in the physical plan: walk WITHOUT
-    descending into InMemoryTableScan (a cached subtree's build plan
-    prints its scans but never re-executes) or ReusedExchange/
-    ReusedSubquery (executed once, replayed from shuffle files /
-    the first result — descending would double-count)."""
-    live = 0
-    stack = [df._jdf.queryExecution().executedPlan()]
-    while stack:
-        node = stack.pop()
-        cls = node.getClass().getSimpleName()
-        if "InMemoryTableScan" in cls:
-            continue
-        if "ReusedExchange" in cls or "ReusedSubquery" in cls:
-            continue
-        if "FileSourceScan" in cls or "BatchScan" in cls:
-            live += 1
-        kids = node.children()
-        for i in range(kids.size()):
-            stack.append(kids.apply(i))
-        # Scans hidden in scalar/IN subquery expressions are live cost
-        # too: QueryPlan.subqueries yields each plan
-        # referenced from this node's expressions.
-        subs = node.subqueries()
-        for i in range(subs.size()):
-            stack.append(subs.apply(i))
-        if cls == "AdaptiveSparkPlanExec":
-            stack.append(node.initialPlan())
-    return live
-
-
-@pytest.fixture(scope="module")
-def plan_inspections(spark, sf_dir):
-    """ONE construction-and-inspection pass over the whole catalog,
-    shared by every plan lint in this module (suite wall-time: the
-    window/cartesian/live-scan params and the
-    zero-jobs lint each re-built all ~300 plans — ~60s of duplicated
-    GIL-bound Py4J chatter per pass; a thread pool was measured NOT to
-    help). Each plan is inspected IMMEDIATELY after its own
-    construction — the registry guard releases tracked caches when a
-    DIFFERENT query constructs, so deferring inspection to the
-    parametrized tests would read plans whose InMemoryRelations were
-    already unpersisted (observed: q_attribution_shapley counted 12
-    live scans instead of its true ≤10 when inspected after the full
-    catalog pass). Storing the four verdicts (window order-cols,
-    cartesian presence, live-scan count, presentation sort) keeps the
-    per-query attribution in the params while paying construction once.
-
-    Also returns the set of Spark job ids launched while constructing
-    the NON-exempt queries — snapshotted twice TOTAL, not per query,
-    because each ``getJobIdsForGroup(None)`` call transfers the
-    session's full accumulated job-id array (tens of thousands of ids
-    in-suite; ~580 such transfers dominated the old standalone
-    zero-jobs lint's 238s in-suite wall). Exempt constructors
-    (ITERATIVE_FIXPOINT convergence loops, ML_FIT training) run
-    OUTSIDE the bracket; plan inspection itself plans but never runs
-    jobs."""
-    tracker = spark.sparkContext.statusTracker()
-    exempt = ITERATIVE_FIXPOINT | ML_FIT
-
-    def inspect(name):
-        df = REGISTRY[name].fn(spark, sf_dir)
-        assert df is not None
-        return {
-            "unpartitioned_windows": _unpartitioned_windows(df),
-            "cartesian": "CartesianProduct"
-            in df._jdf.queryExecution().executedPlan().toString(),
-            "live_scans": _live_scan_count(df),
-            "root_sort": _presentation_sort(df),
-        }
-
-    inspections = {}
-    before = set(tracker.getJobIdsForGroup(None) or [])
-    for name in sorted(REGISTRY):
-        if name not in exempt:
-            inspections[name] = inspect(name)
-    construction_jobs = set(tracker.getJobIdsForGroup(None) or []) - before
-    for name in sorted(exempt & set(REGISTRY)):
-        inspections[name] = inspect(name)
-    return inspections, construction_jobs
 
 
 @pytest.mark.parametrize("name", sorted(REGISTRY))
@@ -208,31 +96,6 @@ def test_no_presentation_sort(plan_inspections):
         f"{len(sorted_out)} queries end in a global Sort with no Limit "
         f"above it: {sorted_out}"
     )
-
-
-# Queries whose CONSTRUCTION legitimately runs Spark jobs: iterative
-# fixpoints whose round count is data-dependent (min-label propagation
-# runs joins until a changed-row count hits zero — the convergence
-# check IS the algorithm, not a stats probe). Everything else must be
-# a pure plan builder.
-ITERATIVE_FIXPOINT = {
-    "q_connected_components",
-    "q_dedup_groups",
-    "q_entity_resolution",
-    # constant-size (grid-geometry-bounded) edge collect + union-find
-    "q_cluster_griddensity",
-    # constant-size (state-space-bounded) transition-matrix collect +
-    # driver-side exact-integer chain iteration
-    "q_attribution_markov",
-    # cosine-pair mining + connected-components fixpoint
-    "q_dedup_semantic",
-}
-
-# MLlib estimator queries: ``Estimator.fit`` is TRAINING — an action by
-# nature (the model is data). Not a stats probe; exempt, like M3/M4's
-# explicit training loops.
-ML_FIT = {"q_ann_lsh_ml", "q_dedup_minhash_ml", "q_model_score",
-          "q_viz_projection"}
 
 
 def test_every_persist_is_tracked_or_local():
@@ -327,21 +190,16 @@ def test_every_persist_is_tracked_or_local():
     )
 
 
-def test_operator_defaults_are_set():
-    """Every defaulted parameter of a function under
-    ``frauddetection_spark/`` must be passed — by keyword or by
-    position — at one or more call sites. A default that no caller
-    overrides is a constant in disguise: it multiplies the
-    configurations tests must cover while only one is ever run (and
-    its never-taken branches go untested). Make it a module constant
-    instead. Call sites are matched by callee name; a ``*args`` /
-    ``**kwargs`` call sets every parameter.
-
-    For operators/ and queries/ the callers that count are the
-    package, ``__spark_entry__.py`` and ``check_catalog.py``. The other
-    modules (IO, streaming, ML, multimodal, session) are user API with
-    no caller in the package, so for them callers in ``tests/`` and
-    ``perfbench/`` count as well."""
+def _caller_universes():
+    """(package trees, callee name -> list of calls counted for it):
+    the callers that count for each function under
+    ``frauddetection_spark/`` — the package, ``__spark_entry__.py`` and
+    ``check_catalog.py`` for operators/ and queries/, plus ``tests/``
+    and ``perfbench/`` for the other modules (IO, streaming, ML,
+    multimodal, session: user API with no caller in the package). A
+    call is (keywords passed, positional args passed), matched by
+    callee name; a ``*args`` / ``**kwargs`` call passes every
+    parameter."""
     import ast
     import os
 
@@ -358,9 +216,8 @@ def test_operator_defaults_are_set():
                 trees[os.path.relpath(path, root)] = ast.parse(fh.read())
         return trees
 
-    def passed_by(trees):
-        """callee name -> (keywords passed, most positional args passed)"""
-        passed: dict[str, tuple[set, float]] = {}
+    def calls_by_name(trees):
+        calls: dict[str, list[tuple[set, float]]] = {}
         for tree in trees:
             for node in ast.walk(tree):
                 if not isinstance(node, ast.Call):
@@ -369,15 +226,16 @@ def test_operator_defaults_are_set():
                 name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
                 if name is None:
                     continue
-                kws, npos = passed.get(name, (set(), 0))
                 splat = any(isinstance(a, ast.Starred) for a in node.args) or any(
                     k.arg is None for k in node.keywords
                 )
-                passed[name] = (
-                    kws | {k.arg for k in node.keywords},
-                    max(npos, float("inf") if splat else len(node.args)),
+                calls.setdefault(name, []).append(
+                    (
+                        {k.arg for k in node.keywords},
+                        float("inf") if splat else len(node.args),
+                    )
                 )
-        return passed
+        return calls
 
     package = parse(
         [os.path.join(root, "__spark_entry__.py"),
@@ -385,38 +243,86 @@ def test_operator_defaults_are_set():
          *sources("frauddetection_spark")]
     )
     outside = parse([*sources("tests"), *sources("perfbench")])
-    by_package = passed_by(package.values())
-    by_anyone = passed_by([*package.values(), *outside.values()])
+    by_package = calls_by_name(package.values())
+    by_anyone = calls_by_name([*package.values(), *outside.values()])
     library = tuple(
         os.path.join("frauddetection_spark", d) for d in ("operators", "queries")
     )
+    counted = {
+        rel: by_package if rel.startswith(library) else by_anyone
+        for rel in package
+        if rel.startswith("frauddetection_spark" + os.sep)
+    }
+    return package, counted
 
-    unset = []
-    for rel, tree in package.items():
-        if not rel.startswith("frauddetection_spark" + os.sep):
-            continue
-        passed = by_package if rel.startswith(library) else by_anyone
-        for fn in ast.walk(tree):
-            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
-                continue
-            kws, npos = passed.get(fn.name, (set(), 0))
-            params = fn.args.posonlyargs + fn.args.args
-            first = len(params) - len(fn.args.defaults)
-            defaulted = [
-                (p.arg, i) for i, p in enumerate(params) if i >= first
-            ] + [
-                (p.arg, float("inf"))
-                for p, d in zip(fn.args.kwonlyargs, fn.args.kw_defaults)
-                if d is not None
-            ]
-            unset += [
-                f"{rel}:{fn.lineno} {fn.name}({arg})"
-                for arg, pos in defaulted
-                if arg not in kws and npos <= pos
-            ]
+
+def _defaulted_params(fn):
+    """(name, position, default node) of each defaulted parameter of
+    the function node ``fn``; keyword-only ones sit at position inf."""
+    params = fn.args.posonlyargs + fn.args.args
+    first = len(params) - len(fn.args.defaults)
+    return [
+        (p.arg, i, fn.args.defaults[i - first])
+        for i, p in enumerate(params)
+        if i >= first
+    ] + [
+        (p.arg, float("inf"), d)
+        for p, d in zip(fn.args.kwonlyargs, fn.args.kw_defaults)
+        if d is not None
+    ]
+
+
+def _functions(package, counted):
+    """(relative path, function node, its counted calls) for every
+    function under ``frauddetection_spark/``."""
+    import ast
+
+    for rel, calls in counted.items():
+        for fn in ast.walk(package[rel]):
+            if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                yield rel, fn, calls.get(fn.name, [])
+
+
+def test_operator_defaults_are_set():
+    """Every defaulted parameter of a function under
+    ``frauddetection_spark/`` must be passed — by keyword or by
+    position — at one or more call sites. A default that no caller
+    overrides is a constant in disguise: it multiplies the
+    configurations tests must cover while only one is ever run (and
+    its never-taken branches go untested). Make it a module constant
+    instead. The callers that count are those of
+    :func:`_caller_universes`."""
+    unset = [
+        f"{rel}:{fn.lineno} {fn.name}({arg})"
+        for rel, fn, calls in _functions(*_caller_universes())
+        for arg, pos, _default in _defaulted_params(fn)
+        if not any(arg in kws or npos > pos for kws, npos in calls)
+    ]
     assert unset == [], (
         "defaulted parameters no caller sets — make each a module "
         "constant:\n" + "\n".join(unset)
+    )
+
+
+def test_no_dead_none_default():
+    """No ``None``-defaulted parameter under ``frauddetection_spark/``
+    may be passed by every counted caller (those of
+    :func:`_caller_universes`): its ``None`` branch is code no caller
+    reaches. Make the parameter required and delete the branch."""
+    import ast
+
+    dead = [
+        f"{rel}:{fn.lineno} {fn.name}({arg})"
+        for rel, fn, calls in _functions(*_caller_universes())
+        for arg, pos, default in _defaulted_params(fn)
+        if isinstance(default, ast.Constant)
+        and default.value is None
+        and calls
+        and all(arg in kws or npos > pos for kws, npos in calls)
+    ]
+    assert dead == [], (
+        "None defaults that every caller overrides — make each "
+        "parameter required:\n" + "\n".join(dead)
     )
 
 

@@ -61,8 +61,7 @@ def test_sessionize_matches_stream_session_window(spark, sf_dir):
     """q_sessionize (features.py gaps-and-islands over microsecond
     ints) and the native streaming session_window implement the SAME
     30-min-gap session semantics — pin them together so they can't
-    drift (VERDICT r3 item 5). Compared on (user, start-second,
-    n_events)."""
+    drift. Compared on (user, start-second, n_events)."""
     got = _drain(spark, sf_dir, session_stats, "t_sessions_z")
     want = REGISTRY["q_sessionize"].fn(spark, sf_dir).select(
         "user_id",
