@@ -8,6 +8,13 @@ operation is a join + aggregate, so it shuffles instead of materializing
 adjacency in driver RAM and scales to the reference's 7M-edge relations
 and far beyond.
 
+This module is the one place that defines the call graph, in Spark and
+in its DuckDB twins: the contact rule (`contact` / `SQL_CONTACT`), the
+edge list (`edges_from_events` / `SQL_EDGES`), its undirected forms
+(`mirror` / `sql_mirror`, `simple_graph` / `sql_simple_graph`) and the
+repeat-contact graph (`repeat_contacts` / `SQL_REPEAT_CONTACTS`). Each
+takes a DataFrame or a CTE name and never loads a table itself.
+
 Reference parity:
 - gather/scatter message passing  → `aggregate_messages`
   (DGL update_all(u_mul_e, sum), new_model_1.py:24-36; propagate,
@@ -22,13 +29,27 @@ Reference parity:
 
 from __future__ import annotations
 
+import json
 from typing import NamedTuple
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
 from frauddetection_spark.operators.caching import track_cache
+
+
+def contact() -> Column:
+    """The counterparty of an ``events`` row (the reference's
+    opposite_no_m): ``props.k`` cast to bigint. A null ``props``,
+    unparseable JSON, and a missing or null ``k`` are no contact; an
+    integer or integer-string ``k`` is one. ``_contact`` applies the
+    same rule to one ``props`` string on the driver."""
+    return F.get_json_object("props", "$.k").cast("bigint")
+
+
+# DuckDB twin of contact
+SQL_CONTACT = "CAST(json_extract_string(props, '$.k') AS BIGINT)"
 
 
 def edges_from_events(events: DataFrame) -> DataFrame:
@@ -41,13 +62,18 @@ def edges_from_events(events: DataFrame) -> DataFrame:
     model weights separately).
     """
     return (
-        events.select(
-            F.col("user_id").alias("src"),
-            F.get_json_object("props", "$.k").cast("bigint").alias("dst"),
-        )
+        events.select(F.col("user_id").alias("src"), contact().alias("dst"))
         .filter(F.col("dst").isNotNull())
         .distinct()
     )
+
+
+# DuckDB twin of edges_from_events
+SQL_EDGES = f"""
+        SELECT DISTINCT user_id AS src, {SQL_CONTACT} AS dst
+        FROM events
+        WHERE {SQL_CONTACT} IS NOT NULL
+"""
 
 
 def mirror(edges: DataFrame) -> DataFrame:
@@ -76,6 +102,58 @@ def mirror(edges: DataFrame) -> DataFrame:
         .select("e.src", "e.dst")
         .distinct()
     )
+
+
+def sql_mirror(rel: str) -> str:
+    """DuckDB twin of mirror over the relation ``rel`` (src, dst)."""
+    return f"""
+        SELECT src, dst FROM {rel}
+        UNION
+        SELECT dst AS src, src AS dst FROM {rel}
+"""
+
+
+def simple_graph(edges: DataFrame) -> DataFrame:
+    """The simple undirected graph of ``edges``: self-loops dropped,
+    then mirrored."""
+    return mirror(edges.filter(F.col("src") != F.col("dst")))
+
+
+def sql_simple_graph(cte: str) -> str:
+    """DuckDB twin of simple_graph over the CTE ``cte``."""
+    return sql_mirror(f"(SELECT src, dst FROM {cte} WHERE src <> dst)")
+
+
+# A (user, counterparty) pair is a repeat-contact edge once it occurs in
+# this many events.
+REPEAT_MIN_CONTACTS = 3
+
+
+def repeat_contacts(events: DataFrame) -> DataFrame:
+    """Repeat-contact edge list: (user, counterparty) pairs seen in at
+    least REPEAT_MIN_CONTACTS events, self-loops dropped. The support
+    threshold is the ring-detection sparsification: a fraud ring talks
+    repeatedly, a marketplace touches once."""
+    return (
+        events.select(F.col("user_id").alias("src"), contact().alias("dst"))
+        .filter(F.col("dst").isNotNull())
+        .groupBy("src", "dst")
+        .agg(F.count("*").alias("w"))
+        .filter(
+            (F.col("w") >= REPEAT_MIN_CONTACTS) & (F.col("src") != F.col("dst"))
+        )
+        .select("src", "dst")
+    )
+
+
+# DuckDB twin of repeat_contacts
+SQL_REPEAT_CONTACTS = f"""
+        SELECT user_id AS src, {SQL_CONTACT} AS dst
+        FROM events
+        WHERE {SQL_CONTACT} IS NOT NULL AND user_id <> {SQL_CONTACT}
+        GROUP BY 1, 2
+        HAVING count(*) >= {REPEAT_MIN_CONTACTS}
+"""
 
 
 def degrees(edges: DataFrame) -> DataFrame:
@@ -151,6 +229,47 @@ class ContactStats(NamedTuple):
     # the sorted distinct contacts when there are at most
     # BITMASK_MAX_CONTACTS of them, else None; bitmask needs them
     values: list | None
+
+
+def _contact(props: str | None) -> int | None:
+    """The contact of one ``props`` string, by the rule of
+    :func:`contact`."""
+    try:
+        return int(json.loads(props)["k"])
+    except (TypeError, ValueError, KeyError, OverflowError):
+        return None
+
+
+def contact_stats(events_path: str) -> ContactStats:
+    """Common-neighbor statistics of the edge list of the events
+    parquet at ``events_path``, from a driver-side pyarrow read (no
+    Spark job). The contact domain is the one edges_from_events sees
+    (``_contact``), for the counts and the values alike (the values
+    feed the bitmask index, and a contact missing from them fails the
+    query). Each distinct ``props`` string is parsed once."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    tbl = pq.read_table(events_path, columns=["user_id", "props"])
+    props = tbl["props"].combine_chunks().dictionary_encode()
+    contacts = [_contact(p) for p in props.dictionary.to_pylist()]
+    ct = pa.array(contacts, pa.int64()).take(props.indices)
+    pairs = (
+        pa.table({"u": tbl["user_id"], "ct": ct})
+        .filter(ct.is_valid())
+        .group_by(["u", "ct"])
+        .aggregate([])
+    )
+    deg = pairs.group_by("ct").aggregate([([], "count_all")])
+    d = deg["count_all"]
+    n = deg.num_rows
+    return ContactStats(
+        n,
+        pc.count_distinct(pairs["u"]).as_py(),
+        pc.sum(pc.multiply_checked(d, d)).as_py() or 0,
+        sorted(deg["ct"].to_pylist()) if n <= BITMASK_MAX_CONTACTS else None,
+    )
 
 
 def _pick_cn_strategy(n_contacts: int, n_users: int, sum_d2: int) -> str:
@@ -318,8 +437,6 @@ def node_triangles(und: DataFrame) -> DataFrame:
     O(√|E|), which the canonical a<b orientation approximates on
     id-random graphs. Returns (node, triangles).
     """
-    from frauddetection_spark.operators.caching import track_cache
-
     e1 = und.select(F.col("a").alias("x"), F.col("b").alias("y"))
     e2 = und.select(F.col("a").alias("y"), F.col("b").alias("z"))
     e3 = und.select(F.col("a").alias("x"), F.col("b").alias("z"))
@@ -338,8 +455,6 @@ def clustering_coefficients(edges: DataFrame) -> DataFrame:
     (deg(v)·(deg(v)−1)) over the undirected graph (reference:
     nx.clustering(net, id), data_process.py:147-148). Exact integer
     numerator/denominator; one final division."""
-    from frauddetection_spark.operators.caching import track_cache
-
     # und feeds both degree branches AND the three wedge-join sides —
     # persist it or the canonical edge derivation replays 5× (11
     # parquet scans in q_clustering_coeff's executed plan without it)

@@ -143,8 +143,6 @@ def salted_sum_count(
     Only algebraic aggregates recombine (sum/count/min/max); the
     caller supplies an exact-int cents column per the determinism
     policy. Returns (keys..., cents_sum, n)."""
-    from pyspark.sql import functions as F
-
     salted = df.withColumn("_salt", F.pmod(salt_col, F.lit(N_SALTS)))
     partial = salted.groupBy(*keys, "_salt").agg(
         F.sum(cents_col).alias("_s"), F.count("*").alias("_c")

@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from frauddetection_spark.operators.caching import track_cache
+from frauddetection_spark.operators.graph import SQL_CONTACT, contact
 from frauddetection_spark.plans.registry import register
 from frauddetection_spark.queries._util import (
     SQL_WEEK,
@@ -224,8 +225,6 @@ def q_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     cohort size needs no extra pass at all: every user is active in
     their own cohort week (cw = min w), so cohort_size IS n_active at
     week_offset 0 of the persisted (cohort × offset)-sized triangle."""
-    from frauddetection_spark.operators.caching import track_cache
-
     e = t(spark, sf_dir, "events")
     base = (
         e.select("user_id", F.date_trunc("week", "ts").alias("w")).distinct()
@@ -269,11 +268,10 @@ def q_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_running_distinct",
     oracle=f"""
     WITH c AS (
-        SELECT user_id,
-               CAST(json_extract_string(props, '$.k') AS BIGINT) AS contact,
+        SELECT user_id, {SQL_CONTACT} AS contact,
                {SQL_WEEK.format(ts="ts")} AS week
         FROM events
-        WHERE json_extract_string(props, '$.k') IS NOT NULL
+        WHERE {SQL_CONTACT} IS NOT NULL
     ),
     firsts AS (
         SELECT user_id, contact, min(week) AS week FROM c GROUP BY 1, 2
@@ -304,7 +302,7 @@ def q_running_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = t(spark, sf_dir, "events")
     c = e.select(
         "user_id",
-        F.get_json_object("props", "$.k").cast("bigint").alias("contact"),
+        contact().alias("contact"),
         week_str().alias("week"),
     ).filter(F.col("contact").isNotNull())
     firsts = c.groupBy("user_id", "contact").agg(F.min("week").alias("week"))
@@ -1244,8 +1242,6 @@ def q_fuzzy_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     stage is constant-size while the scan stays one linear pass.
     Both engines implement standard unit-cost Levenshtein, so the
     histogram hash-matches."""
-    from frauddetection_spark.operators.caching import track_cache
-
     p = t(spark, sf_dir, "part").select("p_brand", "p_size", "p_name")
     # distinct-name domain with multiplicities; referenced three times
     # (both join sides + the same-name leg) — persist the tiny frame
@@ -1712,7 +1708,6 @@ def q_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     window (group-bounded — never global), argmax is a second tiny
     window over n_days-1 candidate rows per user."""
     e = t(spark, sf_dir, "events")
-    from pyspark.sql import Window
 
     daily = e.groupBy(
         "user_id",
@@ -2065,8 +2060,6 @@ def q_theilsen(spark: SparkSession, sf_dir: str) -> DataFrame:
     picked by row_number over the total order (slope_q, di, dj), so
     no two-middle averaging and no float rank. A user needs ≥ 2
     active days to emit a row."""
-    from frauddetection_spark.operators.caching import track_cache
-
     # Persist the daily rollup: it feeds both pair sides AND the
     # n_days count — unpersisted, the events scan + rollup shuffle
     # replay 3× per execution. Per-(user, calendar-day) rows: bounded

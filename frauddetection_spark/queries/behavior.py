@@ -19,6 +19,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from frauddetection_spark.operators.caching import track_cache
+from frauddetection_spark.operators.graph import (
+    SQL_EDGES,
+    edges_from_events,
+    simple_graph,
+    sql_simple_graph,
+)
 from frauddetection_spark.plans.registry import register
 from frauddetection_spark.queries._util import SQL_WEEK, cents, t, week_str
 
@@ -197,20 +204,9 @@ def q_lorenz_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_assortativity",
-    oracle="""
-    WITH dir AS (
-        SELECT DISTINCT user_id AS src,
-               CAST(json_extract_string(props, '$.k') AS BIGINT) AS dst
-        FROM events
-        WHERE json_extract_string(props, '$.k') IS NOT NULL
-    ),
-    und AS (
-        SELECT DISTINCT src, dst FROM (
-            SELECT src, dst FROM dir WHERE src <> dst
-            UNION ALL
-            SELECT dst, src FROM dir WHERE src <> dst
-        )
-    ),
+    oracle=f"""
+    WITH dir AS ({SQL_EDGES}),
+    und AS ({sql_simple_graph("dir")}),
     deg AS (SELECT src AS node, count(*) AS d FROM und GROUP BY 1),
     xy AS (
         SELECT da.d AS x, db.d AS y
@@ -243,21 +239,11 @@ def q_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     sufficient statistics in decimal/HUGEINT; same bit-equal corr
     expression as q_corr_pairs. Scale: degrees are one aggregate,
     endpoint join is two key-partitioned joins on the edge list."""
-    from frauddetection_spark.operators.graph import (
-        edges_from_events,
-        mirror,
-    )
-
-    from frauddetection_spark.operators.caching import track_cache
-
-    e = edges_from_events(t(spark, sf_dir, "events"))
-    no_self = e.filter(F.col("src") != F.col("dst"))
     # und feeds the degree table AND the endpoint join, deg both
     # endpoint probes — persist or the edge derivation replays per
     # reference (measured: 6 parquet scans without the persists)
     und = track_cache(
-        mirror(no_self)
-        .persist()
+        simple_graph(edges_from_events(t(spark, sf_dir, "events"))).persist()
     )
     deg = track_cache(
         und.groupBy(F.col("src").alias("node"))
@@ -325,23 +311,23 @@ def q_lateral_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the lateral ORDER BY/LIMIT into a joined window plan (no per-user
     re-execution), which is exactly the rewrite a 100-TB engine must
     do; the query pins that the surface EXISTS and that both engines'
-    decorrelation agrees. Identical SQL text runs on both engines."""
-    from frauddetection_spark.sources.tables import load_table
-
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
+    decorrelation agrees. The twin's SQL text runs on Spark with the
+    events frame passed as a ``spark.sql`` argument, which leaves the
+    session's ``events`` view alone."""
     return spark.sql(
         """
         SELECT u.user_id, s.event_id, s.amt_cents
-        FROM (SELECT DISTINCT user_id FROM events) u,
+        FROM (SELECT DISTINCT user_id FROM {events}) u,
         LATERAL (
             SELECT event_id,
                    CAST(round(value * 100) AS BIGINT) AS amt_cents
-            FROM events e
+            FROM {events} e
             WHERE e.user_id = u.user_id
             ORDER BY amt_cents DESC, event_id
             LIMIT 2
         ) s
-        """
+        """,
+        events=t(spark, sf_dir, "events"),
     )
 
 
@@ -1167,8 +1153,6 @@ def q_growth_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     the self-anti-join "no activity tomorrow" (LEFT ANTI on the
     (user, day+1) key — the NOT EXISTS decorrelation). Two shuffles on
     user, one on (day, status), at any scale."""
-    from frauddetection_spark.operators.caching import track_cache
-
     # feeds the window-marked frame AND the churn anti-join probe —
     # persisted so the scan+distinct runs once
     ud = track_cache(
@@ -1259,8 +1243,6 @@ def q_rolling_dau(spark: SparkSession, sf_dir: str) -> DataFrame:
     never a range self-join of the raw events. The oracle states the
     same semantics as the range join DuckDB optimizes natively.
     Stickiness is one int/int IEEE division."""
-    from frauddetection_spark.operators.caching import track_cache
-
     # ud feeds the DAU aggregate AND the 7-day fan-out, days feeds the
     # anchor semi join AND the final join — persisted, or the
     # scan+distinct replays per reference (executed plan: 3 full
@@ -1869,10 +1851,6 @@ def q_attribution_markov(spark: SparkSession, sf_dir: str) -> DataFrame:
     the one window exchange (the touchless branch reuses the same
     pinned frame: users whose touch_cnt is 0 emit START→outcome from
     their rn_all=1 row)."""
-    from pyspark.sql import Window
-
-    from frauddetection_spark.operators.caching import track_cache
-
     e = t(spark, sf_dir, "events").filter(
         F.col("event_type").isin("view", "click", "signup", "purchase")
     ).select(
@@ -2025,8 +2003,6 @@ def q_chain_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact int cents; each factor is one double division of two exact
     ints. Scale: the triangle is a two-key aggregate (|cohorts|·|ages|
     rows — tiny), cumulation is a cohort-bounded window."""
-    from pyspark.sql import Window
-
     e = t(spark, sf_dir, "events").select(
         "user_id",
         F.expr("unix_micros(ts) div 604800000000").alias("week"),
@@ -2162,8 +2138,6 @@ def q_attribution_shapley(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer arithmetic on one row; /6e9 is the only float. Exact
     Shapley is 2ⁿ by nature — n>10 channels wants sampled
     permutations, a different operator."""
-    from frauddetection_spark.operators.caching import track_cache
-
     e = t(spark, sf_dir, "events").select(
         "user_id", "event_type", F.unix_micros("ts").alias("us")
     )

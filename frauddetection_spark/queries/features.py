@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from frauddetection_spark.operators.graph import SQL_CONTACT, contact
 from frauddetection_spark.operators.rank import prefix_rank
 from frauddetection_spark.plans.registry import register
 from frauddetection_spark.queries._util import SQL_WEEK, cents, t, week_str
@@ -28,10 +29,6 @@ _WEEK = SQL_WEEK.format(ts="ts")
 
 def _events_with_week(spark: SparkSession, sf_dir: str) -> DataFrame:
     return t(spark, sf_dir, "events").withColumn("week", week_str())
-
-
-def _counterparty(df: DataFrame) -> DataFrame:
-    return df.withColumn("k", F.get_json_object("props", "$.k").cast("bigint"))
 
 
 # ---------------------------------------------------------------------------
@@ -193,9 +190,9 @@ def q_histogram_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_share_dispersion",
-    oracle="""
+    oracle=f"""
     WITH per_cp AS (
-        SELECT user_id, CAST(json_extract_string(props,'$.k') AS BIGINT) AS k,
+        SELECT user_id, {SQL_CONTACT} AS k,
                count(*) AS n_cp
         FROM events GROUP BY user_id, k
     ),
@@ -226,7 +223,7 @@ def q_share_dispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dispersion reduces to exact integers: var = (Σn_cp²/n_total² −
     # 1/n)/n — no float sums anywhere, and no window pass (one fewer
     # shuffle than the share-materializing form).
-    e = _counterparty(t(spark, sf_dir, "events"))
+    e = t(spark, sf_dir, "events").withColumn("k", contact())
     per_cp = e.groupBy("user_id", "k").agg(F.count("*").alias("n_cp"))
     agg = per_cp.groupBy("user_id").agg(
         F.sum("n_cp").cast("bigint").alias("n_total"),
@@ -302,7 +299,7 @@ def q_lag_gap(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH pairs AS (
         SELECT DISTINCT user_id, {_WEEK} AS week,
-               CAST(json_extract_string(props,'$.k') AS BIGINT) AS k
+               {SQL_CONTACT} AS k
         FROM events
     ), sets AS (
         SELECT user_id, week,
@@ -335,7 +332,7 @@ def q_jaccard_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     skips it; the twin filters it), so a week of null ``props`` has
     ``n_contacts`` 0, and ``jaccard`` is NULL when the union is
     empty."""
-    e = _counterparty(_events_with_week(spark, sf_dir))
+    e = _events_with_week(spark, sf_dir).withColumn("k", contact())
     sets = (
         e.select("user_id", "week", "k")
         .groupBy("user_id", "week")

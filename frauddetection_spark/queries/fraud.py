@@ -22,6 +22,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from frauddetection_spark.operators.caching import track_cache
+from frauddetection_spark.operators.graph import (
+    SQL_CONTACT,
+    SQL_REPEAT_CONTACTS,
+    contact,
+    repeat_contacts,
+)
 from frauddetection_spark.operators.rank import prefix_max, prefix_rank
 from frauddetection_spark.plans.registry import register
 from frauddetection_spark.queries._util import (
@@ -31,6 +38,7 @@ from frauddetection_spark.queries._util import (
     t,
     week_str,
 )
+from frauddetection_spark.queries.sampling import ERROR_THRESHOLD
 
 # double-swipe window (same (user, amount) pair within 10 minutes)
 SWIPE_GAP_US = 600 * 1_000_000
@@ -157,8 +165,6 @@ def q_rfm(spark: SparkSession, sf_dir: str) -> DataFrame:
     in both engines so bucket assignment is deterministic. Scale: the
     ranked relation is the per-customer aggregate (|customers| rows,
     not |orders|), and each pass is one range shuffle of it."""
-    from frauddetection_spark.operators.caching import track_cache
-
     o = t(spark, sf_dir, "orders")
     # po feeds the global-max ref AND the scored relation — persist it
     # or the orders scan + per-customer agg runs twice
@@ -688,8 +694,6 @@ def q_linear_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction (spine spans [min_h, max_h]). Scale: spine length is
     bounded by the time span, not row count; everything shuffles once
     on user_id."""
-    from frauddetection_spark.operators.caching import track_cache
-
     e = t(spark, sf_dir, "events")
     # (user x hour)-sized; feeds the bounds AND the spine join —
     # persisted so the events aggregate runs once
@@ -1396,7 +1400,6 @@ def q_peer_outlier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     w_rank = Window.partitionBy("peer_group").orderBy("x", "user_id")
     w_n = Window.partitionBy("peer_group")
-    from frauddetection_spark.operators.caching import track_cache
 
     # m feeds the median probe AND the deviation frame, dev the MAD
     # probe AND the final filter — persist both or the spend/dominant
@@ -1464,14 +1467,12 @@ _RT_MAX_NET_PCT = 20  # flag pairs whose net is <= this % of gross
     "q_reciprocal_flows",
     oracle=f"""
     WITH flows AS (
-        SELECT user_id AS src,
-               CAST(json_extract_string(props, '$.k') AS BIGINT) AS dst,
+        SELECT user_id AS src, {SQL_CONTACT} AS dst,
                CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
                    AS amt,
                count(*) AS n
         FROM events
-        WHERE json_extract_string(props, '$.k') IS NOT NULL
-          AND user_id <> CAST(json_extract_string(props, '$.k') AS BIGINT)
+        WHERE {SQL_CONTACT} IS NOT NULL AND user_id <> {SQL_CONTACT}
         GROUP BY 1, 2
     ),
     pairs AS (
@@ -1504,13 +1505,11 @@ def q_reciprocal_flows(spark: SparkSession, sf_dir: str) -> DataFrame:
     subtrees, so an unpersisted flow table replays the events scan +
     JSON parse + aggregate per side (zero ReusedExchange in the
     executed plan)."""
-    from frauddetection_spark.operators.caching import track_cache
-
     flows = track_cache(
         t(spark, sf_dir, "events")
         .select(
             F.col("user_id").alias("src"),
-            F.get_json_object("props", "$.k").cast("bigint").alias("dst"),
+            contact().alias("dst"),
             cents("value").alias("c"),
         )
         .filter(F.col("dst").isNotNull() & (F.col("src") != F.col("dst")))
@@ -1571,14 +1570,14 @@ _MULE_MIN_PASS_PCT = 60      # passthrough = min(in,out)/max(in,out) >= 60%
                0 AS is_in,
                CAST(round(value * 100) AS BIGINT) AS c
         FROM events
-        WHERE json_extract_string(props, '$.k') IS NOT NULL
+        WHERE {SQL_CONTACT} IS NOT NULL
         UNION ALL
-        SELECT CAST(json_extract_string(props, '$.k') AS BIGINT) AS node,
+        SELECT {SQL_CONTACT} AS node,
                CAST(epoch_us(ts) // 86400000000 AS BIGINT) AS day,
                1 AS is_in,
                CAST(round(value * 100) AS BIGINT) AS c
         FROM events
-        WHERE json_extract_string(props, '$.k') IS NOT NULL
+        WHERE {SQL_CONTACT} IS NOT NULL
     ),
     daily AS (
         SELECT node, day,
@@ -1610,7 +1609,7 @@ def q_mule_passthrough(spark: SparkSession, sf_dir: str) -> DataFrame:
     is display-only."""
     base = t(spark, sf_dir, "events").select(
         "user_id",
-        F.get_json_object("props", "$.k").cast("bigint").alias("k"),
+        contact().alias("k"),
         F.expr("unix_micros(ts) div 86400000000").cast("bigint").alias(
             "day"
         ),
@@ -1666,13 +1665,11 @@ _TAINT_HOPS = 2
 def _taint_sql() -> str:
     sql = f"""
     WITH flows AS (
-        SELECT user_id AS src,
-               CAST(json_extract_string(props, '$.k') AS BIGINT) AS dst,
+        SELECT user_id AS src, {SQL_CONTACT} AS dst,
                CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT)
                    AS amt
         FROM events
-        WHERE json_extract_string(props, '$.k') IS NOT NULL
-          AND user_id <> CAST(json_extract_string(props, '$.k') AS BIGINT)
+        WHERE {SQL_CONTACT} IS NOT NULL AND user_id <> {SQL_CONTACT}
         GROUP BY 1, 2
     ),
     outs AS (
@@ -1722,13 +1719,11 @@ def q_taint_tracing(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregated flow table + one receiver groupBy — PPR's shape with
     amount weights instead of uniform ones; frontier stays
     seed-neighborhood-sized."""
-    from frauddetection_spark.operators.caching import track_cache
-
     flows = track_cache(
         t(spark, sf_dir, "events")
         .select(
             F.col("user_id").alias("src"),
-            F.get_json_object("props", "$.k").cast("bigint").alias("dst"),
+            contact().alias("dst"),
             cents("value").alias("c"),
         )
         .filter(F.col("dst").isNotNull() & (F.col("src") != F.col("dst")))
@@ -1969,13 +1964,12 @@ def q_circular_hours(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_edge_novelty",
-    oracle="""
+    oracle=f"""
     WITH ew AS (
-        SELECT DISTINCT user_id AS src,
-               CAST(json_extract_string(props, '$.k') AS BIGINT) AS dst,
+        SELECT DISTINCT user_id AS src, {SQL_CONTACT} AS dst,
                epoch_us(ts) // 604800000000 AS week
         FROM events
-        WHERE json_extract_string(props, '$.k') IS NOT NULL
+        WHERE {SQL_CONTACT} IS NOT NULL
     ),
     first_seen AS (
         SELECT src, dst, min(week) AS first_week FROM ew GROUP BY 1, 2
@@ -2008,7 +2002,7 @@ def q_edge_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     ew = (
         e.select(
             F.col("user_id").alias("src"),
-            F.get_json_object("props", "$.k").cast("bigint").alias("dst"),
+            contact().alias("dst"),
             F.expr("cast(unix_micros(ts) div 1000000 as bigint) div 604800").alias(
                 "week"
             ),
@@ -2109,8 +2103,6 @@ def q_seasonal_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     never engine-localized hour()). Scale: the slotted aggregate is
     one partial-aggregated groupBy down to |types|·24·|weeks| rows —
     everything after operates on that constant-ish frame."""
-    from pyspark.sql import Window
-
     e = t(spark, sf_dir, "events")
     slotted = e.groupBy(
         "event_type",
@@ -2161,7 +2153,6 @@ def q_seasonal_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _fraud_funnel_oracle() -> str:
     from frauddetection_spark.operators.sampling import sql_portable_split
-    from frauddetection_spark.queries.sampling import ERROR_THRESHOLD
 
     return f"""
     WITH per AS (
@@ -2170,18 +2161,10 @@ def _fraud_funnel_oracle() -> str:
                     AS BIGINT) AS n_err
         FROM events GROUP BY 1
     ),
-    edges0 AS (
-        SELECT user_id AS src,
-               CAST(json_extract_string(props, '$.k') AS BIGINT) AS dst
-        FROM events
-        WHERE json_extract_string(props, '$.k') IS NOT NULL
-        GROUP BY 1, 2 HAVING count(*) >= 3
-    ),
+    edges0 AS ({SQL_REPEAT_CONTACTS}),
     nodes AS (
         SELECT DISTINCT u FROM (
-            SELECT src AS u FROM edges0 WHERE src <> dst
-            UNION ALL
-            SELECT dst FROM edges0 WHERE src <> dst
+            SELECT src AS u FROM edges0 UNION ALL SELECT dst FROM edges0
         )
     ),
     f AS (
@@ -2220,8 +2203,8 @@ def q_fraud_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     `new_train_1.py:79-117`) composed into one declarative funnel:
     users → featured (≥60 events — a real minimum-activity gate that
     binds at every sf, cf. the reference's per-user aggregation window)
-    → connected (present in the repeat-contact graph — the SAME ≥3-
-    contacts sparsification as q_label_propagation) → train (the
+    → connected (present in the repeat-contact graph — the SAME
+    repeat_contacts sparsification as q_label_propagation) → train (the
     portable 80% hash split of q_split_stratified) → train positives
     (the ≥ERROR_THRESHOLD-error label rule the MLlib pipeline trains on).
     Stages are nested by construction so the funnel is monotone; the
@@ -2232,7 +2215,6 @@ def q_fraud_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the five counters come from a single 1-row aggregate exploded
     to rows — no repeated scans, no driver loop."""
     from frauddetection_spark.operators.sampling import portable_split
-    from frauddetection_spark.queries.sampling import ERROR_THRESHOLD
 
     ev = t(spark, sf_dir, "events")
     per = ev.groupBy("user_id").agg(
@@ -2241,16 +2223,7 @@ def q_fraud_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("n_err"),
     )
-    rep = (
-        ev.select(
-            F.col("user_id").alias("src"),
-            F.get_json_object("props", "$.k").cast("bigint").alias("dst"),
-        )
-        .filter(F.col("dst").isNotNull())
-        .groupBy("src", "dst")
-        .agg(F.count("*").alias("w"))
-        .filter((F.col("w") >= 3) & (F.col("src") != F.col("dst")))
-    )
+    rep = repeat_contacts(ev)
     # explode-scatter, not a two-branch union: both endpoints come out
     # of ONE reference to rep, so the scan+JSON+weight-agg lineage is
     # evaluated once (a union form replays it per branch)

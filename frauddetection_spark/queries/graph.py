@@ -4,39 +4,38 @@ aggregates) over the canonical events-derived edge list
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from frauddetection_spark.operators.caching import track_cache
 from frauddetection_spark.operators.graph import (
-    BITMASK_MAX_CONTACTS,
     PR_BASE,
     PR_DAMPING_PCT,
     PR_ITERATIONS,
     PR_SCALE,
-    ContactStats,
+    SQL_CONTACT,
+    SQL_EDGES,
+    SQL_REPEAT_CONTACTS,
     pagerank_integer,
     aggregate_messages,
     clustering_coefficients,
     connected_components,
     common_neighbor_pairs,
+    contact,
+    contact_stats,
     degrees,
     edges_from_events,
     mirror,
+    repeat_contacts,
+    simple_graph,
+    sql_mirror,
+    sql_simple_graph,
 )
 from frauddetection_spark.plans.registry import register
 from frauddetection_spark.queries._util import t
 from frauddetection_spark.sources import catalog
-
-# DuckDB twin of edges_from_events
-_SQL_EDGES = """
-        SELECT DISTINCT user_id AS src,
-               CAST(json_extract_string(props, '$.k') AS BIGINT) AS dst
-        FROM events
-        WHERE json_extract_string(props, '$.k') IS NOT NULL
-"""
 
 
 # ---------------------------------------------------------------------------
@@ -47,7 +46,7 @@ _SQL_EDGES = """
 @register(
     "q_graph_degrees",
     oracle=f"""
-    WITH edges AS ({_SQL_EDGES}),
+    WITH edges AS ({SQL_EDGES}),
     sides AS (
         SELECT src AS node, 1 AS is_out FROM edges
         UNION ALL
@@ -76,7 +75,7 @@ def q_graph_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_join_common_neighbor",
     oracle=f"""
-    WITH c AS ({_SQL_EDGES})
+    WITH c AS ({SQL_EDGES})
     SELECT a.src AS user_a, b.src AS user_b, count(*) AS n_common
     FROM c a JOIN c b ON a.dst = b.dst AND a.src < b.src
     GROUP BY a.src, b.src
@@ -102,49 +101,8 @@ def q_join_common_neighbor(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = os.path.join(sf_dir, "events.parquet")
     e = edges_from_events(t(spark, sf_dir, "events"))
     contacts = e.select(F.col("src").alias("user"), F.col("dst").alias("contact"))
-    stats = catalog.stats(path, "contact_stats", lambda: _contact_stats(path))
+    stats = catalog.stats(path, "contact_stats", lambda: contact_stats(path))
     return common_neighbor_pairs(contacts, min_common=5, stats=stats)
-
-
-def _contact(props: str | None) -> int | None:
-    """The contact of one ``props`` string, by Spark's rule in
-    edges_from_events: ``int(k)``; a null, missing or unparseable
-    entry is no contact."""
-    try:
-        return int(json.loads(props)["k"])
-    except (TypeError, ValueError, KeyError, OverflowError):
-        return None
-
-
-def _contact_stats(events_path: str) -> ContactStats:
-    """Common-neighbor statistics of the events edge list. The contact
-    domain is the one Spark's edges_from_events sees (``_contact``),
-    for the counts and the values alike (the values feed the bitmask
-    index, and a contact missing from them fails the query). Each
-    distinct ``props`` string is parsed once."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    tbl = pq.read_table(events_path, columns=["user_id", "props"])
-    props = tbl["props"].combine_chunks().dictionary_encode()
-    contacts = [_contact(p) for p in props.dictionary.to_pylist()]
-    ct = pa.array(contacts, pa.int64()).take(props.indices)
-    pairs = (
-        pa.table({"u": tbl["user_id"], "ct": ct})
-        .filter(ct.is_valid())
-        .group_by(["u", "ct"])
-        .aggregate([])
-    )
-    deg = pairs.group_by("ct").aggregate([([], "count_all")])
-    d = deg["count_all"]
-    n = deg.num_rows
-    return ContactStats(
-        n,
-        pc.count_distinct(pairs["u"]).as_py(),
-        pc.sum(pc.multiply_checked(d, d)).as_py() or 0,
-        sorted(deg["ct"].to_pylist()) if n <= BITMASK_MAX_CONTACTS else None,
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -155,7 +113,7 @@ def _contact_stats(events_path: str) -> ContactStats:
 @register(
     "q_graph_aggregate",
     oracle=f"""
-    WITH edges AS ({_SQL_EDGES}),
+    WITH edges AS ({SQL_EDGES}),
     node_vals AS (
         SELECT user_id AS id,
                CAST(round(CAST(sum(CAST(round(value * 100) AS BIGINT))
@@ -211,12 +169,8 @@ def q_graph_aggregate(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_neighbor_avg_degree",
     oracle=f"""
-    WITH edges AS ({_SQL_EDGES}),
-    und AS (
-        SELECT src, dst FROM edges
-        UNION
-        SELECT dst AS src, src AS dst FROM edges
-    ),
+    WITH edges AS ({SQL_EDGES}),
+    und AS ({sql_mirror("edges")}),
     deg AS (SELECT src AS node, count(*) AS degree FROM und GROUP BY src)
     SELECT u.src AS node,
            CAST(sum(d.degree) AS DOUBLE) / count(*) AS neighbor_avg_degree,
@@ -252,7 +206,7 @@ def q_neighbor_avg_degree(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_propagate_2round",
     oracle=f"""
-    WITH edges AS ({_SQL_EDGES}),
+    WITH edges AS ({SQL_EDGES}),
     vals AS (
         SELECT user_id AS id,
                CAST(round(CAST(sum(CAST(round(value * 100) AS BIGINT))
@@ -333,7 +287,7 @@ def q_propagate_2round(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_clustering_coeff",
     oracle=f"""
-    WITH edges AS ({_SQL_EDGES}),
+    WITH edges AS ({SQL_EDGES}),
     und AS (
         SELECT least(src, dst) AS a, greatest(src, dst) AS b
         FROM edges WHERE src != dst GROUP BY 1, 2
@@ -388,13 +342,12 @@ def q_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_graph_aggregate_weighted",
     oracle=f"""
     WITH pair_events AS (
-        SELECT user_id AS src,
-               CAST(json_extract_string(props, '$.k') AS BIGINT) AS dst,
+        SELECT user_id AS src, {SQL_CONTACT} AS dst,
                sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
                    AS n_purchase,
                count(*) AS n
         FROM events
-        WHERE json_extract_string(props, '$.k') IS NOT NULL
+        WHERE {SQL_CONTACT} IS NOT NULL
         GROUP BY 1, 2
     ),
     weighted_edges AS (
@@ -429,11 +382,8 @@ def q_graph_aggregate_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the edge list."""
     events = t(spark, sf_dir, "events")
     pair = (
-        events.filter(F.get_json_object("props", "$.k").isNotNull())
-        .groupBy(
-            F.col("user_id").alias("src"),
-            F.get_json_object("props", "$.k").cast("bigint").alias("dst"),
-        )
+        events.filter(contact().isNotNull())
+        .groupBy(F.col("user_id").alias("src"), contact().alias("dst"))
         .agg(
             F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0)).alias(
                 "n_purchase"
@@ -479,12 +429,8 @@ def q_graph_aggregate_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_connected_components",
     oracle=f"""
-    WITH RECURSIVE edges AS ({_SQL_EDGES}),
-    und AS (
-        SELECT src, dst FROM edges
-        UNION
-        SELECT dst, src FROM edges
-    ),
+    WITH RECURSIVE edges AS ({SQL_EDGES}),
+    und AS ({sql_mirror("edges")}),
     nodes AS (
         SELECT DISTINCT src AS node FROM und
         UNION
@@ -524,7 +470,7 @@ def _pagerank_oracle() -> str:
     unrolled to PR_ITERATIONS rounds as chained CTEs (DuckDB // == Spark
     div on non-negative int64)."""
     sql = f"""
-    WITH edges AS ({_SQL_EDGES}),
+    WITH edges AS ({SQL_EDGES}),
     nodes AS (
         SELECT DISTINCT node FROM (
             SELECT src AS node FROM edges
@@ -577,12 +523,8 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_graph_triangles",
     oracle=f"""
-    WITH e AS ({_SQL_EDGES}),
-    und AS (
-        SELECT src, dst FROM e WHERE src != dst
-        UNION
-        SELECT dst, src FROM e WHERE src != dst
-    ),
+    WITH e AS ({SQL_EDGES}),
+    und AS ({sql_simple_graph("e")}),
     ori AS (SELECT src, dst FROM und WHERE src < dst),
     tri AS (
         SELECT count(*) AS n_triangles
@@ -613,19 +555,14 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     the standard trick that keeps triangle counting feasible on
     power-law graphs. The count is orientation-invariant, so the
     oracle's simpler id-ordered SQL produces the identical number."""
-    from frauddetection_spark.operators.graph import mirror
-
-    from frauddetection_spark.operators.caching import track_cache
-
-    e = edges_from_events(t(spark, sf_dir, "events")).filter(
-        F.col("src") != F.col("dst")
-    )
     # und feeds the degree table + the orientation join, deg is probed
     # 3× and ori 3× (both wedge sides + the closing edge) — persist
     # them or the edge derivation replays per reference (20 parquet
     # scans / 48 exchanges in the executed plan without them; the
     # replay, not the wedge join, is the cost that grows with data).
-    und = track_cache(mirror(e).persist())
+    und = track_cache(
+        simple_graph(edges_from_events(t(spark, sf_dir, "events"))).persist()
+    )
     deg = track_cache(
         und.groupBy("src")
         .agg(F.count("*").alias("d"))
@@ -689,12 +626,8 @@ BFS_HOPS = 3
 @register(
     "q_bfs_levels",
     oracle=f"""
-    WITH e AS ({_SQL_EDGES}),
-    und AS (
-        SELECT src, dst FROM e
-        UNION
-        SELECT dst, src FROM e
-    ),
+    WITH e AS ({SQL_EDGES}),
+    und AS ({sql_mirror("e")}),
     l0 AS (
         SELECT DISTINCT src AS node FROM und WHERE src % {BFS_SEED_MOD} = 0
     ),
@@ -731,10 +664,6 @@ def q_bfs_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle carries node ids, not paths; min(level) resolves
     multi-path reach. At 100 TB this is K co-partitioned joins on the
     edge key."""
-    from frauddetection_spark.operators.graph import mirror
-
-    from frauddetection_spark.operators.caching import track_cache
-
     e = edges_from_events(t(spark, sf_dir, "events"))
     # und is probed once per hop plus the seed filter, and each
     # level's lineage chains every earlier hop — without persists the
@@ -779,14 +708,8 @@ def _kcore_sql() -> str:
     over the undirected self-loop-free edge set (same unroll discipline
     as the PageRank oracle)."""
     sql = f"""
-    WITH dir AS ({_SQL_EDGES}),
-    e0 AS (
-        SELECT DISTINCT src, dst FROM (
-            SELECT src, dst FROM dir WHERE src <> dst
-            UNION ALL
-            SELECT dst AS src, src AS dst FROM dir WHERE src <> dst
-        )
-    )"""
+    WITH dir AS ({SQL_EDGES}),
+    e0 AS ({sql_simple_graph("dir")})"""
     for i in range(KCORE_PEELS):
         sql += f""",
     d{i} AS (SELECT src, count(*) AS d FROM e{i} GROUP BY 1),
@@ -833,11 +756,7 @@ def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     the unsafe-row buffer; if hub skew ever dominated a deployment,
     the earlier degree-aggregate + AQE-skew-splittable semi-join shape
     is the drop-in fallback — same oracle, one persist per round."""
-    e = edges_from_events(t(spark, sf_dir, "events"))
-    no_self = e.filter(F.col("src") != F.col("dst"))
-    und = (
-        mirror(no_self)
-    )
+    und = simple_graph(edges_from_events(t(spark, sf_dir, "events")))
     w_src = Window.partitionBy("src")
     w_dst = Window.partitionBy("dst")
     # (guide §2.4 "two operations keyed the same way share one
@@ -882,7 +801,7 @@ def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_hits",
     oracle=f"""
-    WITH e AS ({_SQL_EDGES}),
+    WITH e AS ({SQL_EDGES}),
     h1 AS (SELECT src, count(*) AS h FROM e GROUP BY 1),
     a2 AS (
         SELECT e.dst AS node, CAST(sum(h1.h) AS BIGINT) AS auth
@@ -920,8 +839,6 @@ def q_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     key-partitioned join + aggregate on the edge list (the same
     gather/scatter shape as q_propagate_2round); max comes from a
     broadcast single-row aggregate, never a global window."""
-    from frauddetection_spark.operators.caching import track_cache
-
     # persisted (the q_graph_jaccard und precedent): the edge build
     # ends in a distinct SHUFFLE and feeds h1, the a2 join and the h3
     # join — unpersisted, that shuffle replays up to three times
@@ -980,14 +897,8 @@ def q_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_graph_jaccard",
     oracle=f"""
-    WITH dir AS ({_SQL_EDGES}),
-    und AS (
-        SELECT DISTINCT src, dst FROM (
-            SELECT src, dst FROM dir WHERE src <> dst
-            UNION ALL
-            SELECT dst, src FROM dir WHERE src <> dst
-        )
-    ),
+    WITH dir AS ({SQL_EDGES}),
+    und AS ({sql_simple_graph("dir")}),
     deg AS (SELECT src AS node, count(*) AS d FROM und GROUP BY 1),
     pairs AS (
         SELECT a.src AS u, b.src AS v, count(*) AS cn
@@ -1025,18 +936,13 @@ def q_graph_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     (same semantics; DuckDB's hash joins handle the small-sf sizes),
     pinning that both formulations agree. Jaccard is one exact-int
     division cn/(dᵤ+dᵥ−cn) per surviving edge."""
-    from frauddetection_spark.operators.caching import track_cache
-
-    e = edges_from_events(t(spark, sf_dir, "events"))
-    no_self = e.filter(F.col("src") != F.col("dst"))
     # und feeds deg + the orientation join, deg is probed 4× and ori
     # 3× (both wedge sides + the closing edge) — without persists the
     # whole edge derivation replays per reference (executed plan: 22
     # parquet scans, 53 exchanges, zero reuse without the three
     # persists).
     und = track_cache(
-        mirror(no_self)
-        .persist()
+        simple_graph(edges_from_events(t(spark, sf_dir, "events"))).persist()
     )
     deg = track_cache(
         und.groupBy(F.col("src").alias("node"))
@@ -1111,14 +1017,8 @@ _AA_MAX_CENTER_DEG = 128  # hub-center prune: wedges through hubs excluded
 @register(
     "q_adamic_adar",
     oracle=f"""
-    WITH dir AS ({_SQL_EDGES}),
-    und AS (
-        SELECT DISTINCT src, dst FROM (
-            SELECT src, dst FROM dir WHERE src <> dst
-            UNION ALL
-            SELECT dst, src FROM dir WHERE src <> dst
-        )
-    ),
+    WITH dir AS ({SQL_EDGES}),
+    und AS ({sql_simple_graph("dir")}),
     deg AS (SELECT src AS node, count(*) AS d FROM und GROUP BY 1),
     centers AS (
         SELECT node, d FROM deg WHERE d <= {_AA_MAX_CENTER_DEG}
@@ -1165,17 +1065,12 @@ def q_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     results are the exact uncapped scores). The capped degree joins
     INTO the edge list first, so each wedge row carries its center
     degree and no post-join weighting pass touches the wedge set."""
-    from frauddetection_spark.operators.caching import track_cache
-
-    e = edges_from_events(t(spark, sf_dir, "events"))
-    no_self = e.filter(F.col("src") != F.col("dst"))
     # und is probed 3× (degrees, capped-edge join, final anti join)
     # and cedge 2× (both wedge sides) — persist both or the edge
     # derivation replays per reference (executed plan: 10
     # parquet scans, 23 exchanges, zero reuse without the persists).
     und = track_cache(
-        mirror(no_self)
-        .persist()
+        simple_graph(edges_from_events(t(spark, sf_dir, "events"))).persist()
     )
     deg = und.groupBy(F.col("src").alias("node")).agg(F.count("*").alias("d"))
     centers = deg.filter(F.col("d") <= _AA_MAX_CENTER_DEG)
@@ -1225,7 +1120,7 @@ _TC_DEPTH = 3   # hop bound
 @register(
     "q_recursive_cte",
     oracle=f"""
-    WITH RECURSIVE edges AS ({_SQL_EDGES}),
+    WITH RECURSIVE edges AS ({SQL_EDGES}),
     r AS (
         SELECT src AS seed, dst AS node, 1 AS d
         FROM edges WHERE src < {_TC_SEEDS}
@@ -1254,38 +1149,32 @@ def q_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan note: Spark's recursive execution re-evaluates every
     non-recursive CTE it references PER ITERATION — with `edges` as a
     CTE the DISTINCT json-extract scan ran once per hop. The edge
-    list is therefore pre-materialized behind a cached temp view —
-    the same move a 100-TB closure makes: derive the edge relation once, iterate over the
-    materialization. The RECURSIVE body is textually identical to the
-    DuckDB twin; only the edges derivation moved out front."""
-    from frauddetection_spark.operators.caching import track_cache
-    from frauddetection_spark.sources.tables import load_table
-
-    edges = track_cache(
-        load_table(spark, sf_dir, "events")
-        .filter(F.get_json_object("props", "$.k").isNotNull())
-        .select(
-            F.col("user_id").alias("src"),
-            F.get_json_object("props", "$.k").cast("bigint").alias("dst"),
-        )
-        .distinct()
-        .persist()
-    )
-    edges.createOrReplaceTempView("edges_tc")
-    return spark.sql(
+    list is therefore a cached frame — the same move a 100-TB closure
+    makes: derive the edge relation once, iterate over the
+    materialization. It is passed as a ``spark.sql`` argument, whose
+    view lives only while the text is analyzed, so no session view is
+    replaced. The RECURSIVE body is textually identical to the DuckDB
+    twin; only the edges derivation moved out front."""
+    edges = edges_from_events(t(spark, sf_dir, "events"))
+    closure = spark.sql(
         f"""
         WITH RECURSIVE r AS (
             SELECT src AS seed, dst AS node, 1 AS d
-            FROM edges_tc WHERE src < {_TC_SEEDS}
+            FROM {{edges}} WHERE src < {_TC_SEEDS}
             UNION ALL
             SELECT r.seed, e.dst, r.d + 1
-            FROM r JOIN edges_tc e ON r.node = e.src
+            FROM r JOIN {{edges}} e ON r.node = e.src
             WHERE r.d < {_TC_DEPTH}
         )
         SELECT seed, node, CAST(min(d) AS BIGINT) AS min_depth
         FROM r GROUP BY seed, node
-        """
+        """,
+        edges=edges,
     )
+    # persisted after the call: dropping the argument's view uncaches
+    # its plan, and the closure picks the cache up when it is optimized
+    track_cache(edges.persist())
+    return closure
 
 
 # ---------------------------------------------------------------------------
@@ -1301,7 +1190,7 @@ _PPR_ITER = 2           # unrolled iterations (oracle = chained CTEs)
 def _ppr_sql() -> str:
     restart = f"(100 - {_PPR_D}) * {_PPR_SCALE} // 100"
     sql = f"""
-    WITH e AS ({_SQL_EDGES}),
+    WITH e AS ({SQL_EDGES}),
     nodes AS (
         SELECT DISTINCT src AS node FROM e
         UNION SELECT DISTINCT dst FROM e
@@ -1355,8 +1244,6 @@ def q_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
     not the node set — the locality that makes PPR the cheap variant;
     each round is one src-keyed join + one dst-keyed partial-agg sum
     against the static (edge ⋈ outdeg) build."""
-    from frauddetection_spark.operators.caching import track_cache
-
     # e is read 4× (both node-set branches + both sides of the outdeg
     # join), and nodes/eo are probed once per unrolled iteration —
     # persist all three or the edge derivation replays per reference
@@ -1418,7 +1305,7 @@ _CYC_MAX_PIVOT_DEG = 256  # hub pivots excluded from loop enumeration
     "q_money_loops",
     oracle=f"""
     WITH e AS (
-        SELECT DISTINCT src, dst FROM ({_SQL_EDGES}) WHERE src <> dst
+        SELECT DISTINCT src, dst FROM ({SQL_EDGES}) WHERE src <> dst
     ),
     deg AS (
         SELECT node, count(*) AS d FROM (
@@ -1455,8 +1342,6 @@ def q_money_loops(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_graph_degrees, not membership in 10⁶ incidental triangles —
     the q_adamic_adar capping policy). Below the cap the join is
     bounded by τ·|edges|."""
-    from frauddetection_spark.operators.caching import track_cache
-
     # e is read 3× (both union branches of the degree count + the
     # capped edge list) and ce 3× (the three cycle hops) — persist
     # both or the edge derivation replays per reference (15 parquet
@@ -1508,7 +1393,7 @@ _RW_B2 = 104_729    # step salt
 
 def _rw_sql() -> str:
     sql = f"""
-    WITH e AS ({_SQL_EDGES}),
+    WITH e AS ({SQL_EDGES}),
     ranked AS (
         SELECT src, dst,
                row_number() OVER (PARTITION BY src ORDER BY dst) - 1 AS rn,
@@ -1563,8 +1448,6 @@ def q_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash picks ONE neighbor after the join's deg fan-out collapses),
     no driver-side state, and the adjacency ranking is one partitioned
     window."""
-    from frauddetection_spark.operators.caching import track_cache
-
     e = edges_from_events(t(spark, sf_dir, "events"))
     w_rank = Window.partitionBy("src").orderBy("dst")
     w_deg = Window.partitionBy("src")
@@ -1630,19 +1513,8 @@ def q_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_label_propagation",
     oracle=f"""
-    WITH edges0 AS (
-        SELECT user_id AS src,
-               CAST(json_extract_string(props, '$.k') AS BIGINT) AS dst
-        FROM events
-        WHERE json_extract_string(props, '$.k') IS NOT NULL
-        GROUP BY 1, 2
-        HAVING count(*) >= 3
-    ),
-    und AS (
-        SELECT src, dst FROM edges0 WHERE src <> dst
-        UNION
-        SELECT dst AS src, src AS dst FROM edges0 WHERE src <> dst
-    ),
+    WITH edges0 AS ({SQL_REPEAT_CONTACTS}),
+    und AS ({sql_mirror("edges0")}),
     l0 AS (SELECT DISTINCT src AS node, src AS label FROM und),
     c1 AS (SELECT e.dst AS v, l.label, count(*) AS cnt
            FROM und e JOIN l0 l ON l.node = e.src GROUP BY 1, 2),
@@ -1686,31 +1558,15 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     loop, no collect), so lineage depth is constant; at 100 TB each
     round is the same edges⋈labels shuffle on src — linear in
     edges, the GraphX/Pregel cost shape. Edges are REPEAT contacts
-    (the same (user, counterparty) pair in ≥3 events): on the raw
-    distinct-contact graph the min-label tie-break cascades the
-    whole (dense) graph into ONE community in 3 rounds — hash-green
-    but meaningless; the ≥3 support threshold is the standard
-    ring-detection sparsification (a fraud ring talks repeatedly,
-    a marketplace touches once)."""
-    from frauddetection_spark.operators.graph import mirror
-
-    ev = t(spark, sf_dir, "events")
-    repeat = (
-        ev.select(
-            F.col("user_id").alias("src"),
-            F.get_json_object("props", "$.k").cast("bigint").alias("dst"),
-        )
-        .filter(F.col("dst").isNotNull())
-        .groupBy("src", "dst")
-        .agg(F.count("*").alias("w"))
-        .filter((F.col("w") >= 3) & (F.col("src") != F.col("dst")))
-        .select("src", "dst")
-    )
-    from frauddetection_spark.operators.caching import track_cache
-
+    (operators/graph.py::repeat_contacts): on the raw distinct-contact
+    graph the min-label tie-break cascades the whole (dense) graph
+    into ONE community in 3 rounds — hash-green but meaningless; the
+    support threshold is the standard ring-detection
+    sparsification."""
     # e is probed once per round plus the label init — persist it or
     # the json-extract + support-threshold derivation replays per
     # reference (8 parquet scans in the executed plan)
+    repeat = repeat_contacts(t(spark, sf_dir, "events"))
     e = track_cache(mirror(repeat).persist())
     labels = e.select(F.col("src").alias("node")).distinct().select(
         "node", F.col("node").alias("label")

@@ -7,7 +7,7 @@ relationally and verify them against DuckDB).
 
 Fixture model: a deterministic "classifier" on the events users —
 score = error_share = n_errors / n_events (exact int division), label
-= n_errors ≥ 15 (same as queries/sampling.py), prediction = score ≥
+= n_errors ≥ ERROR_THRESHOLD (queries/sampling.py), prediction = score ≥
 0.15. Score correlates with but does not determine the label, so the
 confusion matrix and AUC are non-degenerate.
 """
@@ -20,8 +20,8 @@ from pyspark.sql import functions as F
 from frauddetection_spark.operators.rank import auc_stats, prefix_rank
 from frauddetection_spark.plans.registry import register
 from frauddetection_spark.queries._util import t
+from frauddetection_spark.queries.sampling import ERROR_THRESHOLD
 
-ERROR_THRESHOLD = 15
 SCORE_THRESHOLD = 0.15
 
 _SQL_SCORED = f"""
@@ -430,11 +430,11 @@ def q_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_threshold_sweep",
-    oracle="""
+    oracle=f"""
     WITH s AS (
         SELECT user_id,
                CAST(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END)
-                    >= 15 AS INTEGER) AS label,
+                    >= {ERROR_THRESHOLD} AS INTEGER) AS label,
                CAST(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END)
                     AS BIGINT) * 1000000
                    // CAST(count(*) AS BIGINT) AS s_q
@@ -477,8 +477,6 @@ def q_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate), ranked by the two-phase prefix_rank — no
     unpartitioned row-level window; at 100 TB you'd additionally
     quantize the grain (e.g. 1e-3) to bound the output table."""
-    from frauddetection_spark.operators.rank import prefix_rank
-
     e = t(spark, sf_dir, "events")
     n_err = F.sum(F.when(F.col("event_type") == "error", 1).otherwise(0))
     s = e.groupBy("user_id").agg(
@@ -595,8 +593,6 @@ def q_auc_delong(spark: SparkSession, sf_dir: str) -> DataFrame:
     same scale shape as q_metric_auc, no row-level global window.
     Reference parity: the reference reports sklearn's point AUC
     (new_utlis_1.py:35-50) with no uncertainty at all."""
-    from frauddetection_spark.operators.rank import prefix_rank
-
     scored = _scored(t(spark, sf_dir, "events"))
     grain = scored.groupBy("score").agg(
         F.count("*").alias("n_g"), F.sum("label").cast("bigint").alias("np_g")
@@ -679,11 +675,11 @@ def q_auc_delong(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_brier_decomp",
-    oracle="""
+    oracle=f"""
     WITH s AS (
         SELECT user_id,
                CAST(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END)
-                    >= 15 AS INTEGER) AS y,
+                    >= {ERROR_THRESHOLD} AS INTEGER) AS y,
                (CAST(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END)
                      AS BIGINT) * 1000000) // CAST(count(*) AS BIGINT) AS s_q6,
                least((CAST(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0

@@ -311,17 +311,15 @@ def q_python_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
                     yield i, amt - (n_inst - 1) * INSTALLMENT_CENTS
 
     spark.udtf.register("fd_installments", Installments)
-    from frauddetection_spark.sources.tables import load_table
-
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
     return spark.sql(
-        f"""
+        """
         SELECT o.o_orderkey, s.installment, s.amount_cents
         FROM (SELECT o_orderkey,
                      CAST(round(o_totalprice * 100) AS BIGINT) AS amt
-              FROM orders) o,
+              FROM {orders}) o,
              LATERAL fd_installments(o.amt) s
-        """
+        """,
+        orders=t(spark, sf_dir, "orders"),
     )
 
 

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from frauddetection_spark.operators.graph import SQL_CONTACT, contact, sql_mirror
 from frauddetection_spark.plans.registry import register
 from frauddetection_spark.queries._util import SQL_WEEK, cents, r6, t, week_str
 
@@ -287,8 +288,6 @@ def q_join_inner(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB orders⋈lineitem co-partitions on orderkey via AQE/bucketing.
     Revenue aggregates as exact integer (cents × discount-percent) for
     cross-engine determinism."""
-    from frauddetection_spark.queries._util import cents
-
     li = t(spark, sf_dir, "lineitem")
     o = t(spark, sf_dir, "orders")
     c = t(spark, sf_dir, "customer")
@@ -432,8 +431,6 @@ def q_groupby_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer cents (2-decimal fixed point) so both engines produce
     identical doubles regardless of summation order / agg kernel.
     Partial aggregation map-side, 6 groups → single tiny exchange."""
-    from frauddetection_spark.queries._util import cents
-
     li = (
         t(spark, sf_dir, "lineitem")
         .filter(F.col("l_shipdate") <= F.lit("2000-12-01").cast("timestamp"))
@@ -619,15 +616,9 @@ def q_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_union_mirror",
-    oracle="""
-    WITH edges AS (
-        SELECT DISTINCT user_id AS src,
-               CAST(json_extract_string(props, '$.k') AS BIGINT) AS dst
-        FROM events
-    )
-    SELECT src, dst FROM edges
-    UNION
-    SELECT dst AS src, src AS dst FROM edges
+    oracle=f"""
+    WITH edges AS (SELECT DISTINCT user_id AS src, {SQL_CONTACT} AS dst FROM events)
+    {sql_mirror("edges")}
     """,
 )
 def q_union_mirror(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -635,10 +626,7 @@ def q_union_mirror(spark: SparkSession, sf_dir: str) -> DataFrame:
     mirroring main.py:102-110). Edges derive from events: user ↔
     counterparty (props.k), the engine's canonical graph."""
     e = t(spark, sf_dir, "events")
-    edges = e.select(
-        F.col("user_id").alias("src"),
-        F.get_json_object("props", "$.k").cast("bigint").alias("dst"),
-    ).distinct()
+    edges = e.select(F.col("user_id").alias("src"), contact().alias("dst")).distinct()
     return edges.union(edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))).distinct()
 
 
@@ -893,16 +881,14 @@ def q_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit grouping sets (SQL surface): per-returnflag and
     per-linestatus totals in one scan instead of two queries unioned."""
-    from frauddetection_spark.sources.tables import load_table
-
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("_li_gs")
     return spark.sql(
         """
         SELECT l_returnflag, l_linestatus,
                round(sum(l_quantity), 6) AS sum_qty
-        FROM _li_gs
+        FROM {lineitem}
         GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus))
-        """
+        """,
+        lineitem=t(spark, sf_dir, "lineitem"),
     )
 
 
@@ -2006,19 +1992,17 @@ def q_sql_pipe(spark: SparkSession, sf_dir: str) -> DataFrame:
     Pipe operators compile to the identical Catalyst plan as the
     classic form, which the DuckDB twin states classically — pinning
     that the surface is syntax, not semantics."""
-    from frauddetection_spark.sources.tables import load_table
-
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders_p")
     return spark.sql(
         """
-        FROM orders_p
+        FROM {orders}
         |> WHERE o_orderstatus = 'F'
         |> AGGREGATE count(*) AS n_orders,
                      CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT))
                           AS BIGINT) AS sum_cents
            GROUP BY o_orderpriority
         |> SELECT o_orderpriority, n_orders, sum_cents
-        """
+        """,
+        orders=t(spark, sf_dir, "orders"),
     )
 
 
@@ -2044,8 +2028,6 @@ def q_sql_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     macro-expansion, not an execution boundary. This is the right
     first tool for shared business logic at 100 TB; Python surfaces
     exist for what expressions can't say."""
-    from frauddetection_spark.sources.tables import load_table
-
     spark.sql(
         "CREATE OR REPLACE TEMPORARY FUNCTION cents_of(x DOUBLE) "
         "RETURNS BIGINT RETURN CAST(round(x * 100) AS BIGINT)"
@@ -2055,14 +2037,14 @@ def q_sql_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
         "RETURNS BIGINT RETURN "
         "CAST(cents_of(x) div 100 * cents_of(x) % 97 AS BIGINT)"
     )
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders_u")
     return spark.sql(
         """
         SELECT o_orderpriority,
                count(*) AS n_orders,
                CAST(sum(price_checksum(o_totalprice)) AS BIGINT) AS checksum
-        FROM orders_u GROUP BY 1
-        """
+        FROM {orders} GROUP BY 1
+        """,
+        orders=t(spark, sf_dir, "orders"),
     )
 
 

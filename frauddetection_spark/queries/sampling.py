@@ -2,9 +2,10 @@
 weights (R2), edge-class sampling weights (R3), weighted draw (R4).
 
 Node/label model on the testdata: nodes are event users; the
-"fraud-ish" label is `n_error_events ≥ 15` (an exact-integer
-behavioral threshold, so both engines derive identical labels); the
-graph is the events-derived user → counterparty edge list.
+"fraud-ish" label is `n_error_events ≥ ERROR_THRESHOLD` (an
+exact-integer behavioral threshold, so both engines derive identical
+labels; the metric, scorecard and funnel queries share it); the graph
+is the events-derived user → counterparty edge list.
 """
 
 from __future__ import annotations
@@ -12,7 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from frauddetection_spark.operators.graph import edges_from_events
+from frauddetection_spark.operators.graph import SQL_EDGES, edges_from_events
 from frauddetection_spark.operators.sampling import (
     FIXED,
     normalized_probability,
@@ -94,19 +95,12 @@ def q_split_xxhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 # R2 — degree/class-weighted node sampling distribution
 # ---------------------------------------------------------------------------
 
-_SQL_EDGES = """
-        SELECT DISTINCT user_id AS src,
-               CAST(json_extract_string(props, '$.k') AS BIGINT) AS dst
-        FROM events
-        WHERE json_extract_string(props, '$.k') IS NOT NULL
-"""
-
 
 @register(
     "q_sampling_weights",
     oracle=f"""
     WITH labels AS ({_SQL_LABELS}),
-    edges AS ({_SQL_EDGES}),
+    edges AS ({SQL_EDGES}),
     deg AS (SELECT src AS user_id, count(*) AS degree FROM edges GROUP BY 1),
     nodes AS (
         SELECT l.user_id, l.label, coalesce(d.degree, 0) AS degree
@@ -190,7 +184,7 @@ def q_sampling_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_edge_weights",
     oracle=f"""
     WITH labels AS ({_SQL_LABELS}),
-    edges AS ({_SQL_EDGES}),
+    edges AS ({SQL_EDGES}),
     le AS (
         SELECT e.src, e.dst, ls.label AS y_src, ld.label AS y_dst
         FROM edges e

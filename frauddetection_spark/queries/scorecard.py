@@ -15,8 +15,9 @@ expressions written identically in both twins, order-dependent float
 sums quantized to int64 before aggregation (the q_metric_ap pattern).
 
 Shared fixture classifier: queries/metrics.py::_scored (score =
-error-share, label = n_errors ≥ 15) so every metric here is computed
-over the same non-degenerate (label, score) table the M5 metrics use.
+error-share, label = n_errors ≥ ERROR_THRESHOLD) so every metric here
+is computed over the same non-degenerate (label, score) table the M5
+metrics use.
 """
 
 from __future__ import annotations
@@ -28,6 +29,7 @@ from frauddetection_spark.operators.rank import prefix_rank
 from frauddetection_spark.plans.registry import register
 from frauddetection_spark.queries._util import cents, t
 from frauddetection_spark.queries.metrics import _scored, _SQL_SCORED
+from frauddetection_spark.queries.sampling import ERROR_THRESHOLD
 
 _DEC = "decimal(38,0)"
 _Q = 1_000_000_000  # fixed-point quantum for order-independent float sums
@@ -300,7 +302,7 @@ def q_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     binned AS (
         SELECT CASE WHEN (10 * n_err) // n > 9 THEN 9
                     ELSE (10 * n_err) // n END AS bin,
-               CAST(n_err >= 15 AS INTEGER) AS bad
+               CAST(n_err >= {ERROR_THRESHOLD} AS INTEGER) AS bad
         FROM counts
     ),
     g AS (
@@ -348,7 +350,7 @@ def q_woe_iv(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     binned = counts.select(
         F.least(F.expr("(10 * n_err) div n"), F.lit(9)).alias("bin"),
-        (F.col("n_err") >= 15).cast("int").alias("bad"),
+        (F.col("n_err") >= ERROR_THRESHOLD).cast("int").alias("bad"),
     )
     g = binned.groupBy("bin").agg(
         F.sum(F.lit(1) - F.col("bad")).alias("goods"),

@@ -636,8 +636,6 @@ def q_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     executed plan, zero ReusedExchange); the persisted per-doc table
     feeds tf, dl and the 1-row corpus stats, idf (≤|terms| rows)
     broadcasts."""
-    from frauddetection_spark.operators.caching import track_cache
-
     tok = t(spark, sf_dir, "documents").select(
         "doc_id", F.explode(_tokens()).alias("token")
     )
@@ -1051,8 +1049,6 @@ def q_bigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     q_unigram_logprob transcendental discipline). Scale: bigram LM
     tables are vocabulary²-bounded and broadcast; the score side is
     one doc-keyed window + one aggregate."""
-    from pyspark.sql import Window
-
     tok = t(spark, sf_dir, "documents").select(
         "doc_id", F.posexplode(F.split("text", r"\s+")).alias("pos", "token")
     )

@@ -67,8 +67,11 @@ def test_contact_probe_matches_spark_domain(spark, tmp_path):
     out: Spark's ANSI cast raises on them.)"""
     from collections import Counter
 
-    from frauddetection_spark.operators.graph import ContactStats, edges_from_events
-    from frauddetection_spark.queries.graph import _contact_stats
+    from frauddetection_spark.operators.graph import (
+        ContactStats,
+        contact_stats,
+        edges_from_events,
+    )
 
     props = ['{"k": 5}', '{"k": "7"}', '{"k": -3}', "{}", '{"k": null}',
              None, "not json", '{"k": 5}', '{"k": 5}']
@@ -88,4 +91,4 @@ def test_contact_probe_matches_spark_domain(spark, tmp_path):
         sorted(deg),
     )
     assert want == ContactStats(3, 3, 6, [-3, 5, 7])
-    assert _contact_stats(path) == want
+    assert contact_stats(path) == want

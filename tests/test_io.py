@@ -224,6 +224,41 @@ def test_register_views_sql_surface(spark, sf_dir):
     }
 
 
+def test_sql_queries_leave_session_views_alone(spark, sf_dir):
+    """Queries stated in SQL pass their frames as ``spark.sql``
+    arguments. Building them on one data directory must neither
+    re-point the views ``register_views`` made on another (they are
+    named after the base tables) nor leave a view behind."""
+    import pyarrow.parquet as pq
+
+    from frauddetection_spark.plans.registry import load_all
+    from frauddetection_spark.sources.tables import TABLE_NAMES, register_views
+    from tests.conftest import SF_DIR_ORACLE
+
+    def rows(d, name):
+        return pq.ParquetFile(os.path.join(d, f"{name}.parquet")).metadata.num_rows
+
+    def views():
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    used = ("events", "lineitem", "orders")
+    assert all(rows(SF_DIR_ORACLE, n) != rows(sf_dir, n) for n in used)
+    registry = load_all()
+    register_views(spark, SF_DIR_ORACLE)
+    try:
+        before = views()
+        for name in ("q_grouping_sets", "q_sql_pipe", "q_sql_udf",
+                     "q_lateral_topk", "q_python_udtf", "q_recursive_cte"):
+            registry[name].fn(spark, sf_dir)
+        assert views() == before
+        assert {n: spark.table(n).count() for n in used} == {
+            n: rows(SF_DIR_ORACLE, n) for n in used
+        }
+    finally:
+        for name in TABLE_NAMES:
+            spark.catalog.dropTempView(name)
+
+
 def test_load_table_rejects_unknown(spark, sf_dir):
     import pytest as _pytest
 

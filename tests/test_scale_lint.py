@@ -3,8 +3,9 @@
 1. **Zero Spark jobs at plan construction** — calling any
    ``queries()[name](spark, sf_dir)`` must only BUILD a plan.
    Plan-time statistics come from driver-side pyarrow probes held by
-   the table catalog (queries/graph.py); the common-neighbor operator
-   has no probe of its own and plans the inverted join without them.
+   the table catalog (operators/graph.py::contact_stats); the
+   common-neighbor operator has no probe of its own and plans the
+   inverted join without them.
    Driver-side (non-Spark) prep like the pyarrow fixture builders is
    allowed — the lint counts Spark jobs only.
 
@@ -410,11 +411,19 @@ def test_every_import_is_used():
     (``from __future__`` aside) must occur, as a whole word, somewhere
     in that module outside the import statement. The module-name lint
     above checks definitions; an import nothing reads is the same dead
-    code, and it still costs its import time."""
+    code, and it still costs its import time. A function-local import
+    may not import again what its module imports at the top."""
     import ast
     import os
     import re
     from collections import Counter
+
+    def bindings(node):
+        if isinstance(node, ast.Import):
+            return {(a.asname or a.name.split(".")[0],
+                     a.name if a.asname else a.name.split(".")[0])
+                    for a in node.names}
+        return {(a.asname or a.name, f"{node.module}.{a.name}") for a in node.names}
 
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     unused = []
@@ -423,11 +432,16 @@ def test_every_import_is_used():
             if not fname.endswith(".py"):
                 continue
             path = os.path.join(dirpath, fname)
+            rel = os.path.relpath(path, root)
             with open(path) as fh:
                 src = fh.read()
             lines = src.splitlines()
             words = Counter(re.findall(r"\w+", src))
-            for node in ast.walk(ast.parse(src, filename=path)):
+            tree = ast.parse(src, filename=path)
+            top = {b for node in tree.body
+                   if isinstance(node, (ast.Import, ast.ImportFrom))
+                   for b in bindings(node)}
+            for node in ast.walk(tree):
                 if isinstance(node, ast.ImportFrom) and node.module == "__future__":
                     continue
                 if not isinstance(node, (ast.Import, ast.ImportFrom)):
@@ -436,13 +450,69 @@ def test_every_import_is_used():
                     r"\w+", "\n".join(lines[node.lineno - 1:node.end_lineno])
                 ))
                 unused += [
-                    f"{os.path.relpath(path, root)}:{node.lineno} {name}"
+                    f"{rel}:{node.lineno} {name}"
                     for name in (
                         a.asname or a.name.split(".")[0] for a in node.names
                     )
                     if words[name] <= own[name]
                 ]
+                if node not in tree.body:
+                    unused += [f"{rel}:{node.lineno} {name} (imported at the top)"
+                               for name, _src in bindings(node) & top]
     assert unused == [], "imports nothing in the module reads:\n" + "\n".join(unused)
+
+
+# Queries whose subject is JSON extraction or a string contact; they
+# spell out their own props.k extraction.
+JSON_SURFACE = {
+    "q_behavioral_features",
+    "q_json_extract",
+    "q_json_flatten",
+    "q_try_semantics",
+    "q_variant_extract",
+}
+
+
+def test_contact_rule_is_spelled_once():
+    """The call graph's contact rule (``props.k`` as a bigint) is spelled
+    once per engine, in operators/graph.py: ``contact()`` and its twin
+    ``SQL_CONTACT``. Outside it, only the JSON-surface queries (their
+    decorator and body) may call ``get_json_object("props", "$.k")`` or
+    ``json_extract_string(props, '$.k')``."""
+    import ast
+    import os
+    import re
+
+    spelling = re.compile(
+        r"get_json_object\(\s*[\"']props[\"']\s*,\s*[\"']\$\.k[\"']"
+        r"|json_extract_string\(\s*props\s*,\s*'\$\.k'"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pkg = os.path.join(root, "frauddetection_spark")
+    sites = []
+    for dirpath, _dirs, files in os.walk(pkg):
+        for fname in files:
+            path = os.path.join(dirpath, fname)
+            if not fname.endswith(".py") or path == os.path.join(
+                pkg, "operators", "graph.py"
+            ):
+                continue
+            with open(path) as fh:
+                src = fh.read()
+            allowed = set()
+            for node in ast.parse(src, filename=path).body:
+                if isinstance(node, ast.FunctionDef) and node.name in JSON_SURFACE:
+                    first = min([node.lineno] + [d.lineno for d in node.decorator_list])
+                    allowed |= set(range(first, node.end_lineno + 1))
+            sites += [
+                f"{os.path.relpath(path, root)}:{i}"
+                for i, line in enumerate(src.splitlines(), 1)
+                if spelling.search(line) and i not in allowed
+            ]
+    assert sites == [], (
+        "props.k parsed outside operators/graph.py (use contact() or "
+        "SQL_CONTACT):\n" + "\n".join(sites)
+    )
 
 
 def test_zero_jobs_at_construction(spark, sf_dir, plan_inspections):
